@@ -730,8 +730,11 @@ object Dedup {
   // compaction is the one corpus-sized pass and amortizes LSM-style.
   // ---------------------------------------------------------------------
 
-  private def withDedupIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    IndexLifecycle.withWriter(s, path)(body)
+  /** The dedup family's id-log lifecycle: the shingle set is the
+    * registry, the tombstone leg of the maintenance policy reads
+    * `spark.graft.dedupCompactTombstoneFrac`. */
+  private val dedupFamily = IdLogFamily("doc_id", "shingles",
+    "spark.graft.dedupCompactTombstoneFrac", compactDedupIndex)
 
   /** The LIVE artifact root of a (possibly versioned) dedup index; the
     * tombstone/pending logs stay at the PATH ROOT, shared across
@@ -744,9 +747,6 @@ object Dedup {
   private[graft] def dedupIndexExists(s: SparkSession, path: String): Boolean =
     ScratchPaths.artifactExists(s, s"$path/bands/_SUCCESS") ||
       dedupLiveRoot(s, path) != path
-
-  private[graft] def dedupTombstonesOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
 
   private[graft] def dedupPendingOf(s: SparkSession, path: String): DataFrame =
     IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
@@ -776,7 +776,7 @@ object Dedup {
     * gates key "built" on bands/_SUCCESS, so a crash mid-build can never
     * leave a gate-visible index missing its verify-side artifact. */
   def buildDedupIndex(s: SparkSession, d: String, path: String): Long =
-    withDedupIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       val index = signedCorpus(s,
           Tables.documents(s, d).select(col("doc_id"), col("text")))
         .transform(Tables.maybePersist)
@@ -798,28 +798,13 @@ object Dedup {
     * arrival refused via a permanent tombstone). Returns
     * (admitted, refused). */
   def mergeDedupBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
-    withDedupIndexWriter(batch.sparkSession, path) {
+    IndexLifecycle.withWriter(batch.sparkSession, path) {
       val s = batch.sparkSession
       val root = dedupLiveRoot(s, path) // appends fold into the LIVE version
       val docs0 = batch.select(col("doc_id").cast("long"), col("text"))
         .dropDuplicates("doc_id") // in-batch exact-id replays
         .transform(Tables.maybePersist)
-      // pending-forget consult (the media q137 / lexical q142 discipline)
-      if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = docs0.select("doc_id")
-          .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-            Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          val novel = delivered
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          IndexLifecycle.consumeIdLog(s, s"$path/pending", "doc_id", delivered)
-        }
-      }
+      IndexLifecycle.consultPending(s, dedupFamily, path, root, docs0)
       // replay guards: the shingle registry (already admitted) and the
       // tombstone log (forgotten ids never resurrect). localCheckpoint
       // HERE (r21): it is this anti-join whose lineage reads the
@@ -863,46 +848,7 @@ object Dedup {
     * (already-tombstoned and absent ids append nothing). Returns the
     * newly-tombstoned count. */
   def forgetDedupFromIndex(requests: DataFrame, path: String): Long =
-    withDedupIndexWriter(requests.sparkSession, path) {
-      val s = requests.sparkSession
-      val root = dedupLiveRoot(s, path)
-      val marked = requests.select(col("doc_id").cast("long"))
-        .dropDuplicates("doc_id")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.readStamped(s, s"$root/shingles")
-            .select(col("doc_id"), lit(1).as("present")),
-          Seq("doc_id"), "left")
-        .localCheckpoint()
-      val present = marked.filter(col("present").isNotNull).select("doc_id")
-      val early = marked.filter(col("present").isNull).select("doc_id")
-      // tombstone and pending tails are INDEPENDENT legs (guide §2.6,
-      // r21): both derive from the checkpointed `marked` frame, and the
-      // pending leg reads no log the tombstone leg writes — overlap
-      // them; the tombstone leg keeps the calling thread (it can
-      // re-enter the writer gate through compaction)
-      val (n, _) = Par.run2(
-        {
-          val n0 = present.count()
-          if (n0 > 0)
-            present.write.mode("append").parquet(s"$path/tombstones")
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactDedupIndex(s, path)
-          n0
-        },
-        if (!early.isEmpty)
-          early.write.mode("append").parquet(s"$path/pending"))
-      n
-    }
+    IndexLifecycle.takedown(dedupFamily, requests, path)
 
   /** Scheduled compaction, VERSIONED (the family discipline): rewrites
     * shingles/bands minus the tombstoned docs — collapsing crash-dupe
@@ -911,15 +857,9 @@ object Dedup {
     * keep-N GC retires the tail. No-ops when there are no live victims —
     * the fixed-point re-run costs a count, not a corpus copy. */
   def compactDedupIndex(s: SparkSession, path: String): Unit =
-    withDedupIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       val root = dedupLiveRoot(s, path)
-      val victims =
-        if (ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          IndexLifecycle.readStamped(s, s"$root/shingles")
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_semi").count()
-        else 0L
-      if (victims > 0) {
+      if (IndexLifecycle.liveVictims(s, dedupFamily, path, root) > 0) {
         val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
         // both rewrites land in an UNCOMMITTED version directory (the
         // _COMMITTED marker below is what flips readers), so their order
@@ -933,21 +873,6 @@ object Dedup {
           Seq("shingles", "bands"))
       }
     }
-
-  /** The dedup MAINTENANCE POLICY's tombstone leg: compact when live
-    * victims reach `spark.graft.dedupCompactTombstoneFrac` (default
-    * 0.25) of the registered docs. Check cost: one narrow (doc_id) scan
-    * of shingles, only when a tombstone log exists; the q146 gate row's
-    * 1/10 = 10% victims sit under the default, so its lazy read path is
-    * what the oracle certifies. */
-  private def maybeCompactDedupIndex(s: SparkSession, path: String): Unit = {
-    val root = dedupLiveRoot(s, path)
-    if (IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/shingles").select("doc_id"),
-        s"$path/tombstones", "doc_id", "spark.graft.dedupCompactTombstoneFrac",
-        memoKey = root))
-      compactDedupIndex(s, path)
-  }
 
   /** Probe the STORED index — the production q102 path: candidates and
     * verification read the parquet artifacts, never re-signing the

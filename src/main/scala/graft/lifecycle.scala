@@ -3,18 +3,62 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The SHARED standing-index lifecycle core (r19, VERDICT r18 #8).
+/** What one standing-index family's id-log lifecycle knows about itself.
+  * Everything else — the pending consult that opens a merge, the
+  * takedown, the compaction victim gate and the maintenance check — is
+  * written once in [[IndexLifecycle]]; a family supplies data and two
+  * hooks, never a copy of the contract.
   *
-  * Three standing-index families — ANN (q119/q134/q135/q140/q141),
-  * perceptual media (q136–q139b), lexical BM25 (q132/q142/q143) — share
-  * one lifecycle contract: build / probe / ingest-merge / forget /
-  * versioned compaction / keep-N GC / statistic re-pricing. The
-  * version-resolution + marker-commit machinery is single-sourced in
+  * @param idCol     the id column of the registry and both logs
+  * @param registry  the artifact, under the live root, whose rows ARE the
+  *                  admitted ids (written last by every merge)
+  * @param fracKey   the `spark.graft.*CompactTombstoneFrac` conf of the
+  *                  tombstone-mass trigger (default 0.25)
+  * @param compact   the family's compaction, called with the index path
+  * @param audit     registry columns recorded beside each tombstoned id
+  *                  (ANN/PQ: the stored cell — NULL when the tombstone
+  *                  comes from a pending delivery, whose row was never
+  *                  stored)
+  * @param carry     further registry columns the takedown hands its
+  *                  `beforeTombstone` hook (lexical: the doc lengths its
+  *                  negative stat contributions need)
+  * @param tombstonesAtRoot  the tombstone log lives under the resolved
+  *                  version root instead of the index path (ANN: the
+  *                  refit carries it into each new version)
+  * @param fragmented a second compaction trigger on the resolved root
+  *                  (lexical: contribution segments past its dial) */
+final case class IdLogFamily(
+    idCol: String,
+    registry: String,
+    fracKey: String,
+    compact: (SparkSession, String) => Unit,
+    audit: Seq[String] = Nil,
+    carry: Seq[String] = Nil,
+    tombstonesAtRoot: Boolean = false,
+    fragmented: (SparkSession, String) => Boolean = (_, _) => false) {
+  def tombstones(path: String, root: String): String =
+    s"${if (tombstonesAtRoot) root else path}/tombstones"
+}
+
+/** The SHARED standing-index lifecycle core.
+  *
+  * Five standing-index families — ANN (q119/q134/q135/q140/q141), PQ
+  * (q126/q147–q150), perceptual media (q136–q139b), lexical BM25
+  * (q132/q142–q144) and near-dup dedup (q102/q145/q146) — share one
+  * lifecycle contract: build / probe / ingest-merge / forget / versioned
+  * compaction / keep-N GC / statistic re-pricing. Every write must
+  * survive at-least-once replay (the reference consumer re-reads its
+  * topic from the beginning, `Consumer/kafkaConsumer.js:53`): a
+  * replayable source plus idempotent sinks. This object is that
+  * idempotence, written once: the writer gate, the append-only id logs
+  * (tombstones, pending forgets), the merge-side pending consult, the
+  * takedown, the compaction victim gate and maintenance check, and the
+  * commit+GC tail. Families keep only what is theirs — signing,
+  * encoding or tokenising the admit leg, the compaction rewrite, the ANN
+  * refit, media re-pricing, the lexical segment fold — and describe the
+  * rest with an [[IdLogFamily]]. Version resolution lives in
   * [[Similarity]] (`resolveIndexRoot` / `nextVersionName` /
-  * `pruneVersions` / `keepVersions`); this object hosts what each
-  * family used to copy — the writer gate, the append-only id-log
-  * readers, and the commit+GC tail — so a fourth family (and the three
-  * today) cannot drift on the contract.
+  * `pruneVersions` / `keepVersions`).
   */
 object IndexLifecycle {
 
@@ -65,12 +109,6 @@ object IndexLifecycle {
     s.conf.getOption("spark.graft.idLogBroadcastRows").map(_.toLong)
       .getOrElse(1L << 20)
 
-  /** Decoded row count of a log directory from the parquet FOOTERS —
-    * driver-side file tails, no Spark job. Cost is proportional to the
-    * log's file count, so the decision below memoizes it per stamp. */
-  private def idLogFooterRows(s: SparkSession, dir: String): Long =
-    parquetFooterRows(s, dir)
-
   /** Exact row count of a COMMITTED parquet directory from its file
     * footers — recursive, so partitioned layouts count too. A parquet
     * footer records the writer's row count at file commit, so this
@@ -89,7 +127,7 @@ object IndexLifecycle {
     // path with a `_`/`.` segment (hiddenFileFilter), so a crashed prior
     // append's leftovers under `_temporary/` must not count here either —
     // the recursive listing used to sum them, inflating priorPop /
-    // idLogFooterRows / build read-backs vs the read.parquet().count()
+    // id-log row counts / build read-backs vs the read.parquet().count()
     // this replaces. Only segments BELOW `dir` are checked (the base
     // path's own name is the caller's business).
     def hidden(p: org.apache.hadoop.fs.Path): Boolean = {
@@ -175,7 +213,7 @@ object IndexLifecycle {
   private def idLogRowsAt(s: SparkSession, dir: String,
                           stamp: (Long, Long)): Long =
     if (stamp._2 == 0L) 0L
-    else stampedMemo(s"$dir#rows", stamp)(idLogFooterRows(s, dir))
+    else stampedMemo(s"$dir#rows", stamp)(parquetFooterRows(s, dir))
 
   /** Is the log at `dir` small enough to broadcast-hint? Bytes from the
     * directory stamp, decoded rows from the stamp-memoized footer
@@ -230,6 +268,135 @@ object IndexLifecycle {
       Similarity.hadoopFs(s, dir)
         .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
     else rest.write.mode("overwrite").parquet(dir)
+  }
+
+  /** Write `ids` to the append-only log at `dir`. The write that CREATES
+    * a log overwrites: a crash inside a log's first append can leave the
+    * directory holding some committed part files but no `_SUCCESS` — it
+    * reads as "no log" ([[idLogOf]]), so the replay re-writes every id,
+    * and an append would then publish the crashed attempt's files beside
+    * the replay's as duplicate rows. Once `_SUCCESS` exists every
+    * committed file is visible to the replay's anti-join, so appends are
+    * exact. Never called with an empty frame: an empty log would tax
+    * every later merge and read with a dead anti-join. */
+  private def appendIdLog(s: SparkSession, ids: DataFrame, dir: String): Unit =
+    ids.write.mode(
+      if (ScratchPaths.artifactExists(s, s"$dir/_SUCCESS")) "append" else "overwrite")
+      .parquet(dir)
+
+  /** The pending consult that opens every merge: a takedown that arrived
+    * BEFORE its id's first admit is delivered now — the arrival is
+    * refused through a permanent tombstone and the pending entry is
+    * consumed, so no replay of this batch can ever admit it. Gated on
+    * the log, so the hot ingest path pays nothing while no early takedown
+    * is outstanding. The two writes are not atomic: a crash between them
+    * leaves the id in BOTH logs, so the tombstone side anti-joins the
+    * ids already tombstoned and the replay only re-runs the consume.
+    * `batch` carries the family id column; `root` is the resolved live
+    * root. Caller holds the writer gate. */
+  def consultPending(s: SparkSession, fam: IdLogFamily, path: String,
+                     root: String, batch: DataFrame): Unit = {
+    val id = fam.idCol
+    val pending = s"$path/pending"
+    if (ScratchPaths.artifactExists(s, s"$pending/_SUCCESS")) {
+      val delivered = batch.select(id)
+        .join(hintedIdLog(s, pending, id), Seq(id), "left_semi")
+        .localCheckpoint()
+      if (!delivered.isEmpty) {
+        val tombs = fam.tombstones(path, root)
+        // the row was never stored: NULL audit columns, typed as stored
+        val novel = delivered
+          .join(hintedIdLog(s, tombs, id), Seq(id), "left_anti")
+          .select(col(id) +: fam.audit.map(c => lit(null).cast(
+            readStamped(s, s"$root/${fam.registry}").schema(c).dataType).as(c)): _*)
+          .localCheckpoint()
+        if (!novel.isEmpty) appendIdLog(s, novel, tombs)
+        // a consume that empties the log deletes the directory
+        consumeIdLog(s, pending, id, delivered)
+      }
+    }
+  }
+
+  /** The takedown, LSM-style: requested ids located in the registry
+    * append to the tombstone log (lazy deletion — effective at once,
+    * one anti-join per read, no stored file touched; compaction makes it
+    * physical); ids not admitted yet land in the pending log, consumed by
+    * their first arrival ([[consultPending]]). Idempotent: ids already in
+    * either log drop out before the locate, so a redelivery appends
+    * nothing. `beforeTombstone(root, present)` runs ahead of the
+    * tombstone append — anything it writes must collapse on replay.
+    * Returns the newly-tombstoned count. */
+  def takedown(fam: IdLogFamily, requests: DataFrame, path: String,
+               beforeTombstone: (String, DataFrame) => Unit = (_, _) => ()): Long = {
+    val s = requests.sparkSession
+    withWriter(s, path) {
+      val id = fam.idCol
+      val root = Similarity.resolveIndexRoot(s, path)
+      val tombs = fam.tombstones(path, root)
+      val pending = s"$path/pending"
+      // ONE checkpointed pass marks each request present/absent (its
+      // lineage reads both logs, which the appends below write)
+      val kept = fam.audit ++ fam.carry
+      val marked = requests.select(col(id).cast("long")).dropDuplicates(id)
+        .join(hintedIdLog(s, tombs, id), Seq(id), "left_anti")
+        .join(hintedIdLog(s, pending, id), Seq(id), "left_anti")
+        .join(readStamped(s, s"$root/${fam.registry}")
+            .select((col(id) +: kept.map(col)) :+ lit(1).as("present"): _*),
+          Seq(id), "left")
+        .localCheckpoint()
+      val present = marked.filter(col("present").isNotNull).drop("present")
+      val early = marked.filter(col("present").isNull).select(id)
+      // tombstone and pending tails are INDEPENDENT legs (guide §2.6):
+      // both derive from the checkpointed `marked` frame and neither
+      // reads a log the other writes — overlap them; the tombstone leg
+      // keeps the calling thread (it can re-enter the writer gate
+      // through compaction)
+      val (n, _) = Par.run2(
+        {
+          val n0 = present.count()
+          if (n0 > 0) {
+            beforeTombstone(root, present)
+            appendIdLog(s, present.select((id +: fam.audit).map(col): _*), tombs)
+          }
+          // Maintenance tail, UNCONDITIONAL: gating the check on a novel
+          // append leaves a crash window — tombstones land, the driver
+          // dies before the check, and the at-least-once replay appends
+          // nothing, so the check never runs and an above-threshold
+          // victim mass sits on the read path until the next NOVEL
+          // takedown. The amortized [[tombstoneHeavy]] bound is what
+          // makes the unconditional call affordable: below the bound it
+          // costs zero Spark jobs (existence guard + footer-stamped log
+          // count, both driver-side).
+          maybeCompact(s, fam, path)
+          n0
+        },
+        if (!early.isEmpty) appendIdLog(s, early, pending))
+      n
+    }
+  }
+
+  /** Registry rows of `root` that the tombstone log hides — the gate
+    * every compaction opens with (no live victims, nothing to make
+    * physical). Zero jobs when no log exists. */
+  def liveVictims(s: SparkSession, fam: IdLogFamily, path: String,
+                  root: String): Long = {
+    val tombs = fam.tombstones(path, root)
+    if (!ScratchPaths.artifactExists(s, s"$tombs/_SUCCESS")) 0L
+    else readStamped(s, s"$root/${fam.registry}")
+      .join(hintedIdLog(s, tombs, fam.idCol), Seq(fam.idCol), "left_semi").count()
+  }
+
+  /** The MAINTENANCE POLICY, called from every takedown tail (and the
+    * lexical merge tail) inside the writer gate — reentrant — so an
+    * unattended ingest/takedown stream compacts itself: compact when the
+    * family's fragmentation trigger fires or when live victims reach
+    * `fam.fracKey`'s fraction of the registry ([[tombstoneHeavy]]). */
+  def maybeCompact(s: SparkSession, fam: IdLogFamily, path: String): Unit = {
+    val root = Similarity.resolveIndexRoot(s, path)
+    if (fam.fragmented(s, root) || tombstoneHeavy(s,
+        readStamped(s, s"$root/${fam.registry}").select(fam.idCol),
+        fam.tombstones(path, root), fam.idCol, fam.fracKey, memoKey = root))
+      fam.compact(s, path)
   }
 
   /** Same-process long-valued memo behind the r20 amortizations (the
@@ -333,11 +500,10 @@ object IndexLifecycle {
   /** The shared TOMBSTONE LEG of the r19b maintenance policies: have the
     * live victims lazy deletion is hiding reached `confKey`'s fraction
     * (default 0.25) of the stored rows? `storedIds` is the narrow id
-    * column of the LIVE version's registry artifact. Families call this
-    * from their forget tails and compact when it fires, so an unattended
-    * takedown stream can never accumulate read-side anti-join mass and
-    * dead rows — single-sourced so the five families (ANN, media,
-    * lexical, dedup, PQ) cannot drift on the policy.
+    * column of the LIVE version's registry artifact. [[maybeCompact]]
+    * calls this from every takedown tail and compacts when it fires, so
+    * an unattended takedown stream can never accumulate read-side
+    * anti-join mass and dead rows.
     *
     * AMORTIZED (r20, VERDICT r19 #2): the registry id scan no longer
     * runs per takedown batch. Per-batch cost is ZERO Spark jobs — the

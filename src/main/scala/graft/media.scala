@@ -1545,7 +1545,7 @@ object MediaOps {
     * every other writer (r17 advice, medium). */
   private[graft] def buildIndexFrom(hashes0: DataFrame, path: String,
                                     bandsPerDoc: Int = 4): Long =
-    withMediaIndexWriter(hashes0.sparkSession, path) {
+    IndexLifecycle.withWriter(hashes0.sparkSession, path) {
       val s = hashes0.sparkSession
       import s.implicits._
       val hashes = hashes0.transform(Tables.maybePersist)
@@ -1882,15 +1882,13 @@ object MediaOps {
         .stripMargin.replace("\n", " ")
   }
 
-  /** Same-process writer serialization for the media index artifacts —
-    * the [[Similarity]] index-lock discipline; multi-driver deployments
-    * keep the documented single-writer-per-path contract. */
-  /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) — every
-    * media-artifact writer enters through here ([[IndexLifecycle]], the
-    * r19 shared core); same-process re-entry (merge-triggered
-    * compaction) is depth-tracked, never marker-stripping. */
-  private def withMediaIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    IndexLifecycle.withWriter(s, path)(body)
+  /** The media family's id-log lifecycle: vecs is the registry, the
+    * tombstone leg of the maintenance policy reads
+    * `spark.graft.mediaCompactTombstoneFrac` (the q137 gate row's 1/7 ≈
+    * 14% victims sit under the default, so its explicit compact call
+    * and oracle are unchanged). */
+  private val mediaFamily = IdLogFamily("doc_id", "vecs",
+    "spark.graft.mediaCompactTombstoneFrac", compactMediaIndex)
 
   /** ONLINE ingest-dedup merge (q136's streaming leg — the admission
     * decision an image-ingest pipeline makes per arriving batch): hash
@@ -1929,7 +1927,7 @@ object MediaOps {
     * split at the next are not constructible on demand). */
   private[graft] def mergeHashesIntoIndex(hashes0: DataFrame, path: String,
                                           family: String): (Long, Long) =
-    withMediaIndexWriter(hashes0.sparkSession, path) {
+    IndexLifecycle.withWriter(hashes0.sparkSession, path) {
       val s = hashes0.sparkSession
       Similarity.withFns(s)
       val root = mediaLiveRoot(s, path) // appends fold into the LIVE version
@@ -1939,34 +1937,7 @@ object MediaOps {
       val hashes = hashes0
         .dropDuplicates("doc_id") // in-batch exact-id replays
         .transform(Tables.maybePersist)
-      // pending-forget consult (r17 advice #5): a takedown that arrived
-      // BEFORE this id's first admit is delivered now — the arrival is
-      // refused via a tombstone (permanent, so a replay of this batch
-      // cannot admit it) and the pending entry is consumed. Gated on the
-      // artifact so the hot ingest path pays nothing when no early
-      // takedown is outstanding.
-      if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = hashes.select("doc_id")
-          .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-            Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          // crash-replay guard (r19 advice): the two writes below are
-          // not atomic — a crash between them leaves the id in BOTH
-          // logs, and the replayed batch would append a duplicate
-          // tombstone row (inflating n_tombstones in the q137 report).
-          // Anti-join against the tombstones already present, so the
-          // replay appends nothing and only the pending consume (the
-          // write the crash lost) re-runs.
-          val novel = delivered
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          IndexLifecycle.consumeIdLog(s, s"$path/pending", "doc_id", delivered)
-        }
-      }
+      IndexLifecycle.consultPending(s, mediaFamily, path, root, hashes)
       // replay guards: already-stored ids AND tombstoned ids never
       // (re-)admit — the latter is the right-to-be-forgotten survival
       // under at-least-once replay (the ANN merge's r17 discipline)
@@ -2067,60 +2038,7 @@ object MediaOps {
     * [[pendingForgetsOf]]). Idempotent at both artifacts (re-delivery
     * appends nothing); returns the newly-tombstoned count. */
   def forgetMediaFromIndex(requests: DataFrame, path: String): Long =
-    withMediaIndexWriter(requests.sparkSession, path) {
-      val s = requests.sparkSession
-      // ONE checkpointed pass marks each request present/absent (the
-      // lineage reads $path/tombstones and $path/pending, which the
-      // appends below write — localCheckpoint breaks the cycles; a
-      // single eager checkpoint instead of two keeps the takedown path
-      // at its pre-pending-log job count)
-      val marked = requests.select(col("doc_id").cast("long")).distinct()
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"), Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"), Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.readStamped(s, s"${mediaLiveRoot(s, path)}/vecs")
-            .select(col("doc_id"), lit(1).as("present")),
-          Seq("doc_id"), "left")
-        .localCheckpoint()
-      val present = marked.filter(col("present").isNotNull).select("doc_id")
-      val early = marked.filter(col("present").isNull).select("doc_id")
-      // tombstone and pending tails are INDEPENDENT legs (guide §2.6,
-      // r21): both derive from the checkpointed `marked` frame — overlap
-      // them; the tombstone leg keeps the calling thread (it can
-      // re-enter the writer gate through compaction)
-      val (n, _) = Par.run2(
-        {
-          val n0 = present.count()
-          if (n0 > 0)
-            present.write.mode("append").parquet(s"$path/tombstones")
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactMediaIndex(s, path)
-          n0
-        },
-        if (!early.isEmpty) early.write.mode("append").parquet(s"$path/pending"))
-      n
-    }
-
-  /** The media MAINTENANCE POLICY's tombstone leg (r19): compact when
-    * live victims reach `spark.graft.mediaCompactTombstoneFrac` (default
-    * 0.25) of the stored rows. Check cost: one narrow (doc_id) scan of
-    * vecs, only when a tombstone log exists; the q137 gate row's 1/7 ≈
-    * 14% victims sit under the default, so its explicit compact call and
-    * oracle are unchanged. */
-  private def maybeCompactMediaIndex(s: SparkSession, path: String): Unit = {
-    val root = mediaLiveRoot(s, path)
-    if (IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/vecs").select("doc_id"),
-        s"$path/tombstones", "doc_id", "spark.graft.mediaCompactTombstoneFrac",
-        memoKey = root))
-      compactMediaIndex(s, path)
-  }
+    IndexLifecycle.takedown(mediaFamily, requests, path)
 
   /** Scheduled compaction, VERSIONED (r18): rewrites vecs/bands minus
     * the tombstoned ids — defragmenting the ingest appends along the
@@ -2142,18 +2060,14 @@ object MediaOps {
     * Amortization: one corpus copy per population doubling sums
     * geometrically to ≈ 2× the final corpus — the LSM bargain. */
   def compactMediaIndex(s: SparkSession, path: String): Unit =
-    withMediaIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       import s.implicits._
       val root = mediaLiveRoot(s, path)
       val st = IndexLifecycle.readStamped(s, s"$root/stat")
         .select("width", "bands_per_doc", "priced_n").head()
       val (w0, bpd, pricedN) = (st.getInt(0), st.getInt(1), st.getLong(2))
       val live = IndexLifecycle.readStamped(s, s"$root/vecs")
-      val victims =
-        if (ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          live.join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-            Seq("doc_id"), "left_semi").count()
-        else 0L
+      val victims = IndexLifecycle.liveVictims(s, mediaFamily, path, root)
       val pop = live.count() - victims
       if (victims > 0 || pop > pricedN) {
         val vecs = minusTombstones(live, s, path)
@@ -2180,7 +2094,7 @@ object MediaOps {
     * family's flat artifacts (the root logs are never touched: the
     * tombstones are the audit trail and the merge-side replay guard). */
   def pruneMediaIndexVersions(s: SparkSession, path: String, keep: Int = 2): Long =
-    withMediaIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       Similarity.pruneVersions(s, path, keep, Seq("vecs", "bands", "stat"))
     }
 

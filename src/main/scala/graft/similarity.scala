@@ -4146,24 +4146,23 @@ object Similarity {
   private[graft] def mergeIndexPathFor(d: String): String =
     graft.ScratchPaths.indexPathFor(s"q134-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
 
-  /** Writers against one standing-index path are read-modify-write
-    * overwrites of the same artifact: a merge that reads assignments
-    * before a concurrent forget commits and writes after it would
-    * resurrect the deleted vectors (and vice versa). The critical
-    * sections are serialized per path within the JVM — sufficient for
-    * the local[*] execution model where every writer (batch gate rows,
-    * annIngestStream/forgetStream foreachBatch sinks) shares the
-    * driver process. MULTI-DRIVER deployments must enforce
-    * single-writer-per-path externally (one ingestion owner per index
-    * artifact — the same contract every non-transactional parquet
-    * layout carries); readers are unaffected either way (r16 advice). */
-  private def withIndexWriteLock[T](path: String)(body: => T): T =
-    graft.IndexLifecycle.withLock(path)(body)
-  /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) — every
-    * artifact writer enters through here ([[graft.IndexLifecycle]], the
-    * r19 shared lifecycle core). */
-  private def withIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    graft.IndexLifecycle.withWriter(s, path)(body)
+  /** The ANN family's id-log lifecycle: assignments is the registry,
+    * each tombstone records the victim's stored cell, and the tombstone
+    * log lives under the VERSION ROOT — the refit carries it into each
+    * new version. Compaction is the `rounds = 0` PURE COMPACTION of
+    * [[rebuildAnnIndex]] (codebook and drift reference frame carried,
+    * victims removed physically, LSM appends defragmented) and needs the
+    * stored codebook: a bare assignments artifact (mid-build, or a
+    * hand-assembled fixture) stays on lazy deletion alone. The DRIFT-
+    * gated auto-refit handles routing decay; this leg handles deletion
+    * mass. */
+  private val annFamily = IdLogFamily("vec_id", "assignments",
+    "spark.graft.annCompactTombstoneFrac",
+    (s, path) =>
+      if (graft.ScratchPaths.artifactExists(s,
+          s"${resolveIndexRoot(s, path)}/centroids/_SUCCESS"))
+        rebuildAnnIndex(s, path, rounds = 0): Unit,
+    audit = Seq("c_label"), tombstonesAtRoot = true)
 
   // ---------------------------------------------------------------------
   // VERSIONED INDEX ROOTS (r18, VERDICT r17 #3): [[rebuildAnnIndex]]
@@ -4197,11 +4196,6 @@ object Similarity {
       if (committed.isEmpty) path else s"$path/versions/${committed.max}"
     }
   }
-
-  /** The takedown tombstone log of a RESOLVED version root — empty frame
-    * when the log does not exist (the gate fixture path). */
-  private[graft] def annTombstonesOf(s: SparkSession, root: String): DataFrame =
-    graft.IndexLifecycle.idLogOf(s, s"$root/tombstones", "vec_id")
 
   /** Anti-join `df` against the version root's tombstone log on vec_id —
     * LAZY DELETION (r19, VERDICT r18 #2): [[forgetVictimIdsFrom]] no
@@ -4252,7 +4246,7 @@ object Similarity {
     * the forget path just enforced (the reference's transport replays
     * from the beginning on restart, `Consumer/kafkaConsumer.js:53`). */
   private[graft] def mergeDeltaIntoIndex(delta: DataFrame, path0: String): Unit =
-      withIndexWriter(delta.sparkSession, path0) {
+      IndexLifecycle.withWriter(delta.sparkSession, path0) {
     val s = delta.sparkSession
     val path = resolveIndexRoot(s, path0) // fold into the LIVE version
     val assignments = IndexLifecycle.readStamped(s, s"$path/assignments")
@@ -4261,36 +4255,8 @@ object Similarity {
     // without dropDuplicates the copies all pass the stored-index
     // anti-join below and insert duplicate rows (r15 advice)
     //
-    // pending-forget consult (r19c — the media q137 ordering at vector
-    // grain): a takedown that arrived BEFORE this id's first admit is
-    // delivered now — the arrival is refused via a permanent tombstone
-    // (null cell: the row was never stored) and the pending entry is
-    // consumed; replays of this batch can never admit it
-    if (graft.ScratchPaths.artifactExists(s, s"$path0/pending/_SUCCESS")) {
-      // log sides via the size-gated hint (r20): both logs are corpus-
-      // fraction-bounded, not request-bounded — see IndexLifecycle
-      val delivered = deduped.select("vec_id")
-        .join(graft.IndexLifecycle.hintedIdLog(s, s"$path0/pending", "vec_id"),
-          Seq("vec_id"), "left_semi")
-        .localCheckpoint()
-      if (!delivered.isEmpty) {
-        val labelNull = assignments.schema("c_label").dataType.sql
-        val novel = delivered
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-            Seq("vec_id"), "left_anti")
-          .selectExpr("vec_id", s"cast(null as $labelNull) as c_label")
-          .localCheckpoint()
-        if (!novel.isEmpty) {
-          if (graft.ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          else novel.write.mode("overwrite").parquet(s"$path/tombstones")
-        }
-        // r20: a consume that empties the log DELETES the directory —
-        // no future merge pays a dead existence check for it
-        graft.IndexLifecycle.consumeIdLog(s, s"$path0/pending", "vec_id",
-          delivered)
-      }
-    }
+    // pending-forget consult (the media q137 ordering at vector grain)
+    IndexLifecycle.consultPending(s, annFamily, path0, path, deduped)
     val admitted = minusAnnTombstones(deduped, s, path)
     val routed = routeAnnDelta(admitted,
       IndexLifecycle.readStamped(s, s"$path/centroids"))
@@ -4378,103 +4344,7 @@ object Similarity {
     * nothing is rewritten here, every reader subtracts the log, and the
     * versioned [[rebuildAnnIndex]] makes the deletion physical. */
   private[graft] def forgetVictimIdsFrom(victimIds: DataFrame, path0: String): Unit =
-      withIndexWriter(victimIds.sparkSession, path0) {
-    val s = victimIds.sparkSession
-    val path = resolveIndexRoot(s, path0) // delete from the LIVE version
-    val assignments = IndexLifecycle.readStamped(s, s"$path/assignments")
-    // locate: the stored artifact's cells are the truth for the audit log
-    val located = assignments
-      .join(broadcast(victimIds.select("vec_id").dropDuplicates("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .select("vec_id", "c_label")
-      .localCheckpoint() // the log append below feeds this frame's readers
-    val tombPath = s"$path/tombstones"
-    val tombstonesExist = graft.ScratchPaths.artifactExists(s, s"$tombPath/_SUCCESS")
-    // NO physical rewrite (r19, VERDICT r18 #2): deletion is LAZY — the
-    // tombstone append is the whole takedown, every reader subtracts
-    // the log ([[minusAnnTombstones]], one broadcast anti-join per read
-    // — effective immediately), and the versioned [[rebuildAnnIndex]]
-    // makes it physical. An append-only log cannot invalidate any
-    // reader's file listing.
-    //
-    // The tombstone and pending tails are INDEPENDENT legs (guide §2.6,
-    // r21): every id the tombstone leg appends is in `located`, which
-    // the pending leg anti-joins away regardless of whether its log
-    // scan lists the pre- or post-append files (parquet commits by
-    // atomic rename — a concurrent listing only ever sees whole files).
-    // The tombstone leg keeps the calling thread (it can re-enter the
-    // writer gate through the compaction tail).
-    Par.run2(
-      {
-        if (!tombstonesExist) {
-          // first write creates the log (schema even when the request
-          // located nothing — the report's left join needs a readable
-          // frame)
-          located.write.mode("overwrite").parquet(tombPath)
-        } else {
-          val newTombs = located
-            .join(IndexLifecycle.readStamped(s, tombPath).select("vec_id"), Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-          if (!newTombs.isEmpty)
-            newTombs.write.mode("append").parquet(tombPath)
-        }
-        // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-        // r19 gate on novel appends left a crash window — tombstones land,
-        // the driver dies before the check, and the at-least-once replay
-        // appends nothing, so the check never ran and an above-threshold
-        // victim mass sat on the read path until the next NOVEL takedown.
-        // The r20 amortization is what makes the unconditional call
-        // affordable: below the bound it costs zero Spark jobs (existence
-        // guard + footer-stamped log count, both driver-side).
-        maybeCompactAnnIndex(s, path0, path)
-      },
-      {
-        // PENDING-FORGET (r19c — the media q137 ordering at vector grain):
-        // a takedown racing ahead of its id's first arrival must pend, not
-        // silently drop — the transport can reorder the forget and ingest
-        // streams. Consumed by [[mergeDeltaIntoIndex]]; the log lives at the
-        // PATH ROOT (it must survive version swaps without a carry).
-        val early = victimIds.select("vec_id").dropDuplicates("vec_id")
-          .join(broadcast(located.select("vec_id")), Seq("vec_id"), "left_anti")
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-            Seq("vec_id"), "left_anti")
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path0/pending", "vec_id"),
-            Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-        if (!early.isEmpty)
-          early.write.mode("append").parquet(s"$path0/pending")
-      }): Unit
-  }
-
-  /** The ANN MAINTENANCE POLICY's tombstone leg (r19): when the live
-    * victims lazy deletion is hiding reach
-    * `spark.graft.annCompactTombstoneFrac` (default 0.25) of the stored
-    * rows, run the `rounds = 0` PURE COMPACTION of [[rebuildAnnIndex]] —
-    * codebook and drift reference frame carried, victims removed
-    * physically, LSM appends defragmented, in a fresh committed version.
-    * The DRIFT-gated auto-refit (r18) handles routing decay; this leg
-    * handles deletion mass — together the index is fully self-
-    * maintaining under unattended streams. Check cost: one narrow
-    * (vec_id) artifact scan, only when a tombstone log exists; the q135
-    * gate row's 1/50 = 2% victims sit far under the default, so its
-    * plan and oracle are unchanged. */
-  private def maybeCompactAnnIndex(s: SparkSession, path0: String,
-                                   root: String): Unit = {
-    if (!graft.ScratchPaths.artifactExists(s, s"$root/tombstones/_SUCCESS"))
-      return
-    // no codebook, no compaction: the rounds = 0 path carries the stored
-    // centroids, so a bare assignments artifact (possible mid-build, or
-    // in a hand-assembled fixture) stays on lazy deletion alone
-    if (!graft.ScratchPaths.artifactExists(s, s"$root/centroids/_SUCCESS"))
-      return
-    if (graft.IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/assignments").select("vec_id"),
-        s"$root/tombstones", "vec_id", "spark.graft.annCompactTombstoneFrac",
-        memoKey = root))
-      // the INDEX path, not the resolved root — the rebuild allocates
-      // its own version directory under $path0/versions
-      rebuildAnnIndex(s, path0, rounds = 0): Unit
-  }
+    IndexLifecycle.takedown(annFamily, victimIds, path0): Unit
 
   def forgetFromAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
     if (!annIndexExists(s, path))
@@ -4670,7 +4540,7 @@ object Similarity {
     // in-flight directories, so without the mkdirs a second rebuild
     // started during this one's (long, lockless) refit phase would be
     // handed the same name and the two would write into one directory
-    val (root, newRoot) = withIndexWriteLock(path) {
+    val (root, newRoot) = IndexLifecycle.withLock(path) {
       val nr = s"$path/versions/${nextVersionName(s, path)}"
       hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
       (resolveIndexRoot(s, path), nr)
@@ -4697,7 +4567,7 @@ object Similarity {
         .parquet(s"$newRoot/assignments"),
       cents.write.mode("overwrite").parquet(s"$newRoot/centroids"))
     beforeCatchup()
-    withIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       // the tombstone log rides along AS OF NOW (not the phase-1 read):
       // it is the merge-side replay guard, and a takedown that landed
       // during the refit must survive the swap — its victim is physically
@@ -4776,7 +4646,7 @@ object Similarity {
     * trail). Never touches the live version. Returns the number of
     * retired version roots. */
   def pruneAnnIndexVersions(s: SparkSession, path: String, keep: Int = 2): Long =
-    withIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       pruneVersions(s, path, keep, Seq("assignments", "centroids", "cellstat"))
     }
 
@@ -4854,7 +4724,7 @@ object Similarity {
   def annIndexDriftPsiMicro(s: SparkSession, path: String): Long = {
     val root = resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
-      withIndexWriter(s, path) {
+      IndexLifecycle.withWriter(s, path) {
         liveAssignments(s, root)
           .groupBy("c_label").agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$root/cellstat")
@@ -5151,7 +5021,7 @@ object Similarity {
     * fit's own distortion — the reference the distortion-gated
     * auto-refit (r19c) prices decay against. */
   def buildPqIndex(s: SparkSession, d: String, path: String): Long =
-      withIndexWriter(s, path) {
+      IndexLifecycle.withWriter(s, path) {
     val rows = coarseRows(s, d) // ONE collect: routing, residuals, artifact
     val corpus = ivfPqResidualCorpusWith(s, d, rows).transform(Tables.maybePersist)
     // the coarse artifact is independent of the fit ladder — overlap the
@@ -5273,8 +5143,13 @@ object Similarity {
     graft.ScratchPaths.artifactExists(s, s"$path/codes/_SUCCESS") ||
       pqLiveRoot(s, path) != path
 
-  private[graft] def pqTombstonesOf(s: SparkSession, path: String): DataFrame =
-    graft.IndexLifecycle.idLogOf(s, s"$path/tombstones", "vec_id")
+  /** The PQ family's id-log lifecycle: codes is the registry and each
+    * tombstone records the victim's stored cell; the q148 gate row's
+    * 1/40 = 2.5% victims sit far under the default compaction fraction,
+    * so the row certifies the LAZY read path specifically. */
+  private val pqFamily = IdLogFamily("vec_id", "codes",
+    "spark.graft.pqCompactTombstoneFrac", compactPqIndex,
+    audit = Seq("c_label"))
 
   /** Live code rows: stored minus the root tombstone log (skipped — plan
     * untouched — when no log exists, so q126's pinned shape holds). */
@@ -5313,35 +5188,13 @@ object Similarity {
     * (already-encoded ids anti-join away against the codes registry),
     * tombstone-aware. Returns (admitted, refused). */
   def mergePqBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
-    withIndexWriter(batch.sparkSession, path) {
+    IndexLifecycle.withWriter(batch.sparkSession, path) {
       val s = batch.sparkSession
       val root = pqLiveRoot(s, path) // appends fold into the LIVE version
       val deduped = batch.select(col("vec_id").cast("long"), col("embedding"))
         .dropDuplicates("vec_id")
         .transform(Tables.maybePersist)
-      // pending-forget consult (r19c): an early takedown is delivered
-      // now — arrival refused via a permanent tombstone (null cell: the
-      // row was never stored), pending entry consumed
-      if (graft.ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = deduped.select("vec_id")
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/pending", "vec_id"),
-            Seq("vec_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          val novel = delivered
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-              Seq("vec_id"), "left_anti")
-            .selectExpr("vec_id", "cast(null as int) as c_label")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode(
-              if (graft.ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-                "append" else "overwrite")
-              .parquet(s"$path/tombstones")
-          graft.IndexLifecycle.consumeIdLog(s, s"$path/pending", "vec_id",
-            delivered)
-        }
-      }
+      IndexLifecycle.consultPending(s, pqFamily, path, root, deduped)
       val admitted = graft.IndexLifecycle.minusIdLog(
         deduped, s, s"$path/tombstones", "vec_id")
       // localCheckpoint HERE, not on the encoded frame (r21): it is the
@@ -5391,69 +5244,7 @@ object Similarity {
     * probe subtracts it from the ADC scan AND the re-rank; compaction
     * makes it physical. Idempotent. Returns the newly-tombstoned count. */
   def forgetPqFromIndex(victimIds: DataFrame, path: String): Long =
-    withIndexWriter(victimIds.sparkSession, path) {
-      val s = victimIds.sparkSession
-      val root = pqLiveRoot(s, path)
-      val located = IndexLifecycle.readStamped(s, s"$root/codes")
-        .join(broadcast(victimIds.select("vec_id").dropDuplicates("vec_id")),
-          Seq("vec_id"), "left_semi")
-        .select("vec_id", "c_label")
-        .localCheckpoint() // the log append below feeds this frame's readers
-      val tombPath = s"$path/tombstones"
-      val exists = graft.ScratchPaths.artifactExists(s, s"$tombPath/_SUCCESS")
-      val newTombs =
-        if (!exists) located
-        else located
-          .join(IndexLifecycle.readStamped(s, tombPath).select("vec_id"),
-            Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-      // The two tails below are INDEPENDENT legs (guide §2.6, the r21
-      // merge of the §2 Par discipline into the takedown path): the
-      // tombstone leg appends located victims + runs maintenance; the
-      // pending leg handles never-located ids. Their results cannot
-      // interact — `early` anti-joins `located`, and every id the
-      // tombstone leg appends IS located, so whether the pending leg's
-      // log scan lists the pre- or post-append tombstone files the
-      // early set is identical (parquet files commit by atomic rename,
-      // so a concurrent listing only ever sees whole files). The
-      // tombstone leg runs on the calling thread — it can re-enter the
-      // writer gate (compaction); the pending leg takes no lock.
-      val (n, _) = Par.run2(
-        {
-          val n0 = newTombs.count()
-          // the log is created only by a takedown that LOCATED something —
-          // a request for absent ids must not mint an empty log that every
-          // future probe pays an anti-join against
-          if (n0 > 0)
-            newTombs.write.mode(if (exists) "append" else "overwrite")
-              .parquet(tombPath)
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactPqIndex(s, path)
-          n0
-        },
-        {
-          // pending-forget (r19c — the media q137 ordering at compressed
-          // grain): a takedown racing ahead of its id's first arrival pends
-          // until [[mergePqBatchIntoIndex]] consumes it
-          val early = victimIds.select("vec_id").dropDuplicates("vec_id")
-            .join(broadcast(located.select("vec_id")), Seq("vec_id"), "left_anti")
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-              Seq("vec_id"), "left_anti")
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/pending", "vec_id"),
-              Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-          if (!early.isEmpty)
-            early.write.mode("append").parquet(s"$path/pending")
-        })
-      n
-    }
+    IndexLifecycle.takedown(pqFamily, victimIds, path)
 
   /** Scheduled compaction, VERSIONED: rewrites the codes artifact minus
     * the tombstoned ids into a fresh committed version, carrying the
@@ -5461,15 +5252,9 @@ object Similarity {
     * the fit is once-per-life, q126b's row), then keep-N GC. No-ops when
     * there are no live victims. */
   def compactPqIndex(s: SparkSession, path: String): Unit =
-    withIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       val root = pqLiveRoot(s, path)
-      val victims =
-        if (graft.ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          IndexLifecycle.readStamped(s, s"$root/codes")
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-              Seq("vec_id"), "left_semi").count()
-        else 0L
-      if (victims > 0) {
+      if (IndexLifecycle.liveVictims(s, pqFamily, path, root) > 0) {
         val newRoot = s"$path/versions/${nextVersionName(s, path)}"
         // the three artifact writes are mutually independent and land in
         // an UNCOMMITTED version directory — readers resolve through the
@@ -5499,19 +5284,6 @@ object Similarity {
           Seq("codes", "codebook", "coarse", "stat"))
       }
     }
-
-  /** The PQ MAINTENANCE POLICY's tombstone leg: compact when live
-    * victims reach `spark.graft.pqCompactTombstoneFrac` (default 0.25)
-    * of the stored rows; the q148 gate row's 1/40 = 2.5% victims sit far
-    * under it, so the row certifies the LAZY read path specifically. */
-  private def maybeCompactPqIndex(s: SparkSession, path: String): Unit = {
-    val root = pqLiveRoot(s, path)
-    if (graft.IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/codes").select("vec_id"),
-        s"$path/tombstones", "vec_id", "spark.graft.pqCompactTombstoneFrac",
-        memoKey = root))
-      compactPqIndex(s, path)
-  }
 
   // ---------------------------------------------------------------------
   // PQ DISTORTION DRIFT + REFIT (r19c): the last family asymmetry — ANN
@@ -5601,7 +5373,7 @@ object Similarity {
   def pqIndexDistortionReport(s: SparkSession, path: String): DataFrame = {
     val root = pqLiveRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
-      withIndexWriter(s, path) {
+      IndexLifecycle.withWriter(s, path) {
         // re-check under the gate (r20, advice #2): two concurrent
         // reports may both have seen it missing — only one writes
         if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
@@ -5636,7 +5408,7 @@ object Similarity {
   def rebuildPqIndex(s: SparkSession, path: String,
                      beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
-    val (root, newRoot) = withIndexWriteLock(path) {
+    val (root, newRoot) = IndexLifecycle.withLock(path) {
       val nr = s"$path/versions/${nextVersionName(s, path)}"
       hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
       (pqLiveRoot(s, path), nr)
@@ -5652,7 +5424,7 @@ object Similarity {
       .write.mode("overwrite").partitionBy("c_label").parquet(s"$newRoot/codes")
     snapshot.unpersist(blocking = false)
     beforeCatchup()
-    withIndexWriter(s, path) {
+    IndexLifecycle.withWriter(s, path) {
       // catchup: live rows merged into the OLD version mid-refit, encoded
       // with the NEW codebook (fresh file listing — the merge appends)
       val missed = pqLiveResidualCorpus(s, path, root).drop("codes")
@@ -5704,7 +5476,7 @@ object Similarity {
       // APPEND to the statref sidecar (r20, advice #2) — never a
       // rewrite of `stat` inside the live version, which a concurrent
       // report may have file-listed already.
-      withIndexWriter(s, path) {
+      IndexLifecycle.withWriter(s, path) {
         import s.implicits._
         val refPath = s"$root/statref"
         val mode =

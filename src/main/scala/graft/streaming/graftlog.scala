@@ -40,9 +40,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * segment. Planning splits each segment slice into its own partition —
   * read parallelism scales with segments like Kafka's with partitions.
   * (Listing the directory per `latestOffset` is O(segments) in stat
-  * calls; line counts come from a cache keyed by (path, inode, size) —
-  * segments are immutable once visible, and a sink replay that rewrites
-  * a b-segment changes its identity key — so the per-micro-batch cost
+  * calls; line counts come from a per-log cache keyed by (segment,
+  * inode, size) — segments are immutable once visible, and a sink
+  * replay that rewrites a b-segment changes its identity key — so the
+  * per-micro-batch cost
   * does not re-read every byte of the log's life. A production log
   * would maintain a manifest, which is an I/O detail, not a contract
   * change.)
@@ -135,35 +136,42 @@ object GraftLog {
     }
   }
 
-  /** Line counts keyed by (path, inode, size): a visible segment is
-    * immutable, and the one mutation path — a sink REPLAY un-publishing
-    * and rewriting a b-segment — goes through temp-file + atomic rename,
-    * i.e. a NEW inode, so a stale entry can never be served (fileKey
-    * beats mtime, whose granularity could miss a same-millisecond
-    * rewrite). Bounded: wiped when it outgrows 8192 segments
-    * (re-counting is only a cold start, not a correctness event). */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), Long]()
+  /** Line counts per log directory, keyed within it by (segment name,
+    * inode, size): a visible segment is immutable, and the one mutation
+    * path — a sink REPLAY un-publishing and rewriting a b-segment — goes
+    * through temp-file + atomic rename, i.e. a NEW inode, so a stale
+    * entry can never be served (fileKey beats mtime, whose granularity
+    * could miss a same-millisecond rewrite). Each call replaces its
+    * directory's entry with the counts of the CURRENT listing, so the
+    * cache holds exactly the live segments of every log read and the
+    * upkeep is O(segments of this log) — no global size cliff past which
+    * every call re-reads every segment. */
+  private val countCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[(String, String, Long), Long]]()
 
   /** (segment, lineCount) pairs in offset order. latestOffset and
     * planInputPartitions both call this every micro-batch — the cache
     * keeps that at O(segments) stat calls instead of re-reading every
     * line of every segment twice per batch. */
-  private[graft] def segmentCounts(d: Path): Seq[(Path, Long)] =
-    listSegments(d).map { p =>
+  private[graft] def segmentCounts(d: Path): Seq[(Path, Long)] = {
+    val dirKey = d.toAbsolutePath.toString
+    val prior = countCache.getOrDefault(dirKey, Map.empty)
+    val counted = listSegments(d).map { p =>
       val attrs = Files.readAttributes(p,
         classOf[java.nio.file.attribute.BasicFileAttributes])
-      val key = (p.toAbsolutePath.toString,
+      val key = (p.getFileName.toString,
         Option(attrs.fileKey).map(_.toString)
           .getOrElse(attrs.lastModifiedTime.toString),
         attrs.size)
-      if (countCache.size > 8192) countCache.clear()
-      val n = countCache.computeIfAbsent(key, _ => {
+      val n = prior.getOrElse(key, {
         val it = Files.lines(p)
         try it.count() finally it.close()
       })
-      (p, n)
+      (p, key, n)
     }
+    countCache.put(dirKey, counted.iterator.map(c => c._2 -> c._3).toMap)
+    counted.map(c => (c._1, c._3))
+  }
 }
 
 /** One contiguous record range of one segment file. */

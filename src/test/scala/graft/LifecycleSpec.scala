@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   * or serving-stream setup). */
 class LifecycleSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.functions.col
 
   private def finalPlan(df: org.apache.spark.sql.DataFrame) = {
     val exec = df.queryExecution.executedPlan
@@ -167,5 +168,110 @@ class LifecycleSpec extends SparkSpec {
     assert(TextAnalysis.lexSegCount(spark, path) == 2L,
       "append did not invalidate the memoized segment count")
     assert(TextAnalysis.lexHasSegments(spark, path))
+  }
+
+  /** One standing-index family as the replay cases drive it: build a
+    * fresh index at `path`, admit a batch, take ids down. `registry` is
+    * the artifact whose rows are the admitted ids; `audit` marks the
+    * families whose tombstone rows record the stored cell. Every index
+    * here is flat (never compacted), so the ANN tombstone log — kept
+    * under the version root — sits at `path/tombstones` like the rest. */
+  private case class Family(name: String, idCol: String, registry: String,
+      audit: Boolean, build: String => Unit,
+      arrival: Long => org.apache.spark.sql.DataFrame,
+      merge: (org.apache.spark.sql.DataFrame, String) => Unit,
+      forget: (org.apache.spark.sql.DataFrame, String) => Unit)
+
+  private def mediaHashes(ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    def bits(v: Long, n: Int): String =
+      (n - 1 to 0 by -1).map(k => if (((v >> k) & 1L) == 1L) '1' else '0').mkString
+    ids.map { id =>
+      (id, Array.tabulate(4)(k => ((id * 2654435761L) ^ (k * 0x9E3779B9L)).toInt),
+        Array.tabulate(4)(b => bits(b, 16) + bits(id & 0xFFFFL, 16) + "0" * 48))
+    }.toDF("doc_id", "v", "bk")
+  }
+
+  private lazy val vec: Array[Float] =
+    Similarity.annDelta(spark, sf).select("embedding").as[Array[Float]].head()
+
+  private lazy val families = Seq(
+    Family("dedup", "doc_id", "shingles", audit = false,
+      p => Dedup.buildDedupIndex(spark, sf, p): Unit,
+      id => Seq((id, "a late arrival of a forgotten document")).toDF("doc_id", "text"),
+      (b, p) => Dedup.mergeDedupBatchIntoIndex(b, p): Unit,
+      (r, p) => Dedup.forgetDedupFromIndex(r, p): Unit),
+    Family("lexical", "doc_id", "doclens", audit = false,
+      p => TextAnalysis.buildLexIndex(spark, sf, p): Unit,
+      id => Seq((id, "a late arrival of a forgotten document")).toDF("doc_id", "text"),
+      (b, p) => TextAnalysis.mergeLexBatchIntoIndex(b, p, seg = 1L): Unit,
+      (r, p) => TextAnalysis.forgetLexFromIndex(r, p, seg = 2L): Unit),
+    Family("media", "doc_id", "vecs", audit = false,
+      p => MediaOps.buildIndexFrom(mediaHashes(0L until 20L), p): Unit,
+      id => mediaHashes(Seq(id)),
+      (b, p) => MediaOps.mergeHashesIntoIndex(b, p, "image"): Unit,
+      (r, p) => MediaOps.forgetMediaFromIndex(r, p): Unit),
+    Family("ann", "vec_id", "assignments", audit = true,
+      p => Similarity.buildAnnIndex(spark, sf, p): Unit,
+      id => Seq((id, vec)).toDF("vec_id", "embedding"),
+      (b, p) => Similarity.mergeDeltaIntoIndex(b, p),
+      (r, p) => Similarity.forgetVictimIdsFrom(r, p)),
+    Family("pq", "vec_id", "codes", audit = true,
+      p => Similarity.buildPqIndex(spark, sf, p): Unit,
+      id => Seq((id, vec)).toDF("vec_id", "embedding"),
+      (b, p) => Similarity.mergePqBatchIntoIndex(b, p): Unit,
+      (r, p) => Similarity.forgetPqFromIndex(r, p): Unit))
+
+  test("every family's id logs survive replay: a crashed first append, a redelivered takedown, the pending consult's crash window") {
+    families.foreach { f =>
+      val path = java.nio.file.Files.createTempDirectory(s"graft-replay-${f.name}").toString
+      f.build(path)
+      val (tombs, pending) = (s"$path/tombstones", s"$path/pending")
+      def ids(dir: String): Seq[Long] =
+        IndexLifecycle.idLogOf(spark, dir, f.idCol).select(f.idCol).as[Long]
+          .collect().sorted.toSeq
+      def stamps = (IndexLifecycle.dirStamp(spark, tombs), IndexLifecycle.dirStamp(spark, pending))
+      val registry = spark.read.parquet(s"$path/${f.registry}")
+      val auditCols = if (f.audit) Seq("c_label") else Nil
+      val present = registry.select(f.idCol).as[Long].collect().sorted.take(2).toSeq
+      val absent = Seq(900001L, 900002L)
+      val requests = (present ++ absent).toDF(f.idCol)
+
+      // (1) the takedown's first tombstone append crashed after its part
+      // files landed but before `_SUCCESS`: the log reads as absent, so
+      // the replay writes every id again — and must not publish the
+      // crashed attempt's files beside its own
+      registry.filter(col(f.idCol).isin(present: _*))
+        .select((f.idCol +: auditCols).map(col): _*).write.parquet(tombs)
+      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$tombs/_SUCCESS"))
+      f.forget(requests, path)
+      assert(ids(tombs) == present,
+        s"${f.name}: present ids must land in tombstones exactly once")
+      assert(ids(pending) == absent, s"${f.name}: absent ids must land in pending exactly once")
+      if (f.audit)
+        assert(spark.read.parquet(tombs).filter(col("c_label").isNull).isEmpty,
+          s"${f.name}: a takedown tombstone lost its stored cell")
+      // (2) the same takedown delivered again appends nothing
+      val before = stamps
+      f.forget(requests, path)
+      assert(stamps == before, s"${f.name}: the redelivered takedown appended to a log")
+      assert(ids(tombs) == present && ids(pending) == absent)
+
+      // (3) the consult's crash window, built by hand: a pending takedown
+      // was delivered — its tombstone landed — and the driver died before
+      // the pending consume. The replayed merge must not tombstone the id
+      // again, must finish the consume, and must refuse the arrival.
+      val late = 900007L
+      Seq(late).toDF(f.idCol).write.mode("append").parquet(pending)
+      spark.range(1).selectExpr(
+        Seq(s"cast($late as bigint) as ${f.idCol}") ++
+          (if (f.audit) Seq("cast(null as int) as c_label") else Nil): _*)
+        .write.mode("append").parquet(tombs)
+      f.merge(f.arrival(late), path)
+      assert(ids(tombs) == (present :+ late).sorted,
+        s"${f.name}: replayed consult re-tombstoned the id")
+      assert(ids(pending) == absent, s"${f.name}: replayed consult left the pending entry")
+      assert(spark.read.parquet(s"$path/${f.registry}").filter(col(f.idCol) === late).isEmpty,
+        s"${f.name}: replayed consult admitted a forgotten id")
+    }
   }
 }

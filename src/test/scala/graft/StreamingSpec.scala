@@ -2468,6 +2468,32 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(outDir)).map(_._2).sum == 5)
   }
 
+  test("GraftLog line-count cache holds every live segment of a log past 8,192 segments") {
+    // a long-lived topic: 8,300 one-line segments written directly (the
+    // appender lists the directory per call, which would dominate here)
+    val d = java.nio.file.Files.createTempDirectory("graftlog-countcache")
+    val nSegs = 8300
+    (0 until nSegs).foreach { i =>
+      java.nio.file.Files.write(d.resolve(f"$i%08d.seg"), "ab\n".getBytes("UTF-8"))
+    }
+    val first = graft.streaming.GraftLog.segmentCounts(d)
+    assert(first.length == nSegs && first.map(_._2).sum == nSegs)
+    // rewrite the FIRST segment in place: same inode, same size, two
+    // lines instead of one. Segments are immutable once visible, so the
+    // cache may serve the count it already holds — and a cache that
+    // still holds every live segment must: re-reading it means the
+    // second call paid a re-count of the log
+    val seg0 = d.resolve("00000000.seg")
+    val key0 = java.nio.file.Files.getAttribute(seg0, "unix:ino")
+    java.nio.file.Files.write(seg0, "a\n\n".getBytes("UTF-8"))
+    assert(java.nio.file.Files.getAttribute(seg0, "unix:ino") == key0 &&
+      java.nio.file.Files.size(seg0) == 3L)
+    val second = graft.streaming.GraftLog.segmentCounts(d)
+    assert(second.head._2 == 1L,
+      "the cache dropped live segments of the log and re-counted them")
+    assert(second.map(_._2).sum == nSegs)
+  }
+
   test("full reference topology: producer → GraftLog → consumer → Block Kit HTTP") {
     // the reference's whole pipeline as one flow over REAL machinery:
     // raw email → clean/style → Avro value → segment log (Kafka stand-in,
