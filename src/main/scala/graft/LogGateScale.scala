@@ -47,9 +47,9 @@ object LogGateScale {
     // were a real 20% wave — rebuild fresh so every run measures the
     // same work
     if (ScratchPaths.artifactExists(spark, s"$path/tombstones/_SUCCESS"))
-      Similarity.hadoopFs(spark, path)
+      IndexLifecycle.hadoopFs(spark, path)
         .delete(new org.apache.hadoop.fs.Path(path), true): Unit
-    if (!TextAnalysis.lexIndexExists(spark, path))
+    if (!IndexLifecycle.exists(spark, TextAnalysis.lexFamily, path))
       TextAnalysis.buildLexIndex(spark, d, path): Unit
     val t0 = System.nanoTime()
     val forgotten = TextAnalysis.forgetLexFromIndex(

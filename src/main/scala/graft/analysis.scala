@@ -781,7 +781,7 @@ object TextAnalysis {
   //    root-level tombstone log (+ the media pending-forget log for
   //    ids that have not arrived yet); every reader anti-joins it;
   //    [[compactLexIndex]] makes it physical in a fresh committed
-  //    version (resolveIndexRoot machinery verbatim) and keep-N GC
+  //    version (the [[IndexLifecycle]] version store) and keep-N GC
   //    retires the tail. No reader's planned file listing is ever
   //    invalidated by any writer — appends and fresh version dirs only.
   //
@@ -793,37 +793,23 @@ object TextAnalysis {
   // corpus-sized pass and amortizes LSM-style.
   // ---------------------------------------------------------------------
 
-  /** The lexical family's id-log lifecycle: doclens is the registry, its
-    * doc lengths ride into the takedown for the negative stat
-    * contributions, and contribution segments past
+  /** The lexical family's lifecycle: doclens is the registry, the build
+    * writes postings last, the doc lengths ride into the takedown for
+    * the negative stat contributions, and contribution segments past
     * `spark.graft.lexCompactSegments` (default 16) are a second
     * compaction trigger — bounding the per-read fold width and the
     * crash-dupe distinct's input; the stamp-memoized [[lexSegCount]]
-    * keeps that check zero-job between mutations. */
-  private val lexFamily = IdLogFamily("doc_id", "doclens",
+    * keeps that check zero-job between mutations. The tombstone and
+    * pending logs stay at the PATH ROOT, shared across versions. */
+  private[graft] val lexFamily = IdLogFamily("doc_id", "doclens", "postings",
+    Seq("postings", "doclens", "terms", "stats"),
     "spark.graft.lexCompactTombstoneFrac", compactLexIndex,
     carry = Seq("dl"),
     fragmented = (s, root) => lexSegCount(s, root) - 1 >
       IndexLifecycle.confInt(s, "spark.graft.lexCompactSegments", 16))
 
-  /** The LIVE artifact root of a (possibly versioned) lexical index —
-    * postings/doclens/terms/stats resolve through here; the tombstone
-    * and pending logs stay at the PATH ROOT, shared across versions. */
-  private[graft] def lexLiveRoot(s: SparkSession, path: String): String =
-    Similarity.resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: flat artifacts present OR any committed version
-    * (keep-N GC retires the flat root once the window fills). */
-  private[graft] def lexIndexExists(s: SparkSession, path: String): Boolean =
-    ScratchPaths.artifactExists(s, s"$path/postings/_SUCCESS") ||
-      lexLiveRoot(s, path) != path
-
   private[graft] def lexPendingOf(s: SparkSession, path: String): DataFrame =
     IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
-
-  private def minusLexTombstones(df: DataFrame, s: SparkSession,
-                                 path: String): DataFrame =
-    IndexLifecycle.minusIdLog(df, s, s"$path/tombstones", "doc_id")
 
   /** The folded dictionary of a resolved root: segment contributions
     * collapsed (distinct = the crash-replay guard) then summed per term;
@@ -846,7 +832,8 @@ object TextAnalysis {
   /** Live doc lengths: stored rows minus the tombstone log. */
   private[graft] def lexDoclensOf(s: SparkSession, path: String,
                                   root: String): DataFrame =
-    minusLexTombstones(IndexLifecycle.readStamped(s, s"$root/doclens"), s, path)
+    IndexLifecycle.live(lexFamily, path, root)(
+      IndexLifecycle.readStamped(s, s"$root/doclens"))
 
   /** Segment count of a root's contribution log — MEMOIZED per root
     * (r20, VERDICT r19 #5 + advice #4): probes, serving-stream setups,
@@ -888,8 +875,8 @@ object TextAnalysis {
   private[graft] def lexPostingsOf(s: SparkSession, path: String,
                                    root: String): DataFrame = {
     val base = IndexLifecycle.readStamped(s, s"$root/postings").drop("tb")
-    minusLexTombstones(
-      if (lexHasSegments(s, root)) base.distinct() else base, s, path)
+    IndexLifecycle.live(lexFamily, path, root)(
+      if (lexHasSegments(s, root)) base.distinct() else base)
   }
 
   /** The shared deterministic tokenizer — build, merge, and the q129
@@ -938,7 +925,7 @@ object TextAnalysis {
     * versions within one probe), statistics folded as of now, postings
     * bucket-pruned then crash-dupe-collapsed and tombstone-subtracted. */
   def lexIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
-    val root = lexLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     val qterms = bm25QueryTerms(lexTermsOf(s, root), lexStatsOf(s, root))
       .transform(Tables.maybePersist) // 3 rows — feeds the bucket filter AND the score join
     // probed buckets, derived with the WRITE side's own expression —
@@ -958,11 +945,11 @@ object TextAnalysis {
     val pruned = IndexLifecycle.readStamped(s, s"$root/postings")
       .filter(col("tb").isin(tbs: _*))
       .drop("tb")
-    val postings = minusLexTombstones(
+    val postings = IndexLifecycle.live(lexFamily, path, root)(
       if (lexHasSegments(s, root))
         pruned.join(broadcast(qterms.select("term")), Seq("term"), "left_semi")
           .distinct()
-      else pruned, s, path)
+      else pruned)
     bm25Score(postings, lexDoclensOf(s, path, root), qterms)
   }
 
@@ -974,77 +961,56 @@ object TextAnalysis {
     * against the doclens registry, tombstoned ids can never re-admit,
     * and a crash-windowed partial replay re-appends byte-identical rows
     * that the read-side distinct collapses. */
-  def mergeLexBatchIntoIndex(batch: DataFrame, path: String, seg: Long): (Long, Long) =
-    IndexLifecycle.withWriter(batch.sparkSession, path) {
-      val s = batch.sparkSession
-      val root = lexLiveRoot(s, path) // appends fold into the LIVE version
-      val docs0 = batch.select(col("doc_id").cast("long"), col("text"))
-        .dropDuplicates("doc_id") // in-batch exact-id replays
-        .transform(Tables.maybePersist)
-      IndexLifecycle.consultPending(s, lexFamily, path, root, docs0)
-      // replay guards: the doclens registry (already admitted) and the
-      // tombstone log (forgotten ids never resurrect)
-      val fresh = minusLexTombstones(
-          docs0.join(IndexLifecycle.readStamped(s, s"$root/doclens").select("doc_id"),
-            Seq("doc_id"), "left_anti"), s, path)
-        .transform(Tables.maybePersist)
-      // r22 (guide §2.6): the batch-size count and the admit leg share
-      // only materialized inputs (docs0's cache), so they overlap — on
-      // the replay path this folds the count into the isEmpty probe's
-      // window; the admit leg keeps the calling thread (writer gate)
-      // and its write ORDER is unchanged
-      val (nAdmit, nBatch) = Par.run2(
-      // replay fast path (r21): an idempotent re-delivery anti-joins to
-      // nothing — skip the tokenize/tf/dl subtree outright (it would
-      // run three jobs over zero rows); `fresh` is materialized by this
-      // probe, so the non-empty path below pays no second scan
-      if (fresh.isEmpty) 0L else {
-      val toks = lexTokens(fresh).transform(Tables.maybePersist)
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .transform(Tables.maybePersist)
-      // localCheckpoint: dl's lineage reads the doclens path the append
-      // below writes (the read-write-cycle discipline)
-      val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-        .localCheckpoint()
-      val nAdmit = dl.count()
-      if (nAdmit > 0) {
-        // the three contribution appends are mutually independent and
-        // none is the replay guard — overlap them (guide §2.6, the
-        // buildLexIndex Par discipline on the merge tail, r21); the
-        // write-order crash rule only requires every one of them to
-        // land BEFORE the doclens registry, which the join preserves
-        Par.run3(
-          // df contributions: +1 per (term, admitted doc), this segment
-          tf.groupBy("term").agg(count(lit(1)).cast("long").as("df"))
-            .withColumn("seg", lit(seg))
-            .write.mode("append").parquet(s"$root/terms"),
-          // corpus-stat contribution: admitted docs + their token mass —
-          // idf/avgdl re-price at the next read, no trigger needed
-          dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
-            .selectExpr("cast(n_docs as bigint) as n_docs",
-              "cast(tot as bigint) as tot", s"cast($seg as bigint) as seg")
-            .write.mode("append").parquet(s"$root/stats"),
-          // delta postings into the bucket layout (append-only — a probe's
-          // planned listing is never invalidated)
-          tf.withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
-            .repartition(col("tb"))
-            .write.mode("append").partitionBy("tb").parquet(s"$root/postings"))
-        // the registry LAST: a crash anywhere above replays the whole
-        // batch (identical rows → read-side collapse); after this write
-        // the replay anti-joins to nothing
-        dl.write.mode("append").parquet(s"$root/doclens")
+  def mergeLexBatchIntoIndex(batch: DataFrame, path: String, seg: Long): (Long, Long) = {
+    val s = batch.sparkSession
+    IndexLifecycle.withWriter(s, path) {
+      val counts = IndexLifecycle.merge(lexFamily,
+          batch.select(col("doc_id").cast("long"), col("text")), path) { (root, fresh) =>
+        val toks = lexTokens(fresh).transform(Tables.maybePersist)
+        val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+          .transform(Tables.maybePersist)
+        // one eager pass: the count and both dl consumers below read it
+        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+          .localCheckpoint()
+        val nAdmit = dl.count()
+        if (nAdmit > 0) {
+          // the three contribution appends are mutually independent and
+          // none is the replay guard — overlap them (guide §2.6, the
+          // buildLexIndex Par discipline on the merge tail, r21); the
+          // write-order crash rule only requires every one of them to
+          // land BEFORE the doclens registry, which the join preserves
+          Par.run3(
+            // df contributions: +1 per (term, admitted doc), this segment
+            tf.groupBy("term").agg(count(lit(1)).cast("long").as("df"))
+              .withColumn("seg", lit(seg))
+              .write.mode("append").parquet(s"$root/terms"),
+            // corpus-stat contribution: admitted docs + their token mass —
+            // idf/avgdl re-price at the next read, no trigger needed
+            dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
+              .selectExpr("cast(n_docs as bigint) as n_docs",
+                "cast(tot as bigint) as tot", s"cast($seg as bigint) as seg")
+              .write.mode("append").parquet(s"$root/stats"),
+            // delta postings into the bucket layout (append-only — a
+            // probe's planned listing is never invalidated)
+            tf.withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
+              .repartition(col("tb"))
+              .write.mode("append").partitionBy("tb").parquet(s"$root/postings"))
+          // the registry LAST: a crash anywhere above replays the whole
+          // batch (identical rows → read-side collapse); after this write
+          // the replay anti-joins to nothing
+          dl.write.mode("append").parquet(s"$root/doclens")
+        }
+        nAdmit
       }
-      nAdmit
-      },
-      docs0.count())
       // merge-side maintenance, UNCONDITIONAL (r20, the forget-tail
       // rule): a crash after the doclens registry but before the check
       // replays into nAdmit = 0, which must not skip the fragmentation
       // check forever; the check is zero-job (stamp-memoized segment
       // count + the amortized tombstone bound)
       IndexLifecycle.maybeCompact(s, lexFamily, path)
-      (nAdmit, nBatch - nAdmit)
+      counts
     }
+  }
 
   /** q143's core — right-to-be-forgotten against the standing lexical
     * index, LSM-style: victims located in the doclens registry append to
@@ -1093,18 +1059,15 @@ object TextAnalysis {
     * point re-run costs counts, not a corpus copy. Logs stay at the
     * PATH ROOT (audit trail + the merge-side replay guard forever). */
   def compactLexIndex(s: SparkSession, path: String): Unit =
-    IndexLifecycle.withWriter(s, path) {
-      val root = lexLiveRoot(s, path)
+    IndexLifecycle.compactVersion(s, lexFamily, path) { root =>
       val victims = IndexLifecycle.liveVictims(s, lexFamily, path, root)
       val segments = IndexLifecycle.readStamped(s, s"$root/stats")
         .select("seg").distinct().count()
-      if (victims > 0 || segments > 1) {
-        val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
+      Option.when(victims > 0 || segments > 1) { newRoot =>
         val dl = lexDoclensOf(s, path, root).transform(Tables.maybePersist)
-        // all four writes land in an UNCOMMITTED version directory —
-        // invisible until the _COMMITTED marker below — so their order
-        // is free: overlap them two-by-two (guide §2.6, r21; dl's two
-        // consumers share one thread so the persisted frame fills once)
+        // the four writes are independent: overlap them two-by-two
+        // (guide §2.6, r21; dl's two consumers share one thread so the
+        // persisted frame fills once)
         Par.run2(
           {
             dl.write.mode("overwrite").parquet(s"$newRoot/doclens")
@@ -1116,15 +1079,12 @@ object TextAnalysis {
           {
             lexTermsOf(s, root).withColumn("seg", lit(-1L))
               .write.mode("overwrite").parquet(s"$newRoot/terms")
-            minusLexTombstones(
-                IndexLifecycle.readStamped(s, s"$root/postings").drop("tb").distinct(), s, path)
+            IndexLifecycle.live(lexFamily, path, root)(
+                IndexLifecycle.readStamped(s, s"$root/postings").drop("tb").distinct())
               .withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
               .repartition(col("tb"))
               .write.mode("overwrite").partitionBy("tb").parquet(s"$newRoot/postings")
-          })
-        // atomic commit + keep-N GC (the r19 write-path wiring, shared tail)
-        IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("postings", "doclens", "terms", "stats"))
+          }): Unit
       }
     }
 
@@ -1138,7 +1098,7 @@ object TextAnalysis {
   def lexIndexMerge(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q142-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, lexFamily, path)) buildLexIndex(s, d, path)
     mergeLexBatchIntoIndex(
       Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .selectExpr("doc_id + 100000 as doc_id", "text"),
@@ -1156,7 +1116,7 @@ object TextAnalysis {
   def lexIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q143-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, lexFamily, path)) buildLexIndex(s, d, path)
     forgetLexFromIndex(
       Tables.documents(s, d).filter(col("doc_id") % 7 === 3).select("doc_id"),
       path, seg = 1L)
@@ -1179,7 +1139,7 @@ object TextAnalysis {
   def lexIndexMaintain(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q144-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, lexFamily, path)) buildLexIndex(s, d, path)
     mergeLexBatchIntoIndex(
       Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .selectExpr("doc_id + 100000 as doc_id", "text"),
@@ -3361,7 +3321,7 @@ object TextAnalysis {
     // process — the q102/q119/q126 gate pattern); q132b is the build
     "q132_lex_index_probe" -> ((s, d) => {
       val path = lexIndexPathFor(d)
-      if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+      if (!IndexLifecycle.exists(s, lexFamily, path)) buildLexIndex(s, d, path)
       lexIndexProbeStored(s, d, path)
     }),
     "q132b_lex_index_build" -> ((s, d) => {

@@ -721,7 +721,7 @@ object Dedup {
   //    the root tombstone log; every reader subtracts it (one broadcast
   //    anti-join on each artifact — effective immediately, no stored file
   //    touched); [[compactDedupIndex]] makes it physical in a fresh
-  //    committed version (resolveIndexRoot/_COMMITTED verbatim) + keep-N
+  //    committed version (the [[IndexLifecycle]] version store) + keep-N
   //    GC, and defragments crash-dupe band rows along the way.
   //  · MAINTENANCE POLICY: the forget tail auto-compacts once live
   //    victims cross `spark.graft.dedupCompactTombstoneFrac` (0.25).
@@ -730,41 +730,25 @@ object Dedup {
   // compaction is the one corpus-sized pass and amortizes LSM-style.
   // ---------------------------------------------------------------------
 
-  /** The dedup family's id-log lifecycle: the shingle set is the
-    * registry, the tombstone leg of the maintenance policy reads
-    * `spark.graft.dedupCompactTombstoneFrac`. */
-  private val dedupFamily = IdLogFamily("doc_id", "shingles",
-    "spark.graft.dedupCompactTombstoneFrac", compactDedupIndex)
-
-  /** The LIVE artifact root of a (possibly versioned) dedup index; the
+  /** The dedup family's lifecycle: the shingle set is the registry, the
+    * build writes bands last, the tombstone leg of the maintenance
+    * policy reads `spark.graft.dedupCompactTombstoneFrac`. The
     * tombstone/pending logs stay at the PATH ROOT, shared across
     * versions (audit trail + the merge-side replay guard forever). */
-  private[graft] def dedupLiveRoot(s: SparkSession, path: String): String =
-    Similarity.resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: flat artifacts present OR any committed version
-    * (keep-N GC retires the flat root once the window fills). */
-  private[graft] def dedupIndexExists(s: SparkSession, path: String): Boolean =
-    ScratchPaths.artifactExists(s, s"$path/bands/_SUCCESS") ||
-      dedupLiveRoot(s, path) != path
+  private[graft] val dedupFamily = IdLogFamily("doc_id", "shingles", "bands",
+    Seq("shingles", "bands"), "spark.graft.dedupCompactTombstoneFrac",
+    compactDedupIndex)
 
   private[graft] def dedupPendingOf(s: SparkSession, path: String): DataFrame =
     IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
 
-  private def minusDedupTombstones(df: DataFrame, s: SparkSession,
-                                   path: String): DataFrame =
-    IndexLifecycle.minusIdLog(df, s, s"$path/tombstones", "doc_id")
-
-  /** Live band rows: stored minus the tombstone log (skipped — plan
-    * untouched — when no log exists, so q102's pinned shape holds). */
-  private[graft] def dedupBandsOf(s: SparkSession, path: String,
-                                  root: String): DataFrame =
-    minusDedupTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
-
-  /** Live shingle rows (the registry): stored minus the tombstone log. */
-  private[graft] def dedupShinglesOf(s: SparkSession, path: String,
-                                     root: String): DataFrame =
-    minusDedupTombstones(IndexLifecycle.readStamped(s, s"$root/shingles"), s, path)
+  /** Live rows of one artifact of version `root`: stored minus the
+    * tombstone log (skipped — plan untouched — when no log exists, so
+    * q102's pinned shape holds). */
+  private def dedupLiveOf(s: SparkSession, path: String, root: String,
+                          artifact: String): DataFrame =
+    IndexLifecycle.live(dedupFamily, path, root)(
+      IndexLifecycle.readStamped(s, s"$root/$artifact"))
 
   /** Build the STANDING dedup index as parquet artifacts (the q100
     * export discipline): `path/shingles` = (doc_id, sh) and
@@ -798,45 +782,22 @@ object Dedup {
     * arrival refused via a permanent tombstone). Returns
     * (admitted, refused). */
   def mergeDedupBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
-    IndexLifecycle.withWriter(batch.sparkSession, path) {
+    IndexLifecycle.merge(dedupFamily,
+        batch.select(col("doc_id").cast("long"), col("text")), path) { (root, fresh) =>
       val s = batch.sparkSession
-      val root = dedupLiveRoot(s, path) // appends fold into the LIVE version
-      val docs0 = batch.select(col("doc_id").cast("long"), col("text"))
-        .dropDuplicates("doc_id") // in-batch exact-id replays
-        .transform(Tables.maybePersist)
-      IndexLifecycle.consultPending(s, dedupFamily, path, root, docs0)
-      // replay guards: the shingle registry (already admitted) and the
-      // tombstone log (forgotten ids never resurrect). localCheckpoint
-      // HERE (r21): it is this anti-join whose lineage reads the
-      // shingles path the registry append below writes (the read-write-
-      // cycle discipline), and cutting at the narrow fresh frame lets
-      // the idempotent-replay fast path skip the signing job outright
-      val fresh = minusDedupTombstones(
-          docs0.join(IndexLifecycle.readStamped(s, s"$root/shingles").select("doc_id"),
-            Seq("doc_id"), "left_anti"), s, path)
+      // one eager pass: both appends below consume the signed frame
+      val signed = signedCorpus(s, fresh.select(col("doc_id"), col("text")))
         .localCheckpoint()
-      // r22 (guide §2.6): batch-size count ∥ admit leg — independent
-      // once docs0 is cached and fresh checkpointed; the admit leg's
-      // writes keep the calling thread (writer gate) and their ORDER
-      // (bands, then the shingle registry LAST) is unchanged
-      val (nAdmit, nBatch) = Par.run2(
-      if (fresh.isEmpty) 0L else {
-        // one eager pass: both appends below consume the signed frame
-        val signed = signedCorpus(s, fresh.select(col("doc_id"), col("text")))
-          .localCheckpoint()
-        val n0 = signed.count()
-        if (n0 > 0) {
-          lshBands(signed).write.mode("append").parquet(s"$root/bands")
-          // the registry LAST: a crash anywhere above replays the whole
-          // batch (identical band rows → candidate-side collapse); after
-          // this write the replay anti-joins to nothing
-          signed.select(col("doc_id"), col("sh"))
-            .write.mode("append").parquet(s"$root/shingles")
-        }
-        n0
-      },
-      docs0.count())
-      (nAdmit, nBatch - nAdmit)
+      val n0 = signed.count()
+      if (n0 > 0) {
+        lshBands(signed).write.mode("append").parquet(s"$root/bands")
+        // the registry LAST: a crash anywhere above replays the whole
+        // batch (identical band rows → candidate-side collapse); after
+        // this write the replay anti-joins to nothing
+        signed.select(col("doc_id"), col("sh"))
+          .write.mode("append").parquet(s"$root/shingles")
+      }
+      n0
     }
 
   /** q146's core — right-to-be-forgotten against the standing dedup
@@ -857,20 +818,14 @@ object Dedup {
     * keep-N GC retires the tail. No-ops when there are no live victims —
     * the fixed-point re-run costs a count, not a corpus copy. */
   def compactDedupIndex(s: SparkSession, path: String): Unit =
-    IndexLifecycle.withWriter(s, path) {
-      val root = dedupLiveRoot(s, path)
-      if (IndexLifecycle.liveVictims(s, dedupFamily, path, root) > 0) {
-        val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
-        // both rewrites land in an UNCOMMITTED version directory (the
-        // _COMMITTED marker below is what flips readers), so their order
-        // is free: overlap them (guide §2.6, r21)
+    IndexLifecycle.compactVersion(s, dedupFamily, path) { root =>
+      Option.when(IndexLifecycle.liveVictims(s, dedupFamily, path, root) > 0) { newRoot =>
+        // both rewrites are independent: overlap them (guide §2.6, r21)
         Par.run2(
-          dedupShinglesOf(s, path, root)
+          dedupLiveOf(s, path, root, "shingles")
             .write.mode("overwrite").parquet(s"$newRoot/shingles"),
-          dedupBandsOf(s, path, root).distinct() // crash-dupe band rows fold
-            .write.mode("overwrite").parquet(s"$newRoot/bands"))
-        IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("shingles", "bands"))
+          dedupLiveOf(s, path, root, "bands").distinct() // crash-dupe band rows fold
+            .write.mode("overwrite").parquet(s"$newRoot/bands")): Unit
       }
     }
 
@@ -882,9 +837,9 @@ object Dedup {
     * skipped — plan untouched — when no log exists, so the un-maintained
     * gate artifact keeps its pinned shape). */
   def incrementalDedupStored(s: SparkSession, d: String, path: String): DataFrame = {
-    val root = dedupLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     incrementalDedupProbe(s, Tables.documents(s, d),
-      dedupBandsOf(s, path, root), dedupShinglesOf(s, path, root))
+      dedupLiveOf(s, path, root, "bands"), dedupLiveOf(s, path, root, "shingles"))
   }
 
   /** The q145 gate chain: lazy build → fold the +50000-rekeyed UNMUTATED
@@ -897,7 +852,7 @@ object Dedup {
   def dedupIndexMerge(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q145-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!dedupIndexExists(s, path)) buildDedupIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, dedupFamily, path)) buildDedupIndex(s, d, path)
     mergeDedupBatchIntoIndex(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 7)
         .selectExpr("doc_id + 50000 as doc_id", "text"),
@@ -915,7 +870,7 @@ object Dedup {
   def dedupIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q146-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!dedupIndexExists(s, path)) buildDedupIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, dedupFamily, path)) buildDedupIndex(s, d, path)
     forgetDedupFromIndex(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 7).select("doc_id"),
       path)
@@ -1868,7 +1823,7 @@ object Dedup {
     // the band rows read BACK from the artifact).
     "q102_incremental_dedup" -> ((s, d) => {
       val path = indexPathFor(d)
-      if (!dedupIndexExists(s, path)) buildDedupIndex(s, d, path)
+      if (!IndexLifecycle.exists(s, dedupFamily, path)) buildDedupIndex(s, d, path)
       incrementalDedupStored(s, d, path)
     }),
     "q102b_index_build" -> ((s, d) => {

@@ -3,15 +3,22 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** What one standing-index family's id-log lifecycle knows about itself.
-  * Everything else — the pending consult that opens a merge, the
-  * takedown, the compaction victim gate and the maintenance check — is
-  * written once in [[IndexLifecycle]]; a family supplies data and two
-  * hooks, never a copy of the contract.
+/** What one standing-index family's lifecycle knows about itself.
+  * Everything else — the version store, the build gate, the live-rows
+  * read, the merge skeleton, the pending consult, the takedown, the
+  * compaction tail, the victim gate and the maintenance check — is
+  * written once in [[IndexLifecycle]]; a family supplies data and hooks,
+  * never a copy of the contract.
   *
   * @param idCol     the id column of the registry and both logs
   * @param registry  the artifact, under the live root, whose rows ARE the
   *                  admitted ids (written last by every merge)
+  * @param built     the artifact the build writes LAST — the build gate
+  *                  keys "built" on its `_SUCCESS`
+  * @param artifacts the artifacts of one version: what keep-N GC retires
+  *                  from the flat root once the version window fills
+  *                  (the first one's presence marks the flat root as
+  *                  still there)
   * @param fracKey   the `spark.graft.*CompactTombstoneFrac` conf of the
   *                  tombstone-mass trigger (default 0.25)
   * @param compact   the family's compaction, called with the index path
@@ -30,6 +37,8 @@ import org.apache.spark.sql.functions._
 final case class IdLogFamily(
     idCol: String,
     registry: String,
+    built: String,
+    artifacts: Seq[String],
     fracKey: String,
     compact: (SparkSession, String) => Unit,
     audit: Seq[String] = Nil,
@@ -50,15 +59,15 @@ final case class IdLogFamily(
   * survive at-least-once replay (the reference consumer re-reads its
   * topic from the beginning, `Consumer/kafkaConsumer.js:53`): a
   * replayable source plus idempotent sinks. This object is that
-  * idempotence, written once: the writer gate, the append-only id logs
-  * (tombstones, pending forgets), the merge-side pending consult, the
-  * takedown, the compaction victim gate and maintenance check, and the
-  * commit+GC tail. Families keep only what is theirs — signing,
-  * encoding or tokenising the admit leg, the compaction rewrite, the ANN
-  * refit, media re-pricing, the lexical segment fold — and describe the
-  * rest with an [[IdLogFamily]]. Version resolution lives in
-  * [[Similarity]] (`resolveIndexRoot` / `nextVersionName` /
-  * `pruneVersions` / `keepVersions`).
+  * idempotence, written once: the writer gate, the version store
+  * (`versions/vN` + `_COMMITTED` layout, resolution, allocation, commit,
+  * keep-N GC), the build gate, the append-only id logs (tombstones,
+  * pending forgets) and the live-rows read behind them, the merge
+  * skeleton and its pending consult, the takedown, the compaction tail,
+  * victim gate and maintenance check. Families keep only what is theirs
+  * — signing, encoding or tokenising the admit leg, the compaction
+  * rewrite, the ANN refit and cell-pruned merge, media re-pricing, the
+  * lexical segment fold — and describe the rest with an [[IdLogFamily]].
   */
 object IndexLifecycle {
 
@@ -77,6 +86,162 @@ object IndexLifecycle {
     * every artifact writer of every family enters through here. */
   def withWriter[T](s: SparkSession, path: String)(body: => T): T =
     withLock(path)(ScratchPaths.withWriteIntent(s, path)(body))
+
+  // ---------------------------------------------------------------------
+  // VERSIONED INDEX ROOTS (r18, VERDICT r17 #3): a refit or compaction
+  // writes a fresh `$path/versions/v%05d` directory and commits it by
+  // CREATING a `_COMMITTED` marker — readers resolve the highest
+  // committed version. Marker-create is atomic on every Hadoop
+  // FileSystem including object stores (an atomic rename-OVERWRITE of a
+  // manifest file is not), in-flight probes that resolved before the
+  // commit keep reading the old version's files (which are never
+  // touched), and the old version is retained for exactly that reason.
+  // A path with no committed version is the legacy flat layout (the
+  // build's artifacts at the root — implicitly version 1). Versions
+  // order by NUMBER: `%05d` is a minimum width, so `v100000` follows
+  // `v99999` although it sorts before it as a string.
+  // ---------------------------------------------------------------------
+
+  private[graft] def hadoopFs(s: SparkSession, path: String) =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** Every version directory under `$path/versions`, committed or not,
+    * NEWEST FIRST. With [[isCommitted]] this is the one listing that
+    * resolution, allocation, the predecessor lookup and GC read. */
+  private def versionNames(s: SparkSession, path: String): Seq[String] = {
+    val fs = hadoopFs(s, path)
+    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
+    if (!fs.exists(vdir)) Nil
+    else fs.listStatus(vdir).toSeq.map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).sortBy(v => -versionNumber(v))
+  }
+
+  private def versionNumber(v: String): Long = v.drop(1).toLong
+
+  private def isCommitted(s: SparkSession, path: String, v: String): Boolean =
+    ScratchPaths.artifactExists(s, s"$path/versions/$v/_COMMITTED")
+
+  /** The CURRENT artifact root of a (possibly versioned) index — every
+    * reader and incremental writer resolves through here. */
+  private[graft] def resolveIndexRoot(s: SparkSession, path: String): String =
+    versionNames(s, path).find(isCommitted(s, path, _))
+      .fold(path)(v => s"$path/versions/$v")
+
+  /** The version the live one replaced: the second-newest committed
+    * version, else the flat root (implicit v1) while its built artifact
+    * is present, else None (predecessor pruned). */
+  private[graft] def previousVersionRoot(s: SparkSession, fam: IdLogFamily,
+                                          path: String): Option[String] =
+    versionNames(s, path).filter(isCommitted(s, path, _)).drop(1).headOption
+      .map(v => s"$path/versions/$v")
+      .orElse(Option.when(
+        ScratchPaths.artifactExists(s, s"$path/${fam.built}/_SUCCESS"))(path))
+
+  /** Next version directory name: one past the highest present (committed
+    * OR in-flight — a crashed writer's uncommitted directory is never
+    * reused). The flat root counts as version 1. */
+  private[graft] def nextVersionName(s: SparkSession, path: String): String =
+    f"v${math.max(1L, versionNames(s, path).headOption.fold(1L)(versionNumber)) + 1}%05d"
+
+  /** Allocate the next version directory under the per-path lock and
+    * CREATE it: [[nextVersionName]] counts in-flight directories, so a
+    * second writer started during a long lockless refit is handed the
+    * next name — without the mkdirs both would write into one directory. */
+  private[graft] def allocateVersion(s: SparkSession, path: String): String =
+    withLock(path) {
+      val root = s"$path/versions/${nextVersionName(s, path)}"
+      hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(root)): Unit
+      root
+    }
+
+  /** Keep-N window for [[pruneVersions]] — configurable per session;
+    * default live + one committed predecessor (in-flight pre-swap
+    * readers, rollback, and the q140 rebuild report all need it). */
+  private[graft] def keepVersions(s: SparkSession): Int =
+    s.conf.getOption("spark.graft.indexKeepVersions").map(_.toInt).getOrElse(2)
+
+  /** VERSION GC (r18): every refit or compaction leaves a full corpus
+    * copy — at production scale old versions must be retired or the
+    * index costs versions × corpus on disk forever. Keeps the LIVE
+    * version plus the `keep − 1` most recent committed predecessors;
+    * deletes older committed versions, uncommitted directories OLDER
+    * than the live version (crashed writers — an uncommitted directory
+    * NEWER than live may be an in-flight refit and is never touched),
+    * and, once `keep` committed versions exist, the flat artifacts (the
+    * implicit v1). The root logs are never touched: the tombstones are
+    * the audit trail and the merge-side replay guard. Never touches the
+    * live version. Returns the number of retired version roots. */
+  def pruneVersions(s: SparkSession, fam: IdLogFamily, path: String,
+                    keep: Int): Long =
+    withWriter(s, path) {
+      require(keep >= 1, s"keep must be >= 1: $keep")
+      val fs = hadoopFs(s, path)
+      def delete(rel: String): Boolean =
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), true)
+      val all = versionNames(s, path)
+      val committed = all.filter(isCommitted(s, path, _))
+      committed.headOption.fold(0L) { live =>
+        val crashed = all.filter(v => !committed.contains(v) &&
+          versionNumber(v) < versionNumber(live))
+        val retired = (committed.drop(keep) ++ crashed).count(v => delete(s"versions/$v"))
+        // the flat root (implicit v1) retires once committed versions
+        // fill the keep window
+        val flat = committed.size >= keep &&
+          ScratchPaths.artifactExists(s, s"$path/${fam.artifacts.head}")
+        if (flat) fam.artifacts.foreach(a => delete(a): Unit)
+        retired + (if (flat) 1L else 0L)
+      }
+    }
+
+  /** Commit a fully-written version directory: the atomic marker-create
+    * flips resolution to `newRoot` (in-flight readers of the old
+    * version keep their files end-to-end), then keep-N GC retires the
+    * tail — r19's rule that every versioning write path runs its own
+    * GC, so an unattended refit/compaction stream can never accumulate
+    * versions × corpus on disk. Caller holds the writer gate. */
+  def commitVersion(s: SparkSession, fam: IdLogFamily, path: String,
+                    newRoot: String): Unit = {
+    hadoopFs(s, path).create(
+      new org.apache.hadoop.fs.Path(s"$newRoot/_COMMITTED"), false).close()
+    pruneVersions(s, fam, path, keepVersions(s)): Unit
+    // retired-root memo entries die with the commit (r20): resolution
+    // just flipped, so every cached fact keyed under the old roots is
+    // stale by definition — and the map must not grow with history
+    memoSweep(path, newRoot)
+  }
+
+  /** The compaction tail, under the writer gate: resolve the live root,
+    * ask the family whether a rewrite is due — `due(root)` returns the
+    * rewrite, or None, so a fixed-point re-run writes nothing — then
+    * allocate the next version, rewrite into it and commit + GC. Every
+    * rewrite lands in an UNCOMMITTED directory, invisible until the
+    * `_COMMITTED` marker, so the order of its writes is free. */
+  def compactVersion(s: SparkSession, fam: IdLogFamily, path: String)(
+      due: String => Option[String => Unit]): Unit =
+    withWriter(s, path) {
+      due(resolveIndexRoot(s, path)).foreach { rewrite =>
+        val newRoot = allocateVersion(s, path)
+        rewrite(newRoot)
+        commitVersion(s, fam, path, newRoot)
+      }
+    }
+
+  /** The lazy-build gate: the flat build is complete (`fam.built`,
+    * written last by every build, has `_SUCCESS`) OR any version is
+    * committed — keep-N GC retires the flat root once the version window
+    * fills (r19), so keying "built" on the flat marker alone would
+    * silently rebuild a live versioned index. */
+  def exists(s: SparkSession, fam: IdLogFamily, path: String): Boolean =
+    ScratchPaths.artifactExists(s, s"$path/${fam.built}/_SUCCESS") ||
+      resolveIndexRoot(s, path) != path
+
+  /** The LIVE rows of `df`, read from version `root` of the index at
+    * `path`: minus the family's tombstone log — lazy deletion, effective
+    * at once for every reader. Skipped (plan untouched) while no log
+    * exists, so an untouched index's read path pays nothing. */
+  def live(fam: IdLogFamily, path: String, root: String)(df: DataFrame): DataFrame =
+    minusIdLog(df, df.sparkSession, fam.tombstones(path, root), fam.idCol)
 
   /** An append-only id log (tombstones, pending-forgets) at `dir`:
     * read-or-empty behind the _SUCCESS-keyed existence guard (a crash
@@ -119,7 +284,7 @@ object IndexLifecycle {
     * guarded by the writer gate (a concurrent append would be
     * list-racy, exactly like the Spark count it replaces). */
   private[graft] def parquetFooterRows(s: SparkSession, dir: String): Long = {
-    val fs = Similarity.hadoopFs(s, dir)
+    val fs = hadoopFs(s, dir)
     val conf = s.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(dir)
     val baseDepth = base.depth()
@@ -197,7 +362,7 @@ object IndexLifecycle {
     * [[parquetFooterRows]] contract per subdirectory). */
   private[graft] def parquetFooterRowsByPartition(
       s: SparkSession, dir: String, col: String): Seq[(String, Long)] = {
-    val fs = Similarity.hadoopFs(s, dir)
+    val fs = hadoopFs(s, dir)
     fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$col="))
       .map(st => (st.getPath.getName.stripPrefix(s"$col="),
@@ -265,7 +430,7 @@ object IndexLifecycle {
       .join(broadcast(delivered.select(idCol)), Seq(idCol), "left_anti")
       .localCheckpoint()
     if (rest.isEmpty)
-      Similarity.hadoopFs(s, dir)
+      hadoopFs(s, dir)
         .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
     else rest.write.mode("overwrite").parquet(dir)
   }
@@ -317,6 +482,34 @@ object IndexLifecycle {
     }
   }
 
+  /** The merge skeleton, under the writer gate: drop in-batch id replays,
+    * run the pending consult, then keep the ids that are neither in the
+    * registry (already admitted) nor tombstoned (forgotten ids never
+    * resurrect through a replay), and run `admit(root, fresh)` beside
+    * the batch count (guide §2.6). The registry anti-join comes first,
+    * as in every family's merge. `fresh` is localCheckpoint'd: its
+    * lineage reads the registry the admit leg appends to (the
+    * read-write-cycle discipline), and the cut lets a replay, which
+    * anti-joins to nothing, skip the admit leg outright. `admit` keeps
+    * the calling thread (the writer gate), writes the registry LAST and
+    * returns the admitted count. Returns (admitted, refused). */
+  def merge(fam: IdLogFamily, batch: DataFrame, path: String)(
+      admit: (String, DataFrame) => Long): (Long, Long) = {
+    val s = batch.sparkSession
+    withWriter(s, path) {
+      val id = fam.idCol
+      val root = resolveIndexRoot(s, path) // appends fold into the LIVE version
+      val docs = batch.dropDuplicates(id).transform(Tables.maybePersist)
+      consultPending(s, fam, path, root, docs)
+      val fresh = live(fam, path, root)(docs.join(
+          readStamped(s, s"$root/${fam.registry}").select(id), Seq(id), "left_anti"))
+        .localCheckpoint()
+      val (nAdmit, nBatch) =
+        Par.run2(if (fresh.isEmpty) 0L else admit(root, fresh), docs.count())
+      (nAdmit, nBatch - nAdmit)
+    }
+  }
+
   /** The takedown, LSM-style: requested ids located in the registry
     * append to the tombstone log (lazy deletion — effective at once,
     * one anti-join per read, no stored file touched; compaction makes it
@@ -331,7 +524,7 @@ object IndexLifecycle {
     val s = requests.sparkSession
     withWriter(s, path) {
       val id = fam.idCol
-      val root = Similarity.resolveIndexRoot(s, path)
+      val root = resolveIndexRoot(s, path)
       val tombs = fam.tombstones(path, root)
       val pending = s"$path/pending"
       // ONE checkpointed pass marks each request present/absent (its
@@ -392,7 +585,7 @@ object IndexLifecycle {
     * family's fragmentation trigger fires or when live victims reach
     * `fam.fracKey`'s fraction of the registry ([[tombstoneHeavy]]). */
   def maybeCompact(s: SparkSession, fam: IdLogFamily, path: String): Unit = {
-    val root = Similarity.resolveIndexRoot(s, path)
+    val root = resolveIndexRoot(s, path)
     if (fam.fragmented(s, root) || tombstoneHeavy(s,
         readStamped(s, s"$root/${fam.registry}").select(fam.idCol),
         fam.tombstones(path, root), fam.idCol, fam.fracKey, memoKey = root))
@@ -485,7 +678,7 @@ object IndexLifecycle {
     * byteLength) from one flat content summary — (0, 0) when absent. */
   private[graft] def dirStamp(s: SparkSession, dir: String): (Long, Long) =
     try {
-      val cs = Similarity.hadoopFs(s, dir)
+      val cs = hadoopFs(s, dir)
         .getContentSummary(new org.apache.hadoop.fs.Path(dir))
       (cs.getFileCount, cs.getLength)
     } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
@@ -543,22 +736,4 @@ object IndexLifecycle {
         stored > 0 && victims.toDouble / stored >= frac
       }
     }
-
-  /** Commit a fully-written version directory: the atomic marker-create
-    * flips resolution to `newRoot` (in-flight readers of the old
-    * version keep their files end-to-end), then keep-N GC retires the
-    * tail — r19's rule that every versioning write path runs its own
-    * GC, so an unattended refit/compaction stream can never accumulate
-    * versions × corpus on disk. Caller holds the writer gate. */
-  def commitVersion(s: SparkSession, path: String, newRoot: String,
-                    flatArtifacts: Seq[String]): Unit = {
-    Similarity.hadoopFs(s, path).create(
-      new org.apache.hadoop.fs.Path(s"$newRoot/_COMMITTED"), false).close()
-    Similarity.pruneVersions(s, path, Similarity.keepVersions(s),
-      flatArtifacts): Unit
-    // retired-root memo entries die with the commit (r20): resolution
-    // just flipped, so every cached fact keyed under the old roots is
-    // stale by definition — and the map must not grow with history
-    memoSweep(path, newRoot)
-  }
 }

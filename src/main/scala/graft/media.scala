@@ -1513,24 +1513,6 @@ object MediaOps {
   private[graft] def mediaIndexPathFor(d: String): String =
     mediaIndexScratch("q136", d)
 
-  /** The LIVE artifact root of a (possibly versioned) media index —
-    * [[compactMediaIndex]] writes each compaction as a new committed
-    * version (r18), so vecs/bands/stat reads resolve through here while
-    * the append-only logs (tombstones/pending) stay at the path root,
-    * shared across versions. The [[Similarity.resolveIndexRoot]]
-    * marker-commit machinery, verbatim. */
-  private[graft] def mediaLiveRoot(s: SparkSession, path: String): String =
-    Similarity.resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: the index exists when its flat artifacts are
-    * present OR any committed version is — keep-N GC retires the flat
-    * root once the version window fills (r19), so keying "built" on the
-    * flat bands/_SUCCESS alone would silently rebuild a live versioned
-    * index from scratch. */
-  private[graft] def mediaIndexExists(s: SparkSession, path: String): Boolean =
-    ScratchPaths.artifactExists(s, s"$path/bands/_SUCCESS") ||
-      mediaLiveRoot(s, path) != path
-
   /** Once-per-life build from any (doc_id, v, bk) hash frame: vecs +
     * FULL-width band keys, plus a 1-row stat artifact carrying the
     * volume-dialed width, the family's bands-per-doc, and the population
@@ -1567,7 +1549,7 @@ object MediaOps {
   /** The stored dial width of an index artifact (the stat's first leg —
     * every probe/merge reads the width through here). */
   private[graft] def storedWidth(s: SparkSession, path: String): Int =
-    storedWidthAt(s, mediaLiveRoot(s, path))
+    storedWidthAt(s, IndexLifecycle.resolveIndexRoot(s, path))
 
   /** [[storedWidth]] against an ALREADY-RESOLVED version root — probes
     * resolve the live root exactly once at plan assembly (r19 advice: a
@@ -1664,7 +1646,7 @@ object MediaOps {
     * measure candidate volume before/after a dial re-price. */
   private[graft] def probeCandidates(delta: DataFrame, path: String): DataFrame = {
     val s = delta.sparkSession
-    val root = mediaLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
   }
 
@@ -1677,7 +1659,8 @@ object MediaOps {
     Similarity.withFns(s)
     val dBands = delta.selectExpr("doc_id as delta_id",
       s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+    val iBands = IndexLifecycle.live(mediaFamily, path, root)(
+        IndexLifecycle.readStamped(s, s"$root/bands"))
       .selectExpr("doc_id as idx_id", "band_idx",
         s"${packedPrefixExpr("band_hash", width)} as band_hash")
     iBands
@@ -1692,11 +1675,12 @@ object MediaOps {
     // resolve the live version ONCE: a compaction committing mid-plan
     // must never mix versions inside one probe (old bands joined against
     // new vecs) — the probeAnnIndex resolve-once discipline (r19 advice)
-    val root = mediaLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     val delta = delta0.transform(Tables.maybePersist)
     val cand = probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
     val verified = cand
-      .join(minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+      .join(IndexLifecycle.live(mediaFamily, path, root)(
+          IndexLifecycle.readStamped(s, s"$root/vecs"))
           .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
       .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
         Seq("delta_id"))
@@ -1759,18 +1743,20 @@ object MediaOps {
     * within Hamming 6) instead of scalar Hamming. */
   def videoIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
     Similarity.withFns(s)
-    val root = mediaLiveRoot(s, path) // resolved ONCE for bands+vecs+stat
+    val root = IndexLifecycle.resolveIndexRoot(s, path) // resolved ONCE for bands+vecs+stat
     val width = storedWidthAt(s, root)
     val delta = videoDeltaHashes(s, d).transform(Tables.maybePersist)
     val dBands = delta.selectExpr("doc_id as delta_id",
       s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+    val iBands = IndexLifecycle.live(mediaFamily, path, root)(
+        IndexLifecycle.readStamped(s, s"$root/bands"))
       .selectExpr("doc_id as idx_id", "band_idx",
         s"${packedPrefixExpr("band_hash", width)} as band_hash")
     val verified = iBands
       .join(broadcast(dBands), Seq("band_idx", "band_hash"))
       .select(col("delta_id"), col("idx_id")).distinct()
-      .join(minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+      .join(IndexLifecycle.live(mediaFamily, path, root)(
+          IndexLifecycle.readStamped(s, s"$root/vecs"))
           .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
       .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
         Seq("delta_id"))
@@ -1882,13 +1868,16 @@ object MediaOps {
         .stripMargin.replace("\n", " ")
   }
 
-  /** The media family's id-log lifecycle: vecs is the registry, the
-    * tombstone leg of the maintenance policy reads
-    * `spark.graft.mediaCompactTombstoneFrac` (the q137 gate row's 1/7 ≈
-    * 14% victims sit under the default, so its explicit compact call
-    * and oracle are unchanged). */
-  private val mediaFamily = IdLogFamily("doc_id", "vecs",
-    "spark.graft.mediaCompactTombstoneFrac", compactMediaIndex)
+  /** The media family's lifecycle: vecs is the registry, the build
+    * writes bands last, the tombstone leg of the maintenance policy
+    * reads `spark.graft.mediaCompactTombstoneFrac` (the q137 gate row's
+    * 1/7 ≈ 14% victims sit under the default, so its explicit compact
+    * call and oracle are unchanged). [[compactMediaIndex]] writes each
+    * compaction as a new committed version (r18); the append-only logs
+    * (tombstones/pending) stay at the path root, shared across versions. */
+  private[graft] val mediaFamily = IdLogFamily("doc_id", "vecs", "bands",
+    Seq("vecs", "bands", "stat"), "spark.graft.mediaCompactTombstoneFrac",
+    compactMediaIndex)
 
   /** ONLINE ingest-dedup merge (q136's streaming leg — the admission
     * decision an image-ingest pipeline makes per arriving batch): hash
@@ -1930,7 +1919,7 @@ object MediaOps {
     IndexLifecycle.withWriter(hashes0.sparkSession, path) {
       val s = hashes0.sparkSession
       Similarity.withFns(s)
-      val root = mediaLiveRoot(s, path) // appends fold into the LIVE version
+      val root = IndexLifecycle.resolveIndexRoot(s, path) // appends fold into the LIVE version
       val st = IndexLifecycle.readStamped(s, s"$root/stat")
         .select("width", "bands_per_doc", "priced_n").head()
       val (width, pricedN) = (st.getInt(0), st.getLong(2))
@@ -1941,19 +1930,21 @@ object MediaOps {
       // replay guards: already-stored ids AND tombstoned ids never
       // (re-)admit — the latter is the right-to-be-forgotten survival
       // under at-least-once replay (the ANN merge's r17 discipline)
-      val fresh = minusTombstones(
+      val fresh = IndexLifecycle.live(mediaFamily, path, root)(
           hashes.join(IndexLifecycle.readStamped(s, s"$root/vecs").select("doc_id"),
-            Seq("doc_id"), "left_anti"), s, path)
+            Seq("doc_id"), "left_anti"))
         .transform(Tables.maybePersist)
       val dBands = fresh.selectExpr("doc_id as delta_id",
         s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-      val iBands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+      val iBands = IndexLifecycle.live(mediaFamily, path, root)(
+          IndexLifecycle.readStamped(s, s"$root/bands"))
         .selectExpr("doc_id as idx_id", "band_idx",
           s"${packedPrefixExpr("band_hash", width)} as band_hash")
       val dupIds = iBands
         .join(broadcast(dBands), Seq("band_idx", "band_hash"))
         .select(col("delta_id"), col("idx_id")).distinct()
-        .join(minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+        .join(IndexLifecycle.live(mediaFamily, path, root)(
+            IndexLifecycle.readStamped(s, s"$root/vecs"))
             .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
         .join(broadcast(fresh.select(col("doc_id").as("delta_id"), col("v").as("va"))),
           Seq("delta_id"))
@@ -2012,12 +2003,6 @@ object MediaOps {
   private[graft] def tombstonesOf(s: SparkSession, path: String): DataFrame =
     IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
 
-  /** Anti-join `df` against the tombstone log on doc_id — the lazy-
-    * deletion read guard. Skips the join when no log exists (the gate
-    * fixture path: q136's artifact never carries tombstones). */
-  private def minusTombstones(df: DataFrame, s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.minusIdLog(df, s, s"$path/tombstones", "doc_id")
-
   /** The PENDING-forget log: takedowns that arrived BEFORE their id's
     * first admit (r17 advice #5 — [[mediaForgetStream]] and
     * [[mediaIngestStream]] are independent streams with no cross-stream
@@ -2060,55 +2045,38 @@ object MediaOps {
     * Amortization: one corpus copy per population doubling sums
     * geometrically to ≈ 2× the final corpus — the LSM bargain. */
   def compactMediaIndex(s: SparkSession, path: String): Unit =
-    IndexLifecycle.withWriter(s, path) {
+    IndexLifecycle.compactVersion(s, mediaFamily, path) { root =>
       import s.implicits._
-      val root = mediaLiveRoot(s, path)
       val st = IndexLifecycle.readStamped(s, s"$root/stat")
         .select("width", "bands_per_doc", "priced_n").head()
       val (w0, bpd, pricedN) = (st.getInt(0), st.getInt(1), st.getLong(2))
-      val live = IndexLifecycle.readStamped(s, s"$root/vecs")
+      val stored = IndexLifecycle.readStamped(s, s"$root/vecs")
       val victims = IndexLifecycle.liveVictims(s, mediaFamily, path, root)
-      val pop = live.count() - victims
-      if (victims > 0 || pop > pricedN) {
-        val vecs = minusTombstones(live, s, path)
-        val bands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
-        val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
+      val pop = stored.count() - victims
+      Option.when(victims > 0 || pop > pricedN) { newRoot =>
+        val live = IndexLifecycle.live(mediaFamily, path, root) _
+        val bands = live(IndexLifecycle.readStamped(s, s"$root/bands"))
         val width2 = if (pop > pricedN) adaptiveBandWidth(bands, bpd) else w0
-        // the three writes land in an UNCOMMITTED version directory —
-        // invisible until the _COMMITTED marker below — so their order
-        // is free: overlap them (guide §2.6, r21)
+        // the three writes are independent: overlap them (guide §2.6, r21)
         Par.run3(
           Seq((width2, bpd, pop)).toDF("width", "bands_per_doc", "priced_n")
             .write.mode("overwrite").parquet(s"$newRoot/stat"),
-          vecs.write.mode("overwrite").parquet(s"$newRoot/vecs"),
-          bands.write.mode("overwrite").parquet(s"$newRoot/bands"))
-        // atomic commit + keep-N GC (VERDICT r18 #3, shared tail):
-        // growth-triggered compactions under a sustained ingest stream
-        // must not accumulate versions × corpus on disk unattended
-        IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("vecs", "bands", "stat"))
+          live(stored).write.mode("overwrite").parquet(s"$newRoot/vecs"),
+          bands.write.mode("overwrite").parquet(s"$newRoot/bands")): Unit
       }
-    }
-
-  /** Keep-N version GC at media grain — [[Similarity]]'s prune over this
-    * family's flat artifacts (the root logs are never touched: the
-    * tombstones are the audit trail and the merge-side replay guard). */
-  def pruneMediaIndexVersions(s: SparkSession, path: String, keep: Int = 2): Long =
-    IndexLifecycle.withWriter(s, path) {
-      Similarity.pruneVersions(s, path, keep, Seq("vecs", "bands", "stat"))
     }
 
   /** The q137 gate row: lazy build → forget the doc_id % 7 = 3 victims
     * → compact → certify BOTH post-delete artifacts against the log. */
   def mediaIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = mediaIndexScratch("q137", d)
-    if (!mediaIndexExists(s, path))
+    if (!IndexLifecycle.exists(s, mediaFamily, path))
       buildMediaIndex(s, d, path)
     forgetMediaFromIndex(
-      IndexLifecycle.readStamped(s, s"${mediaLiveRoot(s, path)}/vecs")
+      IndexLifecycle.readStamped(s, s"${IndexLifecycle.resolveIndexRoot(s, path)}/vecs")
         .select("doc_id").filter("doc_id % 7 = 3"), path)
     compactMediaIndex(s, path)
-    val root = mediaLiveRoot(s, path) // post-compact: the new version
+    val root = IndexLifecycle.resolveIndexRoot(s, path) // post-compact: the new version
     IndexLifecycle.readStamped(s, s"$root/vecs").agg(count(lit(1)).as("n_kept"))
       .crossJoin(IndexLifecycle.readStamped(s, s"$root/bands").agg(count(lit(1)).as("n_kept_bands")))
       .crossJoin(tombstonesOf(s, path).agg(count(lit(1)).as("n_tombstones")))
@@ -2324,7 +2292,7 @@ object MediaOps {
     "q117_crossmodal"    -> ((s, d) => crossModalAudit(s, d)),
     "q136_media_index_probe" -> ((s, d) => {
       val path = mediaIndexPathFor(d)
-      if (!mediaIndexExists(s, path))
+      if (!IndexLifecycle.exists(s, mediaFamily, path))
         buildMediaIndex(s, d, path)
       mediaIndexProbeStored(s, d, path)
     }),
@@ -2335,7 +2303,7 @@ object MediaOps {
     "q137_media_index_forget" -> ((s, d) => mediaIndexForget(s, d)),
     "q138_audio_index_probe" -> ((s, d) => {
       val path = mediaIndexScratch("q138", d)
-      if (!mediaIndexExists(s, path))
+      if (!IndexLifecycle.exists(s, mediaFamily, path))
         buildAudioIndex(s, d, path)
       audioIndexProbeStored(s, d, path)
     }),
@@ -2346,7 +2314,7 @@ object MediaOps {
     }),
     "q139_video_index_probe" -> ((s, d) => {
       val path = mediaIndexScratch("q139", d)
-      if (!mediaIndexExists(s, path))
+      if (!IndexLifecycle.exists(s, mediaFamily, path))
         buildVideoIndex(s, d, path)
       videoIndexProbeStored(s, d, path)
     }),

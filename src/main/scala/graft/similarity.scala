@@ -4052,7 +4052,7 @@ object Similarity {
     * flight never mixes versions within one probe. */
   private[graft] def probeAnnIndex(delta: DataFrame, path0: String): DataFrame = {
     val s = delta.sparkSession
-    val path = resolveIndexRoot(s, path0)
+    val path = IndexLifecycle.resolveIndexRoot(s, path0)
     annProbe(delta,
       IndexLifecycle.readStamped(s, s"$path/centroids"),
       // live rows only: deletion is lazy (r19) — a forgotten vector must
@@ -4146,93 +4146,38 @@ object Similarity {
   private[graft] def mergeIndexPathFor(d: String): String =
     graft.ScratchPaths.indexPathFor(s"q134-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
 
-  /** The ANN family's id-log lifecycle: assignments is the registry,
-    * each tombstone records the victim's stored cell, and the tombstone
-    * log lives under the VERSION ROOT — the refit carries it into each
-    * new version. Compaction is the `rounds = 0` PURE COMPACTION of
-    * [[rebuildAnnIndex]] (codebook and drift reference frame carried,
-    * victims removed physically, LSM appends defragmented) and needs the
-    * stored codebook: a bare assignments artifact (mid-build, or a
-    * hand-assembled fixture) stays on lazy deletion alone. The DRIFT-
-    * gated auto-refit handles routing decay; this leg handles deletion
-    * mass. */
-  private val annFamily = IdLogFamily("vec_id", "assignments",
-    "spark.graft.annCompactTombstoneFrac",
-    (s, path) =>
-      if (graft.ScratchPaths.artifactExists(s,
-          s"${resolveIndexRoot(s, path)}/centroids/_SUCCESS"))
-        rebuildAnnIndex(s, path, rounds = 0): Unit,
+  /** The ANN family's lifecycle: assignments is both the registry and
+    * the artifact the build writes last, each tombstone records the
+    * victim's stored cell, and the tombstone log lives under the
+    * VERSION ROOT — the refit carries it into each new version. */
+  private[graft] val annFamily = IdLogFamily("vec_id", "assignments",
+    "assignments", Seq("assignments", "centroids", "cellstat"),
+    "spark.graft.annCompactTombstoneFrac", compactAnnIndex,
     audit = Seq("c_label"), tombstonesAtRoot = true)
 
-  // ---------------------------------------------------------------------
-  // VERSIONED INDEX ROOTS (r18, VERDICT r17 #3): [[rebuildAnnIndex]]
-  // writes each refit to a fresh `$path/versions/v%05d` directory and
-  // commits it by CREATING a `_COMMITTED` marker — readers resolve the
-  // highest committed version. Marker-create is atomic on every Hadoop
-  // FileSystem including object stores (an atomic rename-OVERWRITE of a
-  // manifest file is not), in-flight probes that resolved before the
-  // commit keep reading the old version's files (which are never
-  // touched), and the old version is retained for exactly that reason.
-  // A path with no committed version is the legacy flat layout (the
-  // build's artifacts at the root — implicitly version 1).
-  // ---------------------------------------------------------------------
-
-  private[graft] def hadoopFs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** The CURRENT artifact root of a (possibly versioned) index — every
-    * q119-family reader and incremental writer resolves through here. */
-  private[graft] def resolveIndexRoot(s: SparkSession, path: String): String = {
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    if (!fs.exists(vdir)) path
-    else {
-      val committed = fs.listStatus(vdir).iterator
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("v") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED")))
-        .toSeq
-      if (committed.isEmpty) path else s"$path/versions/${committed.max}"
-    }
+  /** ANN compaction: the `rounds = 0` PURE COMPACTION of
+    * [[rebuildAnnIndex]] (codebook and drift reference frame carried,
+    * victims removed physically, LSM appends defragmented), run only
+    * while live victims exist — the fixed-point re-run writes nothing.
+    * It needs the stored codebook: a bare assignments artifact (mid-
+    * build, or a hand-assembled fixture) stays on lazy deletion alone.
+    * The DRIFT-gated auto-refit handles routing decay; this leg handles
+    * deletion mass. */
+  def compactAnnIndex(s: SparkSession, path: String): Unit = {
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
+    if (graft.ScratchPaths.artifactExists(s, s"$root/centroids/_SUCCESS") &&
+        IndexLifecycle.liveVictims(s, annFamily, path, root) > 0)
+      rebuildAnnIndex(s, path, rounds = 0): Unit
   }
-
-  /** Anti-join `df` against the version root's tombstone log on vec_id —
-    * LAZY DELETION (r19, VERDICT r18 #2): [[forgetVictimIdsFrom]] no
-    * longer rewrites live cells in place (a concurrent probe whose plan
-    * listed files pre-overwrite could have them yanked mid-read); it
-    * only appends to the log, EVERY reader subtracts it here, and the
-    * versioned rebuild makes deletion physical. Skipped when no log
-    * exists, so the untouched-index read path pays nothing. */
-  private[graft] def minusAnnTombstones(df: DataFrame, s: SparkSession,
-                                        root: String): DataFrame =
-    graft.IndexLifecycle.minusIdLog(df, s, s"$root/tombstones", "vec_id")
 
   /** The LIVE rows of a resolved version root's assignments — the stored
-    * artifact minus the tombstone log. */
+    * artifact minus the tombstone log (LAZY DELETION, r19: a takedown
+    * only appends to the log, every reader subtracts it, and the
+    * versioned rebuild makes deletion physical). The ANN log lives under
+    * the version root, so the root stands in for the index path. */
   private[graft] def liveAssignments(s: SparkSession, root: String): DataFrame =
-    minusAnnTombstones(IndexLifecycle.readStamped(s, s"$root/assignments"), s, root)
-
-  /** Lazy-build gate: an index exists when its flat artifacts are present
-    * OR any committed version does — keep-N GC retires the flat root once
-    * the version window fills (r19), so keying "built" on the flat
-    * `_SUCCESS` alone would silently rebuild a live versioned index. */
-  private[graft] def annIndexExists(s: SparkSession, path: String): Boolean =
-    graft.ScratchPaths.artifactExists(s, s"$path/assignments/_SUCCESS") ||
-      resolveIndexRoot(s, path) != path
-
-  /** Next version directory name: one past the highest present (committed
-    * OR in-flight — a crashed rebuild's uncommitted directory is never
-    * reused). The flat root counts as version 1. */
-  private[graft] def nextVersionName(s: SparkSession, path: String): String = {
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    val highest =
-      if (!fs.exists(vdir)) 1
-      else fs.listStatus(vdir).iterator.map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toInt).foldLeft(1)(math.max)
-    f"v${highest + 1}%05d"
-  }
+    IndexLifecycle.live(annFamily, root, root)(
+      IndexLifecycle.readStamped(s, s"$root/assignments"))
 
   /** The q134 fold for ONE (vec_id, embedding) delta frame — shared by
     * the batch gate row and the streaming ingestion sink
@@ -4248,7 +4193,7 @@ object Similarity {
   private[graft] def mergeDeltaIntoIndex(delta: DataFrame, path0: String): Unit =
       IndexLifecycle.withWriter(delta.sparkSession, path0) {
     val s = delta.sparkSession
-    val path = resolveIndexRoot(s, path0) // fold into the LIVE version
+    val path = IndexLifecycle.resolveIndexRoot(s, path0) // fold into the LIVE version
     val assignments = IndexLifecycle.readStamped(s, s"$path/assignments")
     val deduped = delta.dropDuplicates("vec_id")
     // at-least-once sources can repeat a vec_id WITHIN one micro-batch;
@@ -4257,7 +4202,7 @@ object Similarity {
     //
     // pending-forget consult (the media q137 ordering at vector grain)
     IndexLifecycle.consultPending(s, annFamily, path0, path, deduped)
-    val admitted = minusAnnTombstones(deduped, s, path)
+    val admitted = IndexLifecycle.live(annFamily, path0, path)(deduped)
     val routed = routeAnnDelta(admitted,
       IndexLifecycle.readStamped(s, s"$path/centroids"))
     val labelT = assignments.schema("label").dataType.sql
@@ -4289,11 +4234,11 @@ object Similarity {
   }
 
   def mergeAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
-    if (!annIndexExists(s, path))
+    if (!IndexLifecycle.exists(s, annFamily, path))
       buildAnnIndex(s, d, path)
     mergeDeltaIntoIndex(annDelta(s, d), path)
     // the report reads the POST-merge LIVE rows — idempotent across runs
-    liveAssignments(s, resolveIndexRoot(s, path))
+    liveAssignments(s, IndexLifecycle.resolveIndexRoot(s, path))
       .groupBy("c_label")
       .agg(count(lit(1)).as("nt"),
         count(when(col("vec_id") >= 100000L, 1)).as("na"))
@@ -4310,7 +4255,7 @@ object Similarity {
   // Deletion is LAZY (VERDICT r18 #2): the takedown locates the victims'
   // cells (one id-pushdown scan of the artifact — the audit log records
   // (vec_id, c_label) as stored) and APPENDS them to the tombstone log;
-  // every reader subtracts the log ([[minusAnnTombstones]] — effective
+  // every reader subtracts the log ([[liveAssignments]] — effective
   // immediately), and the versioned [[rebuildAnnIndex]] makes deletion
   // physical. No stored file is ever rewritten or deleted, so no
   // reader's planned file listing can be invalidated — the in-place
@@ -4347,18 +4292,18 @@ object Similarity {
     IndexLifecycle.takedown(annFamily, victimIds, path0): Unit
 
   def forgetFromAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
-    if (!annIndexExists(s, path))
+    if (!IndexLifecycle.exists(s, annFamily, path))
       buildAnnIndex(s, d, path)
     // the takedown request: every 50th item (request-sized, broadcast) —
     // drawn from the LIVE version (the flat root may be GC-retired)
     forgetVictimIdsFrom(
-      IndexLifecycle.readStamped(s, s"${resolveIndexRoot(s, path)}/assignments")
+      IndexLifecycle.readStamped(s, s"${IndexLifecycle.resolveIndexRoot(s, path)}/assignments")
         .filter(pmod(col("vec_id"), lit(50)) === 0).select("vec_id"),
       path)
     // POST-delete LIVE counts (stored minus tombstones — deletion is
     // lazy, r19) joined to the tombstone log — both fixed points under
     // re-execution
-    val root = resolveIndexRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     liveAssignments(s, root)
       .groupBy("c_label").agg(count(lit(1)).as("n_kept"))
       .join(
@@ -4454,11 +4399,11 @@ object Similarity {
   // stored partition — round 1's centroid update runs over the stored
   // cells, exactly one-step-of-q84 semantics per round), re-route every
   // row, and write the result as a NEW VERSION under `$path/versions/`,
-  // committed by an atomic marker-create ([[resolveIndexRoot]]). Probes
-  // resolve the version once at plan time, so a probe in flight during
-  // the swap reads the OLD version's files end-to-end (never touched,
-  // never deleted); the tombstone log rides along so the merge-side
-  // replay guard survives the swap.
+  // committed by an atomic marker-create (the [[IndexLifecycle]] version
+  // store). Probes resolve the version once at plan time, so a probe in
+  // flight during the swap reads the OLD version's files end-to-end
+  // (never touched, never deleted); the tombstone log rides along so the
+  // merge-side replay guard survives the swap.
   //
   // Scale shape (100 TB): each Lloyd round is ONE partial aggregate whose
   // shuffle carries k decimal-sum buffers per map task (k·dim, never the
@@ -4501,12 +4446,6 @@ object Similarity {
         "cast(-best.nl as int) as c_label")
   }
 
-  /** Keep-N window for [[pruneVersions]] — configurable per session;
-    * default live + one committed predecessor (in-flight pre-swap
-    * readers, rollback, and the q140 rebuild report all need it). */
-  private[graft] def keepVersions(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.indexKeepVersions").map(_.toInt).getOrElse(2)
-
   /** The refit: `rounds` Lloyd rounds (update-then-assign) over the LIVE
     * version's population (minus the tombstone log — the rebuild is the
     * compaction that makes lazy deletion physical, r19), written as a
@@ -4535,15 +4474,10 @@ object Similarity {
   def rebuildAnnIndex(s: SparkSession, path: String, rounds: Int = 2,
                       beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
-    // version-name allocation is the only phase-1 step needing the lock —
-    // and the directory is CREATED inside it: [[nextVersionName]] counts
-    // in-flight directories, so without the mkdirs a second rebuild
-    // started during this one's (long, lockless) refit phase would be
-    // handed the same name and the two would write into one directory
+    // version allocation is the only phase-1 step needing the lock
     val (root, newRoot) = IndexLifecycle.withLock(path) {
-      val nr = s"$path/versions/${nextVersionName(s, path)}"
-      hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
-      (resolveIndexRoot(s, path), nr)
+      val nr = IndexLifecycle.allocateVersion(s, path)
+      (IndexLifecycle.resolveIndexRoot(s, path), nr)
     }
     var asg = liveAssignments(s, root)
       .selectExpr("vec_id", "label", "embedding", "nrm", "c_label",
@@ -4607,87 +4541,9 @@ object Similarity {
       // the old version's files stay for in-flight (and replayed)
       // readers; an unattended auto-refit stream must not accumulate
       // versions × corpus on disk
-      graft.IndexLifecycle.commitVersion(s, path, newRoot,
-        Seq("assignments", "centroids", "cellstat"))
+      graft.IndexLifecycle.commitVersion(s, annFamily, path, newRoot)
     }
     newRoot
-  }
-
-  /** The version the live one replaced: the second-newest committed
-    * version, else the flat root (implicit v1) when its artifacts are
-    * still present, else None (predecessor pruned). */
-  private[graft] def previousVersionRoot(s: SparkSession, path: String): Option[String] = {
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    val committed =
-      if (!fs.exists(vdir)) Seq.empty
-      else fs.listStatus(vdir).iterator.map(_.getPath.getName)
-        .filter(n => n.matches("v\\d+") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED")))
-        .toSeq.sorted.reverse
-    committed.drop(1).headOption.map(n => s"$path/versions/$n")
-      .orElse(
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")))
-          Some(path)
-        else None)
-  }
-
-  /** VERSION GC (r18): every rebuild leaves a full corpus copy — at
-    * production scale old versions must be retired or the index costs
-    * versions × corpus on disk forever. Keeps the LIVE version plus the
-    * `keep − 1` most recent committed predecessors (default: live + one
-    * buffer for in-flight probes that resolved pre-swap and for
-    * rollback); deletes older committed versions, uncommitted
-    * directories OLDER than the live version (crashed rebuilds — an
-    * uncommitted dir NEWER than live may be an in-flight rebuild and is
-    * never touched), and, once `keep` committed versions exist, the
-    * legacy flat artifacts (the implicit v1; its tombstone log is KEPT
-    * — versions carry their own copies, the flat one stays as the audit
-    * trail). Never touches the live version. Returns the number of
-    * retired version roots. */
-  def pruneAnnIndexVersions(s: SparkSession, path: String, keep: Int = 2): Long =
-    IndexLifecycle.withWriter(s, path) {
-      pruneVersions(s, path, keep, Seq("assignments", "centroids", "cellstat"))
-    }
-
-  /** The family-agnostic prune body (the media index shares it with its
-    * own flat-artifact list). Callers hold their writer lock + intent
-    * marker. */
-  private[graft] def pruneVersions(s: SparkSession, path: String, keep: Int,
-                                   flatArtifacts: Seq[String]): Long = {
-    require(keep >= 1, s"keep must be >= 1: $keep")
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    if (!fs.exists(vdir)) 0L
-    else {
-      val all = fs.listStatus(vdir).iterator.map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).toSeq
-      val committed = all.filter(n =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED")))
-        .sorted.reverse
-      if (committed.isEmpty) 0L
-      else {
-        val live = committed.head
-        val staleCommitted = committed.drop(keep)
-        val staleCrashed = all.filterNot(committed.contains)
-          .filter(_ < live) // lexicographic == numeric at fixed width
-        var n = 0L
-        (staleCommitted ++ staleCrashed).foreach { v =>
-          if (fs.delete(new org.apache.hadoop.fs.Path(s"$path/versions/$v"), true))
-            n += 1
-        }
-        // the flat root (implicit v1) retires once the keep window is
-        // filled by committed versions
-        if (committed.size >= keep &&
-            fs.exists(new org.apache.hadoop.fs.Path(s"$path/${flatArtifacts.head}"))) {
-          flatArtifacts.foreach { a =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$a"), true): Unit
-          }
-          n += 1
-        }
-        n
-      }
-    }
   }
 
   /** The q140 audit report — a pure read of the LIVE version against its
@@ -4695,8 +4551,8 @@ object Similarity {
     * first-rebuild chain): per-cell population and how many rows the
     * refit moved in. Stable across re-runs (nothing is written). */
   private[graft] def rebuildReport(s: SparkSession, path: String): DataFrame = {
-    val live = resolveIndexRoot(s, path)
-    val prev = previousVersionRoot(s, path).getOrElse(
+    val live = IndexLifecycle.resolveIndexRoot(s, path)
+    val prev = IndexLifecycle.previousVersionRoot(s, annFamily, path).getOrElse(
       throw new IllegalStateException(
         s"rebuild report for $path needs the predecessor version; it was pruned"))
     liveAssignments(s, live).select(col("vec_id"), col("c_label"))
@@ -4722,7 +4578,7 @@ object Similarity {
     * self-seeds: the current population becomes the reference and the
     * check returns 0 (the standing-statistic discipline). */
   def annIndexDriftPsiMicro(s: SparkSession, path: String): Long = {
-    val root = resolveIndexRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
       IndexLifecycle.withWriter(s, path) {
         liveAssignments(s, root)
@@ -4763,7 +4619,7 @@ object Similarity {
     * exact statistic [[maybeRebuildAnnIndex]] acts on. */
   def annIndexDriftReport(s: SparkSession, path: String,
                           psiMicroThreshold: Long = 200000L): DataFrame = {
-    val root = resolveIndexRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     val ref = IndexLifecycle.readStamped(s, s"$root/cellstat")
       .selectExpr("c_label", "n as n_ref")
     val cur = liveAssignments(s, root)
@@ -4799,7 +4655,7 @@ object Similarity {
   def annIndexDriftCheck(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q141-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!annIndexExists(s, path)) {
+    if (!IndexLifecycle.exists(s, annFamily, path)) {
       buildAnnIndex(s, d, path)
       mergeDeltaIntoIndex(annDelta(s, d), path)
     }
@@ -4886,11 +4742,11 @@ object Similarity {
     * version short-circuits the rebuild; the report only reads). */
   def annIndexRebuild(s: SparkSession, d: String): DataFrame = {
     val path = refitIndexPathFor(d)
-    if (!annIndexExists(s, path)) {
+    if (!IndexLifecycle.exists(s, annFamily, path)) {
       buildAnnIndex(s, d, path)
       mergeDeltaIntoIndex(annDelta(s, d), path)
     }
-    if (resolveIndexRoot(s, path) == path) rebuildAnnIndex(s, path, rounds = 2)
+    if (IndexLifecycle.resolveIndexRoot(s, path) == path) rebuildAnnIndex(s, path, rounds = 2)
     rebuildReport(s, path)
   }
 
@@ -5135,19 +4991,13 @@ object Similarity {
   // rewrite, the cheapest corpus pass in the family (m bytes/row).
   // ---------------------------------------------------------------------
 
-  private[graft] def pqLiveRoot(s: SparkSession, path: String): String =
-    resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: flat artifacts present OR any committed version. */
-  private[graft] def pqStoredIndexExists(s: SparkSession, path: String): Boolean =
-    graft.ScratchPaths.artifactExists(s, s"$path/codes/_SUCCESS") ||
-      pqLiveRoot(s, path) != path
-
-  /** The PQ family's id-log lifecycle: codes is the registry and each
-    * tombstone records the victim's stored cell; the q148 gate row's
-    * 1/40 = 2.5% victims sit far under the default compaction fraction,
-    * so the row certifies the LAZY read path specifically. */
-  private val pqFamily = IdLogFamily("vec_id", "codes",
+  /** The PQ family's lifecycle: codes is both the registry and the
+    * artifact the build writes last, and each tombstone records the
+    * victim's stored cell; the q148 gate row's 1/40 = 2.5% victims sit
+    * far under the default compaction fraction, so the row certifies
+    * the LAZY read path specifically. */
+  private[graft] val pqFamily = IdLogFamily("vec_id", "codes", "codes",
+    Seq("codes", "codebook", "coarse", "stat"),
     "spark.graft.pqCompactTombstoneFrac", compactPqIndex,
     audit = Seq("c_label"))
 
@@ -5155,8 +5005,8 @@ object Similarity {
     * untouched — when no log exists, so q126's pinned shape holds). */
   private[graft] def livePqCodes(s: SparkSession, path: String,
                                  root: String): DataFrame =
-    graft.IndexLifecycle.minusIdLog(
-      IndexLifecycle.readStamped(s, s"$root/codes"), s, s"$path/tombstones", "vec_id")
+    IndexLifecycle.live(pqFamily, path, root)(
+      IndexLifecycle.readStamped(s, s"$root/codes"))
 
   /** Route a raw (vec_id, embedding) batch with the STORED coarse frame
     * and compute its float32 residuals — the encode-side twin of the
@@ -5188,54 +5038,23 @@ object Similarity {
     * (already-encoded ids anti-join away against the codes registry),
     * tombstone-aware. Returns (admitted, refused). */
   def mergePqBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
-    IndexLifecycle.withWriter(batch.sparkSession, path) {
+    IndexLifecycle.merge(pqFamily,
+        batch.select(col("vec_id").cast("long"), col("embedding")), path) { (root, fresh) =>
       val s = batch.sparkSession
-      val root = pqLiveRoot(s, path) // appends fold into the LIVE version
-      val deduped = batch.select(col("vec_id").cast("long"), col("embedding"))
-        .dropDuplicates("vec_id")
-        .transform(Tables.maybePersist)
-      IndexLifecycle.consultPending(s, pqFamily, path, root, deduped)
-      val admitted = graft.IndexLifecycle.minusIdLog(
-        deduped, s, s"$path/tombstones", "vec_id")
-      // localCheckpoint HERE, not on the encoded frame (r21): it is the
-      // registry anti-join whose lineage reads the codes path the append
-      // below writes (the read-write-cycle discipline), and cutting the
-      // chain at the narrow admitted frame lets the idempotent-replay
-      // fast path below skip the whole encode subtree — two parquet
-      // reads, two broadcast builds and an encode job that a replayed
-      // batch spends on zero rows
-      val fresh = admitted
-        .join(IndexLifecycle.readStamped(s, s"$root/codes").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      // r22 (guide §2.6, the r21 §8 "fused count+append" design): the
-      // batch-size count and the admit leg are INDEPENDENT once `fresh`
-      // is checkpointed (the count reads deduped's cache, the admit leg
-      // reads fresh's blocks + stored artifacts), so they overlap; and
-      // inside the admit leg the codes append and the admitted count
-      // read the same checkpointed blocks and overlap too. The append
-      // stays on the calling thread (writer gate); write order is
-      // unchanged (the codes artifact is still the registry and still
-      // the leg's only write).
-      val (nAdmit, nBatch) = Par.run2(
-        if (fresh.isEmpty) 0L // replay fixed point: nothing to encode
-        else {
-          val cells = pqCellsOfRead(s, s"$root/codebook")
-          // the encode chain is row-preserving (every step crossJoins a
-          // one-row broadcast frame and projects), so the admitted count
-          // IS the checkpointed fresh frame's count — no separate pass
-          // over the encode plan
-          Par.run2(
-            pqEncodedIndex(
-                pqCorpusOf(pqRouteResidual(fresh, IndexLifecycle.readStamped(s, s"$root/coarse")),
-                  Seq("c_label", "orig")),
-                cells)
-              .write.mode("append").partitionBy("c_label")
-              .parquet(s"$root/codes"),
-            fresh.count())._2
-        },
-        deduped.count())
-      (nAdmit, nBatch - nAdmit)
+      val cells = pqCellsOfRead(s, s"$root/codebook")
+      // the encode chain is row-preserving (every step crossJoins a
+      // one-row broadcast frame and projects), so the admitted count IS
+      // the checkpointed fresh frame's count — read from the same blocks
+      // beside the append (r22), which stays on the calling thread and
+      // is the leg's only write (the codes artifact is the registry)
+      Par.run2(
+        pqEncodedIndex(
+            pqCorpusOf(pqRouteResidual(fresh, IndexLifecycle.readStamped(s, s"$root/coarse")),
+              Seq("c_label", "orig")),
+            cells)
+          .write.mode("append").partitionBy("c_label")
+          .parquet(s"$root/codes"),
+        fresh.count())._2
     }
 
   /** q148's core — right-to-be-forgotten against the standing PQ index,
@@ -5252,14 +5071,10 @@ object Similarity {
     * the fit is once-per-life, q126b's row), then keep-N GC. No-ops when
     * there are no live victims. */
   def compactPqIndex(s: SparkSession, path: String): Unit =
-    IndexLifecycle.withWriter(s, path) {
-      val root = pqLiveRoot(s, path)
-      if (IndexLifecycle.liveVictims(s, pqFamily, path, root) > 0) {
-        val newRoot = s"$path/versions/${nextVersionName(s, path)}"
-        // the three artifact writes are mutually independent and land in
-        // an UNCOMMITTED version directory — readers resolve through the
-        // _COMMITTED marker written last, so their order is free:
-        // overlap them (guide §2.6, r21)
+    IndexLifecycle.compactVersion(s, pqFamily, path) { root =>
+      Option.when(IndexLifecycle.liveVictims(s, pqFamily, path, root) > 0) { newRoot =>
+        // the three artifact writes are mutually independent: overlap
+        // them (guide §2.6, r21)
         Par.run3(
           livePqCodes(s, path, root)
             .write.mode("overwrite").partitionBy("c_label")
@@ -5280,8 +5095,6 @@ object Similarity {
             .toDF("n_rows", "dmicro")
             .write.mode("overwrite").parquet(s"$newRoot/stat")
         }
-        graft.IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("codes", "codebook", "coarse", "stat"))
       }
     }
 
@@ -5371,7 +5184,7 @@ object Similarity {
   }
 
   def pqIndexDistortionReport(s: SparkSession, path: String): DataFrame = {
-    val root = pqLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
       IndexLifecycle.withWriter(s, path) {
         // re-check under the gate (r20, advice #2): two concurrent
@@ -5409,9 +5222,8 @@ object Similarity {
                      beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
     val (root, newRoot) = IndexLifecycle.withLock(path) {
-      val nr = s"$path/versions/${nextVersionName(s, path)}"
-      hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
-      (pqLiveRoot(s, path), nr)
+      val nr = IndexLifecycle.allocateVersion(s, path)
+      (IndexLifecycle.resolveIndexRoot(s, path), nr)
     }
     val snapshot = pqLiveResidualCorpus(s, path, root)
       .transform(Tables.maybePersist)
@@ -5439,8 +5251,7 @@ object Similarity {
       // the decay dial resets to the refit's own distortion
       pqDistortionStat(pqStoredDistortionMicros(s, path, newRoot))
         .write.mode("overwrite").parquet(s"$newRoot/stat")
-      graft.IndexLifecycle.commitVersion(s, path, newRoot,
-        Seq("codes", "codebook", "coarse", "stat"))
+      graft.IndexLifecycle.commitVersion(s, pqFamily, path, newRoot)
     }
     newRoot
   }
@@ -5454,7 +5265,7 @@ object Similarity {
     * waits for the next doubling — a stable population never pays the
     * distortion pass at all. */
   def maybeRefitPqIndex(s: SparkSession, path: String): Boolean = {
-    val root = pqLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
       return false
     val ref = pqRefFrame(s, root).head()
@@ -5494,7 +5305,7 @@ object Similarity {
     * is skipped — plan untouched — when no log exists, so q126's pinned
     * shape holds). */
   def pqIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
-    val root = pqLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     pqIndexProbe(annDelta(s, d),
       IndexLifecycle.readStamped(s, s"$root/coarse"),
       pqCellsOfRead(s, s"$root/codebook"),
@@ -5513,7 +5324,7 @@ object Similarity {
   def pqIndexMerge(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q147-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, pqFamily, path)) buildPqIndex(s, d, path)
     mergePqBatchIntoIndex(
       annDelta(s, d).filter(col("vec_id") < 200000L)
         .selectExpr("vec_id + 200000 as vec_id", "embedding"),
@@ -5531,7 +5342,7 @@ object Similarity {
   def pqIndexDistortionCheck(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q149-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, pqFamily, path)) buildPqIndex(s, d, path)
     // the gate row PINS the refit dials to their defaults (r20, advice
     // #5): the DuckDB oracle hardcodes 2.0 / 1.5, so a session running
     // non-default dials must not silently diverge on refit_due. The
@@ -5560,8 +5371,8 @@ object Similarity {
   def pqIndexRefit(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q150-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
-    if (pqLiveRoot(s, path) == path) {
+    if (!IndexLifecycle.exists(s, pqFamily, path)) buildPqIndex(s, d, path)
+    if (IndexLifecycle.resolveIndexRoot(s, path) == path) {
       forgetPqFromIndex(
         IndexLifecycle.readStamped(s, s"$path/codes")
           .filter(pmod(col("vec_id"), lit(40)) === 0).select("vec_id"),
@@ -5582,9 +5393,9 @@ object Similarity {
   def pqIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q148-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
+    if (!IndexLifecycle.exists(s, pqFamily, path)) buildPqIndex(s, d, path)
     forgetPqFromIndex(
-      IndexLifecycle.readStamped(s, s"${pqLiveRoot(s, path)}/codes")
+      IndexLifecycle.readStamped(s, s"${IndexLifecycle.resolveIndexRoot(s, path)}/codes")
         .filter(pmod(col("vec_id"), lit(40)) === 0).select("vec_id"),
       path)
     pqIndexProbeStored(s, d, path)
@@ -6130,7 +5941,7 @@ object Similarity {
     // time), and the cell value becomes a literal partition filter.
     // Version-resolved ONCE and read live (minus tombstones) — the
     // q119-family read discipline (r19).
-    val assignments = liveAssignments(s, resolveIndexRoot(s, annPath))
+    val assignments = liveAssignments(s, IndexLifecycle.resolveIndexRoot(s, annPath))
     val qRow = assignments.filter(col("vec_id") === 0)
       .selectExpr("embedding as qe", "nrm as qn", "c_label as q_cell")
       .transform(Tables.maybePersist)
@@ -6448,7 +6259,7 @@ object Similarity {
     // the q102 gate pattern); q119b is the once-per-life build
     "q119_incremental_ann" -> ((s, d) => {
       val path = annIndexPathFor(d)
-      if (!annIndexExists(s, path))
+      if (!IndexLifecycle.exists(s, annFamily, path))
         buildAnnIndex(s, d, path)
       incrementalAnnStored(s, d, path)
     }),
@@ -6466,7 +6277,7 @@ object Similarity {
     // per process — the q119 gate pattern); q126b is the build
     "q126_pq_index_probe" -> ((s, d) => {
       val path = pqIndexPathFor(d)
-      if (!pqStoredIndexExists(s, path))
+      if (!IndexLifecycle.exists(s, pqFamily, path))
         buildPqIndex(s, d, path)
       pqIndexProbeStored(s, d, path)
     }),
@@ -6507,10 +6318,10 @@ object Similarity {
     // process — the q102/q119/q126/q132 gate pattern)
     "q133_hybrid_index_probe" -> ((s, d) => {
       val lexPath = TextAnalysis.lexIndexPathFor(d)
-      if (!TextAnalysis.lexIndexExists(s, lexPath))
+      if (!IndexLifecycle.exists(s, TextAnalysis.lexFamily, lexPath))
         TextAnalysis.buildLexIndex(s, d, lexPath)
       val annPath = annIndexPathFor(d)
-      if (!annIndexExists(s, annPath))
+      if (!IndexLifecycle.exists(s, annFamily, annPath))
         buildAnnIndex(s, d, annPath)
       hybridIndexProbe(s, d, lexPath, annPath)
     }),

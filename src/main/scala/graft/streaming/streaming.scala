@@ -976,7 +976,7 @@ object StreamingOps {
     // read through the r19 lifecycle helpers: tombstoned docs subtracted,
     // contribution logs folded — serving re-prices idf/avgdl to the
     // population as of stream start
-    val root = graft.TextAnalysis.lexLiveRoot(s, path)
+    val root = graft.IndexLifecycle.resolveIndexRoot(s, path)
     val postings = graft.TextAnalysis.lexPostingsOf(s, path, root)
     val dl = graft.TextAnalysis.lexDoclensOf(s, path, root)
     val qstats = graft.TextAnalysis.lexTermsOf(s, root)
@@ -1259,7 +1259,7 @@ object StreamingOps {
     // --- lexical head: scored (query, doc, micro) rows — static sides
     // through the r19 lifecycle helpers (live version, tombstones
     // subtracted, contribution logs folded)
-    val lexRoot = graft.TextAnalysis.lexLiveRoot(s, lexPath)
+    val lexRoot = graft.IndexLifecycle.resolveIndexRoot(s, lexPath)
     val postings = graft.TextAnalysis.lexPostingsOf(s, lexPath, lexRoot)
     val dl = graft.TextAnalysis.lexDoclensOf(s, lexPath, lexRoot)
     val qstats = graft.TextAnalysis.lexTermsOf(s, lexRoot)
@@ -1276,7 +1276,7 @@ object StreamingOps {
     // then the routed cell joins the cell-partitioned assignments
     val dot = (a: String, b: String) => s"graft_dot($a, $b)"
     // dense statics: version-resolved once, live rows only (r19)
-    val annRoot = graft.Similarity.resolveIndexRoot(s, annPath)
+    val annRoot = graft.IndexLifecycle.resolveIndexRoot(s, annPath)
     val centsRow = s.read.parquet(s"$annRoot/centroids")
       .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cents"))
     val routed = requests

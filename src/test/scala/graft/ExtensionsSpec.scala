@@ -167,11 +167,12 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("spark.graft.persist=never recomputes multi-consumer frames, result identical") {
-    val want = Dedup.minhashLsh(spark, sf).collect().toSeq
+    // minhashLsh has no ORDER BY: its contract is the row set, not an order
+    val want = Dedup.minhashLsh(spark, sf).collect().toSeq.sortBy(_.toString)
     spark.sharedState.cacheManager.clearCache()
     spark.conf.set("spark.graft.persist", "never")
     try {
-      val got = Dedup.minhashLsh(spark, sf).collect().toSeq
+      val got = Dedup.minhashLsh(spark, sf).collect().toSeq.sortBy(_.toString)
       assert(got == want)
       assert(spark.sharedState.cacheManager.isEmpty,
         "the knob must disable caching, not merely change results")
@@ -926,7 +927,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(after.getLong(1) < probe.head.getLong(1),
       "takedown did not reduce the victim delta's match count")
     MediaOps.compactMediaIndex(spark, path)
-    val live = MediaOps.mediaLiveRoot(spark, path)
+    val live = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(spark.read.parquet(s"$live/vecs")
       .filter(col("doc_id") === victim).count() == 0)
     assert(spark.read.parquet(s"$live/vecs").count() == nIdx - 1)
@@ -956,7 +957,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(after.getLong(1) == 1, "takedown did not remove the victim match")
     MediaOps.compactMediaIndex(spark, path)
     assert(spark.read.parquet(
-      s"${MediaOps.mediaLiveRoot(spark, path)}/bands").count() == (nIdx - 1) * 12)
+      s"${IndexLifecycle.resolveIndexRoot(spark, path)}/bands").count() == (nIdx - 1) * 12)
   }
 
   test("q132: the standing-lexical-index probe == the from-scratch q129, bit-identical (r15)") {

@@ -12,7 +12,7 @@ object FooterScale {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
     def serialWalk(dir: String): Long = {
-      val fs = Similarity.hadoopFs(s, dir)
+      val fs = IndexLifecycle.hadoopFs(s, dir)
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
       var sum = 0L
       while (it.hasNext) {

@@ -170,17 +170,19 @@ class LifecycleSpec extends SparkSpec {
     assert(TextAnalysis.lexHasSegments(spark, path))
   }
 
-  /** One standing-index family as the replay cases drive it: build a
-    * fresh index at `path`, admit a batch, take ids down. `registry` is
-    * the artifact whose rows are the admitted ids; `audit` marks the
-    * families whose tombstone rows record the stored cell. Every index
-    * here is flat (never compacted), so the ANN tombstone log — kept
-    * under the version root — sits at `path/tombstones` like the rest. */
+  /** One standing-index family as the replay and compaction cases drive
+    * it: build a fresh index at `path`, admit a batch, take ids down,
+    * compact. `registry` is the artifact whose rows are the admitted ids;
+    * `audit` marks the families whose tombstone rows record the stored
+    * cell; `lifecycle` is the family's descriptor. The replay case never
+    * compacts, so the ANN tombstone log — kept under the version root —
+    * sits at `path/tombstones` like the rest. */
   private case class Family(name: String, idCol: String, registry: String,
       audit: Boolean, build: String => Unit,
       arrival: Long => org.apache.spark.sql.DataFrame,
       merge: (org.apache.spark.sql.DataFrame, String) => Unit,
-      forget: (org.apache.spark.sql.DataFrame, String) => Unit)
+      forget: (org.apache.spark.sql.DataFrame, String) => Unit,
+      lifecycle: IdLogFamily, compact: String => Unit)
 
   private def mediaHashes(ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
     def bits(v: Long, n: Int): String =
@@ -199,27 +201,33 @@ class LifecycleSpec extends SparkSpec {
       p => Dedup.buildDedupIndex(spark, sf, p): Unit,
       id => Seq((id, "a late arrival of a forgotten document")).toDF("doc_id", "text"),
       (b, p) => Dedup.mergeDedupBatchIntoIndex(b, p): Unit,
-      (r, p) => Dedup.forgetDedupFromIndex(r, p): Unit),
+      (r, p) => Dedup.forgetDedupFromIndex(r, p): Unit,
+      Dedup.dedupFamily, p => Dedup.compactDedupIndex(spark, p)),
     Family("lexical", "doc_id", "doclens", audit = false,
       p => TextAnalysis.buildLexIndex(spark, sf, p): Unit,
       id => Seq((id, "a late arrival of a forgotten document")).toDF("doc_id", "text"),
       (b, p) => TextAnalysis.mergeLexBatchIntoIndex(b, p, seg = 1L): Unit,
-      (r, p) => TextAnalysis.forgetLexFromIndex(r, p, seg = 2L): Unit),
+      (r, p) => TextAnalysis.forgetLexFromIndex(r, p, seg = 2L): Unit,
+      TextAnalysis.lexFamily, p => TextAnalysis.compactLexIndex(spark, p)),
     Family("media", "doc_id", "vecs", audit = false,
       p => MediaOps.buildIndexFrom(mediaHashes(0L until 20L), p): Unit,
       id => mediaHashes(Seq(id)),
       (b, p) => MediaOps.mergeHashesIntoIndex(b, p, "image"): Unit,
-      (r, p) => MediaOps.forgetMediaFromIndex(r, p): Unit),
+      (r, p) => MediaOps.forgetMediaFromIndex(r, p): Unit,
+      MediaOps.mediaFamily, p => MediaOps.compactMediaIndex(spark, p)),
     Family("ann", "vec_id", "assignments", audit = true,
       p => Similarity.buildAnnIndex(spark, sf, p): Unit,
       id => Seq((id, vec)).toDF("vec_id", "embedding"),
       (b, p) => Similarity.mergeDeltaIntoIndex(b, p),
-      (r, p) => Similarity.forgetVictimIdsFrom(r, p)),
+      (r, p) => Similarity.forgetVictimIdsFrom(r, p),
+      // the rounds = 0 pure compaction of rebuildAnnIndex, victim-gated
+      Similarity.annFamily, p => Similarity.compactAnnIndex(spark, p)),
     Family("pq", "vec_id", "codes", audit = true,
       p => Similarity.buildPqIndex(spark, sf, p): Unit,
       id => Seq((id, vec)).toDF("vec_id", "embedding"),
       (b, p) => Similarity.mergePqBatchIntoIndex(b, p): Unit,
-      (r, p) => Similarity.forgetPqFromIndex(r, p): Unit))
+      (r, p) => Similarity.forgetPqFromIndex(r, p): Unit,
+      Similarity.pqFamily, p => Similarity.compactPqIndex(spark, p)))
 
   test("every family's id logs survive replay: a crashed first append, a redelivered takedown, the pending consult's crash window") {
     families.foreach { f =>
@@ -273,5 +281,56 @@ class LifecycleSpec extends SparkSpec {
       assert(spark.read.parquet(s"$path/${f.registry}").filter(col(f.idCol) === late).isEmpty,
         s"${f.name}: replayed consult admitted a forgotten id")
     }
+  }
+
+  test("every family's compaction tail and build gate: one version per due compaction, a fixed point, the flat root retired without a rebuild, merges into the live version") {
+    families.foreach { f =>
+      val path = java.nio.file.Files.createTempDirectory(s"graft-tail-${f.name}").toString
+      f.build(path)
+      def versions: Seq[String] =
+        Option(new java.io.File(s"$path/versions").list()).fold(Seq.empty[String])(_.toSeq.sorted)
+      def committed: Seq[String] =
+        versions.filter(v => new java.io.File(s"$path/versions/$v/_COMMITTED").exists)
+      def live: String = IndexLifecycle.resolveIndexRoot(spark, path)
+      def registered: Seq[Long] =
+        spark.read.parquet(s"$live/${f.registry}").select(f.idCol).as[Long].collect().sorted.toSeq
+      def takedown(): Unit = f.forget(registered.take(2).toDF(f.idCol), path)
+
+      takedown()
+      assert(versions.isEmpty, s"${f.name}: a 2-id takedown must not compact on its own")
+      f.compact(path)
+      assert(versions == Seq("v00002") && committed == versions,
+        s"${f.name}: a due compaction must commit exactly one new version, got $versions")
+      f.compact(path)
+      assert(versions == Seq("v00002"),
+        s"${f.name}: a compaction with nothing due created a directory: $versions")
+
+      takedown()
+      f.compact(path)
+      assert(committed == Seq("v00002", "v00003") && live == s"$path/versions/v00003")
+      assert(f.lifecycle.artifacts.forall(a => !new java.io.File(s"$path/$a").exists),
+        s"${f.name}: keep-2 GC must retire the flat root")
+      assert(IndexLifecycle.exists(spark, f.lifecycle, path),
+        s"${f.name}: the build gate lost a versioned index (a silent rebuild)")
+
+      val late = 900011L
+      f.merge(f.arrival(late), path)
+      assert(live == s"$path/versions/v00003" && registered.contains(late),
+        s"${f.name}: a merge must fold into the live version")
+    }
+  }
+
+  test("versions order by NUMBER, not name: past v99999, resolve, allocation and GC all see v100000 as the newest") {
+    val path = java.nio.file.Files.createTempDirectory("graft-vorder").toString
+    // marker-only versions: the version store reads names and markers alone
+    Seq("v99998", "v99999", "v100000").foreach { v =>
+      val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$path/versions/$v"))
+      java.nio.file.Files.createFile(dir.resolve("_COMMITTED"))
+    }
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == s"$path/versions/v100000")
+    assert(IndexLifecycle.nextVersionName(spark, path) == "v100001")
+    assert(IndexLifecycle.pruneVersions(spark, Dedup.dedupFamily, path, keep = 2) == 1L)
+    assert(new java.io.File(s"$path/versions").list().sorted.toSeq == Seq("v100000", "v99999"),
+      "keep-2 GC must keep the newest committed version and its predecessor")
   }
 }

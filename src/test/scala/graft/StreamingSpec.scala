@@ -1150,7 +1150,7 @@ class StreamingSpec extends SparkSpec {
     TextAnalysis.buildLexIndex(spark, sf, path)
     // nothing to compact: no version is minted (the fixed-point cost)
     TextAnalysis.compactLexIndex(spark, path)
-    assert(TextAnalysis.lexLiveRoot(spark, path) == path)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == path)
     val victims = Tables.documents(spark, sf).filter($"doc_id" % 7 === 3)
       .select("doc_id")
     val nV = TextAnalysis.forgetLexFromIndex(victims, path, seg = 1L)
@@ -1159,7 +1159,7 @@ class StreamingSpec extends SparkSpec {
       .map(_.toString).toSeq
     val flatPostings = spark.read.parquet(s"$path/postings").count()
     TextAnalysis.compactLexIndex(spark, path)
-    val v2 = TextAnalysis.lexLiveRoot(spark, path)
+    val v2 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v2 == s"$path/versions/v00002", s"live root $v2")
     // the flat artifacts stay byte-count-identical for in-flight readers
     assert(spark.read.parquet(s"$path/postings").count() == flatPostings)
@@ -1176,7 +1176,7 @@ class StreamingSpec extends SparkSpec {
     assert(probePost == probePre, "compaction moved the probe answer")
     // re-run: nothing left to compact (victims physical, one segment)
     TextAnalysis.compactLexIndex(spark, path)
-    assert(TextAnalysis.lexLiveRoot(spark, path) == v2)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == v2)
     // merges fold into the live version; a second compaction's GC
     // retires the flat root (keep=2 window filled)
     TextAnalysis.mergeLexBatchIntoIndex(
@@ -1185,7 +1185,7 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$v2/doclens").filter($"doc_id" === 888888L).count() == 1,
       "merge must target the live version")
     TextAnalysis.compactLexIndex(spark, path) // segments > 1 -> v00003 + GC
-    val v3 = TextAnalysis.lexLiveRoot(spark, path)
+    val v3 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v3 == s"$path/versions/v00003")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/postings")),
       "compaction's GC must retire the flat root once the keep window fills")
@@ -1206,13 +1206,13 @@ class StreamingSpec extends SparkSpec {
     assert(TextAnalysis.forgetLexFromIndex(
       Tables.documents(spark, sf).filter($"doc_id" % 50 === 0).select("doc_id"),
       path, seg = 1L) > 0)
-    assert(TextAnalysis.lexLiveRoot(spark, path) == path,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == path,
       "policy fired under the tombstone threshold")
     // ~35% cumulative victims: the forget's OWN maintenance tail compacts
     assert(TextAnalysis.forgetLexFromIndex(
       Tables.documents(spark, sf).filter($"doc_id" % 3 === 1).select("doc_id"),
       path, seg = 2L) > 0)
-    val v2 = TextAnalysis.lexLiveRoot(spark, path)
+    val v2 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v2.startsWith(s"$path/versions/"),
       "tombstone-fraction trigger did not compact")
     assert(spark.read.parquet(s"$v2/doclens").filter($"doc_id" % 3 === 1).count() == 0,
@@ -1227,11 +1227,11 @@ class StreamingSpec extends SparkSpec {
     try {
       TextAnalysis.mergeLexBatchIntoIndex(
         Seq((777001L, "alpha beta")).toDF("doc_id", "text"), path, seg = 10L)
-      assert(TextAnalysis.lexLiveRoot(spark, path) == v2,
+      assert(IndexLifecycle.resolveIndexRoot(spark, path) == v2,
         "one appended segment must not trigger at limit 1")
       TextAnalysis.mergeLexBatchIntoIndex(
         Seq((777002L, "beta gamma")).toDF("doc_id", "text"), path, seg = 11L)
-      val v3 = TextAnalysis.lexLiveRoot(spark, path)
+      val v3 = IndexLifecycle.resolveIndexRoot(spark, path)
       assert(v3 != v2, "segment-fragmentation trigger did not compact")
       assert(spark.read.parquet(s"$v3/stats").count() == 1)
       assert(spark.read.parquet(s"$v3/doclens")
@@ -1597,7 +1597,7 @@ class StreamingSpec extends SparkSpec {
         Seq(950001L).toDF("doc_id"), path) == 0L, "re-delivery must no-op")
       MediaOps.compactMediaIndex(spark, path)
       assert(spark.read.parquet(
-        s"${MediaOps.mediaLiveRoot(spark, path)}/vecs").count() == vecs0)
+        s"${IndexLifecycle.resolveIndexRoot(spark, path)}/vecs").count() == vecs0)
     } finally spark.conf.unset("spark.graft.persist")
   }
 
@@ -1662,7 +1662,7 @@ class StreamingSpec extends SparkSpec {
     // version — the flat artifacts stay for in-flight readers); the
     // log is kept at the root
     MediaOps.compactMediaIndex(spark, path)
-    val live = MediaOps.mediaLiveRoot(spark, path)
+    val live = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(live != path, "compaction with live victims must version")
     assert(spark.read.parquet(s"$live/vecs")
       .filter("doc_id = 910001").count() == 0)
@@ -1699,7 +1699,7 @@ class StreamingSpec extends SparkSpec {
     assert(tombsBefore.nonEmpty)
     // at-least-once replay of the ORIGINAL ingest batch
     in.addData(delta: _*); q.processAllAvailable(); q.stop()
-    val ids = Similarity.liveAssignments(spark, Similarity.resolveIndexRoot(spark, path))
+    val ids = Similarity.liveAssignments(spark, IndexLifecycle.resolveIndexRoot(spark, path))
       .select("vec_id").as[Long].collect().toSet
     victims.foreach(v => assert(!ids.contains(v),
       s"forgotten vec_id $v resurrected by the replayed ingest"))
@@ -2881,7 +2881,7 @@ class StreamingSpec extends SparkSpec {
     assert(MediaOps.storedWidth(spark, path) == 32,
       s"dial did not re-price after 2x growth (width ${MediaOps.storedWidth(spark, path)})")
     val stat = spark.read.parquet(
-      s"${MediaOps.mediaLiveRoot(spark, path)}/stat").head()
+      s"${IndexLifecycle.resolveIndexRoot(spark, path)}/stat").head()
     assert(stat.getLong(2) == 320L, s"priced_n must reset to the re-priced population")
     // candidate volume collapses at the re-priced width...
     val candAfter = MediaOps.probeCandidates(delta, path).count()
@@ -2945,7 +2945,7 @@ class StreamingSpec extends SparkSpec {
     // rebuild: round-1 centroid update pulls cell 0 to the drift mass
     // (21 g-rows vs 5 A-rows), the boundary moves, the probe re-finds
     val newRoot = Similarity.rebuildAnnIndex(spark, path, rounds = 2)
-    assert(Similarity.resolveIndexRoot(spark, path) == newRoot)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == newRoot)
     val after = Similarity.probeAnnIndex(probe, path).head()
     assert(after.getAs[Boolean]("is_dup") &&
       after.getAs[Long]("nn_id") >= 100L && after.getAs[Long]("nn_id") <= 120L,
@@ -2958,7 +2958,7 @@ class StreamingSpec extends SparkSpec {
     // atomic _COMMITTED marker-create (the last act of a rebuild)
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$path/versions/v00099/assignments"))
-    assert(Similarity.resolveIndexRoot(spark, path) == newRoot,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == newRoot,
       "a crashed (uncommitted) rebuild must not capture resolution")
     // incremental writers fold into the LIVE version post-swap
     Similarity.mergeDeltaIntoIndex(
@@ -2999,7 +2999,7 @@ class StreamingSpec extends SparkSpec {
           Seq((700L, vec(0.695, 0.719))).toDF("vec_id", "embedding"), path)
         Similarity.forgetVictimIdsFrom(Seq(3L).toDF("vec_id"), path)
       })
-    assert(Similarity.resolveIndexRoot(spark, path) == newRoot)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == newRoot)
     // the mid-refit merge is IN the new version, exactly once
     assert(spark.read.parquet(s"$newRoot/assignments")
       .filter("vec_id = 700").count() == 1, "mid-refit merge lost at the swap")
@@ -3040,7 +3040,7 @@ class StreamingSpec extends SparkSpec {
     assert(Similarity.annIndexDriftPsiMicro(spark, path) == 0L)
     assert(Similarity.maybeRebuildAnnIndex(spark, path).isEmpty,
       "undrifted index must not rebuild")
-    assert(Similarity.resolveIndexRoot(spark, path) == path)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == path)
     // sustained drift arrives through the auto-refit ingest stream: a
     // 21-row cluster all routing to cell 0 moves the shares from
     // (.5, .5) to (27/33, 6/33) — PSI 0.477, over the 0.2 dial
@@ -3050,14 +3050,14 @@ class StreamingSpec extends SparkSpec {
     in.addData((100L to 120L).map(i =>
       (i, vec(0.72, 0.694 + 0.00001 * (i - 100)))): _*)
     q.processAllAvailable()
-    val live = Similarity.resolveIndexRoot(spark, path)
+    val live = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(live != path, "drift crossing the dial must fire the rebuild")
     // the rebuild reset the reference frame: the replayed batch merges
     // idempotently and measures PSI ~ 0 — no rebuild storm
     in.addData((100L to 120L).map(i =>
       (i, vec(0.72, 0.694 + 0.00001 * (i - 100)))): _*)
     q.processAllAvailable(); q.stop()
-    assert(Similarity.resolveIndexRoot(spark, path) == live,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == live,
       "replayed drift batch re-fired the rebuild")
     assert(Similarity.annIndexDriftPsiMicro(spark, path) < 200000L)
     assert(Similarity.maybeRebuildAnnIndex(spark, path).isEmpty)
@@ -3072,7 +3072,7 @@ class StreamingSpec extends SparkSpec {
       in.toDF().toDF("vec_id", "embedding"), path).start()
     in.addData((300L to 499L).map(i => (i, vec(1, 0.0001 * (i - 300)))): _*)
     q2.processAllAvailable(); q2.stop()
-    val live2 = Similarity.resolveIndexRoot(spark, path)
+    val live2 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(live2 != live, "second drift wave must re-fire the rebuild")
     val committed = new java.io.File(s"$path/versions").listFiles()
       .filter(d => d.getName.matches("v\\d+") &&
@@ -3114,7 +3114,7 @@ class StreamingSpec extends SparkSpec {
     // an in-flight rebuild (uncommitted, NEWER than live) must survive
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$path/versions/v00099/assignments"))
-    val pruned = Similarity.pruneAnnIndexVersions(spark, path, keep = 2)
+    val pruned = IndexLifecycle.pruneVersions(spark, Similarity.annFamily, path, keep = 2)
     // retired: v00002 (old committed), v00001 (crashed), the flat root
     assert(pruned == 3L, s"pruned $pruned != 3")
     def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
@@ -3123,13 +3123,13 @@ class StreamingSpec extends SparkSpec {
       "flat v1 artifacts must retire once the keep window is committed")
     assert(exists(s"$path/versions/v00003") && exists(s"$path/versions/v00004"))
     assert(exists(s"$path/versions/v00099"), "in-flight rebuild dir was deleted")
-    assert(Similarity.resolveIndexRoot(spark, path) == s"$path/versions/v00004")
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == s"$path/versions/v00004")
     // probes and the report survive the GC (report baselines v00003 now)
     val probe = Seq((900001L, vec(1, 0.002))).toDF("vec_id", "embedding")
     assert(Similarity.probeAnnIndex(probe, path).count() == 1)
     assert(Similarity.rebuildReport(spark, path).count() > 0)
     // idempotent: a second prune retires nothing further
-    assert(Similarity.pruneAnnIndexVersions(spark, path, keep = 2) == 0L)
+    assert(IndexLifecycle.pruneVersions(spark, Similarity.annFamily, path, keep = 2) == 0L)
   }
 
   test("ANN maintenance policy: a takedown crossing the tombstone fraction auto-compacts (rounds = 0) — codebook and drift frame carried, victims physical (r19)") {
@@ -3159,11 +3159,11 @@ class StreamingSpec extends SparkSpec {
     val frame0 = sorted(s"$path/cellstat")
     // 2/20 = 10% victims: under the fraction — lazy deletion only
     Similarity.forgetVictimIdsFrom(Seq(1L, 2L).toDF("vec_id"), path)
-    assert(Similarity.resolveIndexRoot(spark, path) == path,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == path,
       "policy fired under the tombstone threshold")
     // 8/20 = 40% cumulative: the forget's OWN maintenance tail compacts
     Similarity.forgetVictimIdsFrom((3L to 8L).map(identity).toDF("vec_id"), path)
-    val v2 = Similarity.resolveIndexRoot(spark, path)
+    val v2 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v2 != path, "tombstone-fraction trigger did not compact")
     assert(spark.read.parquet(s"$v2/assignments").filter($"vec_id" <= 8L).count() == 0,
       "auto-compaction left victims physical")
@@ -3183,7 +3183,7 @@ class StreamingSpec extends SparkSpec {
     // re-delivered takedown: victims already physical — nothing appended,
     // no version churn (the fraction prices LIVE victims, not log size)
     Similarity.forgetVictimIdsFrom((3L to 8L).map(identity).toDF("vec_id"), path)
-    assert(Similarity.resolveIndexRoot(spark, path) == v2,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == v2,
       "re-delivered takedown re-compacted a clean version")
   }
 
@@ -3250,7 +3250,7 @@ class StreamingSpec extends SparkSpec {
       val qA = StreamingOps.dedupForgetStream(inF.toDF().toDF("doc_id"), pathA).start()
       inF.addData(victims: _*); qA.processAllAvailable()
       inF.addData(999999L); qA.processAllAvailable(); qA.stop()
-      val v2 = Dedup.dedupLiveRoot(spark, pathA)
+      val v2 = IndexLifecycle.resolveIndexRoot(spark, pathA)
       assert(v2 != pathA, "tombstone-fraction trigger did not compact")
       assert(spark.read.parquet(s"$v2/shingles")
         .filter($"doc_id" >= 50000L).count() == 0,
@@ -3263,7 +3263,7 @@ class StreamingSpec extends SparkSpec {
     // tombstone anti-join) — 999999 was never admitted to either index
     assert(probe(pathA) == probe(pathB),
       "auto-compacted probe diverged from the lazy view")
-    assert(Dedup.dedupLiveRoot(spark, pathB) == pathB, "B must have stayed lazy")
+    assert(IndexLifecycle.resolveIndexRoot(spark, pathB) == pathB, "B must have stayed lazy")
   }
 
   test("PQ index lifecycle: streamed frozen-codebook ingest ≡ batch merge; lazy takedown; versioned auto-compaction carries codebook and coarse (r19b)") {
@@ -3324,7 +3324,7 @@ class StreamingSpec extends SparkSpec {
     // future merge pays a dead existence check + empty broadcast join
     assert(!ScratchPaths.artifactExists(spark, s"$pathB/pending/_SUCCESS"),
       "fully-consumed pending log must be deleted, not rewritten empty")
-    assert(Similarity.livePqCodes(spark, pathB, Similarity.pqLiveRoot(spark, pathB))
+    assert(Similarity.livePqCodes(spark, pathB, IndexLifecycle.resolveIndexRoot(spark, pathB))
       .filter($"vec_id" === 888888L).isEmpty)
     // the null-cell tombstone carries the refusal memory — a replay of
     // the late arrival stays refused with the log gone
@@ -3337,7 +3337,7 @@ class StreamingSpec extends SparkSpec {
       val inF = MemoryStream[Long](spark)
       val qA = StreamingOps.pqForgetStream(inF.toDF().toDF("vec_id"), pathA).start()
       inF.addData(victims: _*); qA.processAllAvailable(); qA.stop()
-      val v2 = Similarity.pqLiveRoot(spark, pathA)
+      val v2 = IndexLifecycle.resolveIndexRoot(spark, pathA)
       assert(v2 != pathA, "tombstone-fraction trigger did not compact")
       assert(spark.read.parquet(s"$v2/codes")
         .filter($"vec_id" >= 300000L || $"vec_id" === 1L).count() == 0,
@@ -3354,7 +3354,7 @@ class StreamingSpec extends SparkSpec {
     // vec_id 1 was someone's neighbour (identical divergence on both)
     assert(probe(pathA) == probe(pathB),
       "auto-compacted probe diverged from the lazy view")
-    assert(Similarity.pqLiveRoot(spark, pathB) == pathB, "B must have stayed lazy")
+    assert(IndexLifecycle.resolveIndexRoot(spark, pathB) == pathB, "B must have stayed lazy")
     // a replayed pre-takedown ingest cannot resurrect forgotten ids
     val (a4, r4) = Similarity.mergePqBatchIntoIndex(
       batch.toDF("vec_id", "embedding"), pathA)
@@ -3392,11 +3392,11 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("vec_id", "embedding"), path).start()
     in.addData(f1: _*); q.processAllAvailable()
     // 1.5x the reference population: growth gate not crossed, no refit
-    assert(Similarity.pqLiveRoot(spark, path) == path,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == path,
       "auto-refit fired before the growth gate")
     in.addData(f2: _*); q.processAllAvailable()
     // 2x crossed -> distortion priced -> dial crossed -> SELF-REFIT
-    val v1 = Similarity.pqLiveRoot(spark, path)
+    val v1 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v1 != path, "distortion crossing did not trigger the refit")
     // the refit re-fitted the codebook on the live rows (not a copy) and
     // re-priced the stat: the report reads fresh again, not-due
@@ -3413,7 +3413,7 @@ class StreamingSpec extends SparkSpec {
     // at-least-once replay of the whole far set: registry refuses, no
     // version churn
     in.addData(far: _*); q.processAllAvailable(); q.stop()
-    assert(Similarity.pqLiveRoot(spark, path) == v1,
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == v1,
       "replayed ingest caused a second refit")
     // snapshot-refit-catchup at PQ grain: a merge landing DURING a refit
     // survives the swap, encoded with the NEW codebook
@@ -3424,7 +3424,7 @@ class StreamingSpec extends SparkSpec {
       Similarity.mergePqBatchIntoIndex(
         extra.toDF("vec_id", "embedding"), path): Unit
     })
-    assert(Similarity.pqLiveRoot(spark, path) == v2 && v2 != v1)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == v2 && v2 != v1)
     assert(spark.read.parquet(s"$v2/codes")
       .filter($"vec_id" >= 950000L).count() == extra.length,
       "mid-refit merge lost at the swap")
@@ -3435,13 +3435,13 @@ class StreamingSpec extends SparkSpec {
     MediaOps.buildIndexFrom(dialHashes(0 until 20, 4), path)
     // nothing to compact -> no version is minted (the fixed-point cost)
     MediaOps.compactMediaIndex(spark, path)
-    assert(MediaOps.mediaLiveRoot(spark, path) == path)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == path)
     // a takedown then a compaction: the rewrite lands in a COMMITTED
     // version; the flat artifacts are left byte-for-byte for a probe
     // that resolved pre-commit
     assert(MediaOps.forgetMediaFromIndex(Seq(3L).toDF("doc_id"), path) == 1L)
     MediaOps.compactMediaIndex(spark, path)
-    val v2 = MediaOps.mediaLiveRoot(spark, path)
+    val v2 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v2 == s"$path/versions/v00002", s"live root $v2")
     assert(spark.read.parquet(s"$path/vecs").count() == 20,
       "pre-compact artifact must stay intact for in-flight readers")
@@ -3454,7 +3454,7 @@ class StreamingSpec extends SparkSpec {
     assert(!hit.getBoolean(3), "survivor twin lost after versioned compact")
     // a re-run with nothing new is a no-op (no version churn)
     MediaOps.compactMediaIndex(spark, path)
-    assert(MediaOps.mediaLiveRoot(spark, path) == v2)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == v2)
     // merges append into the LIVE version, not the retired flat root
     val (a, _) = MediaOps.mergeHashesIntoIndex(dialHashes(50 to 50, 4), path, "image")
     assert(a == 1L)
@@ -3465,13 +3465,13 @@ class StreamingSpec extends SparkSpec {
     // root itself (v2 stays as the keep buffer) — no manual prune call
     assert(MediaOps.forgetMediaFromIndex(Seq(5L).toDF("doc_id"), path) == 1L)
     MediaOps.compactMediaIndex(spark, path) // -> v00003 + auto-GC
-    val v3 = MediaOps.mediaLiveRoot(spark, path)
+    val v3 = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(v3 == s"$path/versions/v00003")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/vecs")),
       "compaction's own GC must retire the flat root once the keep window fills")
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$v2/vecs")))
     // idempotent: an explicit prune finds nothing further to retire
-    assert(MediaOps.pruneMediaIndexVersions(spark, path, keep = 2) == 0L)
+    assert(IndexLifecycle.pruneVersions(spark, MediaOps.mediaFamily, path, keep = 2) == 0L)
     assert(MediaOps.tombstonesOf(spark, path).count() == 2, "root audit log lost")
     assert(MediaOps.probeStoredIndexWith(twin, path).count() == 1)
   }
