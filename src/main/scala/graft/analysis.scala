@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.IndexLifecycle.ArtifactWriter
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (extensions beyond the reference per BASELINE.json north star):
@@ -801,7 +802,7 @@ object TextAnalysis {
     * crash-dupe distinct's input; the stamp-memoized [[lexSegCount]]
     * keeps that check zero-job between mutations. The tombstone and
     * pending logs stay at the PATH ROOT, shared across versions. */
-  private[graft] val lexFamily = IdLogFamily("doc_id", "doclens", "postings",
+  private[graft] val lexFamily = IdLogFamily("lex", "doc_id", "doclens", "postings",
     Seq("postings", "doclens", "terms", "stats"),
     "spark.graft.lexCompactTombstoneFrac", compactLexIndex,
     carry = Seq("dl"),
@@ -965,15 +966,14 @@ object TextAnalysis {
     val s = batch.sparkSession
     IndexLifecycle.withWriter(s, path) {
       val counts = IndexLifecycle.merge(lexFamily,
-          batch.select(col("doc_id").cast("long"), col("text")), path) { (root, fresh) =>
+          batch.select(col("doc_id").cast("long"), col("text")), path) { (root, fresh, _) =>
         val toks = lexTokens(fresh).transform(Tables.maybePersist)
         val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
           .transform(Tables.maybePersist)
         // one eager pass: the count and both dl consumers below read it
-        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-          .localCheckpoint()
-        val nAdmit = dl.count()
-        if (nAdmit > 0) {
+        val (dl, Seq(nAdmit)) = IndexLifecycle.checkpointCounting(
+          toks.groupBy("doc_id").agg(count(lit(1)).as("dl")), lit(true))
+        try if (nAdmit > 0) {
           // the three contribution appends are mutually independent and
           // none is the replay guard — overlap them (guide §2.6, the
           // buildLexIndex Par discipline on the merge tail, r21); the
@@ -983,22 +983,26 @@ object TextAnalysis {
             // df contributions: +1 per (term, admitted doc), this segment
             tf.groupBy("term").agg(count(lit(1)).cast("long").as("df"))
               .withColumn("seg", lit(seg))
-              .write.mode("append").parquet(s"$root/terms"),
+              .writeArtifact(s"$root/terms", "append"),
             // corpus-stat contribution: admitted docs + their token mass —
             // idf/avgdl re-price at the next read, no trigger needed
             dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
               .selectExpr("cast(n_docs as bigint) as n_docs",
                 "cast(tot as bigint) as tot", s"cast($seg as bigint) as seg")
-              .write.mode("append").parquet(s"$root/stats"),
+              .writeArtifact(s"$root/stats", "append"),
             // delta postings into the bucket layout (append-only — a
             // probe's planned listing is never invalidated)
             tf.withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
               .repartition(col("tb"))
-              .write.mode("append").partitionBy("tb").parquet(s"$root/postings"))
+              .writeArtifact(s"$root/postings", "append", "tb"))
           // the registry LAST: a crash anywhere above replays the whole
           // batch (identical rows → read-side collapse); after this write
           // the replay anti-joins to nothing
-          dl.write.mode("append").parquet(s"$root/doclens")
+          dl.writeArtifact(s"$root/doclens", "append")
+        } finally { // a stream merges per micro-batch: hold nothing past it
+          Tables.freeCheckpoint(dl)
+          tf.unpersist(blocking = false)
+          toks.unpersist(blocking = false)
         }
         nAdmit
       }
@@ -1041,13 +1045,13 @@ object TextAnalysis {
           .groupBy("term")
           .agg((count(lit(1)) * lit(-1L)).cast("long").as("df"))
           .withColumn("seg", lit(seg))
-          .write.mode("append").parquet(s"$root/terms"),
+          .writeArtifact(s"$root/terms", "append"),
         present
           .agg((count(lit(1)) * lit(-1L)).as("n_docs"),
             (sum(col("dl")) * lit(-1L)).as("tot"))
           .selectExpr("cast(n_docs as bigint) as n_docs",
             "cast(tot as bigint) as tot", s"cast($seg as bigint) as seg")
-          .write.mode("append").parquet(s"$root/stats")): Unit
+          .writeArtifact(s"$root/stats", "append")): Unit
     })
 
   /** Scheduled compaction, VERSIONED (the compactMediaIndex discipline):
@@ -1068,7 +1072,7 @@ object TextAnalysis {
         // the four writes are independent: overlap them two-by-two
         // (guide §2.6, r21; dl's two consumers share one thread so the
         // persisted frame fills once)
-        Par.run2(
+        try Par.run2(
           {
             dl.write.mode("overwrite").parquet(s"$newRoot/doclens")
             dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
@@ -1085,6 +1089,7 @@ object TextAnalysis {
               .repartition(col("tb"))
               .write.mode("overwrite").partitionBy("tb").parquet(s"$newRoot/postings")
           }): Unit
+        finally dl.unpersist(blocking = false): Unit
       }
     }
 

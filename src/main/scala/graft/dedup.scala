@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.IndexLifecycle.ArtifactWriter
 
 /** Deduplication operators for a training-data pipeline: exact
   * (hash-groupBy), MinHash+LSH banding (shingle → minhash signature →
@@ -735,7 +736,7 @@ object Dedup {
     * policy reads `spark.graft.dedupCompactTombstoneFrac`. The
     * tombstone/pending logs stay at the PATH ROOT, shared across
     * versions (audit trail + the merge-side replay guard forever). */
-  private[graft] val dedupFamily = IdLogFamily("doc_id", "shingles", "bands",
+  private[graft] val dedupFamily = IdLogFamily("dedup", "doc_id", "shingles", "bands",
     Seq("shingles", "bands"), "spark.graft.dedupCompactTombstoneFrac",
     compactDedupIndex)
 
@@ -783,21 +784,19 @@ object Dedup {
     * (admitted, refused). */
   def mergeDedupBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
     IndexLifecycle.merge(dedupFamily,
-        batch.select(col("doc_id").cast("long"), col("text")), path) { (root, fresh) =>
-      val s = batch.sparkSession
-      // one eager pass: both appends below consume the signed frame
-      val signed = signedCorpus(s, fresh.select(col("doc_id"), col("text")))
-        .localCheckpoint()
-      val n0 = signed.count()
-      if (n0 > 0) {
-        lshBands(signed).write.mode("append").parquet(s"$root/bands")
+        batch.select(col("doc_id").cast("long"), col("text")), path) { (root, fresh, nFresh) =>
+      // signed once, inside the first append (a lazy checkpoint): both
+      // appends consume it. Signing is 1:1, so every fresh doc admits.
+      val signed = signedCorpus(batch.sparkSession, fresh.select(col("doc_id"), col("text")))
+        .localCheckpoint(eager = false)
+      try {
+        lshBands(signed).writeArtifact(s"$root/bands", "append")
         // the registry LAST: a crash anywhere above replays the whole
         // batch (identical band rows → candidate-side collapse); after
         // this write the replay anti-joins to nothing
-        signed.select(col("doc_id"), col("sh"))
-          .write.mode("append").parquet(s"$root/shingles")
-      }
-      n0
+        signed.select(col("doc_id"), col("sh")).writeArtifact(s"$root/shingles", "append")
+      } finally Tables.freeCheckpoint(signed): Unit
+      nFresh
     }
 
   /** q146's core — right-to-be-forgotten against the standing dedup
@@ -823,9 +822,9 @@ object Dedup {
         // both rewrites are independent: overlap them (guide §2.6, r21)
         Par.run2(
           dedupLiveOf(s, path, root, "shingles")
-            .write.mode("overwrite").parquet(s"$newRoot/shingles"),
+            .writeArtifact(s"$newRoot/shingles", "overwrite"),
           dedupLiveOf(s, path, root, "bands").distinct() // crash-dupe band rows fold
-            .write.mode("overwrite").parquet(s"$newRoot/bands")): Unit
+            .writeArtifact(s"$newRoot/bands", "overwrite")): Unit
       }
     }
 
@@ -1108,35 +1107,6 @@ object Dedup {
        |       ELSE floor(sum_err / n_verified::DOUBLE + 0.5) / 1e6 END AS mean_est_err
        |FROM cnts""".stripMargin
 
-  /** Free a localCheckpoint'ed frame's storage blocks once the loop has
-    * superseded it. Dataset.unpersist only covers cacheManager entries;
-    * checkpoint blocks hang off the LogicalRDD's backing RDD and would
-    * otherwise accumulate one generation per round until end-of-query
-    * cleanup — harmless at sf0.1, but at 100 TB each superseded label
-    * generation is corpus-vertex-sized and the loop must not hold
-    * O(rounds) of them. */
-  private[graft] def freeCheckpoint(df: DataFrame): Boolean = {
-    var found = false
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        found = true
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-    // The match is against a Spark-internal node: if a future Spark
-    // version changes how localCheckpoint results analyze, this free
-    // would silently become a no-op and the O(rounds) block
-    // accumulation it exists to prevent returns. Warn loudly (and
-    // ExtensionsSpec pins that the free actually fires on a
-    // localCheckpoint'ed frame) so an upgrade that defeats it is
-    // visible instead of a slow leak at scale.
-    if (!found)
-      System.err.println(
-        "[graft] freeCheckpoint: no LogicalRDD in analyzed plan - " +
-          "localCheckpoint blocks will NOT be freed (Spark internals changed?)")
-    found
-  }
-
   /** Row-set signature for CC convergence: (row count, XOR-fold of
     * xxhash64 over the rows). Both loops' frames are duplicate-free by
     * construction (labels keyed by vertex, edge sets distinct()ed), so
@@ -1222,7 +1192,7 @@ object Dedup {
       val next = ccRound(both, lab).localCheckpoint(eager = false)
       val nsig = ccSignature(next, Seq("id", "root"))
       converged = nsig == sig
-      freeCheckpoint(lab) // superseded round, never re-read
+      Tables.freeCheckpoint(lab) // superseded round, never re-read
       lab = next
       sig = nsig
     }
@@ -1318,7 +1288,7 @@ object Dedup {
       // this replaces the old next.except(e) probe (4 extra exchanges on
       // the convergence round)
       converged = nsig == sig
-      freeCheckpoint(e)
+      Tables.freeCheckpoint(e)
       e = next
       sig = nsig
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** What one standing-index family's lifecycle knows about itself.
@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
   * written once in [[IndexLifecycle]]; a family supplies data and hooks,
   * never a copy of the contract.
   *
+  * @param name      the family's job-description label (`dedup.merge/mark`)
   * @param idCol     the id column of the registry and both logs
   * @param registry  the artifact, under the live root, whose rows ARE the
   *                  admitted ids (written last by every merge)
@@ -35,6 +36,7 @@ import org.apache.spark.sql.functions._
   * @param fragmented a second compaction trigger on the resolved root
   *                  (lexical: contribution segments past its dial) */
 final case class IdLogFamily(
+    name: String,
     idCol: String,
     registry: String,
     built: String,
@@ -220,10 +222,15 @@ object IndexLifecycle {
   def compactVersion(s: SparkSession, fam: IdLogFamily, path: String)(
       due: String => Option[String => Unit]): Unit =
     withWriter(s, path) {
-      due(resolveIndexRoot(s, path)).foreach { rewrite =>
+      phase(s, fam, "compact/check")(due(resolveIndexRoot(s, path))).foreach { rewrite =>
         val newRoot = allocateVersion(s, path)
-        rewrite(newRoot)
-        commitVersion(s, fam, path, newRoot)
+        phase(s, fam, "compact/rewrite")(rewrite(newRoot))
+        phase(s, fam, "compact/commit")(commitVersion(s, fam, path, newRoot))
+        // seed the new root's tombstone-mass bound (no live victims after
+        // a rewrite): the next takedown's check scans no registry
+        memoPut(s"$newRoot#ts.victims", 0L)
+        memoPut(s"$newRoot#ts.stored", parquetFooterRows(s, s"$newRoot/${fam.registry}"))
+        memoPut(s"$newRoot#ts.log", idLogRows(s, fam.tombstones(path, newRoot)))
       }
     }
 
@@ -398,10 +405,10 @@ object IndexLifecycle {
     * gate fixture) keeps its broadcast, so the ~115 pinned plans are
     * unchanged. */
   private[graft] def hintedIdLog(s: SparkSession, dir: String,
-                                 idCol: String): DataFrame = {
-    val log = idLogOf(s, dir, idCol).select(idCol)
-    if (idLogBroadcastable(s, dir)) broadcast(log) else log
-  }
+                                 idCol: String): DataFrame =
+    gated(s, dir, idLogOf(s, dir, idCol).select(idCol))
+  private def gated(s: SparkSession, dir: String, df: DataFrame): DataFrame =
+    if (idLogBroadcastable(s, dir)) broadcast(df) else df
 
   /** Anti-join `df` against the id log — the lazy-deletion read guard.
     * Skipped entirely (plan untouched) when no log exists, so the
@@ -413,28 +420,6 @@ object IndexLifecycle {
       df.join(hintedIdLog(s, dir, idCol), Seq(idCol), "left_anti")
     else df
 
-  /** Consume `delivered` ids out of the append-only log at `dir`:
-    * rewrite the remainder — or, when the consume EMPTIES the log,
-    * delete the directory outright (r20, VERDICT r19 #4): an empty
-    * parquet with `_SUCCESS` would tax every future merge with a dead
-    * existence check plus an empty broadcast join forever, the shape
-    * the r19c empty-tombstone rule already forbids. Replays of a
-    * consumed takedown stay refused — the permanent tombstone written
-    * at consume time carries that memory, not this log. `delivered` is
-    * batch-bounded (batch ∩ log), so its hint is safe; the remainder
-    * is localCheckpoint'd BEFORE the overwrite (its lineage reads the
-    * files the write replaces). Caller holds the writer gate. */
-  def consumeIdLog(s: SparkSession, dir: String, idCol: String,
-                   delivered: DataFrame): Unit = {
-    val rest = idLogOf(s, dir, idCol)
-      .join(broadcast(delivered.select(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    if (rest.isEmpty)
-      hadoopFs(s, dir)
-        .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
-    else rest.write.mode("overwrite").parquet(dir)
-  }
-
   /** Write `ids` to the append-only log at `dir`. The write that CREATES
     * a log overwrites: a crash inside a log's first append can leave the
     * directory holding some committed part files but no `_SUCCESS` — it
@@ -445,111 +430,150 @@ object IndexLifecycle {
     * exact. Never called with an empty frame: an empty log would tax
     * every later merge and read with a dead anti-join. */
   private def appendIdLog(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    ids.write.mode(
+    ids.writeArtifact(dir,
       if (ScratchPaths.artifactExists(s, s"$dir/_SUCCESS")) "append" else "overwrite")
-      .parquet(dir)
 
-  /** The pending consult that opens every merge: a takedown that arrived
-    * BEFORE its id's first admit is delivered now — the arrival is
-    * refused through a permanent tombstone and the pending entry is
-    * consumed, so no replay of this batch can ever admit it. Gated on
-    * the log, so the hot ingest path pays nothing while no early takedown
-    * is outstanding. The two writes are not atomic: a crash between them
-    * leaves the id in BOTH logs, so the tombstone side anti-joins the
-    * ids already tombstoned and the replay only re-runs the consume.
-    * `batch` carries the family id column; `root` is the resolved live
-    * root. Caller holds the writer gate. */
-  def consultPending(s: SparkSession, fam: IdLogFamily, path: String,
-                     root: String, batch: DataFrame): Unit = {
-    val id = fam.idCol
-    val pending = s"$path/pending"
-    if (ScratchPaths.artifactExists(s, s"$pending/_SUCCESS")) {
-      val delivered = batch.select(id)
-        .join(hintedIdLog(s, pending, id), Seq(id), "left_semi")
-        .localCheckpoint()
-      if (!delivered.isEmpty) {
-        val tombs = fam.tombstones(path, root)
-        // the row was never stored: NULL audit columns, typed as stored
-        val novel = delivered
-          .join(hintedIdLog(s, tombs, id), Seq(id), "left_anti")
-          .select(col(id) +: fam.audit.map(c => lit(null).cast(
-            readStamped(s, s"$root/${fam.registry}").schema(c).dataType).as(c)): _*)
-          .localCheckpoint()
-        if (!novel.isEmpty) appendIdLog(s, novel, tombs)
-        // a consume that empties the log deletes the directory
-        consumeIdLog(s, pending, id, delivered)
+  // THE MARKING PASS (merge, pending consult, takedown): the call's ids
+  // meet the registry and both logs ONCE, each join behind the broadcast
+  // gate (one code path at every size); the marked frame is checkpointed
+  // once, its counts observed in that pass, and the call's later frames
+  // filter it — so a call runs the mark plus one write per artifact.
+
+  private val Registered = "_registered"
+  private val Pending = "_pending"
+  private val Tombstoned = "_tombstoned"
+  private val isNovel = col(Pending) && !col(Tombstoned)
+  private val isPresent = col(Registered) && !col(Tombstoned) && !col(Pending)
+  private val isAbsent = !col(Registered) && !col(Tombstoned) && !col(Pending)
+
+  /** The checkpointed mark and its counts: distinct ids, pending ids,
+    * pending ids not yet tombstoned, and ids in neither log that are
+    * registered (present) or not (absent: fresh to a merge). */
+  private final case class Marked(frame: DataFrame, n: Long, delivered: Long,
+                                  novel: Long, present: Long, absent: Long) {
+    def rows(c: Column): DataFrame = frame.filter(c).drop(Registered, Pending, Tombstoned)
+  }
+
+  /** Mark `batch` (id column plus payload): a left join against the
+    * registry's `keep` columns, one `dropDuplicates` for repeated batch
+    * ids and duplicate registry rows alike, and an existence flag per
+    * log (none, and no join, for an absent log) — so each distinct id
+    * yields one marked row whatever the logs hold. */
+  private def mark(s: SparkSession, fam: IdLogFamily, path: String, root: String,
+                   batch: DataFrame, keep: Seq[String] = Nil): Marked = {
+    val (id, reg) = (fam.idCol, s"$root/${fam.registry}")
+    def in(dir: String): Column =
+      if (ScratchPaths.artifactExists(s, s"$dir/_SUCCESS")) col(id).isin(hintedIdLog(s, dir, id))
+      else lit(false)
+    val (frame, Seq(n, delivered, novel, present, absent)) = checkpointCounting(batch
+      .join(gated(s, reg, readStamped(s, reg).select((col(id) +: keep.map(col)) :+
+        lit(true).as(Registered): _*)), Seq(id), "left")
+      .dropDuplicates(id)
+      .withColumn(Registered, coalesce(col(Registered), lit(false)))
+      .withColumn(Pending, in(s"$path/pending"))
+      .withColumn(Tombstoned, in(fam.tombstones(path, root))),
+      lit(true), col(Pending), isNovel, isPresent, isAbsent)
+    Marked(frame, n, delivered, novel, present, absent)
+  }
+
+  /** `df` localCheckpoint'd, with the rows matching each of `preds`
+    * counted in the checkpoint's own pass (an observation: no job). */
+  private[graft] def checkpointCounting(df: DataFrame, preds: Column*): (DataFrame, Seq[Long]) = {
+    val obs = Observation(s"graft-lifecycle-${observations.incrementAndGet()}")
+    val aggs = preds.zipWithIndex.map { case (p, i) => count_if(p).as(s"c$i") }
+    val cp = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint()
+    val got = obs.get
+    (cp, aggs.indices.map(i => got(s"c$i").asInstanceOf[Long]))
+  }
+  private val observations = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The pending consult's writes: a takedown that arrived BEFORE its
+    * id's first admit is delivered — the arrival is refused through a
+    * permanent tombstone, then the pending entry is consumed. A crash
+    * between the two leaves the id in BOTH logs, so only novel ids
+    * append and a replay re-runs only the consume. The consume deletes
+    * the log unread when it holds exactly the delivered ids (count =
+    * footer rows), else rewrites the checkpointed remainder or deletes
+    * an emptied log (an empty log would tax every merge with a join). */
+  private def deliver(s: SparkSession, fam: IdLogFamily, path: String,
+                      root: String, m: Marked): Unit = if (m.delivered > 0) {
+    val (id, pending) = (fam.idCol, s"$path/pending")
+    def drop(): Unit = hadoopFs(s, pending).delete(new org.apache.hadoop.fs.Path(pending), true): Unit
+    if (m.novel > 0) phase(s, fam, "merge/tombstones") {
+      // the row was never stored: NULL audit columns, typed as stored
+      val stored = readStamped(s, s"$root/${fam.registry}").schema
+      appendIdLog(s, m.rows(isNovel).select(col(id) +: fam.audit.map(c =>
+        lit(null).cast(stored(c).dataType).as(c)): _*), fam.tombstones(path, root))
+    }
+    phase(s, fam, "merge/consume") {
+      if (m.delivered == idLogRows(s, pending)) drop()
+      else {
+        val (rest, Seq(left)) = checkpointCounting(idLogOf(s, pending, id)
+          .join(broadcast(m.rows(col(Pending)).select(id)), Seq(id), "left_anti"), lit(true))
+        try if (left == 0L) drop() else rest.writeArtifact(pending, "overwrite")
+        finally Tables.freeCheckpoint(rest): Unit
       }
     }
   }
 
-  /** The merge skeleton, under the writer gate: drop in-batch id replays,
-    * run the pending consult, then keep the ids that are neither in the
-    * registry (already admitted) nor tombstoned (forgotten ids never
-    * resurrect through a replay), and run `admit(root, fresh)` beside
-    * the batch count (guide §2.6). The registry anti-join comes first,
-    * as in every family's merge. `fresh` is localCheckpoint'd: its
-    * lineage reads the registry the admit leg appends to (the
-    * read-write-cycle discipline), and the cut lets a replay, which
-    * anti-joins to nothing, skip the admit leg outright. `admit` keeps
-    * the calling thread (the writer gate), writes the registry LAST and
-    * returns the admitted count. Returns (admitted, refused). */
+  /** The pending consult of the ANN cell-pruned merge, which runs outside
+    * [[merge]]; free while no pending log exists. Writer gate held. */
+  def consultPending(s: SparkSession, fam: IdLogFamily, path: String,
+                     root: String, batch: DataFrame): Unit =
+    if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
+      val m = phase(s, fam, "merge/mark")(mark(s, fam, path, root, batch.select(fam.idCol)))
+      try deliver(s, fam, path, root, m) finally Tables.freeCheckpoint(m.frame): Unit
+    }
+
+  /** The merge skeleton, under the writer gate: mark the batch, deliver
+    * its pending ids, then `admit(root, fresh, nFresh)` the ids neither
+    * registered, pending nor tombstoned. `fresh` filters the checkpointed
+    * mark, so its lineage never reads the registry the admit leg appends
+    * to (LAST); a replay has nothing fresh and skips the leg. A pending-
+    * path dedup merge runs 8 jobs: the mark (a broadcast per joined
+    * artifact, a shuffle, the checkpoint), the tombstone append and two
+    * admit appends. Returns (admitted, refused). */
   def merge(fam: IdLogFamily, batch: DataFrame, path: String)(
-      admit: (String, DataFrame) => Long): (Long, Long) = {
+      admit: (String, DataFrame, Long) => Long): (Long, Long) = {
     val s = batch.sparkSession
     withWriter(s, path) {
-      val id = fam.idCol
       val root = resolveIndexRoot(s, path) // appends fold into the LIVE version
-      val docs = batch.dropDuplicates(id).transform(Tables.maybePersist)
-      consultPending(s, fam, path, root, docs)
-      val fresh = live(fam, path, root)(docs.join(
-          readStamped(s, s"$root/${fam.registry}").select(id), Seq(id), "left_anti"))
-        .localCheckpoint()
-      val (nAdmit, nBatch) =
-        Par.run2(if (fresh.isEmpty) 0L else admit(root, fresh), docs.count())
-      (nAdmit, nBatch - nAdmit)
+      val m = phase(s, fam, "merge/mark")(mark(s, fam, path, root, batch))
+      try {
+        deliver(s, fam, path, root, m)
+        val nAdmit = if (m.absent == 0) 0L
+          else phase(s, fam, "merge/admit")(admit(root, m.rows(isAbsent), m.absent))
+        (nAdmit, m.n - nAdmit)
+      } finally Tables.freeCheckpoint(m.frame): Unit
     }
   }
 
-  /** The takedown, LSM-style: requested ids located in the registry
-    * append to the tombstone log (lazy deletion — effective at once,
-    * one anti-join per read, no stored file touched; compaction makes it
-    * physical); ids not admitted yet land in the pending log, consumed by
-    * their first arrival ([[consultPending]]). Idempotent: ids already in
-    * either log drop out before the locate, so a redelivery appends
-    * nothing. `beforeTombstone(root, present)` runs ahead of the
-    * tombstone append — anything it writes must collapse on replay.
-    * Returns the newly-tombstoned count. */
+  /** The takedown, LSM-style, from one mark of the request ids: present
+    * ids append to the tombstone log (lazy deletion — effective at once,
+    * no stored file touched; compaction makes it physical), unknown ones
+    * to the pending log, consumed by their first arrival. A redelivery
+    * finds every id in a log and appends nothing. `beforeTombstone(root,
+    * present)` runs first; what it writes must collapse on replay. A
+    * dedup takedown runs 6 jobs, the mark and one append per log, also
+    * right after a compaction. Returns the newly-tombstoned count. */
   def takedown(fam: IdLogFamily, requests: DataFrame, path: String,
                beforeTombstone: (String, DataFrame) => Unit = (_, _) => ()): Long = {
     val s = requests.sparkSession
     withWriter(s, path) {
       val id = fam.idCol
       val root = resolveIndexRoot(s, path)
-      val tombs = fam.tombstones(path, root)
-      val pending = s"$path/pending"
-      // ONE checkpointed pass marks each request present/absent (its
-      // lineage reads both logs, which the appends below write)
-      val kept = fam.audit ++ fam.carry
-      val marked = requests.select(col(id).cast("long")).dropDuplicates(id)
-        .join(hintedIdLog(s, tombs, id), Seq(id), "left_anti")
-        .join(hintedIdLog(s, pending, id), Seq(id), "left_anti")
-        .join(readStamped(s, s"$root/${fam.registry}")
-            .select((col(id) +: kept.map(col)) :+ lit(1).as("present"): _*),
-          Seq(id), "left")
-        .localCheckpoint()
-      val present = marked.filter(col("present").isNotNull).drop("present")
-      val early = marked.filter(col("present").isNull).select(id)
+      val m = phase(s, fam, "forget/mark")(mark(s, fam, path, root,
+        requests.select(col(id).cast("long")), fam.audit ++ fam.carry))
       // tombstone and pending tails are INDEPENDENT legs (guide §2.6):
-      // both derive from the checkpointed `marked` frame and neither
-      // reads a log the other writes — overlap them; the tombstone leg
-      // keeps the calling thread (it can re-enter the writer gate
-      // through compaction)
-      val (n, _) = Par.run2(
+      // both filter the checkpointed mark and neither reads a log the
+      // other writes — overlap them; the tombstone leg keeps the calling
+      // thread (it can re-enter the writer gate through compaction)
+      try Par.run2(
         {
-          val n0 = present.count()
-          if (n0 > 0) {
-            beforeTombstone(root, present)
-            appendIdLog(s, present.select((id +: fam.audit).map(col): _*), tombs)
+          if (m.present > 0) phase(s, fam, "forget/tombstones") {
+            beforeTombstone(root, m.rows(isPresent))
+            appendIdLog(s, m.rows(isPresent).select((id +: fam.audit).map(col): _*),
+              fam.tombstones(path, root))
           }
           // Maintenance tail, UNCONDITIONAL: gating the check on a novel
           // append leaves a crash window — tombstones land, the driver
@@ -560,11 +584,12 @@ object IndexLifecycle {
           // makes the unconditional call affordable: below the bound it
           // costs zero Spark jobs (existence guard + footer-stamped log
           // count, both driver-side).
-          maybeCompact(s, fam, path)
-          n0
+          phase(s, fam, "forget/maintain")(maybeCompact(s, fam, path))
+          m.present
         },
-        if (!early.isEmpty) appendIdLog(s, early, pending))
-      n
+        if (m.absent > 0) phase(s, fam, "forget/pending")(
+          appendIdLog(s, m.rows(isAbsent).select(id), s"$path/pending")))._1
+      finally Tables.freeCheckpoint(m.frame): Unit
     }
   }
 
@@ -664,14 +689,42 @@ object IndexLifecycle {
     String, (Long, Long, org.apache.spark.sql.types.StructType)]()
   private[graft] def readStamped(s: SparkSession, dir: String): DataFrame = {
     val stamp = dirStamp(s, dir)
-    val sch = Option(schemas.get(dir)) match {
-      case Some((a, b, v)) if a == stamp._1 && b == stamp._2 => v
-      case _ =>
-        val v = s.read.parquet(dir).schema
-        schemas.put(dir, (stamp._1, stamp._2, v))
-        v
+    s.read.schema(memoSchema(dir, stamp).getOrElse(
+      recordSchema(dir, stamp, s.read.parquet(dir).schema))).parquet(dir)
+  }
+  private def memoSchema(dir: String, stamp: (Long, Long)) =
+    Option(schemas.get(dir)).collect { case (a, b, v) if (a, b) == stamp => v }
+  private def recordSchema(dir: String, stamp: (Long, Long),
+                           v: org.apache.spark.sql.types.StructType) = {
+    schemas.put(dir, (stamp._1, stamp._2, v))
+    v
+  }
+
+  /** `df.writeArtifact(dir, mode, partitionBy*)`: a parquet write that
+    * keeps the [[readStamped]] memo current, so reading back what this
+    * driver wrote infers nothing — an append carries the memo to the
+    * post-write stamp (an artifact has one writer shape), a flat
+    * overwrite records its own schema. Another driver's write changes
+    * the stamp, so the next read here infers. */
+  implicit final class ArtifactWriter(private val df: DataFrame) extends AnyVal {
+    def writeArtifact(dir: String, mode: String, partitionBy: String*): Unit = {
+      val s = df.sparkSession
+      val known =
+        if (mode == "append") memoSchema(dir, dirStamp(s, dir))
+        else Option.when(partitionBy.isEmpty)(df.schema)
+      val w = df.write.mode(mode)
+      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(dir)
+      known.foreach(recordSchema(dir, dirStamp(s, dir), _))
     }
-    s.read.schema(sch).parquet(dir)
+  }
+
+  /** Run `body` under the job description `<family>.<call>/<phase>`;
+    * a `Par` leg started inside inherits it. */
+  private[graft] def phase[T](s: SparkSession, fam: IdLogFamily, label: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"${fam.name}.$label")
+    try body finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   /** Stamp of an artifact directory for memo validation: (fileCount,
@@ -724,12 +777,9 @@ object IndexLifecycle {
       } yield (v0 + math.max(0L, logRows - l0)).toDouble / st
       if (bound.exists(_ < frac)) false
       else {
-        val ids = storedIds
-        val stored = ids.count()
-        val victims =
-          if (stored == 0L) 0L
-          else ids.join(hintedIdLog(s, logDir, idCol), Seq(idCol), "left_semi")
-            .count()
+        val row = storedIds.select(col(idCol).isin(hintedIdLog(s, logDir, idCol)).as("v"))
+          .agg(count(lit(1)), count_if(col("v"))).head()
+        val (stored, victims) = (row.getLong(0), row.getLong(1))
         memoPut(s"$memoKey#ts.stored", stored)
         memoPut(s"$memoKey#ts.log", logRows)
         memoPut(s"$memoKey#ts.victims", victims)

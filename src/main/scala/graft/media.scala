@@ -5,6 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.IndexLifecycle.ArtifactWriter
 
 /** One opaque media payload: bytes + typed metadata (SURVEY.md §2.7 E2
   * generalized — the reference fetches Slack image bytes and carries them
@@ -1875,7 +1876,7 @@ object MediaOps {
     * call and oracle are unchanged). [[compactMediaIndex]] writes each
     * compaction as a new committed version (r18); the append-only logs
     * (tombstones/pending) stay at the path root, shared across versions. */
-  private[graft] val mediaFamily = IdLogFamily("doc_id", "vecs", "bands",
+  private[graft] val mediaFamily = IdLogFamily("media", "doc_id", "vecs", "bands",
     Seq("vecs", "bands", "stat"), "spark.graft.mediaCompactTombstoneFrac",
     compactMediaIndex)
 
@@ -1915,25 +1916,18 @@ object MediaOps {
     * keys (real payloads whose dHashes collide at one prefix width and
     * split at the next are not constructible on demand). */
   private[graft] def mergeHashesIntoIndex(hashes0: DataFrame, path: String,
-                                          family: String): (Long, Long) =
-    IndexLifecycle.withWriter(hashes0.sparkSession, path) {
-      val s = hashes0.sparkSession
-      Similarity.withFns(s)
-      val root = IndexLifecycle.resolveIndexRoot(s, path) // appends fold into the LIVE version
+                                          family: String): (Long, Long) = {
+    val s = hashes0.sparkSession
+    Similarity.withFns(s)
+    // the skeleton drops in-batch id replays, runs the pending consult
+    // and hands over the ids neither stored nor tombstoned (the ANN
+    // merge's r17 replay guards); refusals here count near-dups only
+    var nFresh = 0L
+    val (nAdmit, _) = IndexLifecycle.merge(mediaFamily, hashes0, path) { (root, fresh, n) =>
+      nFresh = n
       val st = IndexLifecycle.readStamped(s, s"$root/stat")
         .select("width", "bands_per_doc", "priced_n").head()
       val (width, pricedN) = (st.getInt(0), st.getLong(2))
-      val hashes = hashes0
-        .dropDuplicates("doc_id") // in-batch exact-id replays
-        .transform(Tables.maybePersist)
-      IndexLifecycle.consultPending(s, mediaFamily, path, root, hashes)
-      // replay guards: already-stored ids AND tombstoned ids never
-      // (re-)admit — the latter is the right-to-be-forgotten survival
-      // under at-least-once replay (the ANN merge's r17 discipline)
-      val fresh = IndexLifecycle.live(mediaFamily, path, root)(
-          hashes.join(IndexLifecycle.readStamped(s, s"$root/vecs").select("doc_id"),
-            Seq("doc_id"), "left_anti"))
-        .transform(Tables.maybePersist)
       val dBands = fresh.selectExpr("doc_id as delta_id",
         s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
       val iBands = IndexLifecycle.live(mediaFamily, path, root)(
@@ -1950,35 +1944,32 @@ object MediaOps {
           Seq("delta_id"))
         .filter(expr(dupCondExpr(family)))
         .select(col("delta_id").as("doc_id")).distinct()
-      val nFresh = fresh.count()
-      // replay fast path (r21): an idempotent re-delivery anti-joins to
-      // nothing — skip the candidate-join subtree and its checkpoint
-      // outright (they would scan the stored bands/vecs for zero rows)
-      if (nFresh == 0L) return (0L, 0L)
       // localCheckpoint (not persist): the admit frame's LINEAGE reads
       // the same vecs/bands paths the appends below write — under
       // spark.graft.persist=never a lazy plan would re-read them at
       // write time (the compactMediaIndex read-write-cycle discipline);
       // counts also come BEFORE the appends for the same reason
-      val admit = fresh.join(dupIds, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      val nAdmit = admit.count()
-      if (nAdmit > 0) {
-        // stored population before this merge's appends, from the vecs
-        // artifact's parquet footers (r21) — writer gate held, so the
-        // listing is stable; zero Spark jobs
-        val priorPop = IndexLifecycle.parquetFooterRows(s, s"$root/vecs")
-        admit.selectExpr("doc_id", "posexplode(bk) as (band_idx, band_hash)")
-          .write.mode("append").parquet(s"$root/bands")
-        admit.select(col("doc_id"), col("v"))
-          .write.mode("append").parquet(s"$root/vecs")
-        // growth trigger: population doubled since the width was priced
-        // → compact (which re-measures the dial and overwrites the stat)
-        if (pricedN > 0 && priorPop + nAdmit >= 2 * pricedN)
-          compactMediaIndex(s, path)
-      }
-      (nAdmit, nFresh - nAdmit)
+      val (admit, Seq(nAdmit)) = IndexLifecycle.checkpointCounting(
+        fresh.join(dupIds, Seq("doc_id"), "left_anti"), lit(true))
+      try {
+        if (nAdmit > 0) {
+          // stored population before this merge's appends, from the vecs
+          // artifact's parquet footers (r21) — writer gate held, so the
+          // listing is stable; zero Spark jobs
+          val priorPop = IndexLifecycle.parquetFooterRows(s, s"$root/vecs")
+          admit.selectExpr("doc_id", "posexplode(bk) as (band_idx, band_hash)")
+            .writeArtifact(s"$root/bands", "append")
+          admit.select(col("doc_id"), col("v")).writeArtifact(s"$root/vecs", "append")
+          // growth trigger: population doubled since the width was priced
+          // → compact (which re-measures the dial and overwrites the stat)
+          if (pricedN > 0 && priorPop + nAdmit >= 2 * pricedN)
+            compactMediaIndex(s, path)
+        }
+        nAdmit
+      } finally Tables.freeCheckpoint(admit): Unit
     }
+    (nAdmit, nFresh - nAdmit)
+  }
 
   // ---------------------------------------------------------------------
   // q137 — RIGHT-TO-BE-FORGOTTEN on the standing MEDIA index (r17): the

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.IndexLifecycle.ArtifactWriter
 
 /** Similarity search over the `embeddings` table (64-d float vectors):
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
@@ -4150,7 +4151,7 @@ object Similarity {
     * the artifact the build writes last, each tombstone records the
     * victim's stored cell, and the tombstone log lives under the
     * VERSION ROOT — the refit carries it into each new version. */
-  private[graft] val annFamily = IdLogFamily("vec_id", "assignments",
+  private[graft] val annFamily = IdLogFamily("ann", "vec_id", "assignments",
     "assignments", Seq("assignments", "centroids", "cellstat"),
     "spark.graft.annCompactTombstoneFrac", compactAnnIndex,
     audit = Seq("c_label"), tombstonesAtRoot = true)
@@ -4224,13 +4225,11 @@ object Similarity {
     // compaction that rewrites cells contiguously.
     val affectedIds = assignments.filter(col("c_label").isin(hit: _*))
       .select("vec_id")
-    val fresh = newRows
-      .join(affectedIds, Seq("vec_id"), "left_anti")
-      // break lineage: the append writes the very path being read
-      .localCheckpoint()
-    if (!fresh.isEmpty)
-      fresh.write.mode("append")
-        .partitionBy("c_label").parquet(s"$path/assignments")
+    // checkpointed to break lineage: the append writes the path being read
+    val (fresh, Seq(n)) = IndexLifecycle.checkpointCounting(
+      newRows.join(affectedIds, Seq("vec_id"), "left_anti"), lit(true))
+    try if (n > 0) fresh.writeArtifact(s"$path/assignments", "append", "c_label")
+    finally Tables.freeCheckpoint(fresh): Unit
   }
 
   def mergeAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
@@ -4489,8 +4488,11 @@ object Similarity {
     // appends. rounds > 0 is the refit proper.
     var cents: DataFrame =
       if (rounds == 0) IndexLifecycle.readStamped(s, s"$root/centroids") else null
+    // every frame this rebuild persists, freed once the version commits
+    val held = scala.collection.mutable.ArrayBuffer(asg)
     for (_ <- 1 to rounds) {
       cents = cellMeans(asg).transform(Tables.maybePersist)
+      held += cents
       asg = reassignCells(asg, cents)
     }
     // both phase-1 writes land in the UNCOMMITTED version directory —
@@ -4507,9 +4509,11 @@ object Similarity {
       // during the refit must survive the swap — its victim is physically
       // present in the refit output and stays hidden by the carried log
       // until the NEXT rebuild removes it
-      if (graft.ScratchPaths.artifactExists(s, s"$root/tombstones/_SUCCESS"))
-        IndexLifecycle.readStamped(s, s"$root/tombstones").localCheckpoint()
-          .write.mode("overwrite").parquet(s"$newRoot/tombstones")
+      if (graft.ScratchPaths.artifactExists(s, s"$root/tombstones/_SUCCESS")) {
+        val log = IndexLifecycle.readStamped(s, s"$root/tombstones").localCheckpoint()
+        log.write.mode("overwrite").parquet(s"$newRoot/tombstones")
+        Tables.freeCheckpoint(log)
+      }
       // catchup: live rows that merged into the OLD version mid-refit
       // (fresh file listing — the LSM merge appends files, so a fresh
       // read sees them) and are absent from the refit output
@@ -4523,6 +4527,7 @@ object Similarity {
           .selectExpr("vec_id", "label", "embedding", "nrm", "c_label")
           .write.mode("append").partitionBy("c_label")
           .parquet(s"$newRoot/assignments")
+      Tables.freeCheckpoint(missed)
       // a REFIT's population (caught-up rows included, carried tombstones
       // excluded) is the new drift reference frame; a PURE COMPACTION
       // (rounds = 0) carries the OLD frame forward — resetting cellstat
@@ -4543,6 +4548,7 @@ object Similarity {
       // versions × corpus on disk
       graft.IndexLifecycle.commitVersion(s, annFamily, path, newRoot)
     }
+    held.foreach(_.unpersist(blocking = false))
     newRoot
   }
 
@@ -4996,7 +5002,7 @@ object Similarity {
     * victim's stored cell; the q148 gate row's 1/40 = 2.5% victims sit
     * far under the default compaction fraction, so the row certifies
     * the LAZY read path specifically. */
-  private[graft] val pqFamily = IdLogFamily("vec_id", "codes", "codes",
+  private[graft] val pqFamily = IdLogFamily("pq", "vec_id", "codes", "codes",
     Seq("codes", "codebook", "coarse", "stat"),
     "spark.graft.pqCompactTombstoneFrac", compactPqIndex,
     audit = Seq("c_label"))
@@ -5039,22 +5045,19 @@ object Similarity {
     * tombstone-aware. Returns (admitted, refused). */
   def mergePqBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
     IndexLifecycle.merge(pqFamily,
-        batch.select(col("vec_id").cast("long"), col("embedding")), path) { (root, fresh) =>
+        batch.select(col("vec_id").cast("long"), col("embedding")), path) { (root, fresh, nFresh) =>
       val s = batch.sparkSession
       val cells = pqCellsOfRead(s, s"$root/codebook")
       // the encode chain is row-preserving (every step crossJoins a
       // one-row broadcast frame and projects), so the admitted count IS
-      // the checkpointed fresh frame's count — read from the same blocks
-      // beside the append (r22), which stays on the calling thread and
-      // is the leg's only write (the codes artifact is the registry)
-      Par.run2(
-        pqEncodedIndex(
-            pqCorpusOf(pqRouteResidual(fresh, IndexLifecycle.readStamped(s, s"$root/coarse")),
-              Seq("c_label", "orig")),
-            cells)
-          .write.mode("append").partitionBy("c_label")
-          .parquet(s"$root/codes"),
-        fresh.count())._2
+      // the marked fresh count; the append is the leg's only write (the
+      // codes artifact is the registry)
+      pqEncodedIndex(
+          pqCorpusOf(pqRouteResidual(fresh, IndexLifecycle.readStamped(s, s"$root/coarse")),
+            Seq("c_label", "orig")),
+          cells)
+        .writeArtifact(s"$root/codes", "append", "c_label")
+      nFresh
     }
 
   /** q148's core — right-to-be-forgotten against the standing PQ index,

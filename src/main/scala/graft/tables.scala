@@ -44,6 +44,30 @@ object Tables {
     if (df.sparkSession.conf.get("spark.graft.persist", "auto") == "never") df
     else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
+  /** Free a localCheckpoint'ed frame's storage blocks once its last
+    * reader is done (a loop's superseded round, a lifecycle call's
+    * marked frame). Dataset.unpersist only covers cacheManager entries;
+    * checkpoint blocks hang off the LogicalRDD's backing RDD and would
+    * otherwise accumulate one generation per round (or per call) until
+    * the RDD is garbage-collected — at 100 TB a label generation is
+    * corpus-vertex-sized. The match is against a Spark-internal node, so
+    * a miss warns loudly (and ExtensionsSpec pins that the free fires):
+    * an upgrade that defeats it must not become a silent leak. */
+  private[graft] def freeCheckpoint(df: DataFrame): Boolean = {
+    var found = false
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        found = true
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+    if (!found)
+      System.err.println(
+        "[graft] freeCheckpoint: no LogicalRDD in analyzed plan - " +
+          "localCheckpoint blocks will NOT be freed (Spark internals changed?)")
+    found
+  }
+
   /** Scan-parallelism floor for the fact tables: the test corpora are
     * single small parquet files (documents at sf0.1 = 0.6 MB → ONE scan
     * task, because a parquet row group is the minimum split —

@@ -229,10 +229,10 @@ class ExtensionsSpec extends SparkSpec {
     // no-ops and O(rounds) checkpoint blocks accumulate at scale — this
     // pin makes that upgrade a test failure instead of a slow leak.
     val df = (1L to 100L).toDF("id").localCheckpoint(eager = true)
-    assert(Dedup.freeCheckpoint(df),
+    assert(Tables.freeCheckpoint(df),
       "localCheckpoint's analyzed plan no longer contains a LogicalRDD")
     // and a plain scan must NOT claim a free happened
-    assert(!Dedup.freeCheckpoint((1L to 3L).toDF("id")))
+    assert(!Tables.freeCheckpoint((1L to 3L).toDF("id")))
   }
 
   test("connectedComponentsStar: empty edge set roots every vertex at itself") {

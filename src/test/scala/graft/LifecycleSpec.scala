@@ -320,6 +320,120 @@ class LifecycleSpec extends SparkSpec {
     }
   }
 
+  /** The job descriptions of the jobs `body` launched, collected under
+    * a job group (a `Par` leg's thread inherits the group). */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val tag = s"jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            tag == js.properties.getProperty("spark.jobGroup.id"))
+          jobs.add(String.valueOf(js.properties.getProperty("spark.job.description"))): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(tag, "lifecycle job budget")
+    try { body; Thread.sleep(500) }
+    finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  private def docs(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+    ids.map(id => (id, s"lifecycle budget document $id with a few more words")).toDF("doc_id", "text")
+
+  test("dedup job budget: a pending-path merge, a takedown and the first takedown after a compaction") {
+    val path = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    Dedup.buildDedupIndex(spark, sf, path)
+    val live = spark.read.parquet(s"$path/shingles").select("doc_id").as[Long]
+      .collect().sorted.toSeq
+    // one cycle the way a long-lived stream runs it: each call reads
+    // artifacts the call before it wrote
+    def cycle(k: Int): (Seq[String], Seq[String]) = {
+      val future = Seq(910000L + 10 * k, 910001L + 10 * k)
+      val forget = jobsOf(Dedup.forgetDedupFromIndex(
+        (live.slice(4 * k, 4 * k + 4) ++ future).toDF("doc_id"), path): Unit)
+      val merge = jobsOf(Dedup.mergeDedupBatchIntoIndex(
+        docs(future ++ Seq(920000L + 10 * k, 920001L + 10 * k) :+ live(100)), path): Unit)
+      (forget, merge)
+    }
+    cycle(0)
+    val (takedown, merge) = cycle(1)
+    // measured before the marking pass: 10 (takedown) and 25 (merge)
+    assert(takedown.size <= 6, s"a takedown ran ${takedown.size} jobs (budget 6): $takedown")
+    assert(merge.size <= 8, s"a pending-path merge ran ${merge.size} jobs (budget 8): $merge")
+    Dedup.compactDedupIndex(spark, path)
+    // the commit seeded the new root's bound: a below-threshold check
+    // never derives the registry frame
+    assert(!IndexLifecycle.tombstoneHeavy(spark,
+      sys.error("the check after a compaction must not derive the registry frame"),
+      s"$path/tombstones", "doc_id", "spark.graft.dedupCompactTombstoneFrac",
+      memoKey = IndexLifecycle.resolveIndexRoot(spark, path)))
+    val (afterCompact, _) = cycle(2)
+    // the tombstone-mass bound is seeded at commit: no registry scan
+    // (measured 16 before)
+    assert(afterCompact.size <= 6,
+      s"the first takedown after a compaction ran ${afterCompact.size} jobs (budget 6): $afterCompact")
+    // every job carries its phase label
+    Seq(takedown -> "dedup.forget/", merge -> "dedup.merge/", afterCompact -> "dedup.forget/")
+      .foreach { case (jobs, call) =>
+        assert(jobs.forall(_.startsWith(call)), s"unlabelled lifecycle jobs: $jobs")
+      }
+    def phases(jobs: Seq[String]) =
+      jobs.groupBy(identity).toSeq.sortBy(_._1).map { case (p, n) => s"$p ${n.size}" }.mkString(", ")
+    info(s"takedown: ${phases(takedown)}; merge: ${phases(merge)}; " +
+      s"first takedown after a compaction: ${phases(afterCompact)}")
+  }
+
+  test("dedup merge and takedown count each distinct id once, whatever duplicates the logs and the registry hold") {
+    val path = java.nio.file.Files.createTempDirectory("graft-dupes").toString
+    Dedup.buildDedupIndex(spark, sf, path)
+    val shingles = spark.read.parquet(s"$path/shingles")
+    val Seq(r1, r2, t) = shingles.select("doc_id").as[Long].collect().sorted.take(3).toSeq
+    val (p, n) = (930001L, 930002L)
+    // a crash-replayed registry append, and each log holding an id twice
+    shingles.filter(col("doc_id") === r1).write.mode("append").parquet(s"$path/shingles")
+    Seq(t, t).toDF("doc_id").write.parquet(s"$path/tombstones")
+    Seq(p, p).toDF("doc_id").write.parquet(s"$path/pending")
+    // r1 is registered (twice) and new to the logs; 930003 is unknown
+    assert(Dedup.forgetDedupFromIndex(Seq(r1, r1, t, 930003L).toDF("doc_id"), path) == 1L,
+      "a registry duplicate must tombstone its id once")
+    // p is delivered (pending twice), t tombstoned, r2 a replay, n new
+    // and repeated in the batch: 4 distinct ids, one admitted
+    assert(Dedup.mergeDedupBatchIntoIndex(docs(Seq(p, t, r2, n, n)), path) == ((1L, 3L)))
+    assert(!new java.io.File(s"$path/pending/_SUCCESS").exists ||
+      spark.read.parquet(s"$path/pending").filter(col("doc_id") === p).isEmpty,
+      "the delivered id must leave the pending log, both copies")
+    assert(spark.read.parquet(s"$path/tombstones").select("doc_id").as[Long].collect().toSet ==
+      Set(t, r1, p))
+    assert(Dedup.mergeDedupBatchIntoIndex(docs(Seq(p, n)), path) == ((0L, 2L)),
+      "a replay admits nothing")
+  }
+
+  test("no lifecycle call leaves a persisted or checkpointed frame behind") {
+    families.foreach { f =>
+      val path = java.nio.file.Files.createTempDirectory(s"graft-leak-${f.name}").toString
+      f.build(path)
+      def registered: Seq[Long] =
+        spark.read.parquet(s"${IndexLifecycle.resolveIndexRoot(spark, path)}/${f.registry}")
+          .select(f.idCol).as[Long].collect().sorted.toSeq
+      def held = spark.sparkContext.getPersistentRDDs.keySet
+      def noLeak(call: String)(body: => Unit): Unit = {
+        val before = held
+        body
+        val left = held -- before
+        assert(left.isEmpty, s"${f.name}: a $call left persisted RDDs ${left.toSeq.sorted} behind")
+      }
+      noLeak("merge")(f.merge(f.arrival(900021L), path))
+      noLeak("takedown")(f.forget((registered.take(2) :+ 900022L).toDF(f.idCol), path))
+      noLeak("compaction")(f.compact(path))
+    }
+  }
+
   test("versions order by NUMBER, not name: past v99999, resolve, allocation and GC all see v100000 as the newest") {
     val path = java.nio.file.Files.createTempDirectory("graft-vorder").toString
     // marker-only versions: the version store reads names and markers alone
