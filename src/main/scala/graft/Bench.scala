@@ -174,16 +174,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r21: unfiltered COUNT/MIN/MAX over plain parquet scans answer
-      // from row-group footers instead of scanning rows — the index
-      // builds' read-back counts and the lifecycle registries' first
-      // stored-count checks are exactly this shape. Scale-independent
-      // (footers are O(files), rows are O(corpus)); results identical
-      // (exact metadata, and the rewrite never fires across filters or
-      // joins).
-      .config("spark.sql.parquet.aggregatePushdown", "true")
+      .config(SparkEntry.planConfs)
       // SPARK_GRAFT_AQE=false: experiment knob — the CC loops re-plan
       // under AQE every round, so the per-round floor can be attributed
       // (environment yardstick protocol, SURVEY §8). Default on; only
@@ -329,8 +320,7 @@ object Bench {
       val lines = proto.map { qt =>
         val ts = qt.times
         val sorted = ts.sorted
-        // even-sized samples average the two middle elements (the
-        // Variance.scala convention fixed this round)
+        // even-sized samples average the two middle elements
         val med =
           if (sorted.isEmpty) -1.0
           else if (sorted.size % 2 == 1) sorted(sorted.size / 2)

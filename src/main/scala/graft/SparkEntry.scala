@@ -17,6 +17,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelOps.pricingSummary(spark, "/root/testdata/sf0.001")
 
+  /** The session confs that shape a query's plan, set alike by Bench,
+    * Verify and Explain: the plan Explain prints is the one Bench times
+    * and Verify checks. `nanosAsLong` reads an INT64 TIMESTAMP(NANOS)
+    * events `ts` as raw long nanos (Tables.events re-derives µs and
+    * timestamp columns). `aggregatePushdown` (r21) answers unfiltered
+    * COUNT/MIN/MAX over plain parquet scans from row-group footers — the
+    * index builds' read-back counts and the registries' first stored-count
+    * checks are this shape; the results are identical (exact metadata,
+    * never rewritten across filters or joins) and, set in Verify too, the
+    * pushdown path is itself hash-verified against DuckDB. */
+  val planConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.aggregatePushdown" -> "true",
+    "spark.sql.adaptive.enabled" -> "true")
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
     val base: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -10,18 +10,10 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) — Spark reads it as
-      // raw long nanos (Tables.events re-derives µs/timestamp columns).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(SparkEntry.planConfs)
       // write µs (not INT96) so the driver's DuckDB read sees exact values
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r21, matching Bench: unfiltered parquet counts answer from
-      // footers — running the oracle gate with the same conf means the
-      // pushdown path itself is hash-verified against DuckDB
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -803,14 +803,10 @@ object TextAnalysis {
     * keeps that check zero-job between mutations. The tombstone and
     * pending logs stay at the PATH ROOT, shared across versions. */
   private[graft] val lexFamily = IdLogFamily("lex", "doc_id", "doclens", "postings",
-    Seq("postings", "doclens", "terms", "stats"),
-    "spark.graft.lexCompactTombstoneFrac", compactLexIndex,
+    Seq("postings", "doclens", "terms", "stats"), compactLexIndex,
     carry = Seq("dl"),
     fragmented = (s, root) => lexSegCount(s, root) - 1 >
       IndexLifecycle.confInt(s, "spark.graft.lexCompactSegments", 16))
-
-  private[graft] def lexPendingOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
 
   /** The folded dictionary of a resolved root: segment contributions
     * collapsed (distinct = the crash-replay guard) then summed per term;
@@ -1130,7 +1126,7 @@ object TextAnalysis {
 
   /** The q144 gate chain (r19): the full auto-maintained lifecycle in
     * one arc — lazy build → merge the rekeyed delta → forget ~29% of the
-    * population, which crosses `spark.graft.lexCompactTombstoneFrac`'s
+    * population, which crosses `spark.graft.compactTombstoneFrac`'s
     * default so the forget's MAINTENANCE TAIL auto-compacts (no explicit
     * compact call anywhere — the row certifies the policy trigger's
     * output, a fresh committed version with victims physically removed

@@ -403,8 +403,8 @@ object Dedup {
     * q23 adds its presentation sort; q41 consumes the pairs as edges,
     * where a sort would be a wasted range-exchange. */
   /** The near-dup working corpus: every doc plus its mutated twin
-    * (first token dropped, doc_id+10000). Split out so graft.Profile
-    * times the EXACT production stages, not a re-implementation. */
+    * (first token dropped, doc_id+10000). One definition for every
+    * near-dup row and the specs, so each signs the same corpus. */
   private[graft] def nearDupCorpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     docs.select(col("doc_id"), col("text")).unionAll(
@@ -725,23 +725,18 @@ object Dedup {
   //    committed version (the [[IndexLifecycle]] version store) + keep-N
   //    GC, and defragments crash-dupe band rows along the way.
   //  · MAINTENANCE POLICY: the forget tail auto-compacts once live
-  //    victims cross `spark.graft.dedupCompactTombstoneFrac` (0.25).
+  //    victims cross `spark.graft.compactTombstoneFrac` (0.25).
   // Scale shape (100 TB): merge = batch-sized sign + appends; takedown =
   // request-sized log append; probe unchanged (index never reshuffles);
   // compaction is the one corpus-sized pass and amortizes LSM-style.
   // ---------------------------------------------------------------------
 
   /** The dedup family's lifecycle: the shingle set is the registry, the
-    * build writes bands last, the tombstone leg of the maintenance
-    * policy reads `spark.graft.dedupCompactTombstoneFrac`. The
-    * tombstone/pending logs stay at the PATH ROOT, shared across
-    * versions (audit trail + the merge-side replay guard forever). */
+    * build writes bands last. The tombstone/pending logs stay at the
+    * PATH ROOT, shared across versions (audit trail + the merge-side
+    * replay guard forever). */
   private[graft] val dedupFamily = IdLogFamily("dedup", "doc_id", "shingles", "bands",
-    Seq("shingles", "bands"), "spark.graft.dedupCompactTombstoneFrac",
-    compactDedupIndex)
-
-  private[graft] def dedupPendingOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
+    Seq("shingles", "bands"), compactDedupIndex)
 
   /** Live rows of one artifact of version `root`: stored minus the
     * tombstone log (skipped — plan untouched — when no log exists, so

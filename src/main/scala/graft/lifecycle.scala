@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   *                  from the flat root once the version window fills
   *                  (the first one's presence marks the flat root as
   *                  still there)
-  * @param fracKey   the `spark.graft.*CompactTombstoneFrac` conf of the
-  *                  tombstone-mass trigger (default 0.25)
   * @param compact   the family's compaction, called with the index path
   * @param audit     registry columns recorded beside each tombstoned id
   *                  (ANN/PQ: the stored cell — NULL when the tombstone
@@ -41,7 +39,6 @@ final case class IdLogFamily(
     registry: String,
     built: String,
     artifacts: Seq[String],
-    fracKey: String,
     compact: (SparkSession, String) => Unit,
     audit: Seq[String] = Nil,
     carry: Seq[String] = Nil,
@@ -608,12 +605,13 @@ object IndexLifecycle {
     * lexical merge tail) inside the writer gate — reentrant — so an
     * unattended ingest/takedown stream compacts itself: compact when the
     * family's fragmentation trigger fires or when live victims reach
-    * `fam.fracKey`'s fraction of the registry ([[tombstoneHeavy]]). */
+    * `spark.graft.compactTombstoneFrac` of the registry
+    * ([[tombstoneHeavy]]). */
   def maybeCompact(s: SparkSession, fam: IdLogFamily, path: String): Unit = {
     val root = resolveIndexRoot(s, path)
     if (fam.fragmented(s, root) || tombstoneHeavy(s,
         readStamped(s, s"$root/${fam.registry}").select(fam.idCol),
-        fam.tombstones(path, root), fam.idCol, fam.fracKey, memoKey = root))
+        fam.tombstones(path, root), fam.idCol, memoKey = root))
       fam.compact(s, path)
   }
 
@@ -744,9 +742,10 @@ object IndexLifecycle {
     s.conf.getOption(key).map(_.toDouble).getOrElse(dflt)
 
   /** The shared TOMBSTONE LEG of the r19b maintenance policies: have the
-    * live victims lazy deletion is hiding reached `confKey`'s fraction
-    * (default 0.25) of the stored rows? `storedIds` is the narrow id
-    * column of the LIVE version's registry artifact. [[maybeCompact]]
+    * live victims lazy deletion is hiding reached
+    * `spark.graft.compactTombstoneFrac` (default 0.25) of the stored
+    * rows? `storedIds` is the narrow id column of the LIVE version's
+    * registry artifact. [[maybeCompact]]
     * calls this from every takedown tail and compacts when it fires, so
     * an unattended takedown stream can never accumulate read-side
     * anti-join mass and dead rows.
@@ -766,9 +765,9 @@ object IndexLifecycle {
     * artifact. The first check on a root (no memo) pays the real scan
     * once and seeds the bound. */
   def tombstoneHeavy(s: SparkSession, storedIds: => DataFrame, logDir: String,
-                     idCol: String, confKey: String, memoKey: String): Boolean =
+                     idCol: String, memoKey: String): Boolean =
     ScratchPaths.artifactExists(s, s"$logDir/_SUCCESS") && {
-      val frac = confDouble(s, confKey, 0.25)
+      val frac = confDouble(s, "spark.graft.compactTombstoneFrac", 0.25)
       val logRows = idLogRows(s, logDir)
       val bound = for {
         st <- memoGet(s"$memoKey#ts.stored") if st > 0L

@@ -1870,15 +1870,13 @@ object MediaOps {
   }
 
   /** The media family's lifecycle: vecs is the registry, the build
-    * writes bands last, the tombstone leg of the maintenance policy
-    * reads `spark.graft.mediaCompactTombstoneFrac` (the q137 gate row's
-    * 1/7 ≈ 14% victims sit under the default, so its explicit compact
-    * call and oracle are unchanged). [[compactMediaIndex]] writes each
+    * writes bands last (the q137 gate row's 1/7 ≈ 14% victims sit under
+    * the default compaction fraction, so its explicit compact call and
+    * oracle are unchanged). [[compactMediaIndex]] writes each
     * compaction as a new committed version (r18); the append-only logs
     * (tombstones/pending) stay at the path root, shared across versions. */
   private[graft] val mediaFamily = IdLogFamily("media", "doc_id", "vecs", "bands",
-    Seq("vecs", "bands", "stat"), "spark.graft.mediaCompactTombstoneFrac",
-    compactMediaIndex)
+    Seq("vecs", "bands", "stat"), compactMediaIndex)
 
   /** ONLINE ingest-dedup merge (q136's streaming leg — the admission
     * decision an image-ingest pipeline makes per arriving batch): hash
@@ -1991,28 +1989,16 @@ object MediaOps {
   // nothing appended → identical rewrite → identical report).
   // ---------------------------------------------------------------------
 
-  private[graft] def tombstonesOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
-
-  /** The PENDING-forget log: takedowns that arrived BEFORE their id's
-    * first admit (r17 advice #5 — [[mediaForgetStream]] and
-    * [[mediaIngestStream]] are independent streams with no cross-stream
-    * ordering, so a forget delivered early used to be silently lost and
-    * the later ingest admitted the id). The merge consults it: a pending
-    * id's first arrival is REFUSED and the id moves to the tombstone log
-    * (the forget is now delivered, and tombstone permanence makes the
-    * refusal replay-safe — a replayed ingest of that batch cannot admit
-    * it). An id that never arrives stays pending with zero effect; fresh
-    * CONTENT under a fresh id still admits (dedup-forget, not a content
-    * ban). */
-  private[graft] def pendingForgetsOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
-
   /** Takedown: append the present-and-not-yet-logged request ids to the
     * tombstone log; ids NOT yet in the index land in the pending-forget
-    * log instead of being dropped (consumed by the id's first arrival —
-    * [[pendingForgetsOf]]). Idempotent at both artifacts (re-delivery
-    * appends nothing); returns the newly-tombstoned count. */
+    * log `$path/pending` instead of being dropped (r17 advice #5 —
+    * [[mediaForgetStream]] and [[mediaIngestStream]] are independent
+    * streams with no cross-stream ordering). The merge consults it: a
+    * pending id's first arrival is REFUSED and the id moves to the
+    * tombstone log, whose permanence makes the refusal replay-safe; fresh
+    * CONTENT under a fresh id still admits (dedup-forget, not a content
+    * ban). Idempotent at both artifacts (re-delivery appends nothing);
+    * returns the newly-tombstoned count. */
   def forgetMediaFromIndex(requests: DataFrame, path: String): Long =
     IndexLifecycle.takedown(mediaFamily, requests, path)
 
@@ -2070,7 +2056,8 @@ object MediaOps {
     val root = IndexLifecycle.resolveIndexRoot(s, path) // post-compact: the new version
     IndexLifecycle.readStamped(s, s"$root/vecs").agg(count(lit(1)).as("n_kept"))
       .crossJoin(IndexLifecycle.readStamped(s, s"$root/bands").agg(count(lit(1)).as("n_kept_bands")))
-      .crossJoin(tombstonesOf(s, path).agg(count(lit(1)).as("n_tombstones")))
+      .crossJoin(IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
+        .agg(count(lit(1)).as("n_tombstones")))
   }
 
   val mediaIndexForgetSql: String =

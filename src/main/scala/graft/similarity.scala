@@ -1284,7 +1284,7 @@ object Similarity {
   // SHIPPED r14 as the general-L [[fitHierPlan]]/[[assignCellsHierJoined]]
   // (fan = k^(1/L) per tier, O(L·fan·d) dots/row, closure residency
   // O(fan·d) at any k; spec-pinned ≡ this 2-level form at L=2 and
-  // join ≡ closure at L=3, HierScale audits 30× linear).
+  // join ≡ closure at L=3; r14 measured it linear to a 30× replica).
   //
   // Scale shape (r13 — the de-drivered form, VERDICT r12 #2): with
   // k ∝ corpus, the k-row codebook can NO LONGER live on the driver or
@@ -4152,8 +4152,7 @@ object Similarity {
     * victim's stored cell, and the tombstone log lives under the
     * VERSION ROOT — the refit carries it into each new version. */
   private[graft] val annFamily = IdLogFamily("ann", "vec_id", "assignments",
-    "assignments", Seq("assignments", "centroids", "cellstat"),
-    "spark.graft.annCompactTombstoneFrac", compactAnnIndex,
+    "assignments", Seq("assignments", "centroids", "cellstat"), compactAnnIndex,
     audit = Seq("c_label"), tombstonesAtRoot = true)
 
   /** ANN compaction: the `rounds = 0` PURE COMPACTION of
@@ -4990,7 +4989,7 @@ object Similarity {
   //    physical in a fresh committed version (codebook/coarse carried —
   //    compaction never refits) + keep-N GC.
   //  · MAINTENANCE POLICY: the forget tail auto-compacts once live
-  //    victims cross `spark.graft.pqCompactTombstoneFrac` (0.25).
+  //    victims cross `spark.graft.compactTombstoneFrac` (0.25).
   // Scale shape (100 TB): merge = |batch| routed dots + an append;
   // takedown = one pushdown locate + a request-sized append; probe
   // unchanged (codes-only columnar scan); compaction = one codes-only
@@ -5003,8 +5002,7 @@ object Similarity {
     * far under the default compaction fraction, so the row certifies
     * the LAZY read path specifically. */
   private[graft] val pqFamily = IdLogFamily("pq", "vec_id", "codes", "codes",
-    Seq("codes", "codebook", "coarse", "stat"),
-    "spark.graft.pqCompactTombstoneFrac", compactPqIndex,
+    Seq("codes", "codebook", "coarse", "stat"), compactPqIndex,
     audit = Seq("c_label"))
 
   /** Live code rows: stored minus the root tombstone log (skipped — plan
@@ -5159,7 +5157,7 @@ object Similarity {
 
   /** The q149 report — the dial input the auto-refit acts on, oracle-
     * certified: (live rows, the build fit's own distortion, the stored
-    * codes' distortion as of now, refit_due under the session dials).
+    * codes' distortion as of now, refit_due under the refit dials).
     * A fresh index reads d_now == d_build bit-for-bit, which certifies
     * the residual/codebook reconstruction path end-to-end; a grown or
     * drifted index reads the decay the trigger prices. Lazily prices a
@@ -5186,6 +5184,13 @@ object Similarity {
     else st.selectExpr("n_build as n_ref", "d_ref_micro")
   }
 
+  /** The auto-refit dials (q149's DuckDB oracle hardcodes the same two):
+    * the distortion pass is priced once the live population reaches
+    * `PqRefitGrowth` × its reference, and a decay to
+    * `PqRefitDistortionDial` × the fit's own distortion refits. */
+  private val PqRefitGrowth = 2.0
+  private val PqRefitDistortionDial = 1.5
+
   def pqIndexDistortionReport(s: SparkSession, path: String): DataFrame = {
     val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
@@ -5196,8 +5201,6 @@ object Similarity {
           pqDistortionStat(pqStoredDistortionMicros(s, path, root))
             .write.mode("overwrite").parquet(s"$root/stat")
       }
-    val growth = graft.IndexLifecycle.confDouble(s, "spark.graft.pqRefitGrowth", 2.0)
-    val dial = graft.IndexLifecycle.confDouble(s, "spark.graft.pqRefitDistortionDial", 1.5)
     // refit_due prices against the EFFECTIVE reference (statref-aware),
     // so the report and the trigger can never disagree; d_build stays
     // the fit's own distortion. A gate-fixture root has no statref, so
@@ -5207,8 +5210,8 @@ object Similarity {
       .selectExpr("n_rows",
         "d_ref_micro / 1e6 as d_build",
         "dmicro / 1e6 as d_now",
-        s"(n_rows >= cast($growth * n_ref as bigint)) and " +
-          s"(cast(dmicro as double) >= $dial * d_ref_micro) as refit_due")
+        s"(n_rows >= cast($PqRefitGrowth * n_ref as bigint)) and " +
+          s"(cast(dmicro as double) >= $PqRefitDistortionDial * d_ref_micro) as refit_due")
   }
 
   /** The PQ refit (q150): re-fit the subspace codebook on the LIVE rows'
@@ -5261,9 +5264,9 @@ object Similarity {
 
   /** The distortion-gated AUTO-REFIT check (the media growth-trigger
     * shape, priced lazily): only when the population has grown past
-    * `spark.graft.pqRefitGrowth` (2×) of the stat's reference does the
+    * `PqRefitGrowth` (2×) of the stat's reference does the
     * corpus-priced distortion pass run; if decay crosses
-    * `spark.graft.pqRefitDistortionDial` (1.5×) the index re-fits
+    * `PqRefitDistortionDial` (1.5×) the index re-fits
     * itself, else the growth reference re-prices so the next check
     * waits for the next doubling — a stable population never pays the
     * distortion pass at all. */
@@ -5273,17 +5276,14 @@ object Similarity {
       return false
     val ref = pqRefFrame(s, root).head()
     val (nRef, dRef) = (ref.getLong(0), ref.getLong(1))
-    val growth = graft.IndexLifecycle.confDouble(s, "spark.graft.pqRefitGrowth", 2.0)
     val nLive = livePqCodes(s, path, root).count()
     // truncating gate, matching the report's `cast(growth * n_ref as
-    // bigint)` exactly (r20): a fractional dial must not let the report
-    // read refit_due=true while this trigger declines to fire
-    if (nLive < (growth * nRef).toLong) return false
+    // bigint)` exactly (r20): the report must never read refit_due=true
+    // while this trigger declines to fire
+    if (nLive < (PqRefitGrowth * nRef).toLong) return false
     val dNow = pqDistortionStat(pqStoredDistortionMicros(s, path, root))
       .head().getLong(1)
-    val dial = graft.IndexLifecycle.confDouble(
-      s, "spark.graft.pqRefitDistortionDial", 1.5)
-    if (dNow.toDouble >= dial * dRef) {
+    if (dNow.toDouble >= PqRefitDistortionDial * dRef) {
       rebuildPqIndex(s, path); true
     } else {
       // growth reference re-priced: wait for the next doubling. An
@@ -5346,20 +5346,7 @@ object Similarity {
     val path = graft.ScratchPaths.indexPathFor(
       s"q149-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
     if (!IndexLifecycle.exists(s, pqFamily, path)) buildPqIndex(s, d, path)
-    // the gate row PINS the refit dials to their defaults (r20, advice
-    // #5): the DuckDB oracle hardcodes 2.0 / 1.5, so a session running
-    // non-default dials must not silently diverge on refit_due. The
-    // dials are interpolated into the plan at construction, so the
-    // session values are restored before the row is even executed.
-    val pinned = Seq("spark.graft.pqRefitGrowth" -> "2.0",
-      "spark.graft.pqRefitDistortionDial" -> "1.5")
-    val saved = pinned.map { case (k, _) => k -> s.conf.getOption(k) }
-    pinned.foreach { case (k, v) => s.conf.set(k, v) }
-    try pqIndexDistortionReport(s, path)
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+    pqIndexDistortionReport(s, path)
   }
 
   /** The q150 gate chain: lazy build → forget the vec_id % 40 == 0 rows

@@ -199,7 +199,7 @@ object StreamingOps {
     raw.select(
       col("seqno"),
       TextOps.subjectStyle(col("subject")).as("subject"),
-      TextOps.cleanBodyPlain(col("body")).as("body"))
+      TextOps.cleanBody(col("body")).as("body"))
       .select(
         col("seqno"),
         Serde.toAvroEmail(col("seqno"), col("subject"), col("body")).as("value"))
@@ -1160,8 +1160,7 @@ object StreamingOps {
     * micro-batch folds through the frozen-codebook merge, then
     * [[graft.Similarity.maybeRefitPqIndex]] prices the decay — the
     * corpus-priced distortion pass runs only once per population
-    * doubling (`spark.graft.pqRefitGrowth`), and a crossing of
-    * `spark.graft.pqRefitDistortionDial` re-fits the codebook on the
+    * doubling, and a 1.5× distortion decay re-fits the codebook on the
     * live rows in a fresh committed version (keep-N GC'd). The index
     * maintains its own quantization quality unattended. */
   def pqIngestStreamAutoRefit(deltas: DataFrame, path: String):

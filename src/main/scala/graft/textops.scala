@@ -139,21 +139,11 @@ object TextOps {
       .otherwise(c)
 
   /** The full producer body-cleaning chain T2–T18 in reference order
-    * (`kafkaProducer.js:131-197`). */
-  def cleanBody(c: Column): Column = {
-    val afterHtml = htmlBranch(c)
-    val t4  = stripTogetherWith(afterHtml)
-    val t5  = trimToTldr(t4)
-    val t6  = truncateAtLoveTldr(t5)
-    val t7  = truncateAtFeedback(t6)
-    val t13 = stripMimeAndMarkup(t7)
-    val t14 = boldCapsHeadings(t13)
-    val t17 = stripBracketsImagesBylines(t14)
-    jsTrim(t17)
-  }
+    * (`kafkaProducer.js:131-197`): the HTML branch, then the plain chain. */
+  def cleanBody(c: Column): Column = cleanBodyPlain(htmlBranch(c))
 
-  /** Like cleanBody but skipping the HTML branch — the native, fully
-    * codegen'd chain used when inputs are known plain-text. */
+  /** T4–T18, the body-cleaning chain without the HTML branch — the
+    * native, fully codegen'd chain used when inputs are known plain-text. */
   def cleanBodyPlain(c: Column): Column = {
     val t4  = stripTogetherWith(c)
     val t5  = trimToTldr(t4)

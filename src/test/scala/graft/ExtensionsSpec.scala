@@ -2708,7 +2708,7 @@ class ExtensionsSpec extends SparkSpec {
     // parquet — reads must treat it as "no log", not die inferring schema
     val idx = java.nio.file.Files.createTempDirectory("graft-fsguard-idx").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$idx/tombstones"))
-    assert(MediaOps.tombstonesOf(spark, idx).count() == 0,
+    assert(IndexLifecycle.idLogOf(spark, s"$idx/tombstones", "doc_id").count() == 0,
       "uncommitted tombstones dir must read as an empty log")
   }
 
@@ -2730,7 +2730,8 @@ class ExtensionsSpec extends SparkSpec {
       MediaOps.forgetMediaFromIndex(Seq(1L).toDF("doc_id"), path)
     }
     assert(e.getMessage.contains("single-writer-per-path"))
-    assert(MediaOps.tombstonesOf(spark, path).count() == 0, "refused write ran anyway")
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id")
+        .count() == 0, "refused write ran anyway")
     // a STALE foreign marker (epoch beyond the TTL = crashed driver):
     // steal it, do the write, release
     java.nio.file.Files.write(marker,

@@ -81,8 +81,7 @@ class LifecycleSpec extends SparkSpec {
     spark.range(0, 10).selectExpr("id as doc_id").write.parquet(logDir)
     def stored = spark.range(0, 1000).selectExpr("id as doc_id")
     // first check on a root pays the real scan once and seeds the bound
-    assert(!IndexLifecycle.tombstoneHeavy(spark, stored, logDir, "doc_id",
-      "spark.graft.lexCompactTombstoneFrac", memoKey))
+    assert(!IndexLifecycle.tombstoneHeavy(spark, stored, logDir, "doc_id", memoKey))
     // a below-threshold batch lands: the registry side must not even be
     // CONSTRUCTED — deriving the by-name frame fails the test — and the
     // whole check launches ZERO Spark jobs (the log row count comes
@@ -105,7 +104,7 @@ class LifecycleSpec extends SparkSpec {
     try {
       assert(!IndexLifecycle.tombstoneHeavy(spark,
         sys.error("below-threshold check must not derive the registry frame"),
-        logDir, "doc_id", "spark.graft.lexCompactTombstoneFrac", memoKey))
+        logDir, "doc_id", memoKey))
       Thread.sleep(500)
       assert(jobCount.get() == 0,
         s"below-threshold check launched ${jobCount.get()} jobs (wants 0)")
@@ -117,15 +116,13 @@ class LifecycleSpec extends SparkSpec {
     // crossed the fraction, the real check runs — and fires
     spark.range(0, 400).selectExpr("id as doc_id")
       .write.mode("append").parquet(logDir)
-    assert(IndexLifecycle.tombstoneHeavy(spark, stored, logDir, "doc_id",
-      "spark.graft.lexCompactTombstoneFrac", memoKey),
+    assert(IndexLifecycle.tombstoneHeavy(spark, stored, logDir, "doc_id", memoKey),
       "a threshold-crossing victim mass must fire the policy")
     // a compaction lands in a FRESH root → fresh memo key → the first
     // check there RE-DERIVES: the registry frame IS constructed
     var derived = false
     assert(IndexLifecycle.tombstoneHeavy(spark,
-      { derived = true; stored }, logDir, "doc_id",
-      "spark.graft.lexCompactTombstoneFrac", s"$dir/rootv2"))
+      { derived = true; stored }, logDir, "doc_id", s"$dir/rootv2"))
     assert(derived, "a fresh memo key must re-derive the registry frame")
   }
 
@@ -371,7 +368,7 @@ class LifecycleSpec extends SparkSpec {
     // never derives the registry frame
     assert(!IndexLifecycle.tombstoneHeavy(spark,
       sys.error("the check after a compaction must not derive the registry frame"),
-      s"$path/tombstones", "doc_id", "spark.graft.dedupCompactTombstoneFrac",
+      s"$path/tombstones", "doc_id",
       memoKey = IndexLifecycle.resolveIndexRoot(spark, path)))
     val (afterCompact, _) = cycle(2)
     // the tombstone-mass bound is seeded at commit: no registry scan

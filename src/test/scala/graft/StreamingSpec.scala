@@ -52,6 +52,25 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count(_.getInt(0) == 1) >= 3) // subject + >=2 chunks (3000 chars)
   }
 
+  test("producer leg takes an HTML email through the T2/T3 branch before the plain chain") {
+    val in = MemoryStream[(Int, String, String)](spark)
+    val out = StreamingOps.consumerTransform(
+      StreamingOps.producerTransform(in.toDF().toDF("seqno", "subject", "body")))
+    val html = "<html><body><p>TOP STORY</p><p>https://ex.am/2</p>" +
+      "<script>track()</script><p>plain text</p></body></html>"
+    in.addData((1, "Subj", html))
+    val q = out.writeStream.format("memory").queryName("htmlblocks")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000); q.stop()
+    val body = spark.table("htmlblocks").filter("block_no > 0")
+      .orderBy("block_no").select("btext").as[String].collect().mkString
+    // converted to lines, so the heading bolds and links its URL line;
+    // the tag strip alone would run all three paragraphs into one line
+    assert(body.contains("<https://ex.am/2|*TOP STORY*"), body)
+    assert(body.contains("plain text"), body)
+    assert(!body.contains("track()"), s"script body leaked: $body")
+  }
+
   test("corrupt Avro records are dropped, not failed (Z2 semantics)") {
     val in = MemoryStream[Array[Byte]](spark)
     val out = StreamingOps.consumerTransform(in.toDF().toDF("value"))
@@ -1127,12 +1146,13 @@ class StreamingSpec extends SparkSpec {
     // first arrival is refused and tombstoned (the media q137 ordering)
     assert(TextAnalysis.forgetLexFromIndex(
       Seq(999999L).toDF("doc_id"), pathA, seg = 7L) == 0L)
-    assert(TextAnalysis.lexPendingOf(spark, pathA)
+    assert(IndexLifecycle.idLogOf(spark, s"$pathA/pending", "doc_id")
       .as[Long].collect().toSeq == Seq(999999L))
     val (admEarly, refEarly) = TextAnalysis.mergeLexBatchIntoIndex(
       Seq((999999L, "pending victim text")).toDF("doc_id", "text"), pathA, seg = 9L)
     assert(admEarly == 0L && refEarly == 1L, "pending takedown did not refuse the arrival")
-    assert(TextAnalysis.lexPendingOf(spark, pathA).isEmpty, "pending entry not consumed")
+    assert(IndexLifecycle.idLogOf(spark, s"$pathA/pending", "doc_id")
+        .isEmpty, "pending entry not consumed")
     assert(tombs(pathA).contains(999999L), "delivered pending takedown not tombstoned")
     // crash-window replay: re-append one victim batch's EXACT negative
     // contribution rows (what a mid-crash redelivery produces) — the
@@ -1644,13 +1664,14 @@ class StreamingSpec extends SparkSpec {
     // matches — but its ID cannot re-admit either (tombstone guard), so
     // an at-least-once REPLAY of the original ingest batch is a no-op
     in.addData((910001L, newDoc)); qi.processAllAvailable()
-    assert(MediaOps.tombstonesOf(spark, path).count() == 1)
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id").count() == 1)
     assert(spark.read.parquet(s"$path/vecs")
-      .join(MediaOps.tombstonesOf(spark, path), Seq("doc_id"), "left_anti")
+      .join(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id"),
+        Seq("doc_id"), "left_anti")
       .count() == vecs0, "replayed ingest resurrected a forgotten id")
     // replayed takedown converges (append-only log unchanged)
     fin.addData(910001L); qf.processAllAvailable()
-    assert(MediaOps.tombstonesOf(spark, path).count() == 1)
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id").count() == 1)
     // the content is OUT of the index: the same bytes under a fresh id
     // admit as new (dedup semantics, not a content ban)
     in.addData((910002L, newDoc)); qi.processAllAvailable()
@@ -1668,7 +1689,8 @@ class StreamingSpec extends SparkSpec {
       .filter("doc_id = 910001").count() == 0)
     assert(spark.read.parquet(s"$live/vecs").count() == vecs0 + 1)
     assert(spark.read.parquet(s"$live/bands").count() == (vecs0 + 1) * 4)
-    assert(MediaOps.tombstonesOf(spark, path).count() == 1, "audit log lost")
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id")
+        .count() == 1, "audit log lost")
   }
 
   test("tombstone-aware merge: a replayed ingest batch after a takedown cannot resurrect forgotten vec_ids (r17, verdict #2)") {
@@ -3237,12 +3259,14 @@ class StreamingSpec extends SparkSpec {
       "re-delivered takedown must no-op")
     // early takedown on B: pends, then the arrival is refused + tombstoned
     assert(Dedup.forgetDedupFromIndex(Seq(999999L).toDF("doc_id"), pathB) == 0L)
-    assert(Dedup.dedupPendingOf(spark, pathB).as[Long].collect().toSeq == Seq(999999L))
+    assert(IndexLifecycle.idLogOf(spark, s"$pathB/pending", "doc_id")
+        .as[Long].collect().toSeq == Seq(999999L))
     val (a3, r3) = Dedup.mergeDedupBatchIntoIndex(
       Seq((999999L, "pending victim text")).toDF("doc_id", "text"), pathB)
     assert(a3 == 0L && r3 == 1L, "pending takedown did not refuse the arrival")
-    assert(Dedup.dedupPendingOf(spark, pathB).isEmpty, "pending entry not consumed")
-    spark.conf.set("spark.graft.dedupCompactTombstoneFrac", "0.05")
+    assert(IndexLifecycle.idLogOf(spark, s"$pathB/pending", "doc_id")
+        .isEmpty, "pending entry not consumed")
+    spark.conf.set("spark.graft.compactTombstoneFrac", "0.05")
     try {
       // stream the takedowns into A: the last batch crosses 5% and the
       // forget's own maintenance tail compacts
@@ -3257,8 +3281,9 @@ class StreamingSpec extends SparkSpec {
         "auto-compaction left victims physical")
       // B consumed 999999's pending into a tombstone; A's early takedown
       // stays pending (no arrival streamed) — align before comparing
-      assert(Dedup.dedupPendingOf(spark, pathA).as[Long].collect().toSeq == Seq(999999L))
-    } finally spark.conf.unset("spark.graft.dedupCompactTombstoneFrac")
+      assert(IndexLifecycle.idLogOf(spark, s"$pathA/pending", "doc_id")
+          .as[Long].collect().toSeq == Seq(999999L))
+    } finally spark.conf.unset("spark.graft.compactTombstoneFrac")
     // the probes agree: A physical (compacted version) ≡ B lazy (flat +
     // tombstone anti-join) — 999999 was never admitted to either index
     assert(probe(pathA) == probe(pathB),
@@ -3332,7 +3357,7 @@ class StreamingSpec extends SparkSpec {
       Seq((888888L, lateVec)).toDF("vec_id", "embedding"), pathB)
     assert(aL2 == 0L && rL2 == 1L,
       "replayed late arrival re-admitted after pending-log delete")
-    spark.conf.set("spark.graft.pqCompactTombstoneFrac", "0.001")
+    spark.conf.set("spark.graft.compactTombstoneFrac", "0.001")
     try {
       val inF = MemoryStream[Long](spark)
       val qA = StreamingOps.pqForgetStream(inF.toDF().toDF("vec_id"), pathA).start()
@@ -3349,7 +3374,7 @@ class StreamingSpec extends SparkSpec {
         "compaction moved the frozen codebook")
       assert(sortedRows(s"$v2/coarse") == sortedRows(s"$pathA/coarse"),
         "compaction moved the coarse frame")
-    } finally spark.conf.unset("spark.graft.pqCompactTombstoneFrac")
+    } finally spark.conf.unset("spark.graft.compactTombstoneFrac")
     // A physical ≡ B lazy, and both ≡ the pre-merge probe except where
     // vec_id 1 was someone's neighbour (identical divergence on both)
     assert(probe(pathA) == probe(pathB),
@@ -3472,7 +3497,8 @@ class StreamingSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$v2/vecs")))
     // idempotent: an explicit prune finds nothing further to retire
     assert(IndexLifecycle.pruneVersions(spark, MediaOps.mediaFamily, path, keep = 2) == 0L)
-    assert(MediaOps.tombstonesOf(spark, path).count() == 2, "root audit log lost")
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id")
+        .count() == 2, "root audit log lost")
     assert(MediaOps.probeStoredIndexWith(twin, path).count() == 1)
   }
 
@@ -3481,12 +3507,13 @@ class StreamingSpec extends SparkSpec {
     MediaOps.buildIndexFrom(dialHashes(0 until 20, 4), path)
     // the early takedown: id 9999 has never been admitted
     assert(MediaOps.forgetMediaFromIndex(Seq(9999L).toDF("doc_id"), path) == 0L)
-    assert(MediaOps.pendingForgetsOf(spark, path).collect().map(_.getLong(0)).toSeq
+    assert(IndexLifecycle.idLogOf(spark, s"$path/pending", "doc_id")
+        .collect().map(_.getLong(0)).toSeq
       == Seq(9999L), "early takedown not logged as pending")
-    assert(MediaOps.tombstonesOf(spark, path).count() == 0)
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id").count() == 0)
     // re-delivery of the early takedown is idempotent
     assert(MediaOps.forgetMediaFromIndex(Seq(9999L).toDF("doc_id"), path) == 0L)
-    assert(MediaOps.pendingForgetsOf(spark, path).count() == 1)
+    assert(IndexLifecycle.idLogOf(spark, s"$path/pending", "doc_id").count() == 1)
     // the id arrives (plus an unrelated new doc): the pending forget is
     // consumed — arrival refused, id tombstoned, the other doc admits
     val batch = dialHashes(9999 to 9999, 4).unionAll(dialHashes(50 to 50, 4))
@@ -3494,9 +3521,11 @@ class StreamingSpec extends SparkSpec {
     assert(a1 == 1L, s"pending id admitted or sibling refused (admitted $a1)")
     assert(spark.read.parquet(s"$path/vecs").filter("doc_id = 9999").count() == 0)
     assert(spark.read.parquet(s"$path/vecs").filter("doc_id = 50").count() == 1)
-    assert(MediaOps.tombstonesOf(spark, path).filter("doc_id = 9999").count() == 1,
+    assert(IndexLifecycle.idLogOf(spark, s"$path/tombstones", "doc_id")
+        .filter("doc_id = 9999").count() == 1,
       "consumed pending forget must tombstone the id")
-    assert(MediaOps.pendingForgetsOf(spark, path).count() == 0, "pending entry not consumed")
+    assert(IndexLifecycle.idLogOf(spark, s"$path/pending", "doc_id")
+        .count() == 0, "pending entry not consumed")
     // at-least-once replay of the SAME batch: the tombstone keeps the id out
     val (a2, _) = MediaOps.mergeHashesIntoIndex(batch, path, "image")
     assert(a2 == 0L, "replayed batch re-admitted a forgotten id")
