@@ -829,7 +829,7 @@ object TextAnalysis {
   /** Live doc lengths: stored rows minus the tombstone log. */
   private[graft] def lexDoclensOf(s: SparkSession, path: String,
                                   root: String): DataFrame =
-    IndexLifecycle.live(lexFamily, path, root)(
+    IndexLifecycle.live(lexFamily, path)(
       IndexLifecycle.readStamped(s, s"$root/doclens"))
 
   /** Segment count of a root's contribution log — MEMOIZED per root
@@ -872,7 +872,7 @@ object TextAnalysis {
   private[graft] def lexPostingsOf(s: SparkSession, path: String,
                                    root: String): DataFrame = {
     val base = IndexLifecycle.readStamped(s, s"$root/postings").drop("tb")
-    IndexLifecycle.live(lexFamily, path, root)(
+    IndexLifecycle.live(lexFamily, path)(
       if (lexHasSegments(s, root)) base.distinct() else base)
   }
 
@@ -942,7 +942,7 @@ object TextAnalysis {
     val pruned = IndexLifecycle.readStamped(s, s"$root/postings")
       .filter(col("tb").isin(tbs: _*))
       .drop("tb")
-    val postings = IndexLifecycle.live(lexFamily, path, root)(
+    val postings = IndexLifecycle.live(lexFamily, path)(
       if (lexHasSegments(s, root))
         pruned.join(broadcast(qterms.select("term")), Seq("term"), "left_semi")
           .distinct()
@@ -1079,7 +1079,7 @@ object TextAnalysis {
           {
             lexTermsOf(s, root).withColumn("seg", lit(-1L))
               .write.mode("overwrite").parquet(s"$newRoot/terms")
-            IndexLifecycle.live(lexFamily, path, root)(
+            IndexLifecycle.live(lexFamily, path)(
                 IndexLifecycle.readStamped(s, s"$root/postings").drop("tb").distinct())
               .withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
               .repartition(col("tb"))

@@ -743,7 +743,7 @@ object Dedup {
     * q102's pinned shape holds). */
   private def dedupLiveOf(s: SparkSession, path: String, root: String,
                           artifact: String): DataFrame =
-    IndexLifecycle.live(dedupFamily, path, root)(
+    IndexLifecycle.live(dedupFamily, path)(
       IndexLifecycle.readStamped(s, s"$root/$artifact"))
 
   /** Build the STANDING dedup index as parquet artifacts (the q100

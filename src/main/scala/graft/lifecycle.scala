@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** What one standing-index family's lifecycle knows about itself.
   * Everything else — the version store, the build gate, the live-rows
   * read, the merge skeleton, the pending consult, the takedown, the
-  * compaction tail, the victim gate and the maintenance check — is
-  * written once in [[IndexLifecycle]]; a family supplies data and hooks,
-  * never a copy of the contract.
+  * compaction tail, the refit, the victim gate and the maintenance
+  * check — is written once in [[IndexLifecycle]]; a family supplies data
+  * and hooks, never a copy of the contract.
   *
   * @param name      the family's job-description label (`dedup.merge/mark`)
   * @param idCol     the id column of the registry and both logs
@@ -28,9 +28,6 @@ import org.apache.spark.sql.functions._
   * @param carry     further registry columns the takedown hands its
   *                  `beforeTombstone` hook (lexical: the doc lengths its
   *                  negative stat contributions need)
-  * @param tombstonesAtRoot  the tombstone log lives under the resolved
-  *                  version root instead of the index path (ANN: the
-  *                  refit carries it into each new version)
   * @param fragmented a second compaction trigger on the resolved root
   *                  (lexical: contribution segments past its dial) */
 final case class IdLogFamily(
@@ -42,10 +39,9 @@ final case class IdLogFamily(
     compact: (SparkSession, String) => Unit,
     audit: Seq[String] = Nil,
     carry: Seq[String] = Nil,
-    tombstonesAtRoot: Boolean = false,
     fragmented: (SparkSession, String) => Boolean = (_, _) => false) {
-  def tombstones(path: String, root: String): String =
-    s"${if (tombstonesAtRoot) root else path}/tombstones"
+  /** The tombstone log, at the index path: no version swap moves it. */
+  def tombstones(path: String): String = s"$path/tombstones"
 }
 
 /** The SHARED standing-index lifecycle core.
@@ -63,10 +59,11 @@ final case class IdLogFamily(
   * keep-N GC), the build gate, the append-only id logs (tombstones,
   * pending forgets) and the live-rows read behind them, the merge
   * skeleton and its pending consult, the takedown, the compaction tail,
-  * victim gate and maintenance check. Families keep only what is theirs
-  * — signing, encoding or tokenising the admit leg, the compaction
-  * rewrite, the ANN refit and cell-pruned merge, media re-pricing, the
-  * lexical segment fold — and describe the rest with an [[IdLogFamily]].
+  * the refit's snapshot-catchup-commit, victim gate and maintenance
+  * check. Families keep only what is theirs — signing, encoding or
+  * tokenising the admit leg, the compaction rewrite, the refit's fit,
+  * catch-up and seal legs, media re-pricing, the lexical segment fold —
+  * and describe the rest with an [[IdLogFamily]].
   */
 object IndexLifecycle {
 
@@ -78,7 +75,7 @@ object IndexLifecycle {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  def withLock[T](path: String)(body: => T): T =
+  private def withLock[T](path: String)(body: => T): T =
     locks.computeIfAbsent(path, _ => new Object).synchronized(body)
 
   /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) —
@@ -147,7 +144,7 @@ object IndexLifecycle {
     * CREATE it: [[nextVersionName]] counts in-flight directories, so a
     * second writer started during a long lockless refit is handed the
     * next name — without the mkdirs both would write into one directory. */
-  private[graft] def allocateVersion(s: SparkSession, path: String): String =
+  private def allocateVersion(s: SparkSession, path: String): String =
     withLock(path) {
       val root = s"$path/versions/${nextVersionName(s, path)}"
       hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(root)): Unit
@@ -199,8 +196,8 @@ object IndexLifecycle {
     * tail — r19's rule that every versioning write path runs its own
     * GC, so an unattended refit/compaction stream can never accumulate
     * versions × corpus on disk. Caller holds the writer gate. */
-  def commitVersion(s: SparkSession, fam: IdLogFamily, path: String,
-                    newRoot: String): Unit = {
+  private def commitVersion(s: SparkSession, fam: IdLogFamily, path: String,
+                            newRoot: String): Unit = {
     hadoopFs(s, path).create(
       new org.apache.hadoop.fs.Path(s"$newRoot/_COMMITTED"), false).close()
     pruneVersions(s, fam, path, keepVersions(s)): Unit
@@ -227,9 +224,49 @@ object IndexLifecycle {
         // a rewrite): the next takedown's check scans no registry
         memoPut(s"$newRoot#ts.victims", 0L)
         memoPut(s"$newRoot#ts.stored", parquetFooterRows(s, s"$newRoot/${fam.registry}"))
-        memoPut(s"$newRoot#ts.log", idLogRows(s, fam.tombstones(path, newRoot)))
+        memoPut(s"$newRoot#ts.log", idLogRows(s, fam.tombstones(path)))
       }
     }
+
+  /** SNAPSHOT-REFIT-CATCHUP, the refit of a family whose fit is corpus-
+    * sized (ANN's Lloyd rounds, PQ's codebook). The next version is
+    * allocated under the lock; `fit(root, newRoot)` then writes it from a
+    * snapshot of the live rows WITHOUT the lock — merges and takedowns
+    * keep landing on the live version meanwhile — and hands back its
+    * catch-up leg. Under the writer gate, the registry rows live in the
+    * old version but missing from the new one (merged mid-refit; a fresh
+    * listing sees the merge's appended files) go through that leg,
+    * `seal(root, newRoot)` writes the family's fit statistic over the
+    * post-catchup population, and the commit flips resolution and runs
+    * keep-N GC. The tombstone log sits at the index path, so a takedown
+    * that landed mid-refit keeps hiding its row — physically present in
+    * the new version — until the next refit removes it. `beforeCatchup`
+    * is the seam a spec drives a mid-refit writer through: same-JVM
+    * writers serialize on the lock, so a sleeping-thread race would be
+    * flaky where the hook is exact. A throw anywhere before the commit
+    * leaves the old version resolving and an uncommitted directory GC
+    * retires later. Returns the new version's root. */
+  def refit(s: SparkSession, fam: IdLogFamily, path: String, beforeCatchup: () => Unit)(
+      fit: (String, String) => DataFrame => Unit, seal: (String, String) => Unit): String = {
+    val (root, newRoot) = withLock(path)((resolveIndexRoot(s, path), allocateVersion(s, path)))
+    val catchup = phase(s, fam, "refit/fit")(fit(root, newRoot))
+    beforeCatchup()
+    withWriter(s, path) {
+      val id = fam.idCol
+      phase(s, fam, "refit/catchup") {
+        val (missed, Seq(n)) = checkpointCounting(
+          live(fam, path)(readStamped(s, s"$root/${fam.registry}"))
+            .join(readStamped(s, s"$newRoot/${fam.registry}").select(id), Seq(id), "left_anti"),
+          lit(true))
+        try if (n > 0) catchup(missed) finally Tables.freeCheckpoint(missed): Unit
+      }
+      phase(s, fam, "refit/commit") {
+        seal(root, newRoot)
+        commitVersion(s, fam, path, newRoot)
+      }
+    }
+    newRoot
+  }
 
   /** The lazy-build gate: the flat build is complete (`fam.built`,
     * written last by every build, has `_SUCCESS`) OR any version is
@@ -240,12 +277,12 @@ object IndexLifecycle {
     ScratchPaths.artifactExists(s, s"$path/${fam.built}/_SUCCESS") ||
       resolveIndexRoot(s, path) != path
 
-  /** The LIVE rows of `df`, read from version `root` of the index at
+  /** The LIVE rows of `df`, read from any version of the index at
     * `path`: minus the family's tombstone log — lazy deletion, effective
     * at once for every reader. Skipped (plan untouched) while no log
     * exists, so an untouched index's read path pays nothing. */
-  def live(fam: IdLogFamily, path: String, root: String)(df: DataFrame): DataFrame =
-    minusIdLog(df, df.sparkSession, fam.tombstones(path, root), fam.idCol)
+  def live(fam: IdLogFamily, path: String)(df: DataFrame): DataFrame =
+    minusIdLog(df, df.sparkSession, fam.tombstones(path), fam.idCol)
 
   /** An append-only id log (tombstones, pending-forgets) at `dir`:
     * read-or-empty behind the _SUCCESS-keyed existence guard (a crash
@@ -468,7 +505,7 @@ object IndexLifecycle {
       .dropDuplicates(id)
       .withColumn(Registered, coalesce(col(Registered), lit(false)))
       .withColumn(Pending, in(s"$path/pending"))
-      .withColumn(Tombstoned, in(fam.tombstones(path, root))),
+      .withColumn(Tombstoned, in(fam.tombstones(path))),
       lit(true), col(Pending), isNovel, isPresent, isAbsent)
     Marked(frame, n, delivered, novel, present, absent)
   }
@@ -500,7 +537,7 @@ object IndexLifecycle {
       // the row was never stored: NULL audit columns, typed as stored
       val stored = readStamped(s, s"$root/${fam.registry}").schema
       appendIdLog(s, m.rows(isNovel).select(col(id) +: fam.audit.map(c =>
-        lit(null).cast(stored(c).dataType).as(c)): _*), fam.tombstones(path, root))
+        lit(null).cast(stored(c).dataType).as(c)): _*), fam.tombstones(path))
     }
     phase(s, fam, "merge/consume") {
       if (m.delivered == idLogRows(s, pending)) drop()
@@ -512,15 +549,6 @@ object IndexLifecycle {
       }
     }
   }
-
-  /** The pending consult of the ANN cell-pruned merge, which runs outside
-    * [[merge]]; free while no pending log exists. Writer gate held. */
-  def consultPending(s: SparkSession, fam: IdLogFamily, path: String,
-                     root: String, batch: DataFrame): Unit =
-    if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-      val m = phase(s, fam, "merge/mark")(mark(s, fam, path, root, batch.select(fam.idCol)))
-      try deliver(s, fam, path, root, m) finally Tables.freeCheckpoint(m.frame): Unit
-    }
 
   /** The merge skeleton, under the writer gate: mark the batch, deliver
     * its pending ids, then `admit(root, fresh, nFresh)` the ids neither
@@ -570,7 +598,7 @@ object IndexLifecycle {
           if (m.present > 0) phase(s, fam, "forget/tombstones") {
             beforeTombstone(root, m.rows(isPresent))
             appendIdLog(s, m.rows(isPresent).select((id +: fam.audit).map(col): _*),
-              fam.tombstones(path, root))
+              fam.tombstones(path))
           }
           // Maintenance tail, UNCONDITIONAL: gating the check on a novel
           // append leaves a crash window — tombstones land, the driver
@@ -595,7 +623,7 @@ object IndexLifecycle {
     * physical). Zero jobs when no log exists. */
   def liveVictims(s: SparkSession, fam: IdLogFamily, path: String,
                   root: String): Long = {
-    val tombs = fam.tombstones(path, root)
+    val tombs = fam.tombstones(path)
     if (!ScratchPaths.artifactExists(s, s"$tombs/_SUCCESS")) 0L
     else readStamped(s, s"$root/${fam.registry}")
       .join(hintedIdLog(s, tombs, fam.idCol), Seq(fam.idCol), "left_semi").count()
@@ -611,7 +639,7 @@ object IndexLifecycle {
     val root = resolveIndexRoot(s, path)
     if (fam.fragmented(s, root) || tombstoneHeavy(s,
         readStamped(s, s"$root/${fam.registry}").select(fam.idCol),
-        fam.tombstones(path, root), fam.idCol, memoKey = root))
+        fam.tombstones(path), fam.idCol, memoKey = root))
       fam.compact(s, path)
   }
 

@@ -1660,7 +1660,7 @@ object MediaOps {
     Similarity.withFns(s)
     val dBands = delta.selectExpr("doc_id as delta_id",
       s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = IndexLifecycle.live(mediaFamily, path, root)(
+    val iBands = IndexLifecycle.live(mediaFamily, path)(
         IndexLifecycle.readStamped(s, s"$root/bands"))
       .selectExpr("doc_id as idx_id", "band_idx",
         s"${packedPrefixExpr("band_hash", width)} as band_hash")
@@ -1680,7 +1680,7 @@ object MediaOps {
     val delta = delta0.transform(Tables.maybePersist)
     val cand = probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
     val verified = cand
-      .join(IndexLifecycle.live(mediaFamily, path, root)(
+      .join(IndexLifecycle.live(mediaFamily, path)(
           IndexLifecycle.readStamped(s, s"$root/vecs"))
           .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
       .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
@@ -1749,14 +1749,14 @@ object MediaOps {
     val delta = videoDeltaHashes(s, d).transform(Tables.maybePersist)
     val dBands = delta.selectExpr("doc_id as delta_id",
       s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = IndexLifecycle.live(mediaFamily, path, root)(
+    val iBands = IndexLifecycle.live(mediaFamily, path)(
         IndexLifecycle.readStamped(s, s"$root/bands"))
       .selectExpr("doc_id as idx_id", "band_idx",
         s"${packedPrefixExpr("band_hash", width)} as band_hash")
     val verified = iBands
       .join(broadcast(dBands), Seq("band_idx", "band_hash"))
       .select(col("delta_id"), col("idx_id")).distinct()
-      .join(IndexLifecycle.live(mediaFamily, path, root)(
+      .join(IndexLifecycle.live(mediaFamily, path)(
           IndexLifecycle.readStamped(s, s"$root/vecs"))
           .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
       .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
@@ -1928,14 +1928,14 @@ object MediaOps {
       val (width, pricedN) = (st.getInt(0), st.getLong(2))
       val dBands = fresh.selectExpr("doc_id as delta_id",
         s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-      val iBands = IndexLifecycle.live(mediaFamily, path, root)(
+      val iBands = IndexLifecycle.live(mediaFamily, path)(
           IndexLifecycle.readStamped(s, s"$root/bands"))
         .selectExpr("doc_id as idx_id", "band_idx",
           s"${packedPrefixExpr("band_hash", width)} as band_hash")
       val dupIds = iBands
         .join(broadcast(dBands), Seq("band_idx", "band_hash"))
         .select(col("delta_id"), col("idx_id")).distinct()
-        .join(IndexLifecycle.live(mediaFamily, path, root)(
+        .join(IndexLifecycle.live(mediaFamily, path)(
             IndexLifecycle.readStamped(s, s"$root/vecs"))
             .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
         .join(broadcast(fresh.select(col("doc_id").as("delta_id"), col("v").as("va"))),
@@ -2031,7 +2031,7 @@ object MediaOps {
       val victims = IndexLifecycle.liveVictims(s, mediaFamily, path, root)
       val pop = stored.count() - victims
       Option.when(victims > 0 || pop > pricedN) { newRoot =>
-        val live = IndexLifecycle.live(mediaFamily, path, root) _
+        val live = IndexLifecycle.live(mediaFamily, path) _
         val bands = live(IndexLifecycle.readStamped(s, s"$root/bands"))
         val width2 = if (pop > pricedN) adaptiveBandWidth(bands, bpd) else w0
         // the three writes are independent: overlap them (guide §2.6, r21)

@@ -76,15 +76,22 @@ object Similarity {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
 
-  /** Centroid per label via [[VecCentroid]] — (label, centroid) frame. */
-  private[graft] def centroidsByLabel(s: SparkSession, d: String, outName: String): DataFrame = {
+  /** Decimal-exact centroid per key via [[VecCentroid]]: `keyed` is an
+    * (int key, embedding) frame, the result (`keyName`, `centName`) —
+    * label centroids, Lloyd updates and the ANN refit's cell means. */
+  private def vecCentroids(keyed: DataFrame, keyName: String, centName: String): DataFrame = {
+    val s = keyed.sparkSession
     import s.implicits._
-    Tables.embeddings(s, d)
-      .select(col("label"), col("embedding")).as[(Int, Array[Float])]
+    keyed.as[(Int, Array[Float])]
       .groupByKey(_._1).mapValues(_._2)
-      .agg(VecCentroid.toColumn.name("centroid"))
-      .toDF(outName, "centroid")
+      .agg(VecCentroid.toColumn.name(centName))
+      .toDF(keyName, centName)
   }
+
+  /** Centroid per label — (outName, centroid) frame. */
+  private[graft] def centroidsByLabel(s: SparkSession, d: String, outName: String): DataFrame =
+    vecCentroids(Tables.embeddings(s, d).select(col("label"), col("embedding")),
+      outName, "centroid")
 
   /** COLLECTED (c_label, centroid) coarse rows — label-count-sized,
     * always driver-sized (the model-fit contract). ONE job; queries
@@ -114,11 +121,15 @@ object Similarity {
       schema)
   }
 
-  /** Literal one-row twin of
-    * `centroidsByLabel(..).agg(sort_array(collect_list(struct(c_label,
-    * centroid))))` — the broadcast codebook shape every IVF chain
-    * consumes. Bit-identity with the distributed form: sort_array on
-    * struct(c_label, centroid) orders by c_label (unique, so the
+  /** The one-row routing codebook `name` of a (c_label, centroid) frame:
+    * every cell in one c_label-sorted array of struct(c_label, centroid)
+    * — the broadcast shape `graft_route_max` routes against. */
+  private[graft] def routingCodebook(cents: DataFrame, name: String): DataFrame =
+    cents.agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as(name))
+
+  /** Literal one-row twin of `routingCodebook(centroidsByLabel(..))` —
+    * the broadcast codebook shape every IVF chain consumes. Bit-identity
+    * with the distributed form: sort_array on struct(c_label, centroid) orders by c_label (unique, so the
     * centroid never tie-breaks) ≡ the driver sortBy; the doubles are
     * the collected values untouched. ExtensionsSpec pins it. */
   private[graft] def coarseCellsLit(s: SparkSession,
@@ -717,17 +728,6 @@ object Similarity {
         "graft_km_best(embedding, ee, cells) as best")
       .selectExpr("vec_id", "embedding", "best.cid as cid", "best.d as d")
 
-  /** Per-cluster decimal-exact centroid recompute (VecCentroid keyed by
-    * the round's assignment). */
-  private def kmCentroids(assigned: DataFrame): DataFrame = {
-    val s = assigned.sparkSession
-    import s.implicits._
-    assigned.select(col("cid"), col("embedding")).as[(Int, Array[Float])]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(VecCentroid.toColumn.name("c"))
-      .toDF("cid", "c")
-  }
-
   /** Driver-side twin of [[kmCellsOf]] for a COLLECTED (cid, c) set
     * (k rows — always driver-sized, the model-fit contract): builds the
     * one-row cells codebook as a literal local relation. Bit-identity
@@ -779,7 +779,9 @@ object Similarity {
       .selectExpr("cid", "transform(embedding, x -> cast(x as double)) as c")
       .as[(Int, Array[Double])].collect()
     for (_ <- 1 to iters)
-      cellsArr = kmCentroids(kmAssign(emb, kmCellsLocal(s, cellsArr)))
+      // per-cluster recompute keyed by the round's assignment
+      cellsArr = vecCentroids(kmAssign(emb, kmCellsLocal(s, cellsArr))
+          .select(col("cid"), col("embedding")), "cid", "c")
         .as[(Int, Array[Double])].collect()
     kmCellsLocal(s, cellsArr)
   }
@@ -4021,9 +4023,7 @@ object Similarity {
     * (vec_id, de, dnrm, q_cell); frozen-codebook routing shared by the
     * q119 probe and the q134 merge (a merge never refits). */
   private[graft] def routeAnnDelta(delta0: DataFrame, cents: DataFrame): DataFrame = {
-    val cells = cents
-      .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cells"))
-    delta0.crossJoin(broadcast(cells))
+    delta0.crossJoin(broadcast(routingCodebook(cents, "cells")))
       .selectExpr("vec_id", "embedding", "cells",
         s"sqrt(${dotExpr("embedding", "embedding")}) as dnrm")
       .selectExpr("vec_id", "embedding as de", "dnrm",
@@ -4058,7 +4058,7 @@ object Similarity {
       IndexLifecycle.readStamped(s, s"$path/centroids"),
       // live rows only: deletion is lazy (r19) — a forgotten vector must
       // never surface as a neighbour before compaction makes it physical
-      liveAssignments(s, path))
+      liveAssignments(s, path0, path))
   }
 
   /** The same probe over in-memory frames (no artifact) — the spec pins
@@ -4122,38 +4122,34 @@ object Similarity {
   // ---------------------------------------------------------------------
   // q134 — STANDING-INDEX MERGE / COMPACTION (r15): q119 PROBES a delta
   // against the standing index; this is the maintenance operation the
-  // probe implies — folding the admitted delta INTO the artifact. The
-  // Spark-native mechanism is DYNAMIC PARTITION OVERWRITE: the routed
-  // delta touches ≤ |delta| distinct cells, the merge rewrites ONLY
-  // those cells' partitions (affected rows ∪ deduped delta, one
-  // partitioned write under partitionOverwriteMode=dynamic) and every
+  // probe implies — folding the admitted delta INTO the artifact, on the
+  // shared merge skeleton ([[IndexLifecycle.merge]]). The routed delta
+  // APPENDS into ≤ |delta| cells' partition directories, and every
   // untouched cell's files are left byte-for-byte alone — proven on the
   // file listing in BucketingSpec, not asserted from intent. Routing
   // uses the FROZEN stored centroids (a merge never refits — the q125
   // drift monitor is the dial that says when a refit is due). The merge
-  // is IDEMPOTENT: delta rows already present anti-join away, so
+  // is IDEMPOTENT: registered ids never reach the admit leg, so
   // re-running converges — and the report reads the POST-merge artifact
   // (per-cell base/added/total counts), making it stable across re-runs
   // (the gate and min-of-N bench both re-execute).
   //
   // Scale shape (100 TB): the delta is broadcast-routed (zero index
-  // shuffle), the rewrite reads+writes only the touched cells (~|delta
-  // cells|/k of the index), the untouched ~ (k − |delta cells|)
-  // partitions cost NOTHING — exactly why a production vector store
-  // partitions by cell. Delta ids live at +100000/+200000 (the q119
-  // fixture contract) — the report's n_added keys on that range.
+  // shuffle), the mark reads the registry's id column once, and the
+  // write touches only the routed cells' directories. Delta ids live at
+  // +100000/+200000 (the q119 fixture contract) — the report's n_added
+  // keys on that range.
   // ---------------------------------------------------------------------
 
   private[graft] def mergeIndexPathFor(d: String): String =
     graft.ScratchPaths.indexPathFor(s"q134-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
 
   /** The ANN family's lifecycle: assignments is both the registry and
-    * the artifact the build writes last, each tombstone records the
-    * victim's stored cell, and the tombstone log lives under the
-    * VERSION ROOT — the refit carries it into each new version. */
+    * the artifact the build writes last, and each tombstone records the
+    * victim's stored cell. */
   private[graft] val annFamily = IdLogFamily("ann", "vec_id", "assignments",
     "assignments", Seq("assignments", "centroids", "cellstat"), compactAnnIndex,
-    audit = Seq("c_label"), tombstonesAtRoot = true)
+    audit = Seq("c_label"))
 
   /** ANN compaction: the `rounds = 0` PURE COMPACTION of
     * [[rebuildAnnIndex]] (codebook and drift reference frame carried,
@@ -4170,73 +4166,47 @@ object Similarity {
       rebuildAnnIndex(s, path, rounds = 0): Unit
   }
 
-  /** The LIVE rows of a resolved version root's assignments — the stored
-    * artifact minus the tombstone log (LAZY DELETION, r19: a takedown
-    * only appends to the log, every reader subtracts it, and the
-    * versioned rebuild makes deletion physical). The ANN log lives under
-    * the version root, so the root stands in for the index path. */
-  private[graft] def liveAssignments(s: SparkSession, root: String): DataFrame =
-    IndexLifecycle.live(annFamily, root, root)(
+  /** The LIVE rows of version `root`'s assignments — the stored artifact
+    * minus the tombstone log at the index path (LAZY DELETION, r19: a
+    * takedown only appends to the log, every reader subtracts it, and the
+    * versioned rebuild makes deletion physical). */
+  private[graft] def liveAssignments(s: SparkSession, path: String, root: String): DataFrame =
+    IndexLifecycle.live(annFamily, path)(
       IndexLifecycle.readStamped(s, s"$root/assignments"))
 
   /** The q134 fold for ONE (vec_id, embedding) delta frame — shared by
     * the batch gate row and the streaming ingestion sink
-    * ([[graft.streaming.StreamingOps.annIngestStream]]). Idempotent:
-    * already-merged ids anti-join away, so at-least-once redelivery of
-    * a micro-batch converges (the segment-sink discipline). TOMBSTONE-
-    * AWARE (r16 verdict): the delta also anti-joins the q135 takedown
-    * log, so an at-least-once replay of an old ingest batch AFTER a
-    * takedown cannot resurrect forgotten vec_ids — without this leg the
-    * replay would silently violate the right-to-be-forgotten contract
-    * the forget path just enforced (the reference's transport replays
-    * from the beginning on restart, `Consumer/kafkaConsumer.js:53`). */
-  private[graft] def mergeDeltaIntoIndex(delta: DataFrame, path0: String): Unit =
-      IndexLifecycle.withWriter(delta.sparkSession, path0) {
-    val s = delta.sparkSession
-    val path = IndexLifecycle.resolveIndexRoot(s, path0) // fold into the LIVE version
-    val assignments = IndexLifecycle.readStamped(s, s"$path/assignments")
-    val deduped = delta.dropDuplicates("vec_id")
-    // at-least-once sources can repeat a vec_id WITHIN one micro-batch;
-    // without dropDuplicates the copies all pass the stored-index
-    // anti-join below and insert duplicate rows (r15 advice)
-    //
-    // pending-forget consult (the media q137 ordering at vector grain)
-    IndexLifecycle.consultPending(s, annFamily, path0, path, deduped)
-    val admitted = IndexLifecycle.live(annFamily, path0, path)(deduped)
-    val routed = routeAnnDelta(admitted,
-      IndexLifecycle.readStamped(s, s"$path/centroids"))
-    val labelT = assignments.schema("label").dataType.sql
-    val newRows = routed.selectExpr("vec_id", s"cast(-1 as $labelT) as label",
-      "de as embedding", "dnrm as nrm", "q_cell as c_label")
-    // affected cells only (≤ |delta| values — driver-sized)
-    val hit = newRows.select("c_label").distinct().collect().map(_.get(0))
-    if (hit.isEmpty) return
-    // APPEND-ONLY fold (r19, VERDICT r18 #2): the merge writes NEW files
-    // into the touched cells' partition directories and never rewrites
-    // or deletes a stored one — a concurrent probe whose plan listed
-    // files pre-merge keeps every listed file end-to-end (the in-place
-    // dynamic-partition overwrite this replaces could yank them
-    // mid-read). Idempotence: already-present ids anti-join away
-    // against the cell-pruned id scan (routing is deterministic under
-    // the frozen codebook, so a replayed id always probes the cell it
-    // landed in); replays therefore append nothing. Fragmentation from
-    // repeated appends is the LSM bargain — [[rebuildAnnIndex]] is the
-    // compaction that rewrites cells contiguously.
-    val affectedIds = assignments.filter(col("c_label").isin(hit: _*))
-      .select("vec_id")
-    // checkpointed to break lineage: the append writes the path being read
-    val (fresh, Seq(n)) = IndexLifecycle.checkpointCounting(
-      newRows.join(affectedIds, Seq("vec_id"), "left_anti"), lit(true))
-    try if (n > 0) fresh.writeArtifact(s"$path/assignments", "append", "c_label")
-    finally Tables.freeCheckpoint(fresh): Unit
-  }
+    * ([[graft.streaming.StreamingOps.annIngestStream]]), on the shared
+    * merge skeleton: repeated, registered, pending and tombstoned ids
+    * never reach the admit leg, so at-least-once redelivery converges and
+    * a replay after a takedown cannot resurrect a forgotten vec_id (the
+    * reference's transport replays from the beginning on restart,
+    * `Consumer/kafkaConsumer.js:53`). The admit leg routes with the
+    * FROZEN stored centroids (a merge never refits) and APPENDS into the
+    * routed cells' partition directories (r19, VERDICT r18 #2): no stored
+    * file is rewritten or deleted, so a concurrent probe whose plan listed
+    * files pre-merge keeps every listed file end-to-end. Fragmentation
+    * from repeated appends is the LSM bargain — [[rebuildAnnIndex]] is
+    * the compaction that rewrites cells contiguously. */
+  private[graft] def mergeDeltaIntoIndex(delta: DataFrame, path: String): Unit =
+    IndexLifecycle.merge(annFamily,
+        delta.select(col("vec_id").cast("long"), col("embedding")), path) { (root, fresh, nFresh) =>
+      val s = delta.sparkSession
+      val labelT = IndexLifecycle.readStamped(s, s"$root/assignments").schema("label").dataType.sql
+      // routing is row-preserving, so the admitted count IS the fresh count
+      routeAnnDelta(fresh, IndexLifecycle.readStamped(s, s"$root/centroids"))
+        .selectExpr("vec_id", s"cast(-1 as $labelT) as label",
+          "de as embedding", "dnrm as nrm", "q_cell as c_label")
+        .writeArtifact(s"$root/assignments", "append", "c_label")
+      nFresh
+    }: Unit
 
   def mergeAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
     if (!IndexLifecycle.exists(s, annFamily, path))
       buildAnnIndex(s, d, path)
     mergeDeltaIntoIndex(annDelta(s, d), path)
     // the report reads the POST-merge LIVE rows — idempotent across runs
-    liveAssignments(s, IndexLifecycle.resolveIndexRoot(s, path))
+    liveAssignments(s, path, IndexLifecycle.resolveIndexRoot(s, path))
       .groupBy("c_label")
       .agg(count(lit(1)).as("nt"),
         count(when(col("vec_id") >= 100000L, 1)).as("na"))
@@ -4301,11 +4271,10 @@ object Similarity {
     // POST-delete LIVE counts (stored minus tombstones — deletion is
     // lazy, r19) joined to the tombstone log — both fixed points under
     // re-execution
-    val root = IndexLifecycle.resolveIndexRoot(s, path)
-    liveAssignments(s, root)
+    liveAssignments(s, path, IndexLifecycle.resolveIndexRoot(s, path))
       .groupBy("c_label").agg(count(lit(1)).as("n_kept"))
       .join(
-        IndexLifecycle.readStamped(s, s"$root/tombstones")
+        IndexLifecycle.readStamped(s, annFamily.tombstones(path))
           .groupBy("c_label").agg(count(lit(1)).as("n_deleted")),
         Seq("c_label"), "left")
       .selectExpr("c_label", "cast(n_kept as bigint) as n_kept",
@@ -4400,8 +4369,8 @@ object Similarity {
   // committed by an atomic marker-create (the [[IndexLifecycle]] version
   // store). Probes resolve the version once at plan time, so a probe in
   // flight during the swap reads the OLD version's files end-to-end
-  // (never touched, never deleted); the tombstone log rides along so the
-  // merge-side replay guard survives the swap.
+  // (never touched, never deleted); the tombstone log sits at the index
+  // path, so the merge-side replay guard needs no carry across the swap.
   //
   // Scale shape (100 TB): each Lloyd round is ONE partial aggregate whose
   // shuffle carries k decimal-sum buffers per map task (k·dim, never the
@@ -4419,137 +4388,74 @@ object Similarity {
   private[graft] def refitIndexPathFor(d: String): String =
     graft.ScratchPaths.indexPathFor(s"q140-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
 
-  /** Per-cell centroid update (exact decimal means — [[VecCentroid]],
-    * the label-centroid arithmetic keyed by the current cell). */
-  private def cellMeans(asg: DataFrame): DataFrame = {
-    val s = asg.sparkSession
-    import s.implicits._
-    asg.select(col("c_label").cast("int"), col("embedding")).as[(Int, Array[Float])]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(VecCentroid.toColumn.name("centroid"))
-      .toDF("c_label", "centroid")
-  }
-
   /** Cosine-argmax re-route of a population against a k-row codebook —
     * broadcast-k, ties to the lowest cell (the routeAnnDelta idiom, with
-    * the stored nrm reused). Keeps the `c0` pre-refit-cell rider. */
-  private def reassignCells(pop: DataFrame, cents: DataFrame): DataFrame = {
-    val cells = cents
-      .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cells"))
-    pop.drop("c_label").crossJoin(broadcast(cells))
-      .selectExpr("vec_id", "label", "embedding", "nrm", "c0",
+    * the stored nrm reused): assignments rows in, assignments rows out. */
+  private def reassignCells(pop: DataFrame, cents: DataFrame): DataFrame =
+    pop.drop("c_label").crossJoin(broadcast(routingCodebook(cents, "cells")))
+      .selectExpr("vec_id", "label", "embedding", "nrm",
         // r21: native routing argmax — bit-identical to the HOF chain
         "graft_route_max(embedding, nrm, cells) as best")
-      .selectExpr("vec_id", "label", "embedding", "nrm", "c0",
+      .selectExpr("vec_id", "label", "embedding", "nrm",
         "cast(-best.nl as int) as c_label")
-  }
 
   /** The refit: `rounds` Lloyd rounds (update-then-assign) over the LIVE
     * version's population (minus the tombstone log — the rebuild is the
     * compaction that makes lazy deletion physical, r19), written as a
-    * new committed version. Returns the new version's root. `rounds = 0`
-    * is PURE COMPACTION: the stored codebook and the drift reference
-    * frame (cellstat) carry forward unchanged, and the write just
-    * removes tombstoned rows physically and defragments the LSM appends
-    * — the tombstone-mass maintenance leg uses it so a takedown-heavy
-    * stream compacts without paying (or mistiming) a refit.
-    *
-    * SNAPSHOT-REBUILD-CATCHUP (r19, VERDICT r18 #5): the corpus-sized
-    * refit no longer holds the writer lock, so ingest merges and
-    * takedowns keep landing on the LIVE version while it runs instead
-    * of queueing behind it. Phase 1 (lockless) refits a snapshot of the
-    * live rows and writes the uncommitted new version; phase 2 (locked)
-    * replays whatever landed meanwhile — the tombstone log is re-read,
-    * and rows merged mid-refit are routed with the NEW codebook and
-    * appended — then the `_COMMITTED` marker flips resolution and keep-N
-    * GC retires stale versions (VERDICT r18 #3: every write path now
-    * calls its own GC). `beforeCatchup` is the deterministic seam the
-    * concurrency spec drives a mid-refit merge through — same-JVM
-    * writers are serialized by the per-path lock, so a sleeping-thread
-    * race would be flaky where this hook is exact. Multi-driver
-    * deployments keep the documented single-writer-per-path contract
-    * (phase 2 stakes the cross-driver intent marker). */
+    * new committed version through [[IndexLifecycle.refit]]'s snapshot-
+    * refit-catchup (r19, VERDICT r18 #5): merges and takedowns keep
+    * landing on the live version while the Lloyd rounds run, and rows
+    * merged meanwhile are routed with the NEW codebook at catch-up.
+    * Returns the new version's root. `rounds = 0` is PURE COMPACTION:
+    * the stored codebook and the drift reference frame (cellstat) carry
+    * forward unchanged, and the write just removes tombstoned rows
+    * physically and defragments the LSM appends — the tombstone-mass
+    * maintenance leg uses it so a takedown-heavy stream compacts without
+    * paying (or mistiming) a refit. `beforeCatchup` is the seam a spec
+    * drives a mid-refit writer through. */
   def rebuildAnnIndex(s: SparkSession, path: String, rounds: Int = 2,
                       beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
-    // version allocation is the only phase-1 step needing the lock
-    val (root, newRoot) = IndexLifecycle.withLock(path) {
-      val nr = IndexLifecycle.allocateVersion(s, path)
-      (IndexLifecycle.resolveIndexRoot(s, path), nr)
-    }
-    var asg = liveAssignments(s, root)
-      .selectExpr("vec_id", "label", "embedding", "nrm", "c_label",
-        "c_label as c0")
-      .transform(Tables.maybePersist)
-    // rounds = 0 is PURE COMPACTION (r19, the tombstone-mass maintenance
-    // leg): the stored codebook is kept, no row changes cell — the write
-    // below just makes lazy deletion physical and defragments the LSM
-    // appends. rounds > 0 is the refit proper.
-    var cents: DataFrame =
-      if (rounds == 0) IndexLifecycle.readStamped(s, s"$root/centroids") else null
-    // every frame this rebuild persists, freed once the version commits
-    val held = scala.collection.mutable.ArrayBuffer(asg)
-    for (_ <- 1 to rounds) {
-      cents = cellMeans(asg).transform(Tables.maybePersist)
-      held += cents
-      asg = reassignCells(asg, cents)
-    }
-    // both phase-1 writes land in the UNCOMMITTED version directory —
-    // order free until the _COMMITTED marker: overlap them (§2.6, r21)
-    Par.run2(
-      asg.selectExpr("vec_id", "label", "embedding", "nrm", "c_label")
-        .write.mode("overwrite").partitionBy("c_label")
-        .parquet(s"$newRoot/assignments"),
-      cents.write.mode("overwrite").parquet(s"$newRoot/centroids"))
-    beforeCatchup()
-    IndexLifecycle.withWriter(s, path) {
-      // the tombstone log rides along AS OF NOW (not the phase-1 read):
-      // it is the merge-side replay guard, and a takedown that landed
-      // during the refit must survive the swap — its victim is physically
-      // present in the refit output and stays hidden by the carried log
-      // until the NEXT rebuild removes it
-      if (graft.ScratchPaths.artifactExists(s, s"$root/tombstones/_SUCCESS")) {
-        val log = IndexLifecycle.readStamped(s, s"$root/tombstones").localCheckpoint()
-        log.write.mode("overwrite").parquet(s"$newRoot/tombstones")
-        Tables.freeCheckpoint(log)
-      }
-      // catchup: live rows that merged into the OLD version mid-refit
-      // (fresh file listing — the LSM merge appends files, so a fresh
-      // read sees them) and are absent from the refit output
-      val missed = liveAssignments(s, root)
-        .join(IndexLifecycle.readStamped(s, s"$newRoot/assignments").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        .selectExpr("vec_id", "label", "embedding", "nrm", "c_label as c0")
-        .localCheckpoint()
-      if (!missed.isEmpty)
-        reassignCells(missed, IndexLifecycle.readStamped(s, s"$newRoot/centroids"))
-          .selectExpr("vec_id", "label", "embedding", "nrm", "c_label")
-          .write.mode("append").partitionBy("c_label")
-          .parquet(s"$newRoot/assignments")
-      Tables.freeCheckpoint(missed)
-      // a REFIT's population (caught-up rows included, carried tombstones
+    IndexLifecycle.refit(s, annFamily, path, beforeCatchup)(
+      fit = { (root, newRoot) =>
+        var asg = liveAssignments(s, path, root).transform(Tables.maybePersist)
+        var cents = if (rounds == 0) IndexLifecycle.readStamped(s, s"$root/centroids") else null
+        val held = scala.collection.mutable.ArrayBuffer(asg)
+        try {
+          for (_ <- 1 to rounds) {
+            // per-cell centroid update keyed by the current cell
+            cents = vecCentroids(asg.select(col("c_label").cast("int"), col("embedding")),
+              "c_label", "centroid").transform(Tables.maybePersist)
+            held += cents
+            asg = reassignCells(asg, cents)
+          }
+          // both writes land in the UNCOMMITTED version directory —
+          // order free until the _COMMITTED marker: overlap them (§2.6, r21)
+          Par.run2(
+            asg.write.mode("overwrite").partitionBy("c_label").parquet(s"$newRoot/assignments"),
+            cents.write.mode("overwrite").parquet(s"$newRoot/centroids"))
+        } finally held.foreach(_.unpersist(blocking = false))
+        missed => reassignCells(missed, IndexLifecycle.readStamped(s, s"$newRoot/centroids"))
+          .writeArtifact(s"$newRoot/assignments", "append", "c_label")
+      },
+      // a REFIT's population (caught-up rows included, tombstoned rows
       // excluded) is the new drift reference frame; a PURE COMPACTION
-      // (rounds = 0) carries the OLD frame forward — resetting cellstat
-      // to the current population would zero the measured drift without
-      // refitting, silently suppressing the drift-gated auto-refit under
-      // frequent tombstone-triggered compactions
-      if (rounds == 0 &&
-          graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
-        IndexLifecycle.readStamped(s, s"$root/cellstat")
+      // carries the OLD frame forward — resetting cellstat to the current
+      // population would zero the measured drift without refitting,
+      // silently suppressing the drift-gated auto-refit under frequent
+      // tombstone-triggered compactions
+      seal = { (root, newRoot) =>
+        (if (rounds == 0 && graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
+          IndexLifecycle.readStamped(s, s"$root/cellstat")
+        else annCellCounts(s, path, newRoot, "n"))
           .write.mode("overwrite").parquet(s"$newRoot/cellstat")
-      else
-        liveAssignments(s, newRoot)
-          .groupBy("c_label").agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$newRoot/cellstat")
-      // atomic commit + keep-N GC (VERDICT r18 #3) — the shared tail:
-      // the old version's files stay for in-flight (and replayed)
-      // readers; an unattended auto-refit stream must not accumulate
-      // versions × corpus on disk
-      graft.IndexLifecycle.commitVersion(s, annFamily, path, newRoot)
-    }
-    held.foreach(_.unpersist(blocking = false))
-    newRoot
+      })
   }
+
+  /** Per-cell population of version `root`'s live rows, as (c_label, `n`). */
+  private def annCellCounts(s: SparkSession, path: String, root: String,
+                            n: String): DataFrame =
+    liveAssignments(s, path, root).groupBy("c_label").agg(count(lit(1)).as(n))
 
   /** The q140 audit report — a pure read of the LIVE version against its
     * predecessor (the version it replaced; the flat root for a
@@ -4560,7 +4466,7 @@ object Similarity {
     val prev = IndexLifecycle.previousVersionRoot(s, annFamily, path).getOrElse(
       throw new IllegalStateException(
         s"rebuild report for $path needs the predecessor version; it was pruned"))
-    liveAssignments(s, live).select(col("vec_id"), col("c_label"))
+    liveAssignments(s, path, live).select(col("vec_id"), col("c_label"))
       .join(IndexLifecycle.readStamped(s, s"$prev/assignments")
         .select(col("vec_id"), col("c_label").as("c_prev")), Seq("vec_id"))
       .groupBy("c_label")
@@ -4571,50 +4477,55 @@ object Similarity {
       .orderBy("c_label")
   }
 
-  /** PSI of the LIVE population's cell shares against the fit-time
-    * reference frame (`cellstat`, written by build/rebuild) — q125's
-    * Laplace-smoothed micro-quantized arithmetic at index grain. This
-    * is the drift statistic the "a merge never refits" discipline
-    * defers to: merges/forgets move the population but never the
-    * codebook OR the reference frame, so the PSI measures exactly the
-    * shift SINCE THE LAST FIT. Cost: one columnless partition-count
-    * scan + k-row arithmetic — cheap enough to check per maintenance
-    * window. A version without a cellstat (hand-built artifacts)
-    * self-seeds: the current population becomes the reference and the
-    * check returns 0 (the standing-statistic discipline). */
-  def annIndexDriftPsiMicro(s: SparkSession, path: String): Long = {
-    val root = IndexLifecycle.resolveIndexRoot(s, path)
-    if (!graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
-      IndexLifecycle.withWriter(s, path) {
-        liveAssignments(s, root)
-          .groupBy("c_label").agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$root/cellstat")
-      }
+  /** The per-cell PSI terms of version `root`'s LIVE population against
+    * its fit-time reference frame (`cellstat`, written by build/rebuild):
+    * (c_label, n_ref, n_cur, term_micro), q125's Laplace-smoothed micro-
+    * quantized arithmetic at index grain, dense over the codebook's cell
+    * list — a cell can be empty in either population and still carries a
+    * smoothed term. Also returns the persisted dense frame the terms
+    * derive from, for the caller to free. */
+  private def annDriftTerms(s: SparkSession, path: String,
+                            root: String): (DataFrame, DataFrame) = {
     val ref = IndexLifecycle.readStamped(s, s"$root/cellstat")
       .selectExpr("c_label", "n as n_ref")
-    val cur = liveAssignments(s, root)
-      .groupBy("c_label").agg(count(lit(1)).as("n_cur"))
-    // dense over the codebook's cell list — a cell can be empty in
-    // either population and still carries a smoothed term
     val dense = IndexLifecycle.readStamped(s, s"$root/centroids").select("c_label")
       .join(broadcast(ref), Seq("c_label"), "left")
-      .join(broadcast(cur), Seq("c_label"), "left")
+      .join(broadcast(annCellCounts(s, path, root, "n_cur")), Seq("c_label"), "left")
       .selectExpr("c_label", "coalesce(n_ref, 0L) as n_ref",
         "coalesce(n_cur, 0L) as n_cur")
       .transform(Tables.maybePersist)
     val k = dense.count()
     val tot = dense.agg(sum(col("n_ref")).as("ta"), sum(col("n_cur")).as("tb"))
-    dense.crossJoin(broadcast(tot))
-      .selectExpr(
+    (dense, dense.crossJoin(broadcast(tot))
+      .selectExpr("c_label", "n_ref", "n_cur",
         s"""cast(floor((
            |  (n_cur + 1) / cast(tb + $k as double)
            |  - (n_ref + 1) / cast(ta + $k as double))
            |  * ln(((n_cur + 1) / cast(tb + $k as double))
            |       / ((n_ref + 1) / cast(ta + $k as double)))
            |  * 1e6 + 0.5) as bigint) as term_micro"""
-          .stripMargin.replace("\n", " "))
-      .agg(sum(col("term_micro")).as("psi_micro"))
-      .head().getLong(0)
+          .stripMargin.replace("\n", " ")))
+  }
+
+  /** PSI (micro) of the live population against the fit-time frame: the
+    * sum of [[annDriftTerms]]. This is the drift statistic the "a merge
+    * never refits" discipline defers to: merges/forgets move the
+    * population but never the codebook OR the reference frame, so the
+    * PSI measures exactly the shift SINCE THE LAST FIT. Cost: one
+    * columnless partition-count scan + k-row arithmetic — cheap enough to
+    * check per maintenance window. A version without a cellstat (hand-
+    * built artifacts) self-seeds: the current population becomes the
+    * reference and the check returns 0 (the standing-statistic
+    * discipline). */
+  def annIndexDriftPsiMicro(s: SparkSession, path: String): Long = {
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
+    if (!graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
+      IndexLifecycle.withWriter(s, path) {
+        annCellCounts(s, path, root, "n").write.mode("overwrite").parquet(s"$root/cellstat")
+      }
+    val (dense, terms) = annDriftTerms(s, path, root)
+    try terms.agg(sum(col("term_micro")).as("psi_micro")).head().getLong(0)
+    finally dense.unpersist(blocking = false)
   }
 
   /** The drift check as an auditable per-cell report (q141 — the q125
@@ -4624,28 +4535,7 @@ object Similarity {
     * exact statistic [[maybeRebuildAnnIndex]] acts on. */
   def annIndexDriftReport(s: SparkSession, path: String,
                           psiMicroThreshold: Long = 200000L): DataFrame = {
-    val root = IndexLifecycle.resolveIndexRoot(s, path)
-    val ref = IndexLifecycle.readStamped(s, s"$root/cellstat")
-      .selectExpr("c_label", "n as n_ref")
-    val cur = liveAssignments(s, root)
-      .groupBy("c_label").agg(count(lit(1)).as("n_cur"))
-    val dense = IndexLifecycle.readStamped(s, s"$root/centroids").select("c_label")
-      .join(broadcast(ref), Seq("c_label"), "left")
-      .join(broadcast(cur), Seq("c_label"), "left")
-      .selectExpr("c_label", "coalesce(n_ref, 0L) as n_ref",
-        "coalesce(n_cur, 0L) as n_cur")
-      .transform(Tables.maybePersist)
-    val k = dense.count()
-    val tot = dense.agg(sum(col("n_ref")).as("ta"), sum(col("n_cur")).as("tb"))
-    val terms = dense.crossJoin(broadcast(tot))
-      .selectExpr("c_label", "n_ref", "n_cur",
-        s"""cast(floor((
-           |  (n_cur + 1) / cast(tb + $k as double)
-           |  - (n_ref + 1) / cast(ta + $k as double))
-           |  * ln(((n_cur + 1) / cast(tb + $k as double))
-           |       / ((n_ref + 1) / cast(ta + $k as double)))
-           |  * 1e6 + 0.5) as bigint) as term_micro"""
-          .stripMargin.replace("\n", " "))
+    val terms = annDriftTerms(s, path, IndexLifecycle.resolveIndexRoot(s, path))._2
       .transform(Tables.maybePersist)
     val psi = terms.agg(sum(col("term_micro")).as("psi_micro"))
     terms.crossJoin(broadcast(psi))
@@ -4915,22 +4805,15 @@ object Similarity {
                                   cellsDf: DataFrame, idx: DataFrame): DataFrame = {
     val s = delta0.sparkSession
     import s.implicits._
-    val cb = coarseDf
-      .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cb"))
-    val routed = delta0.crossJoin(broadcast(cb))
+    val routed = delta0.crossJoin(broadcast(routingCodebook(coarseDf, "cb")))
       .selectExpr("vec_id", "embedding", "cb",
         s"sqrt(${dotExpr("embedding", "embedding")}) as dnrm")
       .selectExpr("vec_id", "embedding as de", "dnrm", "cb",
         // r21: native routing argmax — bit-identical to the HOF chain
         "graft_route_max(embedding, dnrm, cb) as best")
       .selectExpr("vec_id", "de", "dnrm", "cb", "cast(-best.nl as int) as q_cell")
-      // the delta's residual about ITS probed cell (q115's float cast)
-      .selectExpr("vec_id", "de", "dnrm", "q_cell",
-        s"""transform(sequence(1, ${PqM * PqSub}), i -> cast(
-           |double(element_at(de, i)) -
-           |element_at(element_at(filter(cb, x -> x.c_label = q_cell), 1).centroid, i)
-           |as float)) as embedding"""
-          .stripMargin.replace("\n", " "))
+      // the delta's residual about ITS probed cell
+      .selectExpr("vec_id", "de", "dnrm", "q_cell", pqResidualExpr("de", "q_cell"))
     val withTab = pqCorpusOf(
         routed.selectExpr("vec_id", "0 as label", "embedding", "de", "dnrm", "q_cell"),
         Seq("de", "dnrm", "q_cell"))
@@ -5009,7 +4892,7 @@ object Similarity {
     * untouched — when no log exists, so q126's pinned shape holds). */
   private[graft] def livePqCodes(s: SparkSession, path: String,
                                  root: String): DataFrame =
-    IndexLifecycle.live(pqFamily, path, root)(
+    IndexLifecycle.live(pqFamily, path)(
       IndexLifecycle.readStamped(s, s"$root/codes"))
 
   /** Route a raw (vec_id, embedding) batch with the STORED coarse frame
@@ -5018,9 +4901,7 @@ object Similarity {
     * cast), shaped for [[pqCorpusOf]] + [[pqEncodedIndex]]. */
   private def pqRouteResidual(batch: DataFrame, coarseDf: DataFrame): DataFrame = {
     withFns(batch.sparkSession)
-    val cb = coarseDf
-      .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cb"))
-    batch.crossJoin(broadcast(cb))
+    batch.crossJoin(broadcast(routingCodebook(coarseDf, "cb")))
       .selectExpr("vec_id", "embedding", "cb",
         s"sqrt(${dotExpr("embedding", "embedding")}) as dnrm")
       .selectExpr("vec_id", "embedding as orig", "cb",
@@ -5028,12 +4909,16 @@ object Similarity {
         "graft_route_max(embedding, dnrm, cb) as best")
       .selectExpr("vec_id", "orig", "cb", "cast(-best.nl as int) as c_label")
       .selectExpr("vec_id", "cast(0 as int) as label", "c_label", "orig",
-        s"""transform(sequence(1, ${PqM * PqSub}), i -> cast(
-           |double(element_at(orig, i)) -
-           |element_at(element_at(filter(cb, x -> x.c_label = c_label), 1).centroid, i)
-           |as float)) as embedding"""
-          .stripMargin.replace("\n", " "))
+        pqResidualExpr("orig", "c_label"))
   }
+
+  /** The float32 residual (q115's cast) of vector column `v` about its
+    * cell `cell`'s centroid in the routing codebook `cb`, as `embedding`. */
+  private def pqResidualExpr(v: String, cell: String): String =
+    s"""transform(sequence(1, ${PqM * PqSub}), i -> cast(
+       |double(element_at($v, i)) -
+       |element_at(element_at(filter(cb, x -> x.c_label = $cell), 1).centroid, i)
+       |as float)) as embedding""".stripMargin.replace("\n", " ")
 
   /** q147's core — fold ONE (vec_id, embedding) batch into the standing
     * PQ index: route with the stored coarse frame, encode against the
@@ -5112,31 +4997,30 @@ object Similarity {
   // stored artifact (orig + frozen coarse + stored codebook), compared
   // to the fit's own distortion recorded in `stat` at build. The refit
   // (q150) re-fits the codebook on the LIVE rows and re-encodes, in a
-  // fresh committed version (snapshot-refit-catchup — the
-  // rebuildAnnIndex r19 discipline: merges land mid-refit and are
+  // fresh committed version ([[IndexLifecycle.refit]]'s snapshot-refit-
+  // catchup, shared with the ANN refit: merges land mid-refit and are
   // replayed with the NEW codebook before the commit). The coarse frame
   // stays frozen — coarse-cell drift is the ANN family's q141 dial;
   // this family owns the SUBSPACE codebook.
   // ---------------------------------------------------------------------
 
-  /** The live rows' residual corpus, reconstructed from the STORED
-    * artifact (orig + the row's stored coarse cell — bit-identical to
-    * the build-time residuals) and shaped for [[pqCorpusOf]]; `codes`
-    * carried for the distortion fold. */
-  private def pqLiveResidualCorpus(s: SparkSession, path: String,
-                                   root: String): DataFrame = {
-    withFns(s)
-    val cb = IndexLifecycle.readStamped(s, s"$root/coarse")
-      .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cb"))
-    val resid = livePqCodes(s, path, root).crossJoin(broadcast(cb))
-      .selectExpr("vec_id", "cast(0 as int) as label", "c_label", "orig", "codes",
-        s"""transform(sequence(1, ${PqM * PqSub}), i -> cast(
-           |double(element_at(orig, i)) -
-           |element_at(element_at(filter(cb, x -> x.c_label = c_label), 1).centroid, i)
-           |as float)) as embedding"""
-          .stripMargin.replace("\n", " "))
-    pqCorpusOf(resid, Seq("c_label", "orig", "codes"))
+  /** Stored code rows' residual corpus, reconstructed from `orig` and the
+    * row's stored coarse cell (bit-identical to the build-time residuals)
+    * and shaped for [[pqCorpusOf]]; `codes` carried for the distortion
+    * fold. */
+  private def pqStoredResidualCorpus(rows: DataFrame, coarse: DataFrame): DataFrame = {
+    withFns(rows.sparkSession)
+    pqCorpusOf(rows.crossJoin(broadcast(routingCodebook(coarse, "cb")))
+        .selectExpr("vec_id", "cast(0 as int) as label", "c_label", "orig", "codes",
+          pqResidualExpr("orig", "c_label")),
+      Seq("c_label", "orig", "codes"))
   }
+
+  /** The live rows' residual corpus of version `root`. */
+  private def pqLiveResidualCorpus(s: SparkSession, path: String,
+                                   root: String): DataFrame =
+    pqStoredResidualCorpus(livePqCodes(s, path, root),
+      IndexLifecycle.readStamped(s, s"$root/coarse"))
 
   /** Per-row distortion of the STORED codes against the STORED codebook
     * (s-ascending fold, micro-quantized per row — identical arithmetic
@@ -5215,51 +5099,35 @@ object Similarity {
   }
 
   /** The PQ refit (q150): re-fit the subspace codebook on the LIVE rows'
-    * residuals and re-encode, as a new committed version — deletion made
-    * physical along the way, `stat` re-priced to the new fit. SNAPSHOT-
-    * REFIT-CATCHUP (the rebuildAnnIndex r19 discipline): phase 1
-    * (lockless) fits and writes the uncommitted version, so merges and
-    * takedowns keep landing on the live version meanwhile; phase 2
-    * (locked) re-encodes whatever landed — with the NEW codebook — and
-    * commits. The tombstone log lives at the PATH ROOT, so it needs no
-    * carry and keeps guarding replays across the swap. Returns the new
-    * version's root. */
+    * residuals and re-encode, as a new committed version through
+    * [[IndexLifecycle.refit]]'s snapshot-refit-catchup — deletion made
+    * physical along the way, rows merged mid-refit encoded with the NEW
+    * codebook at catch-up, `stat` re-priced to the new fit. Returns the
+    * new version's root. */
   def rebuildPqIndex(s: SparkSession, path: String,
                      beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
-    val (root, newRoot) = IndexLifecycle.withLock(path) {
-      val nr = IndexLifecycle.allocateVersion(s, path)
-      (IndexLifecycle.resolveIndexRoot(s, path), nr)
-    }
-    val snapshot = pqLiveResidualCorpus(s, path, root)
-      .transform(Tables.maybePersist)
-    val cells = pqFitCells(snapshot)
-    cells.selectExpr("explode(cells) as x").selectExpr("x.s", "x.cid", "x.c")
-      .write.mode("overwrite").parquet(s"$newRoot/codebook")
-    IndexLifecycle.readStamped(s, s"$root/coarse") // frozen — the ANN family owns coarse drift
-      .write.mode("overwrite").parquet(s"$newRoot/coarse")
-    pqEncodedIndex(snapshot.drop("codes"), cells)
-      .write.mode("overwrite").partitionBy("c_label").parquet(s"$newRoot/codes")
-    snapshot.unpersist(blocking = false)
-    beforeCatchup()
-    IndexLifecycle.withWriter(s, path) {
-      // catchup: live rows merged into the OLD version mid-refit, encoded
-      // with the NEW codebook (fresh file listing — the merge appends)
-      val missed = pqLiveResidualCorpus(s, path, root).drop("codes")
-        .join(IndexLifecycle.readStamped(s, s"$newRoot/codes").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      if (!missed.isEmpty)
-        pqEncodedIndex(missed, cells)
-          .write.mode("append").partitionBy("c_label")
-          .parquet(s"$newRoot/codes")
-      // stat re-priced to the NEW fit over the post-catchup population —
-      // the decay dial resets to the refit's own distortion
-      pqDistortionStat(pqStoredDistortionMicros(s, path, newRoot))
-        .write.mode("overwrite").parquet(s"$newRoot/stat")
-      graft.IndexLifecycle.commitVersion(s, pqFamily, path, newRoot)
-    }
-    newRoot
+    IndexLifecycle.refit(s, pqFamily, path, beforeCatchup)(
+      fit = { (root, newRoot) =>
+        val snapshot = pqLiveResidualCorpus(s, path, root).transform(Tables.maybePersist)
+        try {
+          val cells = pqFitCells(snapshot)
+          cells.selectExpr("explode(cells) as x").selectExpr("x.s", "x.cid", "x.c")
+            .write.mode("overwrite").parquet(s"$newRoot/codebook")
+          IndexLifecycle.readStamped(s, s"$root/coarse") // frozen — the ANN family owns coarse drift
+            .write.mode("overwrite").parquet(s"$newRoot/coarse")
+          pqEncodedIndex(snapshot, cells)
+            .write.mode("overwrite").partitionBy("c_label").parquet(s"$newRoot/codes")
+          missed => pqEncodedIndex(pqStoredResidualCorpus(missed,
+              IndexLifecycle.readStamped(s, s"$newRoot/coarse")), cells)
+            .writeArtifact(s"$newRoot/codes", "append", "c_label")
+        } finally snapshot.unpersist(blocking = false)
+      },
+      // the decay dial resets to the refit's own distortion over the
+      // post-catchup population
+      seal = (_, newRoot) =>
+        pqDistortionStat(pqStoredDistortionMicros(s, path, newRoot))
+          .write.mode("overwrite").parquet(s"$newRoot/stat"))
   }
 
   /** The distortion-gated AUTO-REFIT check (the media growth-trigger
@@ -5931,7 +5799,7 @@ object Similarity {
     // time), and the cell value becomes a literal partition filter.
     // Version-resolved ONCE and read live (minus tombstones) — the
     // q119-family read discipline (r19).
-    val assignments = liveAssignments(s, IndexLifecycle.resolveIndexRoot(s, annPath))
+    val assignments = liveAssignments(s, annPath, IndexLifecycle.resolveIndexRoot(s, annPath))
     val qRow = assignments.filter(col("vec_id") === 0)
       .selectExpr("embedding as qe", "nrm as qn", "c_label as q_cell")
       .transform(Tables.maybePersist)

@@ -1276,8 +1276,7 @@ object StreamingOps {
     val dot = (a: String, b: String) => s"graft_dot($a, $b)"
     // dense statics: version-resolved once, live rows only (r19)
     val annRoot = graft.IndexLifecycle.resolveIndexRoot(s, annPath)
-    val centsRow = s.read.parquet(s"$annRoot/centroids")
-      .agg(sort_array(collect_list(struct(col("c_label"), col("centroid")))).as("cents"))
+    val centsRow = graft.Similarity.routingCodebook(s.read.parquet(s"$annRoot/centroids"), "cents")
     val routed = requests
       .selectExpr("query_id", "embedding as qe")
       .crossJoin(broadcast(centsRow))
@@ -1289,7 +1288,7 @@ object StreamingOps {
           .stripMargin.replace("\n", " "))
       .selectExpr("query_id", "qe", "qn", "-best.neg as q_cell")
     val vec = routed
-      .join(graft.Similarity.liveAssignments(s, annRoot),
+      .join(graft.Similarity.liveAssignments(s, annPath, annRoot),
         col("c_label") === col("q_cell"))
       .selectExpr("query_id", "'V' as head", "vec_id as item_id",
         s"${dot("embedding", "qe")} / (nrm * qn) as score")

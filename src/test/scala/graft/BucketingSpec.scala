@@ -211,7 +211,7 @@ class BucketingSpec extends SparkSpec {
     val filesBefore = files()
     val report1 = Similarity.forgetFromAnnIndex(spark, sf, path).collect()
     // the takedown is effective IMMEDIATELY on the live view…
-    val live = Similarity.liveAssignments(spark, IndexLifecycle.resolveIndexRoot(spark, path))
+    val live = Similarity.liveAssignments(spark, path, IndexLifecycle.resolveIndexRoot(spark, path))
     assert(live.filter($"vec_id" % 50 === 0).count() == 0,
       "a takedown victim survived in the live view")
     val deleted = report1.map(_.getLong(2)).sum

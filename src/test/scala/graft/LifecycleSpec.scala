@@ -171,9 +171,8 @@ class LifecycleSpec extends SparkSpec {
     * it: build a fresh index at `path`, admit a batch, take ids down,
     * compact. `registry` is the artifact whose rows are the admitted ids;
     * `audit` marks the families whose tombstone rows record the stored
-    * cell; `lifecycle` is the family's descriptor. The replay case never
-    * compacts, so the ANN tombstone log — kept under the version root —
-    * sits at `path/tombstones` like the rest. */
+    * cell; `lifecycle` is the family's descriptor. Every family keeps its
+    * tombstone log at `path/tombstones`. */
   private case class Family(name: String, idCol: String, registry: String,
       audit: Boolean, build: String => Unit,
       arrival: Long => org.apache.spark.sql.DataFrame,
@@ -225,6 +224,26 @@ class LifecycleSpec extends SparkSpec {
       (b, p) => Similarity.mergePqBatchIntoIndex(b, p): Unit,
       (r, p) => Similarity.forgetPqFromIndex(r, p): Unit,
       Similarity.pqFamily, p => Similarity.compactPqIndex(spark, p)))
+
+  /** A refit that runs through [[IndexLifecycle.refit]]: the family it
+    * rebuilds, the call (index path, `beforeCatchup` hook → new root) and
+    * the stored-index probe whose answer a failed refit must not move. */
+  private case class Refit(name: String, family: Family,
+      run: (String, () => Unit) => String,
+      probe: String => org.apache.spark.sql.DataFrame)
+
+  private def family(name: String): Family = families.find(_.name == name).get
+
+  private lazy val refits = Seq(
+    Refit("ann rounds=2", family("ann"),
+      (p, hook) => Similarity.rebuildAnnIndex(spark, p, rounds = 2, beforeCatchup = hook),
+      p => Similarity.probeAnnIndex(Similarity.annDelta(spark, sf), p)),
+    Refit("ann rounds=0", family("ann"),
+      (p, hook) => Similarity.rebuildAnnIndex(spark, p, rounds = 0, beforeCatchup = hook),
+      p => Similarity.probeAnnIndex(Similarity.annDelta(spark, sf), p)),
+    Refit("pq", family("pq"),
+      (p, hook) => Similarity.rebuildPqIndex(spark, p, beforeCatchup = hook),
+      p => Similarity.pqIndexProbeStored(spark, sf, p)))
 
   test("every family's id logs survive replay: a crashed first append, a redelivered takedown, the pending consult's crash window") {
     families.foreach { f =>
@@ -428,6 +447,49 @@ class LifecycleSpec extends SparkSpec {
       noLeak("merge")(f.merge(f.arrival(900021L), path))
       noLeak("takedown")(f.forget((registered.take(2) :+ 900022L).toDF(f.idCol), path))
       noLeak("compaction")(f.compact(path))
+      refits.filter(_.family == f).foreach(r => noLeak(s"refit (${r.name})")(r.run(path, () => ())))
+    }
+  }
+
+  test("every refit: a merge and a takedown landing mid-refit survive the swap; a throw before the catch-up leaves the old version serving and the next refit commits") {
+    refits.foreach { r =>
+      val f = r.family
+      val path = java.nio.file.Files.createTempDirectory(s"graft-refit-${f.name}").toString
+      f.build(path)
+      def live: String = IndexLifecycle.resolveIndexRoot(spark, path)
+      def answers: Seq[String] = r.probe(path).collect().map(_.toString).sorted.toSeq
+      def liveIds: Set[Long] = IndexLifecycle.live(f.lifecycle, path)(
+          spark.read.parquet(s"$live/${f.registry}"))
+        .select(f.idCol).as[Long].collect().toSet
+      def held = spark.sparkContext.getPersistentRDDs.keySet
+
+      // (1) the refit dies between its fit and the catch-up: nothing
+      // commits, probes answer as before, and no frame stays behind
+      val (before, heldBefore) = (answers, held)
+      val crash = intercept[IllegalStateException](
+        r.run(path, () => throw new IllegalStateException("crash before the catch-up")))
+      assert(crash.getMessage == "crash before the catch-up")
+      assert(live == path, s"${r.name}: a failed refit moved resolution to $live")
+      assert(answers == before, s"${r.name}: a failed refit moved the probe answers")
+      assert((held -- heldBefore).isEmpty, s"${r.name}: a failed refit left persisted RDDs behind")
+
+      // (2) the next refit commits past the crashed directory, with a
+      // merge and a takedown landing while it runs
+      val victim = liveIds.min
+      val late = 900031L
+      val newRoot = r.run(path, () => {
+        f.merge(f.arrival(late), path)
+        f.forget(Seq(victim).toDF(f.idCol), path)
+      })
+      assert(live == newRoot && newRoot == s"$path/versions/v00003",
+        s"${r.name}: the refit after a crash committed $newRoot")
+      assert(!new java.io.File(s"$path/versions/v00002").exists,
+        s"${r.name}: keep-N GC left the crashed refit's directory")
+      assert(spark.read.parquet(s"$newRoot/${f.registry}").filter(col(f.idCol) === late).count() == 1,
+        s"${r.name}: the mid-refit merge must land in the new version exactly once")
+      assert(liveIds.contains(late) && !liveIds.contains(victim),
+        s"${r.name}: the mid-refit merge or takedown was lost at the swap")
+      assert(r.probe(path).count() == before.size, s"${r.name}: the new version probes short")
     }
   }
 

@@ -1407,7 +1407,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows(pathA, "tombstones") == rows(pathB, "tombstones"),
       "streamed forget diverged from batch delete on the tombstone log")
     // deletion is lazy (r19): the LIVE view excludes every victim
-    assert(Similarity.liveAssignments(spark, pathA)
+    assert(Similarity.liveAssignments(spark, pathA, pathA)
       .filter($"vec_id" % 50 === 0).isEmpty,
       "victims survived the streamed delete in the live view")
     // PENDING-FORGET ordering (r19c — the media q137 discipline at
@@ -1423,7 +1423,7 @@ class StreamingSpec extends SparkSpec {
       .select("embedding").as[Array[Float]].head()
     Similarity.mergeDeltaIntoIndex(
       Seq((999999L, lateVec)).toDF("vec_id", "embedding"), pathA)
-    assert(Similarity.liveAssignments(spark, pathA)
+    assert(Similarity.liveAssignments(spark, pathA, pathA)
       .filter($"vec_id" === 999999L).isEmpty,
       "pending takedown did not refuse the late arrival")
     assert(spark.read.parquet(s"$pathA/tombstones")
@@ -1436,7 +1436,7 @@ class StreamingSpec extends SparkSpec {
     // at-least-once replay of the late arrival stays refused
     Similarity.mergeDeltaIntoIndex(
       Seq((999999L, lateVec)).toDF("vec_id", "embedding"), pathA)
-    assert(Similarity.liveAssignments(spark, pathA)
+    assert(Similarity.liveAssignments(spark, pathA, pathA)
       .filter($"vec_id" === 999999L).isEmpty)
   }
 
@@ -1453,7 +1453,7 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 2L, 4L).toDF("vec_id"), path)
     // lazy deletion (r19): the stored rows stay, every LIVE read excludes
     // the victims — including the whole of fully-victimized cell 0
-    val kept = Similarity.liveAssignments(spark, path)
+    val kept = Similarity.liveAssignments(spark, path, path)
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(3L, 5L),
       s"victims of the fully-hit cell must not survive the live view: $kept")
@@ -1464,7 +1464,7 @@ class StreamingSpec extends SparkSpec {
     assert(tombs == Seq(1L, 2L, 4L), s"tombstone log wrong: $tombs")
     // re-run converges (idempotent): nothing newly tombstoned
     Similarity.forgetVictimIdsFrom(Seq(1L, 2L, 4L).toDF("vec_id"), path)
-    assert(Similarity.liveAssignments(spark, path)
+    assert(Similarity.liveAssignments(spark, path, path)
       .select("vec_id").as[Long].collect().sorted.toSeq == Seq(3L, 5L))
     assert(spark.read.parquet(s"$path/tombstones")
       .select("vec_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
@@ -1721,7 +1721,7 @@ class StreamingSpec extends SparkSpec {
     assert(tombsBefore.nonEmpty)
     // at-least-once replay of the ORIGINAL ingest batch
     in.addData(delta: _*); q.processAllAvailable(); q.stop()
-    val ids = Similarity.liveAssignments(spark, IndexLifecycle.resolveIndexRoot(spark, path))
+    val ids = Similarity.liveAssignments(spark, path, IndexLifecycle.resolveIndexRoot(spark, path))
       .select("vec_id").as[Long].collect().toSet
     victims.foreach(v => assert(!ids.contains(v),
       s"forgotten vec_id $v resurrected by the replayed ingest"))
@@ -3034,7 +3034,7 @@ class StreamingSpec extends SparkSpec {
       s"mid-refit merged row not probe-reachable post-swap: $hit")
     // the mid-refit takedown survives the swap: the tombstone log was
     // re-read at commit, so vec 3 stays hidden from every live read
-    assert(Similarity.liveAssignments(spark, newRoot).filter("vec_id = 3").isEmpty,
+    assert(Similarity.liveAssignments(spark, path, newRoot).filter("vec_id = 3").isEmpty,
       "mid-refit takedown lost at the swap")
     // and the refit routing itself holds (the drift probe re-finds home)
     val dhit = Similarity.probeAnnIndex(
@@ -3200,7 +3200,7 @@ class StreamingSpec extends SparkSpec {
     // pre-takedown ingest batch cannot resurrect a victim
     Similarity.mergeDeltaIntoIndex(
       Seq((5L, vec(1, 0.005))).toDF("vec_id", "embedding"), path)
-    assert(Similarity.liveAssignments(spark, v2).filter($"vec_id" === 5L).isEmpty,
+    assert(Similarity.liveAssignments(spark, path, v2).filter($"vec_id" === 5L).isEmpty,
       "replayed ingest resurrected a forgotten id post-compaction")
     // re-delivered takedown: victims already physical — nothing appended,
     // no version churn (the fraction prices LIVE victims, not log size)

@@ -109,11 +109,17 @@ class TextOpsSpec extends SparkSpec {
   test("T2: cleanBody routes HTML through the converter, plain text untouched") {
     val df = Seq(
       ("<html><body><p>CAPS LINE</p><p>by Ann Lee</p></body></html>", 1),
-      ("plain text\nCAPS LINE\nbody", 2)).toDF("b", "i")
+      ("plain text\nCAPS LINE\nbody", 2),
+      ("<html><body><p>Read <a href=\"https://ex.am/x\">the full story</a> now</p></body></html>", 3))
+      .toDF("b", "i")
     val out = df.select(col("i"), TextOps.cleanBody(col("b")).as("c"))
       .orderBy("i").collect().map(_.getString(1))
     assert(out(0) == "*CAPS LINE*")        // html→text, byline killed, caps bolded
     assert(out(1) == "plain text\n*CAPS LINE*\nbody")
+    // T3 turns the anchor into a Slack link `<href|*text*>` and T12's
+    // `<[^>]+>` strip, later in the same chain (kafkaProducer.js:133-158,
+    // then :189), deletes it whole — the reference drops its links too
+    assert(out(2) == "Read  now")
   }
 
   test("Z1/Z2: Avro roundtrip and corrupt-buffer drop") {
