@@ -210,7 +210,8 @@ object IndexLifecycle {
   /** The compaction tail, under the writer gate: resolve the live root,
     * ask the family whether a rewrite is due — `due(root)` returns the
     * rewrite, or None, so a fixed-point re-run writes nothing — then
-    * allocate the next version, rewrite into it and commit + GC. Every
+    * allocate the next version, rewrite into it, commit + GC and seed its
+    * tombstone-mass bound ([[seedTombstoneBound]]). Every
     * rewrite lands in an UNCOMMITTED directory, invisible until the
     * `_COMMITTED` marker, so the order of its writes is free. */
   def compactVersion(s: SparkSession, fam: IdLogFamily, path: String)(
@@ -219,14 +220,28 @@ object IndexLifecycle {
       phase(s, fam, "compact/check")(due(resolveIndexRoot(s, path))).foreach { rewrite =>
         val newRoot = allocateVersion(s, path)
         phase(s, fam, "compact/rewrite")(rewrite(newRoot))
-        phase(s, fam, "compact/commit")(commitVersion(s, fam, path, newRoot))
-        // seed the new root's tombstone-mass bound (no live victims after
-        // a rewrite): the next takedown's check scans no registry
-        memoPut(s"$newRoot#ts.victims", 0L)
-        memoPut(s"$newRoot#ts.stored", parquetFooterRows(s, s"$newRoot/${fam.registry}"))
-        memoPut(s"$newRoot#ts.log", idLogRows(s, fam.tombstones(path)))
+        phase(s, fam, "compact/commit") {
+          commitVersion(s, fam, path, newRoot)
+          // the rewrite ran under the writer gate: no tombstone is newer
+          seedTombstoneBound(s, fam, path, newRoot, idLogRows(s, fam.tombstones(path)))
+        }
       }
     }
+
+  /** Seed a just-committed version's tombstone-mass bound
+    * ([[tombstoneHeavy]]) so the next takedown's check scans no
+    * registry: stored = the new registry's footer rows, log = the log's
+    * current rows, victims = the log rows appended since `logAtSnapshot`,
+    * the log's rows when the version's population was read — an id the
+    * rewrite kept can only be hidden by a tombstone appended after that
+    * read, so the count is a conservative bound. */
+  private def seedTombstoneBound(s: SparkSession, fam: IdLogFamily, path: String,
+                                 newRoot: String, logAtSnapshot: Long): Unit = {
+    val log = idLogRows(s, fam.tombstones(path))
+    memoPut(s"$newRoot#ts.victims", math.max(0L, log - logAtSnapshot))
+    memoPut(s"$newRoot#ts.stored", parquetFooterRows(s, s"$newRoot/${fam.registry}"))
+    memoPut(s"$newRoot#ts.log", log)
+  }
 
   /** SNAPSHOT-REFIT-CATCHUP, the refit of a family whose fit is corpus-
     * sized (ANN's Lloyd rounds, PQ's codebook). The next version is
@@ -237,8 +252,10 @@ object IndexLifecycle {
     * old version but missing from the new one (merged mid-refit; a fresh
     * listing sees the merge's appended files) go through that leg,
     * `seal(root, newRoot)` writes the family's fit statistic over the
-    * post-catchup population, and the commit flips resolution and runs
-    * keep-N GC. The tombstone log sits at the index path, so a takedown
+    * post-catchup population, and the commit flips resolution, runs
+    * keep-N GC and seeds the tombstone-mass bound, counting every log
+    * row appended since the version was allocated as a victim. The
+    * tombstone log sits at the index path, so a takedown
     * that landed mid-refit keeps hiding its row — physically present in
     * the new version — until the next refit removes it. `beforeCatchup`
     * is the seam a spec drives a mid-refit writer through: same-JVM
@@ -248,7 +265,8 @@ object IndexLifecycle {
     * retires later. Returns the new version's root. */
   def refit(s: SparkSession, fam: IdLogFamily, path: String, beforeCatchup: () => Unit)(
       fit: (String, String) => DataFrame => Unit, seal: (String, String) => Unit): String = {
-    val (root, newRoot) = withLock(path)((resolveIndexRoot(s, path), allocateVersion(s, path)))
+    val (root, newRoot, log0) = withLock(path)((resolveIndexRoot(s, path),
+      allocateVersion(s, path), idLogRows(s, fam.tombstones(path))))
     val catchup = phase(s, fam, "refit/fit")(fit(root, newRoot))
     beforeCatchup()
     withWriter(s, path) {
@@ -263,6 +281,9 @@ object IndexLifecycle {
       phase(s, fam, "refit/commit") {
         seal(root, newRoot)
         commitVersion(s, fam, path, newRoot)
+        // a takedown landing after the fit's snapshot leaves its row in
+        // the new version: a victim
+        seedTombstoneBound(s, fam, path, newRoot, log0)
       }
     }
     newRoot

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.IndexLifecycle.ArtifactWriter
 
@@ -434,10 +434,32 @@ object MediaOps {
         hashes.selectExpr("doc_id", "posexplode(bk) as (band_idx, band_hash)"),
         bandsPerDoc))
 
+  /** The row-major ITU-R BT.601 integer luma plane of one decoded
+    * image — (299·R + 587·G + 114·B) / 1000, exact integer arithmetic.
+    * The PNG and the GIF decode legs both convert through here. */
+  private def lumaOf(img: java.awt.image.BufferedImage): Array[Int] = {
+    val w = img.getWidth
+    val h = img.getHeight
+    val out = new Array[Int](w * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val rgb = img.getRGB(x, y)
+        val r = (rgb >> 16) & 0xFF
+        val g = (rgb >> 8) & 0xFF
+        val b = rgb & 0xFF
+        out(y * w + x) = (299 * r + 587 * g + 114 * b) / 1000
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
+
   /** REAL PNG luma decode (r15, verdict item 3 — JDK `javax.imageio`,
-    * no new dependency): the row-major ITU-R BT.601 integer luma plane
-    * ((299·R + 587·G + 114·B) / 1000, exact integer arithmetic) of a
-    * genuine PNG payload; None otherwise. Gated on the 8-byte PNG
+    * no new dependency): the [[lumaOf]] plane of a genuine PNG payload;
+    * None otherwise. Gated on the 8-byte PNG
     * signature so non-PNG payloads never pay a reader probe — the
     * synthetic fixture corpus (text bytes) takes the stub leg with
     * zero ImageIO calls. Decode failures (truncated/corrupt payloads)
@@ -447,27 +469,7 @@ object MediaOps {
     val sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
     if (bytes.length < 8 || (0 until 8).exists(i => (bytes(i) & 0xFF) != sig(i))) None
     else try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) None
-      else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val out = new Array[Int](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            val r = (rgb >> 16) & 0xFF
-            val g = (rgb >> 8) & 0xFF
-            val b = rgb & 0xFF
-            out(y * w + x) = (299 * r + 587 * g + 114 * b) / 1000
-            x += 1
-          }
-          y += 1
-        }
-        Some(out)
-      }
+      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))).map(lumaOf)
     } catch { case _: Exception => None }
   }
 
@@ -485,45 +487,162 @@ object MediaOps {
       out
     }
 
-  /** The image corpus + its re-encoded twins, dHashed: (doc_id, v, bk)
-    * with v the 4×16-bit dHash bands (the Hamming-verify vector) and bk
-    * the four 80-char adaptive band keys ([[dhashBandKeys]] — width-16
-    * prefixes partition exactly as v's band values did). One
-    * decoder-shaped mapPartitions pass signs base AND twin (the twin's
-    * luma derives from the same decoded row — a second scan would
-    * double the decode cost at 100 TB). The decode step is
-    * [[lumaPlane]] — real for genuine PNGs, stub for the synthetic
-    * fixture; the dHash precondition (≥ 72 luma samples) guards on the
-    * DECODED plane, not the byte length. */
-  private[graft] def imageHashesOf(corpus: DataFrame): DataFrame = {
-    val s = corpus.sparkSession
+  // ---------------------------------------------------------------------
+  // ONE MODALITY DESCRIPTOR: image (q107/q110/q117/q136), audio
+  // (q113/q138) and video (q111/q139) run ONE copy of every Spark leg —
+  // the signing pass, the pair chain, the stored-index build, probe,
+  // merge and compaction, the deny index — and differ only in what their
+  // [[Modality]] declares: how a payload decodes to sample planes, how a
+  // plane signs, how many band keys a payload carries and which rule
+  // verifies a candidate. A standing index records its modality in its
+  // stat, so every later reader knows what the index holds.
+  // ---------------------------------------------------------------------
+
+  /** A duplicate rule over two aligned signature vectors `va`/`vb`: the
+    * score column it names and its SQL, the bar a duplicate clears, and
+    * the probe's per-delta best score — its column, the aggregate that
+    * picks it, and its value when nothing matched. */
+  final case class VerifyRule(score: String, sql: String, bar: String,
+                              best: String, pick: String, none: Int) {
+    /** `pairs` (carrying `va`, `vb`) cut to the (a, b, score) rows that
+      * clear the bar. */
+    def verify(pairs: DataFrame, a: String, b: String): DataFrame =
+      pairs.selectExpr(a, b, s"$sql as $score").filter(bar)
+  }
+
+  /** Scalar Hamming ≤ 6 over the whole vector (image, audio). */
+  private val HammingRule = VerifyRule("hamming",
+    """aggregate(zip_with(va, vb,
+      |  (x, y) -> bit_count(cast(x as bigint) ^ cast(y as bigint))),
+      |  cast(0 as bigint), (a, h) -> a + cast(h as bigint))"""
+      .stripMargin.replace("\n", " "),
+    "hamming <= 6", "best_hamming", "min", 99)
+
+  /** Frame-aligned: ≥ 2 of 3 frames whose 4-band dHash sits within
+    * Hamming 6 of the same frame's (video — q111's semantics). */
+  private val FramesRule = VerifyRule("matched_frames",
+    """cast(size(filter(sequence(0, 2), f ->
+      |  aggregate(transform(sequence(0, 3), b ->
+      |    bit_count(cast(element_at(va, f * 4 + b + 1) as bigint)
+      |      ^ cast(element_at(vb, f * 4 + b + 1) as bigint))),
+      |    cast(0 as bigint), (a, x) -> a + cast(x as bigint)) <= 6))
+      |as bigint)""".stripMargin.replace("\n", " "),
+    "matched_frames >= 2", "best_frames", "max", 0)
+
+  /** What one media modality declares; [[hashesOf]] and every leg after
+    * it are written once against it.
+    *
+    * @param name         the name an index's stat records
+    * @param mime         the corpus slice's mime predicate
+    * @param byteFloor    payloads shorter than this carry no grid: corpus
+    *                     scans push it down as a length filter, and the
+    *                     signing pass refuses them on every frame
+    * @param planes       decode, payload → sample planes: the real decode
+    *                     for a genuine PNG/WAV/GIF, the byte-plane stub
+    *                     (which the DuckDB twin mirrors) otherwise
+    * @param planeFloor   the samples each decoded plane needs for its grid
+    * @param code         sample → signed code, after the perturbation
+    * @param signature    one plane's 4×16-bit signature (the verify vector)
+    * @param bandKeys     one plane's four 80-char adaptive band keys
+    * @param bands        band keys per payload (4 per plane), the dial's
+    *                     bands-per-doc
+    * @param rule         the verify rule
+    * @param twinResidue  the planted re-encode twin's residue (doc_id + 10000)
+    * @param deltaResidue the probe delta batch's residue (doc_id + 40000) */
+  final case class Modality(
+      name: String,
+      mime: Column => Column,
+      byteFloor: Int,
+      planes: Array[Byte] => Seq[Array[Int]],
+      planeFloor: Int,
+      code: Int => Int,
+      signature: Array[Int] => Array[Int],
+      bandKeys: Array[Int] => Array[String],
+      bands: Int,
+      rule: VerifyRule,
+      twinResidue: Int,
+      deltaResidue: Int)
+
+  /** dHash-64 of the luma plane ([[lumaPlane]]). */
+  val Image: Modality = Modality("image", _ === "image/png", 72,
+    b => Seq(lumaPlane(b)), 72, x => x, dhash4x16, dhashBandKeys, 4,
+    HammingRule, twinResidue = 17, deltaResidue = 11)
+
+  /** The energy-difference fingerprint of the |sample| magnitudes
+    * ([[samplePlane]], folded by `abs` AFTER the perturbation). */
+  val Audio: Modality = Modality("audio", _ === "audio/wav", 85,
+    b => Seq(samplePlane(b)), 85, x => math.abs(x), afp4x16, afpBandKeys, 4,
+    HammingRule, twinResidue = 13, deltaResidue = 9)
+
+  /** dHash-64 of each of 3 sampled luma frames ([[videoFramePlanes]]):
+    * 12 band keys, frame f's signature at v(4f..4f+3). */
+  val Video: Modality = Modality("video", _.startsWith("video/"), 216,
+    videoFramePlanes, 72, x => x, dhash4x16, dhashBandKeys, 12,
+    FramesRule, twinResidue = 17, deltaResidue = 7)
+
+  private val Modalities = Seq(Image, Audio, Video)
+
+  /** The signing pass, ONE decoder-shaped mapPartitions over a (doc_id,
+    * media) frame: each payload decodes once, and each `(shift, residue)`
+    * copy signs the decoded planes perturbed by +1 at every global sample
+    * index ≡ 0 (mod residue) — residue 0 leaves them as decoded — then
+    * mapped through the modality's code: (doc_id + shift, v, bk), v the
+    * planes' signatures and bk their band keys, concatenated in plane
+    * order. The perturbation models a RE-ENCODE (compression noise,
+    * gain ripple), which byte-grain md5 (q22) never matches and the
+    * box-filtered signatures absorb; signing base and twin off one decode
+    * in one pass keeps the scan single at 100 TB. On the video stub leg,
+    * sample i of frame f is byte f·L + i, so the global index walks the
+    * historical whole-stream residues. Payloads under either floor emit
+    * nothing. The default copy is the payload as it arrived — the online
+    * population is whatever arrives. */
+  private def hashesOf(m: Modality, frame: DataFrame,
+                       copies: Seq[(Long, Int)] = Seq(0L -> 0)): DataFrame = {
+    val s = frame.sparkSession
     import s.implicits._
-    corpus
-      .filter(col("mime") === "image/png" && length(col("media")) >= 72)
-      .select(col("doc_id"), col("media"))
+    frame.select(col("doc_id").cast("long"), col("media"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val base = lumaPlane(bytes)
-          val n = base.length
-          if (n < 72) Iterator.empty
-          else {
-            val twin = new Array[Int](n)
-            var i = 0
-            while (i < n) {
-              twin(i) = if (i % 17 == 0) base(i) + 1 else base(i)
-              i += 1
-            }
-            Iterator((id, dhash4x16(base), dhashBandKeys(base)),
-              (id + 10000L, dhash4x16(twin), dhashBandKeys(twin)))
-          }
+      .mapPartitions(_.flatMap { case (id, bytes) =>
+        codesOf(m, bytes, copies.map(_._2)).zip(copies).map { case (codes, (shift, _)) =>
+          (id + shift, codes.flatMap(m.signature(_)).toArray, codes.flatMap(m.bandKeys(_)).toArray)
         }
-      }
+      })
       .toDF("doc_id", "v", "bk")
   }
 
-  private[graft] def imageHashes(s: SparkSession, d: String): DataFrame =
-    imageHashesOf(mediaCorpus(s, d))
+  /** Per residue, one payload's code planes ([[hashesOf]]'s perturbation
+    * and code map); none under either floor. */
+  private def codesOf(m: Modality, bytes: Array[Byte],
+                      residues: Seq[Int]): Seq[Seq[Array[Int]]] =
+    if (bytes.length < m.byteFloor) Nil
+    else {
+      val planes = m.planes(bytes)
+      if (planes.exists(_.length < m.planeFloor)) Nil
+      else residues.map { r =>
+        var o = 0 // global sample index of the plane's first sample
+        planes.map { p =>
+          val c = new Array[Int](p.length)
+          var i = 0
+          while (i < p.length) {
+            c(i) = m.code(if (r > 0 && (o + i) % r == 0) p(i) + 1 else p(i))
+            i += 1
+          }
+          o += p.length
+          c
+        }
+      }
+    }
+
+  /** The modality's slice of a media corpus: its mime, at or above its
+    * byte floor (a length filter the scan pushes down). */
+  private def sliceOf(m: Modality, corpus: DataFrame): DataFrame =
+    corpus.filter(m.mime(col("mime")) && length(col("media")) >= m.byteFloor)
+
+  /** The slice and its planted re-encode twins, signed: the population
+    * the q107/q110/q111/q113 pair chains and the q136b/q138b/q139b
+    * indexes cover. */
+  private[graft] def corpusHashes(m: Modality, corpus: DataFrame): DataFrame =
+    hashesOf(m, sliceOf(m, corpus), Seq(0L -> 0, 10000L -> m.twinResidue))
 
   /** The width-`w` prefix of band-key string `x` as the candidate-join
     * shuffle key: a PACKED LONG (`graft_bits2long` — injective for
@@ -538,10 +657,10 @@ object MediaOps {
 
   /** The q107 pair chain from a (persisted) hash frame: adaptive-width
     * Hamming band keys → triangle-capped band-collision candidates →
-    * exact Hamming ≤ 6 (the verify stays on the 64-bit v — the dial
+    * modality `m`'s verify rule over the signature vectors v (the dial
     * moves CANDIDATE volume, never the output's distance semantics).
     * Shared by q107 (pair surface), q110 (clustering consumes the pairs
-    * as edges) and q117 (caption audit on the pair surface).
+    * as edges), q111, q113 and q117 (caption audit on the pair surface).
     *
     * `oneBitProbe` (r17): ALSO emit, per band, the `width` one-bit-
     * masked variants of the prefix (each in its own band_idx namespace
@@ -555,7 +674,8 @@ object MediaOps {
     * (BENCH_NOTES_r17.md). */
   private[graft] def imagePairs(s: SparkSession, hashes: DataFrame,
                                 width: Int,
-                                oneBitProbe: Boolean = false): DataFrame = {
+                                oneBitProbe: Boolean = false,
+                                m: Modality = Image): DataFrame = {
     Similarity.withFns(s)
     val bandExpr =
       if (!oneBitProbe)
@@ -571,26 +691,26 @@ object MediaOps {
       }
     val bands = hashes.selectExpr("doc_id", bandExpr)
     val cand = Dedup.boundedBandCandidates(s, bands, cap = 1024)
-    cand
-      .join(hashes.select(col("doc_id").as("doc_a"), col("v").as("va")), Seq("doc_a"))
-      .join(hashes.select(col("doc_id").as("doc_b"), col("v").as("vb")), Seq("doc_b"))
-      .selectExpr("doc_a", "doc_b",
-        """aggregate(zip_with(va, vb,
-          |  (x, y) -> bit_count(cast(x as bigint) ^ cast(y as bigint))),
-          |  cast(0 as bigint), (a, h) -> a + cast(h as bigint)) as hamming"""
-          .stripMargin.replace("\n", " "))
-      .filter(col("hamming") <= 6)
+    m.rule.verify(cand
+        .join(hashes.select(col("doc_id").as("doc_a"), col("v").as("va")), Seq("doc_a"))
+        .join(hashes.select(col("doc_id").as("doc_b"), col("v").as("vb")), Seq("doc_b")),
+      "doc_a", "doc_b")
+  }
+
+  /** The near-dup pair surface of one modality's twin-planted corpus
+    * (q107, q111, q113): signatures → [[imagePairs]] at the dialed width
+    * → (doc_a, doc_b, score, is_twin). */
+  private def dedupPairs(s: SparkSession, d: String, m: Modality, tag: String): DataFrame = {
+    // persisted: feeds the width probe, the band explode and BOTH
+    // verify-join sides
+    val hashes = corpusHashes(m, mediaCorpus(s, d)).transform(Tables.maybePersist)
+    imagePairs(s, hashes, cachedBandWidth(tag, d, hashes, m.bands), m = m)
+      .selectExpr("doc_a", "doc_b", m.rule.score, "doc_b = doc_a + 10000 as is_twin")
   }
 
   /** q107 — image near-dup pairs: dHash → adaptive-width Hamming bands
     * → triangle-capped band-collision candidates → exact Hamming ≤ 6. */
-  def imageDedup(s: SparkSession, d: String): DataFrame = {
-    // persisted: feeds the width probe, the band explode and BOTH
-    // verify-join sides
-    val hashes = imageHashes(s, d).transform(Tables.maybePersist)
-    imagePairs(s, hashes, cachedBandWidth("q107", d, hashes, bandsPerDoc = 4))
-      .selectExpr("doc_a", "doc_b", "hamming", "doc_b = doc_a + 10000 as is_twin")
-  }
+  def imageDedup(s: SparkSession, d: String): DataFrame = dedupPairs(s, d, Image, "q107")
 
   // ---------------------------------------------------------------------
   // q110 — IMAGE CLUSTERING + CANONICAL KEEP (r14): the q41→q70
@@ -609,15 +729,14 @@ object MediaOps {
   // ---------------------------------------------------------------------
 
   def imageKeep(s: SparkSession, d: String): DataFrame = {
-    val base = mediaCorpus(s, d)
-      .filter(col("mime") === "image/png" && length(col("media")) >= 72)
+    val base = sliceOf(Image, mediaCorpus(s, d))
       .select(col("doc_id"), length(col("media")).cast("long").as("n_bytes"))
     // twins carry the same byte length (the +1 luma perturbation is
     // value-level, not length-level)
     val lens = base.unionAll(
       base.select((col("doc_id") + 10000).as("doc_id"), col("n_bytes")))
-    val hashes = imageHashes(s, d).transform(Tables.maybePersist)
-    val pairs = imagePairs(s, hashes, cachedBandWidth("q107", d, hashes, bandsPerDoc = 4))
+    val hashes = corpusHashes(Image, mediaCorpus(s, d)).transform(Tables.maybePersist)
+    val pairs = imagePairs(s, hashes, cachedBandWidth("q107", d, hashes, Image.bands))
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .localCheckpoint()
     val lab = Dedup.connectedComponents(
@@ -811,26 +930,7 @@ object MediaOps {
           reader.setInput(iis, false, true)
           val n = reader.getNumImages(true)
           if (n <= 0) None
-          else Some((0 until n).map { f =>
-            val img = reader.read(f)
-            val w = img.getWidth
-            val h = img.getHeight
-            val out = new Array[Int](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                val r = (rgb >> 16) & 0xFF
-                val g = (rgb >> 8) & 0xFF
-                val b = rgb & 0xFF
-                out(y * w + x) = (299 * r + 587 * g + 114 * b) / 1000
-                x += 1
-              }
-              y += 1
-            }
-            out
-          })
+          else Some((0 until n).map(f => lumaOf(reader.read(f))))
         } finally {
           reader.dispose()
           iis.close()
@@ -863,77 +963,10 @@ object MediaOps {
         }
       }
 
-  /** Per-video frame dHashes: (doc_id, v, bk) with v = 3 frames × 4
-    * bands flattened (frame f's bands at positions 4f..4f+3) and bk the
-    * 12 adaptive band-key strings in the same order ([[dhashBandKeys]]
-    * of each sampled frame). The frame-sample step is
-    * [[videoFramePlanes]] — real ImageIO frame decode for genuine
-    * animated GIFs, byte-stride thirds for the synthetic fixture; the
-    * re-encode twin perturbs the DECODED planes (+1 luma every 17th
-    * sample — on the stub leg byte-identical to the historical
-    * whole-stream form, since sample i of frame f is byte f·L+i and
-    * (f·L+i) % 17 walks the same residues). */
-  private[graft] def videoFrameHashesOf(corpus: DataFrame): DataFrame = {
-    val s = corpus.sparkSession
-    import s.implicits._
-    corpus
-      .filter(col("mime").startsWith("video/") && length(col("media")) >= 216)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val planes = videoFramePlanes(bytes)
-          if (planes.exists(_.length < 72)) Iterator.empty
-          else {
-            def sign(fr: Seq[Array[Int]]): (Array[Int], Array[String]) =
-              (fr.flatMap(dhash4x16).toArray, fr.flatMap(dhashBandKeys).toArray)
-            val off = planes.scanLeft(0)(_ + _.length) // global sample index
-            val twins = planes.zip(off).map { case (p, o) =>
-              val t = new Array[Int](p.length)
-              var i = 0
-              while (i < p.length) {
-                t(i) = if ((o + i) % 17 == 0) p(i) + 1 else p(i)
-                i += 1
-              }
-              t
-            }
-            val (bv, bb) = sign(planes)
-            val (tv, tb) = sign(twins)
-            Iterator((id, bv, bb), (id + 10000L, tv, tb))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  private[graft] def videoFrameHashes(s: SparkSession, d: String): DataFrame =
-    videoFrameHashesOf(mediaCorpus(s, d))
-
   /** q111 — video near-dup pairs: frame dHashes → 12 adaptive-width
     * Hamming band keys → triangle-capped candidates → per-frame exact
     * Hamming, matched when ≥ 2 of 3 aligned frames verify. */
-  def videoDedup(s: SparkSession, d: String): DataFrame = {
-    Similarity.withFns(s)
-    val hashes = videoFrameHashes(s, d).transform(Tables.maybePersist)
-    val width = cachedBandWidth("q111", d, hashes, bandsPerDoc = 12)
-    val bands = hashes.selectExpr("doc_id",
-      s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val cand = Dedup.boundedBandCandidates(s, bands, cap = 1024)
-    cand
-      .join(hashes.select(col("doc_id").as("doc_a"), col("v").as("va")), Seq("doc_a"))
-      .join(hashes.select(col("doc_id").as("doc_b"), col("v").as("vb")), Seq("doc_b"))
-      .selectExpr("doc_a", "doc_b",
-        """cast(size(filter(sequence(0, 2), f ->
-          |  aggregate(transform(sequence(0, 3), b ->
-          |    bit_count(cast(element_at(va, f * 4 + b + 1) as bigint)
-          |      ^ cast(element_at(vb, f * 4 + b + 1) as bigint))),
-          |    cast(0 as bigint), (a, x) -> a + cast(x as bigint)) <= 6))
-          |as bigint) as matched_frames"""
-          .stripMargin.replace("\n", " "))
-      .filter(col("matched_frames") >= 2)
-      .selectExpr("doc_a", "doc_b", "matched_frames",
-        "doc_b = doc_a + 10000 as is_twin")
-  }
+  def videoDedup(s: SparkSession, d: String): DataFrame = dedupPairs(s, d, Video, "q111")
 
   val videoDedupSql: String =
     """WITH vids AS (SELECT doc_id, text, length(text) AS n FROM documents
@@ -1113,53 +1146,10 @@ object MediaOps {
       out
     }
 
-  /** The audio corpus + its re-encoded twins, fingerprinted:
-    * (doc_id, v, bk) with v the 4×16-bit fingerprint bands and bk the
-    * adaptive band keys ([[afpBandKeys]]) — one decoder-shaped
-    * mapPartitions pass signs base AND twin (the q107 discipline). The
-    * decode step is [[samplePlane]] — real for genuine WAVs, stub for
-    * the synthetic fixture; the fingerprint precondition (≥ 85
-    * samples) guards on the DECODED stream, not the byte length. */
-  private[graft] def audioFingerprintsOf(corpus: DataFrame): DataFrame = {
-    val s = corpus.sparkSession
-    import s.implicits._
-    corpus
-      .filter(col("mime") === "audio/wav" && length(col("media")) >= 85)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val samples = samplePlane(bytes)
-          val n = samples.length
-          if (n < 85) Iterator.empty
-          else {
-            val base = new Array[Int](n)
-            val twin = new Array[Int](n)
-            var i = 0
-            while (i < n) {
-              base(i) = math.abs(samples(i))
-              twin(i) = math.abs(samples(i) + (if (i % 13 == 0) 1 else 0))
-              i += 1
-            }
-            Iterator((id, afp4x16(base), afpBandKeys(base)),
-              (id + 10000L, afp4x16(twin), afpBandKeys(twin)))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  private[graft] def audioFingerprints(s: SparkSession, d: String): DataFrame =
-    audioFingerprintsOf(mediaCorpus(s, d))
-
   /** q113 — audio near-dup pairs: energy-difference fingerprint →
     * adaptive-width Hamming bands → triangle-capped candidates → exact
     * Hamming ≤ 6 (the [[imagePairs]] chain over the fingerprint frame). */
-  def audioDedup(s: SparkSession, d: String): DataFrame = {
-    val hashes = audioFingerprints(s, d).transform(Tables.maybePersist)
-    imagePairs(s, hashes, cachedBandWidth("q113", d, hashes, bandsPerDoc = 4))
-      .selectExpr("doc_a", "doc_b", "hamming", "doc_b = doc_a + 10000 as is_twin")
-  }
+  def audioDedup(s: SparkSession, d: String): DataFrame = dedupPairs(s, d, Audio, "q113")
 
   val audioDedupSql: String =
     s"""WITH auds AS (SELECT doc_id, text, length(text) AS n FROM documents
@@ -1228,31 +1218,13 @@ object MediaOps {
   // pair rows. One new exchange beyond q107's chain per join side.
   // ---------------------------------------------------------------------
 
-  /** Base images + RE-CAPTIONED twins: identical bytes → identical
-    * dHash and band keys (computed once, emitted twice). */
-  private def recaptionedHashes(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    mediaCorpus(s, d)
-      .filter(col("mime") === "image/png" && length(col("media")) >= 72)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val codes = new Array[Int](bytes.length)
-          var i = 0
-          while (i < bytes.length) { codes(i) = bytes(i) & 0xFF; i += 1 }
-          val v = dhash4x16(codes)
-          val bk = dhashBandKeys(codes)
-          Iterator((id, v, bk), (id + 10000L, v, bk))
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
   def crossModalAudit(s: SparkSession, d: String): DataFrame = {
-    val hashes = recaptionedHashes(s, d).transform(Tables.maybePersist)
+    // base images + RE-CAPTIONED twins: identical bytes → identical
+    // dHash and band keys, so the twin copy is unperturbed (residue 0)
+    val hashes = hashesOf(Image, sliceOf(Image, mediaCorpus(s, d)),
+      Seq(0L -> 0, 10000L -> 0)).transform(Tables.maybePersist)
     val pairs = imagePairs(s, hashes,
-      cachedBandWidth("q117", d, hashes, bandsPerDoc = 4))
+      cachedBandWidth("q117", d, hashes, Image.bands))
     val imgDocs = Tables.fanOut(Tables.documents(s, d), "doc_id")
       .filter(col("doc_id") % 3 === 0 && length(col("text")) >= 72)
     val caps = imgDocs.selectExpr("doc_id", "split(text, ' ') as toks")
@@ -1313,105 +1285,55 @@ object MediaOps {
        |SELECT doc_a, doc_b, hamming, jaccard, jaccard < 0.5 AS caption_mismatch
        |FROM jac ORDER BY doc_a, doc_b""".stripMargin
 
-  /** The fitted image DENYLIST index (the q85 DenyIndex discipline at
-    * image grain — the production shape of a perceptual-hash blocklist:
-    * the deny side is a bounded curated list, so it is closure-sized BY
+  /** A fitted DENYLIST index (the q85 DenyIndex discipline at media
+    * grain — the production shape of a perceptual-hash blocklist: the
+    * deny side is a bounded curated list, so it is closure-sized BY
     * CONSTRUCTION, the same contract as the classifier weights and the
-    * q85 deny bands; the unbounded-corpus image shape is q107's batch
-    * chain). `bands(k)`: band-k value → deny ids; `hashes`: deny id →
-    * its 4 band values. */
-  case class ImageDenyIndex(bands: Array[Map[Int, Array[Long]]],
+    * q85 deny bands; the unbounded-corpus shape is the batch pair
+    * chain). `modality`: what the verdict signs with; `bands(k)`:
+    * band-k value → deny ids; `hashes`: deny id → its 4 band values. */
+  case class MediaDenyIndex(modality: Modality, bands: Array[Map[Int, Array[Long]]],
                             hashes: Map[Long, Array[Int]])
 
-  /** Fit the deny index over the doc_id % 20 == 0 image slice with the
-    * PRODUCTION hashing stage (shared [[dhash4x16]], not a
-    * reimplementation). */
-  def fitImageDenyIndex(s: SparkSession, d: String): ImageDenyIndex = {
+  /** Fit the deny index of a 4-band modality over its doc_id % 20 == 0
+    * slice with the PRODUCTION signing pass ([[hashesOf]]). */
+  def fitDenyIndex(s: SparkSession, d: String, m: Modality): MediaDenyIndex = {
+    require(m.bands == 4, s"a deny index probes 4 bands; ${m.name} carries ${m.bands}")
     import s.implicits._
-    val rows = mediaCorpus(s, d)
-      .filter(col("mime") === "image/png" && length(col("media")) >= 72 &&
-        col("doc_id") % 20 === 0)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val codes = new Array[Int](bytes.length)
-          var i = 0
-          while (i < bytes.length) { codes(i) = bytes(i) & 0xFF; i += 1 }
-          (id, dhash4x16(codes))
-        }
-      }
-      .collect()
+    val rows = hashesOf(m, sliceOf(m, mediaCorpus(s, d)).filter(col("doc_id") % 20 === 0))
+      .select("doc_id", "v").as[(Long, Array[Int])].collect()
     val bandMaps = Array.tabulate(4) { b =>
       rows.groupBy(_._2(b)).view
         .mapValues(_.map(_._1).sorted).toMap
     }
-    ImageDenyIndex(bandMaps, rows.map(t => t._1 -> t._2).toMap)
+    MediaDenyIndex(m, bandMaps, rows.toMap)
   }
 
-  /** q107's check as a stateless per-row transform (the
+  /** The batch chain's check as a stateless per-row transform (the
     * fuzzyDecontamVerdict discipline): route any batch or streaming
-    * (doc_id, media) frame against the fitted denylist — dHash the
-    * payload, probe the 4 band maps for candidates, verify exact
-    * Hamming ≤ 6. An image drops online iff the batch chain would pair
-    * it with a deny image (spec-pinned against a driver model).
-    * Images under 72 luma samples carry no grid and always pass. */
-  def imageDenyVerdict(df: DataFrame, idx: ImageDenyIndex): DataFrame = {
+    * (doc_id, media) frame against the fitted denylist — decode, code
+    * and sign the payload exactly as [[hashesOf]] does under the index's
+    * modality, probe the 4 band maps for candidates, verify exact
+    * Hamming ≤ 6. A payload drops online iff the batch chain would pair
+    * it with a deny item (spec-pinned against a driver model, genuine
+    * PNGs included). Payloads under either floor carry no grid and
+    * always pass. */
+  def denyVerdict(df: DataFrame, idx: MediaDenyIndex): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
     df.select(col("doc_id").cast("long"), col("media"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          if (bytes.length < 72) (id, 0, false)
-          else {
-            val codes = new Array[Int](bytes.length)
-            var i = 0
-            while (i < bytes.length) { codes(i) = bytes(i) & 0xFF; i += 1 }
-            val (n, hit) = denyProbe(dhash4x16(codes), idx)
-            (id, n, hit)
-          }
+      .mapPartitions(_.map { case (id, bytes) =>
+        codesOf(idx.modality, bytes, Seq(0)).headOption.fold((id, 0, false)) { codes =>
+          val (n, hit) = denyProbe(codes.flatMap(idx.modality.signature(_)).toArray, idx)
+          (id, n, hit)
         }
-      }
+      })
       .toDF("doc_id", "n_candidates", "dropped")
   }
 
-  /** Fit the AUDIO deny index over the doc_id % 20 == 0 audio slice with
-    * the PRODUCTION fingerprint stage (shared [[afp4x16]]) — the same
-    * bounded-curated-list contract as [[fitImageDenyIndex]], so the
-    * index shape (band value → deny ids, deny id → 4 band values) is
-    * shared too. */
-  def fitAudioDenyIndex(s: SparkSession, d: String): ImageDenyIndex = {
-    import s.implicits._
-    val rows = mediaCorpus(s, d)
-      .filter(col("mime") === "audio/wav" && length(col("media")) >= 85 &&
-        col("doc_id") % 20 === 0)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          // the PRODUCTION sample stage ([[samplePlane]] — real WAV
-          // decode or stub), |magnitudes|, the shared [[afp4x16]]
-          val samples = samplePlane(bytes)
-          if (samples.length < 85) Iterator.empty
-          else {
-            val codes = new Array[Int](samples.length)
-            var i = 0
-            while (i < samples.length) { codes(i) = math.abs(samples(i)); i += 1 }
-            Iterator((id, afp4x16(codes)))
-          }
-        }
-      }
-      .collect()
-    val bandMaps = Array.tabulate(4) { b =>
-      rows.groupBy(_._2(b)).view
-        .mapValues(_.map(_._1).sorted).toMap
-    }
-    ImageDenyIndex(bandMaps, rows.map(t => t._1 -> t._2).toMap)
-  }
-
   /** Band-probe + exact-Hamming verify of one 4×16-bit fingerprint
-    * against a deny index — the per-row kernel both deny verdicts share.
+    * against a deny index — the per-row kernel of [[denyVerdict]].
     * MULTI-PROBE (r17, the multi-index-hashing guarantee): each band is
     * probed at its exact value AND all 16 one-bit flips. If every band
     * differed by ≥ 2 bits the total would be ≥ 8, so any payload within
@@ -1426,7 +1348,7 @@ object MediaOps {
     * ≤ 0.1% at replica scale (e100) — BENCH_NOTES_r17 — and a 17× band-stage
     * volume multiplier is not a default you ship at 10⁹ rows.)
     * Returns (n_candidates, dropped). */
-  private[graft] def denyProbe(v: Array[Int], idx: ImageDenyIndex): (Int, Boolean) = {
+  private[graft] def denyProbe(v: Array[Int], idx: MediaDenyIndex): (Int, Boolean) = {
     val cands = scala.collection.mutable.SortedSet.empty[Long]
     var b = 0
     while (b < 4) {
@@ -1448,30 +1370,6 @@ object MediaOps {
     (cands.size, hit)
   }
 
-  /** The q113 online form: audio deny fingerprints fit offline (bounded
-    * list), per-row fingerprint→band-probe→Hamming-verify in the stream
-    * with the SHARED [[afp4x16]] stage — batch or streaming input. */
-  def audioDenyVerdict(df: DataFrame, idx: ImageDenyIndex): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val samples = samplePlane(bytes) // real WAV decode or stub
-          if (samples.length < 85) (id, 0, false)
-          else {
-            val codes = new Array[Int](samples.length)
-            var i = 0
-            while (i < samples.length) { codes(i) = math.abs(samples(i)); i += 1 }
-            val (n, hit) = denyProbe(afp4x16(codes), idx)
-            (id, n, hit)
-          }
-        }
-      }
-      .toDF("doc_id", "n_candidates", "dropped")
-  }
-
   // ---------------------------------------------------------------------
   // q136 — INCREMENTAL MEDIA DEDUP against a STANDING PERCEPTUAL INDEX
   // (r17): the q102/q119 nightly-crawl discipline at media grain — the
@@ -1480,7 +1378,7 @@ object MediaOps {
   // ([[buildMediaIndex]]): `path/vecs` = (doc_id, 4×16-bit dHash v),
   // `path/bands` = (doc_id, band_idx, FULL 80-char band key — prefix
   // keys make the stored index width-agnostic), and `path/stat` = the
-  // volume-dialed width, priced AT BUILD TIME and persisted WITH the
+  // modality and the volume-dialed width, priced AT BUILD TIME and persisted WITH the
   // index (the standing-statistic discipline made literal: probes read
   // the artifact, never re-run the volume probe). Each delta batch
   // (re-encodes of doc_id % 5 = 2 pngs: +1 luma every 11th decoded
@@ -1514,10 +1412,12 @@ object MediaOps {
   private[graft] def mediaIndexPathFor(d: String): String =
     mediaIndexScratch("q136", d)
 
-  /** Once-per-life build from any (doc_id, v, bk) hash frame: vecs +
-    * FULL-width band keys, plus a 1-row stat artifact carrying the
-    * volume-dialed width, the family's bands-per-doc, and the population
-    * the width was priced against (`priced_n` — [[mergeMediaBatchIntoIndex]]
+  /** Once-per-life build from any (doc_id, v, bk) hash frame of modality
+    * `m`: vecs + FULL-width band keys, plus a 1-row stat artifact
+    * carrying the volume-dialed width, the modality (which fixes the
+    * bands per doc and the verify rule every later probe, merge and
+    * compaction reads off this one row) and the population the width
+    * was priced against (`priced_n` — [[mergeMediaBatchIntoIndex]]
     * re-prices the dial once ingest growth doubles it, VERDICT r17 #1).
     * Returns the read-back band-row count (one action drives the write
     * and proves the read path). Stat is written FIRST (r17 advice): the
@@ -1527,16 +1427,16 @@ object MediaOps {
     * racing a running ingest merge on the same path must serialize like
     * every other writer (r17 advice, medium). */
   private[graft] def buildIndexFrom(hashes0: DataFrame, path: String,
-                                    bandsPerDoc: Int = 4): Long =
+                                    m: Modality = Image): Long =
     IndexLifecycle.withWriter(hashes0.sparkSession, path) {
       val s = hashes0.sparkSession
       import s.implicits._
       val hashes = hashes0.transform(Tables.maybePersist)
       val (width, nn) = adaptiveBandWidthAndCount(
         hashes.selectExpr("doc_id", "posexplode(bk) as (band_idx, band_hash)"),
-        bandsPerDoc)
-      val n = nn / bandsPerDoc // the dial probe already aggregated the rows
-      Seq((width, bandsPerDoc, n)).toDF("width", "bands_per_doc", "priced_n")
+        m.bands)
+      val n = nn / m.bands // the dial probe already aggregated the rows
+      Seq((width, m.name, n)).toDF("width", "modality", "priced_n")
         .write.mode("overwrite").parquet(s"$path/stat")
       hashes.select(col("doc_id"), col("v"))
         .write.mode("overwrite").parquet(s"$path/vecs")
@@ -1547,100 +1447,42 @@ object MediaOps {
       IndexLifecycle.parquetFooterRows(s, s"$path/bands")
     }
 
-  /** The stored dial width of an index artifact (the stat's first leg —
-    * every probe/merge reads the width through here). */
+  /** The stat of an ALREADY-RESOLVED version root — (dial width,
+    * modality, priced_n) in one read. Probes resolve the live root
+    * exactly once at plan assembly (r19 advice: a compaction committing
+    * mid-plan must not mix versions within one probe, the resolve-once
+    * discipline `probeAnnIndex` pins) and thread it into every read. */
+  private def statAt(s: SparkSession, root: String): (Int, Modality, Long) = {
+    val st = IndexLifecycle.readStamped(s, s"$root/stat")
+      .select("width", "modality", "priced_n").head()
+    val m = Modalities.find(_.name == st.getString(1)).getOrElse(
+      throw new IllegalStateException(s"$root/stat names no modality: ${st.getString(1)}"))
+    (st.getInt(0), m, st.getLong(2))
+  }
+
+  /** The stored dial width of an index artifact. */
   private[graft] def storedWidth(s: SparkSession, path: String): Int =
-    storedWidthAt(s, IndexLifecycle.resolveIndexRoot(s, path))
+    statAt(s, IndexLifecycle.resolveIndexRoot(s, path))._1
 
-  /** [[storedWidth]] against an ALREADY-RESOLVED version root — probes
-    * resolve the live root exactly once at plan assembly (r19 advice: a
-    * compaction committing mid-plan must not mix versions within one
-    * probe, the resolve-once discipline `probeAnnIndex` pins) and thread
-    * the resolved root into every artifact read. */
-  private[graft] def storedWidthAt(s: SparkSession, root: String): Int =
-    IndexLifecycle.readStamped(s, s"$root/stat").select("width").head().getInt(0)
-
-  /** q136b: the IMAGE-grain index (q107's hash frame — base + twins,
-    * the admitted population). */
+  /** q136b / q138b / q139b: the image, audio and video indexes over their
+    * twin-planted corpus slices — one artifact layout, dial, probe
+    * machinery and forget lifecycle; the stat records the modality. */
   def buildMediaIndex(s: SparkSession, d: String, path: String): Long =
-    buildIndexFrom(imageHashes(s, d), path)
-
-  /** q138b: the AUDIO-grain index (q113's fingerprint frame) — the same
-    * artifact layout, dial, probe machinery, and forget lifecycle; only
-    * the signing kernel differs. */
+    buildIndexFrom(corpusHashes(Image, mediaCorpus(s, d)), path, Image)
   def buildAudioIndex(s: SparkSession, d: String, path: String): Long =
-    buildIndexFrom(audioFingerprints(s, d), path)
-
-  /** q139b: the VIDEO-grain index (q111's frame-hash frame — 12 bands
-    * and a 12-int hash vector per video; the dial budgets 12 bands per
-    * doc). Same artifacts, same forget lifecycle; the PROBE differs
-    * only in the verify rule (frame-aligned ≥ 2-of-3, not scalar
-    * Hamming — [[videoIndexProbeStored]]). */
+    buildIndexFrom(corpusHashes(Audio, mediaCorpus(s, d)), path, Audio)
   def buildVideoIndex(s: SparkSession, d: String, path: String): Long =
-    buildIndexFrom(videoFrameHashes(s, d), path, bandsPerDoc = 12)
+    buildIndexFrom(corpusHashes(Video, mediaCorpus(s, d)), path, Video)
 
-  /** The delta batch: re-encoded copies (+1 luma every 11th decoded
-    * sample, delta_id = doc_id + 40000) of the doc_id % 5 = 2 pngs —
-    * hashed through the same decode→dhash kernels as the index. */
-  private[graft] def imageDeltaHashes(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    mediaCorpus(s, d)
-      .filter(col("mime") === "image/png" && length(col("media")) >= 72 &&
-        col("doc_id") % 5 === 2)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val base = lumaPlane(bytes)
-          val n = base.length
-          if (n < 72) Iterator.empty
-          else {
-            val re = new Array[Int](n)
-            var i = 0
-            while (i < n) {
-              re(i) = if (i % 11 == 0) base(i) + 1 else base(i)
-              i += 1
-            }
-            Iterator((id + 40000L, dhash4x16(re), dhashBandKeys(re)))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
+  /** The probe delta batch: re-encoded copies of the doc_id % 5 = 2
+    * slice at the modality's delta residue (+1 every 11th / 9th / 7th
+    * decoded sample for image / audio / video — residues apart from the
+    * twins' 17 and 13, so delta rows are a third population), delta_id =
+    * doc_id + 40000, signed through the same kernels as the index. */
+  private def deltaHashes(s: SparkSession, d: String, m: Modality): DataFrame =
+    hashesOf(m, sliceOf(m, mediaCorpus(s, d)).filter(col("doc_id") % 5 === 2),
+      Seq(40000L -> m.deltaResidue))
 
-  /** The audio delta batch: re-encodes (+1 to every 9th SAMPLE before
-    * the magnitude fold — a third residue next to the twin's 13 and the
-    * image delta's 11; delta_id = doc_id + 40000) of the %5==2 wavs. */
-  private[graft] def audioDeltaHashes(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    mediaCorpus(s, d)
-      .filter(col("mime") === "audio/wav" && length(col("media")) >= 85 &&
-        col("doc_id") % 5 === 2)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val samples = samplePlane(bytes)
-          val n = samples.length
-          if (n < 85) Iterator.empty
-          else {
-            val re = new Array[Int](n)
-            var i = 0
-            while (i < n) {
-              re(i) = math.abs(samples(i) + (if (i % 9 == 0) 1 else 0))
-              i += 1
-            }
-            Iterator((id + 40000L, afp4x16(re), afpBandKeys(re)))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  /** Probe an arbitrary delta hash frame against the STORED index:
-    * prefixes cut at the stat artifact's width on both sides, delta
-    * side broadcast throughout — family-agnostic (q136 image / q138
-    * audio share it verbatim). */
   /** The probe's candidate stage alone — delta bands broadcast onto the
     * index band scan, prefixes cut at the STORED width: distinct
     * (delta_id, idx_id). Split out so the growth/re-pricing spec can
@@ -1648,7 +1490,7 @@ object MediaOps {
   private[graft] def probeCandidates(delta: DataFrame, path: String): DataFrame = {
     val s = delta.sparkSession
     val root = IndexLifecycle.resolveIndexRoot(s, path)
-    probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
+    probeCandidatesAt(delta, path, root, statAt(s, root)._1)
   }
 
   /** [[probeCandidates]] with the version root and width ALREADY
@@ -1670,204 +1512,49 @@ object MediaOps {
       .distinct()
   }
 
+  /** The candidates of `delta` that verify under `m`'s rule against the
+    * live vecs of `root`: (delta_id, idx_id, score), the delta side
+    * broadcast — the one verify join of the probe and the merge. */
+  private def verifiedAt(delta: DataFrame, path: String, root: String,
+                         width: Int, m: Modality): DataFrame =
+    m.rule.verify(probeCandidatesAt(delta, path, root, width)
+        .join(IndexLifecycle.live(mediaFamily, path)(
+            IndexLifecycle.readStamped(delta.sparkSession, s"$root/vecs"))
+            .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
+        .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
+          Seq("delta_id")),
+      "delta_id", "idx_id")
+
+  /** Probe an arbitrary delta hash frame against the STORED index:
+    * prefixes cut at the stat's width on both sides, candidates verified
+    * under the rule of the modality the stat records, and one verdict
+    * per delta — (delta_id, n_matches, best score, is_new), the best
+    * score `best_hamming` (min, 99 when unmatched) for image and audio,
+    * `best_frames` (max, 0) for video. */
   def probeStoredIndexWith(delta0: DataFrame, path: String): DataFrame = {
     val s = delta0.sparkSession
-    Similarity.withFns(s)
     // resolve the live version ONCE: a compaction committing mid-plan
     // must never mix versions inside one probe (old bands joined against
     // new vecs) — the probeAnnIndex resolve-once discipline (r19 advice)
     val root = IndexLifecycle.resolveIndexRoot(s, path)
+    val (width, m, _) = statAt(s, root)
+    val r = m.rule
     val delta = delta0.transform(Tables.maybePersist)
-    val cand = probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
-    val verified = cand
-      .join(IndexLifecycle.live(mediaFamily, path)(
-          IndexLifecycle.readStamped(s, s"$root/vecs"))
-          .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
-      .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
-        Seq("delta_id"))
-      .selectExpr("delta_id", "idx_id",
-        """aggregate(zip_with(va, vb,
-          |  (x, y) -> bit_count(cast(x as bigint) ^ cast(y as bigint))),
-          |  cast(0 as bigint), (a, h) -> a + cast(h as bigint)) as hamming"""
-          .stripMargin.replace("\n", " "))
-      .filter(col("hamming") <= 6)
     delta.select(col("doc_id").as("delta_id"))
-      .join(verified.groupBy("delta_id")
-          .agg(count(lit(1)).as("nm"), min(col("hamming")).as("bh")),
+      .join(verifiedAt(delta, path, root, width, m).groupBy("delta_id")
+          .agg(count(lit(1)).as("nm"), expr(s"${r.pick}(${r.score})").as("b")),
         Seq("delta_id"), "left")
       .selectExpr("delta_id", "cast(coalesce(nm, 0) as bigint) as n_matches",
-        "cast(coalesce(bh, 99) as bigint) as best_hamming", "nm is null as is_new")
+        s"cast(coalesce(b, ${r.none}) as bigint) as ${r.best}", "nm is null as is_new")
   }
 
-  /** q136: the image-grain probe. */
+  /** q136 / q138 / q139: the image, audio and video probes. */
   def mediaIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame =
-    probeStoredIndexWith(imageDeltaHashes(s, d), path)
-
-  /** The video delta batch: re-encodes of the %5==2 videos — +1 luma
-    * on every 7th GLOBAL decoded sample (residues so far: image/video
-    * twin 17, audio twin 13, image delta 11, audio delta 9), hashed
-    * through the q111 frame-sample/dhash kernels. */
-  private[graft] def videoDeltaHashes(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    mediaCorpus(s, d)
-      .filter(col("mime").startsWith("video/") && length(col("media")) >= 216 &&
-        col("doc_id") % 5 === 2)
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val planes = videoFramePlanes(bytes)
-          if (planes.exists(_.length < 72)) Iterator.empty
-          else {
-            val off = planes.scanLeft(0)(_ + _.length)
-            val re = planes.zip(off).map { case (p, o) =>
-              val t = new Array[Int](p.length)
-              var i = 0
-              while (i < p.length) {
-                t(i) = if ((o + i) % 7 == 0) p(i) + 1 else p(i)
-                i += 1
-              }
-              t
-            }
-            Iterator((id + 40000L,
-              re.flatMap(dhash4x16).toArray,
-              re.flatMap(dhashBandKeys).toArray))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  /** q139: the video-grain probe — the q136/q138 band machinery over
-    * the 12-band frame, with q111's FRAME-ALIGNED verify (a video
-    * matches an indexed one when ≥ 2 of 3 aligned frame dHashes sit
-    * within Hamming 6) instead of scalar Hamming. */
-  def videoIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
-    Similarity.withFns(s)
-    val root = IndexLifecycle.resolveIndexRoot(s, path) // resolved ONCE for bands+vecs+stat
-    val width = storedWidthAt(s, root)
-    val delta = videoDeltaHashes(s, d).transform(Tables.maybePersist)
-    val dBands = delta.selectExpr("doc_id as delta_id",
-      s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = IndexLifecycle.live(mediaFamily, path)(
-        IndexLifecycle.readStamped(s, s"$root/bands"))
-      .selectExpr("doc_id as idx_id", "band_idx",
-        s"${packedPrefixExpr("band_hash", width)} as band_hash")
-    val verified = iBands
-      .join(broadcast(dBands), Seq("band_idx", "band_hash"))
-      .select(col("delta_id"), col("idx_id")).distinct()
-      .join(IndexLifecycle.live(mediaFamily, path)(
-          IndexLifecycle.readStamped(s, s"$root/vecs"))
-          .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
-      .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
-        Seq("delta_id"))
-      .selectExpr("delta_id", "idx_id",
-        """cast(size(filter(sequence(0, 2), f ->
-          |  aggregate(transform(sequence(0, 3), b ->
-          |    bit_count(cast(element_at(va, f * 4 + b + 1) as bigint)
-          |      ^ cast(element_at(vb, f * 4 + b + 1) as bigint))),
-          |    cast(0 as bigint), (a, x) -> a + cast(x as bigint)) <= 6))
-          |as bigint) as matched_frames"""
-          .stripMargin.replace("\n", " "))
-      .filter(col("matched_frames") >= 2)
-    delta.select(col("doc_id").as("delta_id"))
-      .join(verified.groupBy("delta_id")
-          .agg(count(lit(1)).as("nm"), max(col("matched_frames")).as("bf")),
-        Seq("delta_id"), "left")
-      .selectExpr("delta_id", "cast(coalesce(nm, 0) as bigint) as n_matches",
-        "cast(coalesce(bf, 0) as bigint) as best_frames", "nm is null as is_new")
-  }
-
-  /** q138: the audio-grain probe — the identical machinery over the
-    * audio index and the audio delta. */
+    probeStoredIndexWith(deltaHashes(s, d, Image), path)
   def audioIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame =
-    probeStoredIndexWith(audioDeltaHashes(s, d), path)
-
-  /** Base-only hash frame of an arbitrary (doc_id, media) payload frame
-    * — no planted twins; the ONLINE population is whatever arrives.
-    * Shares the decode→dhash kernels with [[imageHashesOf]]. */
-  private[graft] def imageHashFrame(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val plane = lumaPlane(bytes)
-          if (plane.length < 72) Iterator.empty
-          else Iterator((id, dhash4x16(plane), dhashBandKeys(plane)))
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  /** [[imageHashFrame]] at audio grain (afp kernels over the decoded
-    * magnitude stream). */
-  private[graft] def audioHashFrame(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val samples = samplePlane(bytes)
-          if (samples.length < 85) Iterator.empty
-          else {
-            val codes = new Array[Int](samples.length)
-            var i = 0
-            while (i < samples.length) { codes(i) = math.abs(samples(i)); i += 1 }
-            Iterator((id, afp4x16(codes), afpBandKeys(codes)))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  /** [[imageHashFrame]] at video grain (12-band frame-hash layout). */
-  private[graft] def videoHashFrame(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          if (bytes.length < 216) Iterator.empty
-          else {
-            val planes = videoFramePlanes(bytes)
-            if (planes.exists(_.length < 72)) Iterator.empty
-            else Iterator((id,
-              planes.flatMap(dhash4x16).toArray,
-              planes.flatMap(dhashBandKeys).toArray))
-          }
-        }
-      }
-      .toDF("doc_id", "v", "bk")
-  }
-
-  private def hashFrameFor(family: String): DataFrame => DataFrame = family match {
-    case "image" => imageHashFrame
-    case "audio" => audioHashFrame
-    case "video" => videoHashFrame
-    case other   => throw new IllegalArgumentException(s"unknown media family: $other")
-  }
-
-  /** The family's duplicate rule over aligned hash vectors va/vb:
-    * scalar Hamming ≤ 6 for image/audio, frame-aligned ≥ 2-of-3 for
-    * video (q111's semantics). */
-  private def dupCondExpr(family: String): String = family match {
-    case "video" =>
-      """size(filter(sequence(0, 2), f ->
-        |  aggregate(transform(sequence(0, 3), b ->
-        |    bit_count(cast(element_at(va, f * 4 + b + 1) as bigint)
-        |      ^ cast(element_at(vb, f * 4 + b + 1) as bigint))),
-        |    cast(0 as bigint), (a, x) -> a + cast(x as bigint)) <= 6)) >= 2"""
-        .stripMargin.replace("\n", " ")
-    case _ =>
-      """aggregate(zip_with(va, vb,
-        |  (x, y) -> bit_count(cast(x as bigint) ^ cast(y as bigint))),
-        |  cast(0 as bigint), (a, h) -> a + cast(h as bigint)) <= 6"""
-        .stripMargin.replace("\n", " ")
-  }
+    probeStoredIndexWith(deltaHashes(s, d, Audio), path)
+  def videoIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame =
+    probeStoredIndexWith(deltaHashes(s, d, Video), path)
 
   /** The media family's lifecycle: vecs is the registry, the build
     * writes bands last (the q137 gate row's 1/7 ≈ 14% victims sit under
@@ -1879,8 +1566,9 @@ object MediaOps {
     Seq("vecs", "bands", "stat"), compactMediaIndex)
 
   /** ONLINE ingest-dedup merge (q136's streaming leg — the admission
-    * decision an image-ingest pipeline makes per arriving batch): hash
-    * the batch through the decode kernels, probe the STANDING index at
+    * decision an image-ingest pipeline makes per arriving batch): sign
+    * the batch as modality `m` — the one the index's stat records, or
+    * the merge fails rather than admit it — probe the STANDING index at
     * the stored width, and append ONLY the admitted-as-new rows to the
     * artifacts — so a re-encode of anything already admitted (including
     * a doc admitted by an EARLIER micro-batch) is refused. Delivery
@@ -1905,16 +1593,17 @@ object MediaOps {
     * overwrites the stat, so later probes/merges cut prefixes at the
     * width the CURRENT population prices. */
   def mergeMediaBatchIntoIndex(df: DataFrame, path: String,
-                               family: String = "image"): (Long, Long) =
-    mergeHashesIntoIndex(hashFrameFor(family)(df), path, family)
+                               m: Modality = Image): (Long, Long) =
+    mergeHashesIntoIndex(hashesOf(m, df), path, Some(m))
 
   /** [[mergeMediaBatchIntoIndex]] from a pre-hashed (doc_id, v, bk)
-    * frame — the decode kernels already applied. Split out so the
+    * frame — the decode kernels already applied; `signedAs`, when known,
+    * must be the modality the index's stat records. Split out so the
     * growth/re-pricing lifecycle is testable with constructed band
     * keys (real payloads whose dHashes collide at one prefix width and
     * split at the next are not constructible on demand). */
   private[graft] def mergeHashesIntoIndex(hashes0: DataFrame, path: String,
-                                          family: String): (Long, Long) = {
+                                          signedAs: Option[Modality] = None): (Long, Long) = {
     val s = hashes0.sparkSession
     Similarity.withFns(s)
     // the skeleton drops in-batch id replays, runs the pending consult
@@ -1923,24 +1612,10 @@ object MediaOps {
     var nFresh = 0L
     val (nAdmit, _) = IndexLifecycle.merge(mediaFamily, hashes0, path) { (root, fresh, n) =>
       nFresh = n
-      val st = IndexLifecycle.readStamped(s, s"$root/stat")
-        .select("width", "bands_per_doc", "priced_n").head()
-      val (width, pricedN) = (st.getInt(0), st.getLong(2))
-      val dBands = fresh.selectExpr("doc_id as delta_id",
-        s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-      val iBands = IndexLifecycle.live(mediaFamily, path)(
-          IndexLifecycle.readStamped(s, s"$root/bands"))
-        .selectExpr("doc_id as idx_id", "band_idx",
-          s"${packedPrefixExpr("band_hash", width)} as band_hash")
-      val dupIds = iBands
-        .join(broadcast(dBands), Seq("band_idx", "band_hash"))
-        .select(col("delta_id"), col("idx_id")).distinct()
-        .join(IndexLifecycle.live(mediaFamily, path)(
-            IndexLifecycle.readStamped(s, s"$root/vecs"))
-            .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
-        .join(broadcast(fresh.select(col("doc_id").as("delta_id"), col("v").as("va"))),
-          Seq("delta_id"))
-        .filter(expr(dupCondExpr(family)))
+      val (width, m, pricedN) = statAt(s, root)
+      signedAs.foreach(a => require(a == m,
+        s"a ${a.name} batch cannot merge into the ${m.name} index at $path"))
+      val dupIds = verifiedAt(fresh, path, root, width, m)
         .select(col("delta_id").as("doc_id")).distinct()
       // localCheckpoint (not persist): the admit frame's LINEAGE reads
       // the same vecs/bands paths the appends below write — under
@@ -2024,19 +1699,17 @@ object MediaOps {
   def compactMediaIndex(s: SparkSession, path: String): Unit =
     IndexLifecycle.compactVersion(s, mediaFamily, path) { root =>
       import s.implicits._
-      val st = IndexLifecycle.readStamped(s, s"$root/stat")
-        .select("width", "bands_per_doc", "priced_n").head()
-      val (w0, bpd, pricedN) = (st.getInt(0), st.getInt(1), st.getLong(2))
+      val (w0, m, pricedN) = statAt(s, root)
       val stored = IndexLifecycle.readStamped(s, s"$root/vecs")
       val victims = IndexLifecycle.liveVictims(s, mediaFamily, path, root)
       val pop = stored.count() - victims
       Option.when(victims > 0 || pop > pricedN) { newRoot =>
         val live = IndexLifecycle.live(mediaFamily, path) _
         val bands = live(IndexLifecycle.readStamped(s, s"$root/bands"))
-        val width2 = if (pop > pricedN) adaptiveBandWidth(bands, bpd) else w0
+        val width2 = if (pop > pricedN) adaptiveBandWidth(bands, m.bands) else w0
         // the three writes are independent: overlap them (guide §2.6, r21)
         Par.run3(
-          Seq((width2, bpd, pop)).toDF("width", "bands_per_doc", "priced_n")
+          Seq((width2, m.name, pop)).toDF("width", "modality", "priced_n")
             .write.mode("overwrite").parquet(s"$newRoot/stat"),
           live(stored).write.mode("overwrite").parquet(s"$newRoot/vecs"),
           bands.write.mode("overwrite").parquet(s"$newRoot/bands")): Unit

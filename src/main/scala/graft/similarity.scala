@@ -4532,16 +4532,25 @@ object Similarity {
     * output discipline at index grain): (c_label, n_ref, n_cur,
     * term_micro, psi, needs_refit). The gate row runs it on a drifted
     * index (build + q134 merge, NO rebuild) so the oracle certifies the
-    * exact statistic [[maybeRebuildAnnIndex]] acts on. */
+    * exact statistic [[maybeRebuildAnnIndex]] acts on. The report is
+    * one row per cell, so it is collected here and both persisted frames
+    * are freed before it returns — a lazy report would keep them cached
+    * with nothing left to free them. */
   def annIndexDriftReport(s: SparkSession, path: String,
                           psiMicroThreshold: Long = 200000L): DataFrame = {
-    val terms = annDriftTerms(s, path, IndexLifecycle.resolveIndexRoot(s, path))._2
-      .transform(Tables.maybePersist)
-    val psi = terms.agg(sum(col("term_micro")).as("psi_micro"))
-    terms.crossJoin(broadcast(psi))
-      .selectExpr("c_label", "n_ref", "n_cur", "term_micro / 1e6 as term",
-        "psi_micro / 1e6 as psi", s"psi_micro >= ${psiMicroThreshold}L as needs_refit")
-      .orderBy("c_label")
+    val (dense, terms0) = annDriftTerms(s, path, IndexLifecycle.resolveIndexRoot(s, path))
+    val terms = terms0.transform(Tables.maybePersist)
+    try {
+      val psi = terms.agg(sum(col("term_micro")).as("psi_micro"))
+      val report = terms.crossJoin(broadcast(psi))
+        .selectExpr("c_label", "n_ref", "n_cur", "term_micro / 1e6 as term",
+          "psi_micro / 1e6 as psi", s"psi_micro >= ${psiMicroThreshold}L as needs_refit")
+        .orderBy("c_label")
+      s.createDataFrame(report.collectAsList(), report.schema)
+    } finally {
+      terms.unpersist(blocking = false)
+      dense.unpersist(blocking = false)
+    }
   }
 
   /** The q141 gate chain: lazy build → q134's drifted-delta merge → the

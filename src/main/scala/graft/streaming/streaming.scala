@@ -1066,19 +1066,21 @@ object StreamingOps {
   /** q136's streaming form (r17) — CONTINUOUS INGEST-DEDUP against the
     * standing PERCEPTUAL index: each micro-batch of (doc_id, media)
     * payloads folds through [[graft.MediaOps.mergeMediaBatchIntoIndex]]
-    * (the [[annIngestStream]] pattern) — decode→dHash→probe at the
-    * index's stored width, append only the admitted-as-new rows. A
+    * (the [[annIngestStream]] pattern) — decode→sign→probe at the
+    * index's stored width, append only the admitted-as-new rows. The
+    * payloads sign as modality `m`, which must be the one the index's
+    * stat records (a mismatched batch fails rather than admitting). A
     * re-encode of anything already admitted — by the base build OR by
     * an earlier micro-batch — is refused, so the standing population
     * grows online. Delivery semantics: already-stored ids anti-join
     * out, replays converge (spec-pinned by replaying a batch and
     * comparing artifact counts). */
   def mediaIngestStream(payloads: DataFrame, path: String,
-                        family: String = "image"):
+                        m: graft.MediaOps.Modality = graft.MediaOps.Image):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     payloads.writeStream.foreachBatch {
       (df: DataFrame, _: Long) =>
-        { graft.MediaOps.mergeMediaBatchIntoIndex(df, path, family); () }
+        { graft.MediaOps.mergeMediaBatchIntoIndex(df, path, m); () }
     }
 
   /** [[mediaIngestStream]] from pre-hashed (doc_id, v, bk) frames — the
@@ -1087,12 +1089,11 @@ object StreamingOps {
     * at one prefix width and split at the next are not constructible on
     * demand); the merge/trigger/compaction path is byte-identical to
     * [[mediaIngestStream]]'s. */
-  private[graft] def mediaIngestHashStream(hashes: DataFrame, path: String,
-                                           family: String = "image"):
+  private[graft] def mediaIngestHashStream(hashes: DataFrame, path: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     hashes.writeStream.foreachBatch {
       (df: DataFrame, _: Long) =>
-        { graft.MediaOps.mergeHashesIntoIndex(df, path, family); () }
+        { graft.MediaOps.mergeHashesIntoIndex(df, path); () }
     }
 
   /** q137's streaming form (r17) — CONTINUOUS TAKEDOWN against the

@@ -684,7 +684,7 @@ class ExtensionsSpec extends SparkSpec {
       2L -> png(24, 24, i => 255 - (i * 13) % 256))
     val corpus = imgs.toDF("doc_id", "media")
       .selectExpr("doc_id", "'image/png' as mime", "media")
-    val hashes = MediaOps.imageHashesOf(corpus).collect()
+    val hashes = MediaOps.corpusHashes(MediaOps.Image, corpus).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     assert(hashes.keySet == Set(1L, 2L, 10001L, 10002L))
     def ham(a: Array[Int], b: Array[Int]): Int =
@@ -752,7 +752,7 @@ class ExtensionsSpec extends SparkSpec {
     val auds = Seq(1L -> wav16(tone(1)), 2L -> wav16(tone(2)))
     val corpus = auds.toDF("doc_id", "media")
       .selectExpr("doc_id", "'audio/wav' as mime", "media")
-    val fps = MediaOps.audioFingerprintsOf(corpus).collect()
+    val fps = MediaOps.corpusHashes(MediaOps.Audio, corpus).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     assert(fps.keySet == Set(1L, 2L, 10001L, 10002L))
     def ham(a: Array[Int], b: Array[Int]): Int =
@@ -815,7 +815,7 @@ class ExtensionsSpec extends SparkSpec {
     })
     val corpus = Seq(1L -> vid(1), 2L -> vid(2)).toDF("doc_id", "media")
       .selectExpr("doc_id", "'video/gif' as mime", "media")
-    val hashes = MediaOps.videoFrameHashesOf(corpus).collect()
+    val hashes = MediaOps.corpusHashes(MediaOps.Video, corpus).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     assert(hashes.keySet == Set(1L, 2L, 10001L, 10002L))
     def matchedFrames(a: Array[Int], b: Array[Int]): Int =
@@ -853,10 +853,10 @@ class ExtensionsSpec extends SparkSpec {
     }
     val imgCorpus = (1 to 24).map(i => i.toLong -> png(i)).toDF("doc_id", "media")
       .selectExpr("doc_id", "'image/png' as mime", "media")
-    val ih = MediaOps.imageHashesOf(imgCorpus).transform(Tables.maybePersist)
+    val ih = MediaOps.corpusHashes(MediaOps.Image, imgCorpus).transform(Tables.maybePersist)
     val audCorpus = (1 to 24).map(i => i.toLong -> wav16(tone(i))).toDF("doc_id", "media")
       .selectExpr("doc_id", "'audio/wav' as mime", "media")
-    val ah = MediaOps.audioFingerprintsOf(audCorpus).transform(Tables.maybePersist)
+    val ah = MediaOps.corpusHashes(MediaOps.Audio, audCorpus).transform(Tables.maybePersist)
     MediaOps.BandWidths.foreach { w =>
       val (ihit, itot) = recallAt(ih, w)
       assert(itot == 24L)
@@ -931,6 +931,18 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$live/vecs")
       .filter(col("doc_id") === victim).count() == 0)
     assert(spark.read.parquet(s"$live/vecs").count() == nIdx - 1)
+  }
+
+  test("a payload batch signed as another modality than the index's stat records is refused, not admitted") {
+    val path = java.nio.file.Files.createTempDirectory("graft-modality").toString
+    MediaOps.buildAudioIndex(spark, sf, path)
+    val vecs0 = spark.read.parquet(s"$path/vecs").count()
+    val batch = Seq((960001L, Array.tabulate(200)(i => ((i * 53 + i * i * 17 + 3) % 251).toByte)))
+      .toDF("doc_id", "media")
+    val e = intercept[IllegalArgumentException](MediaOps.mergeMediaBatchIntoIndex(batch, path))
+    assert(e.getMessage.contains("image batch cannot merge into the audio index"), e.getMessage)
+    assert(spark.read.parquet(s"$path/vecs").count() == vecs0, "the refused batch reached the index")
+    assert(MediaOps.mergeMediaBatchIntoIndex(batch, path, MediaOps.Audio) == ((1L, 0L)))
   }
 
   test("q139: the video-grain standing index — 12-band layout, frame-aligned verify, forget lifecycle (r17)") {
@@ -2224,9 +2236,9 @@ class ExtensionsSpec extends SparkSpec {
     // the real fixture frames choose 16 (measured under budget) — this is
     // what keeps every historical media oracle row byte-identical
     Seq(
-      (MediaOps.imageHashes(spark, sf), 4),
-      (MediaOps.audioFingerprints(spark, sf), 4),
-      (MediaOps.videoFrameHashes(spark, sf), 12)
+      (MediaOps.corpusHashes(MediaOps.Image, MediaOps.mediaCorpus(spark, sf)), 4),
+      (MediaOps.corpusHashes(MediaOps.Audio, MediaOps.mediaCorpus(spark, sf)), 4),
+      (MediaOps.corpusHashes(MediaOps.Video, MediaOps.mediaCorpus(spark, sf)), 12)
     ).foreach { case (hashes, bpd) =>
       val bands0 = hashes.selectExpr("doc_id",
         "posexplode(bk) as (band_idx, band_hash)")
@@ -2261,7 +2273,7 @@ class ExtensionsSpec extends SparkSpec {
         rows(id).zip(t).exists { case (a, b) => a == b }))
       (hit.toLong, bases.length.toLong)
     }
-    Seq(MediaOps.imageHashes(spark, sf), MediaOps.audioFingerprints(spark, sf))
+    Seq(MediaOps.corpusHashes(MediaOps.Image, MediaOps.mediaCorpus(spark, sf)), MediaOps.corpusHashes(MediaOps.Audio, MediaOps.mediaCorpus(spark, sf)))
       .foreach { h =>
         val (hit32, total) = recallAt(h, 32)
         assert(total > 0)
@@ -2284,7 +2296,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("image deny verdict (online leg) == exact band-probe model; twins of deny images drop (r14)") {
-    val idx = MediaOps.fitImageDenyIndex(spark, sf)
+    val idx = MediaOps.fitDenyIndex(spark, sf, MediaOps.Image)
     val imgs = MediaOps.mediaCorpus(spark, sf)
       .where("mime = 'image/png' AND length(media) >= 72")
       .select("doc_id", "media").as[(Long, Array[Byte])].collect()
@@ -2293,12 +2305,12 @@ class ExtensionsSpec extends SparkSpec {
         if (i % 17 == 0) (x + 1).toByte else x })
     }
     val input = spark.createDataset((imgs ++ twins).toSeq).toDF("doc_id", "media")
-    val verdict = MediaOps.imageDenyVerdict(input, idx)
+    val verdict = MediaOps.denyVerdict(input, idx)
       .as[(Long, Int, Boolean)].collect().map(t => t._1 -> t._3).toMap
     // driver model (r17, multi-probe): the 1-bit band multi-probe makes
     // the verdict EXACT — dropped iff within Hamming 6 of any deny item,
     // no banding caveat (the multi-index-hashing guarantee)
-    val hash = MediaOps.imageHashes(spark, sf).select("doc_id", "v")
+    val hash = MediaOps.corpusHashes(MediaOps.Image, MediaOps.mediaCorpus(spark, sf)).select("doc_id", "v")
       .as[(Long, Array[Int])].collect().toMap
     val denyIds = imgs.map(_._1).filter(_ % 20 == 0)
     assert(denyIds.nonEmpty, "fixture must populate the deny slice")
@@ -2317,6 +2329,46 @@ class ExtensionsSpec extends SparkSpec {
       assert(verdict(d + 10000L), s"re-encoded twin of deny image $d must drop")
     }
     assert(imgs.map(_._1).exists(id => !verdict(id)), "some non-deny image survives")
+  }
+
+  test("image deny verdict signs the DECODED luma: a genuine PNG of a deny document, and its re-encoded twin, drop like the batch model") {
+    import java.awt.image.BufferedImage
+    val idx = MediaOps.fitDenyIndex(spark, sf, MediaOps.Image)
+    val (denyId, doc) = MediaOps.mediaCorpus(spark, sf)
+      .where("mime = 'image/png' AND length(media) >= 72 AND doc_id % 20 = 0")
+      .orderBy("doc_id").select("doc_id", "media").as[(Long, Array[Byte])].head()
+    // the deny document's bytes as the pixels of a one-row gray PNG: a
+    // gray (v,v,v) pixel decodes to luma v, so the payload decodes to
+    // exactly the document's codes
+    def png(px: Array[Int]): Array[Byte] = {
+      val img = new BufferedImage(px.length, 1, BufferedImage.TYPE_INT_RGB)
+      px.indices.foreach { x =>
+        val v = px(x) & 0xFF
+        img.setRGB(x, 0, (v << 16) | (v << 8) | v)
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
+    val codes = doc.map(_ & 0xFF)
+    val base = png(codes)
+    assert(MediaOps.decodePngLuma(base).get.sameElements(codes),
+      "the PNG must decode to the deny document's codes")
+    // the twin model (+1 luma at every 17th sample), written as a PNG again
+    val twin = png(codes.zipWithIndex.map { case (v, i) => if (i % 17 == 0) v + 1 else v })
+    val verdict = MediaOps.denyVerdict(Seq((1L, base), (2L, twin)).toDF("doc_id", "media"), idx)
+      .as[(Long, Int, Boolean)].collect().map(t => t._1 -> t._3).toMap
+    // the batch model: the base PNG and its planted twin signed by the
+    // corpus pass, within the Hamming-6 bar of the deny document
+    val model = MediaOps.corpusHashes(MediaOps.Image,
+        Seq((1L, base)).toDF("doc_id", "media").selectExpr("doc_id", "'image/png' as mime", "media"))
+      .select("doc_id", "v").as[(Long, Array[Int])].collect().toMap
+    def ham(a: Array[Int], b: Array[Int]): Int =
+      a.zip(b).map { case (x, y) => Integer.bitCount(x ^ y) }.sum
+    assert(ham(model(1L), idx.hashes(denyId)) == 0 && ham(model(10001L), idx.hashes(denyId)) <= 6,
+      "the batch model must pair both PNGs with the deny document")
+    assert(verdict(1L), "a genuine PNG of a deny document passed the online verdict")
+    assert(verdict(2L), "the re-encoded twin of a deny PNG passed the online verdict")
   }
 
   test("q110: image keep — one keeper per cluster, keeper is max-payload, twins co-cluster (r14)") {
@@ -2348,7 +2400,7 @@ class ExtensionsSpec extends SparkSpec {
     val nVideos = Tables.documents(spark, sf)
       .where("doc_id % 3 = 2 AND length(text) >= 216").count()
     assert(nVideos > 0, "fixture must populate the video slice")
-    val hashes = MediaOps.videoFrameHashes(spark, sf).select("doc_id", "v")
+    val hashes = MediaOps.corpusHashes(MediaOps.Video, MediaOps.mediaCorpus(spark, sf)).select("doc_id", "v")
       .as[(Long, Array[Int])].collect()
     assert(hashes.length.toLong == 2 * nVideos)
     hashes.foreach { case (id, v) =>
@@ -2417,7 +2469,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("audio deny verdict (online leg) == exact band-probe model; twins of deny audio drop (r14)") {
-    val idx = MediaOps.fitAudioDenyIndex(spark, sf)
+    val idx = MediaOps.fitDenyIndex(spark, sf, MediaOps.Audio)
     val auds = MediaOps.mediaCorpus(spark, sf)
       .where("mime = 'audio/wav' AND length(media) >= 85")
       .select("doc_id", "media").as[(Long, Array[Byte])].collect()
@@ -2426,11 +2478,11 @@ class ExtensionsSpec extends SparkSpec {
         if (i % 13 == 0) (x + 1).toByte else x })
     }
     val input = spark.createDataset((auds ++ twins).toSeq).toDF("doc_id", "media")
-    val verdict = MediaOps.audioDenyVerdict(input, idx)
+    val verdict = MediaOps.denyVerdict(input, idx)
       .as[(Long, Int, Boolean)].collect().map(t => t._1 -> t._3).toMap
     // driver model (r17, multi-probe): exact semantics — dropped iff
     // within Hamming 6 of any deny fingerprint (the MIH guarantee)
-    val hash = MediaOps.audioFingerprints(spark, sf).select("doc_id", "v")
+    val hash = MediaOps.corpusHashes(MediaOps.Audio, MediaOps.mediaCorpus(spark, sf)).select("doc_id", "v")
       .as[(Long, Array[Int])].collect().toMap
     val denyIds = auds.map(_._1).filter(_ % 20 == 0)
     assert(denyIds.nonEmpty, "fixture must populate the deny slice")
@@ -2453,7 +2505,7 @@ class ExtensionsSpec extends SparkSpec {
     // audit measured this loss class at ≤ 0.1% (e100)); the 1-bit multi-probe
     // guarantees a candidate — some band is within Hamming 1
     val deny = Array(0x1234, 0x0F0F, 0x00FF, 0x5555)
-    val idx = MediaOps.ImageDenyIndex(
+    val idx = MediaOps.MediaDenyIndex(MediaOps.Image,
       Array.tabulate(4)(b => Map(deny(b) -> Array(42L))),
       Map(42L -> deny))
     val spread = Array(deny(0) ^ 0x3, deny(1) ^ 0x9, deny(2) ^ 0x10, deny(3) ^ 0x80)

@@ -208,7 +208,7 @@ class LifecycleSpec extends SparkSpec {
     Family("media", "doc_id", "vecs", audit = false,
       p => MediaOps.buildIndexFrom(mediaHashes(0L until 20L), p): Unit,
       id => mediaHashes(Seq(id)),
-      (b, p) => MediaOps.mergeHashesIntoIndex(b, p, "image"): Unit,
+      (b, p) => MediaOps.mergeHashesIntoIndex(b, p): Unit,
       (r, p) => MediaOps.forgetMediaFromIndex(r, p): Unit,
       MediaOps.mediaFamily, p => MediaOps.compactMediaIndex(spark, p)),
     Family("ann", "vec_id", "assignments", audit = true,
@@ -448,7 +448,52 @@ class LifecycleSpec extends SparkSpec {
       noLeak("takedown")(f.forget((registered.take(2) :+ 900022L).toDF(f.idCol), path))
       noLeak("compaction")(f.compact(path))
       refits.filter(_.family == f).foreach(r => noLeak(s"refit (${r.name})")(r.run(path, () => ())))
+      if (f.name == "ann")
+        noLeak("drift report")(Similarity.annIndexDriftReport(spark, path).collect(): Unit)
     }
+  }
+
+  test("every refit's jobs carry a refit phase label, within the counts measured before its seeding tail; the first takedown after it runs no maintenance scan") {
+    // jobs per refit on a fresh index, measured at the parent of the
+    // seeding tail: the fit, catch-up and commit legs run the same jobs
+    val budget = Map("ann rounds=2" -> 23, "ann rounds=0" -> 9, "pq" -> 27)
+    refits.foreach { r =>
+      val f = r.family
+      val path = java.nio.file.Files.createTempDirectory(s"graft-refitjobs-${f.name}").toString
+      f.build(path)
+      val jobs = jobsOf(r.run(path, () => ()): Unit)
+      val call = s"${f.lifecycle.name}.refit/"
+      assert(jobs.nonEmpty && jobs.forall(_.startsWith(call)),
+        s"${r.name}: refit jobs without a $call* label: $jobs")
+      assert(jobs.size <= budget(r.name),
+        s"${r.name}: the refit ran ${jobs.size} jobs (budget ${budget(r.name)}): $jobs")
+      info(s"${r.name}: " + jobs.groupBy(identity).toSeq.sortBy(_._1)
+        .map { case (p, n) => s"$p ${n.size}" }.mkString(", ") + s" (${jobs.size})")
+      // the commit seeded the new version's tombstone-mass bound
+      val registered = spark.read.parquet(s"${IndexLifecycle.resolveIndexRoot(spark, path)}/${f.registry}")
+        .select(f.idCol).as[Long].collect().sorted.toSeq
+      val requests = registered.take(2).toDF(f.idCol)
+      val takedown = jobsOf(f.forget(requests, path))
+      assert(!takedown.exists(_.startsWith(s"${f.lifecycle.name}.forget/maintain")),
+        s"${r.name}: the first takedown after the refit scanned the registry: $takedown")
+    }
+  }
+
+  test("the first ANN takedown after compactAnnIndex runs no ann.forget/maintain job") {
+    val f = family("ann")
+    val path = java.nio.file.Files.createTempDirectory("graft-anncompact").toString
+    f.build(path)
+    def registered: Seq[Long] =
+      spark.read.parquet(s"${IndexLifecycle.resolveIndexRoot(spark, path)}/${f.registry}")
+        .select(f.idCol).as[Long].collect().sorted.toSeq
+    f.forget(registered.take(2).toDF(f.idCol), path)
+    f.compact(path)
+    assert(IndexLifecycle.resolveIndexRoot(spark, path) == s"$path/versions/v00002",
+      "compactAnnIndex must commit a version once live victims exist")
+    val requests = registered.take(2).toDF(f.idCol)
+    val takedown = jobsOf(f.forget(requests, path))
+    assert(takedown.nonEmpty && !takedown.exists(_.startsWith("ann.forget/maintain")),
+      s"the first takedown after compactAnnIndex scanned the registry: $takedown")
   }
 
   test("every refit: a merge and a takedown landing mid-refit survive the swap; a throw before the catch-up leaves the old version serving and the next refit commits") {

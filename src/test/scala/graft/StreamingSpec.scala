@@ -571,13 +571,13 @@ class StreamingSpec extends SparkSpec {
     // the q107 online form: perceptual-hash denylist fit offline
     // (bounded list, the fitDenyIndex contract), per-row dHash→band-
     // probe→Hamming-verify in the stream with the SHARED hashing code
-    val idx = MediaOps.fitImageDenyIndex(spark, sf)
+    val idx = MediaOps.fitDenyIndex(spark, sf, MediaOps.Image)
     assert(idx.hashes.nonEmpty)
     val rows = MediaOps.mediaCorpus(spark, sf)
       .where("mime = 'image/png'")
       .select("doc_id", "media").as[(Long, Array[Byte])].collect().toSeq
     val in = MemoryStream[(Long, Array[Byte])](spark)
-    val q = MediaOps.imageDenyVerdict(in.toDF().toDF("doc_id", "media"), idx)
+    val q = MediaOps.denyVerdict(in.toDF().toDF("doc_id", "media"), idx)
       .writeStream.format("memory").queryName("imagedeny")
       .outputMode("append").start()
     in.addData(rows: _*)
@@ -585,7 +585,7 @@ class StreamingSpec extends SparkSpec {
     val online = spark.table("imagedeny")
       .select("doc_id", "n_candidates", "dropped")
       .as[(Long, Int, Boolean)].collect().sortBy(_._1).toSeq
-    val batch = MediaOps.imageDenyVerdict(
+    val batch = MediaOps.denyVerdict(
         rows.toDF("doc_id", "media"), idx)
       .as[(Long, Int, Boolean)].collect().sortBy(_._1).toSeq
     assert(online == batch, "online verdicts != batch verdicts on identical rows")
@@ -668,13 +668,13 @@ class StreamingSpec extends SparkSpec {
     // the q113 online form: audio deny fingerprints fit offline, per-row
     // fingerprint→band-probe→Hamming-verify in the stream with the
     // SHARED afp4x16 stage
-    val idx = MediaOps.fitAudioDenyIndex(spark, sf)
+    val idx = MediaOps.fitDenyIndex(spark, sf, MediaOps.Audio)
     assert(idx.hashes.nonEmpty)
     val rows = MediaOps.mediaCorpus(spark, sf)
       .where("mime = 'audio/wav'")
       .select("doc_id", "media").as[(Long, Array[Byte])].collect().toSeq
     val in = MemoryStream[(Long, Array[Byte])](spark)
-    val q = MediaOps.audioDenyVerdict(in.toDF().toDF("doc_id", "media"), idx)
+    val q = MediaOps.denyVerdict(in.toDF().toDF("doc_id", "media"), idx)
       .writeStream.format("memory").queryName("audiodeny")
       .outputMode("append").start()
     in.addData(rows: _*)
@@ -682,7 +682,7 @@ class StreamingSpec extends SparkSpec {
     val online = spark.table("audiodeny")
       .select("doc_id", "n_candidates", "dropped")
       .as[(Long, Int, Boolean)].collect().sortBy(_._1).toSeq
-    val batch = MediaOps.audioDenyVerdict(
+    val batch = MediaOps.denyVerdict(
         rows.toDF("doc_id", "media"), idx)
       .as[(Long, Int, Boolean)].collect().sortBy(_._1).toSeq
     assert(online == batch, "online verdicts != batch verdicts on identical rows")
@@ -1564,7 +1564,7 @@ class StreamingSpec extends SparkSpec {
     val aNew = Array.tabulate(200)(i => ((i * 53 + i * i * 17 + 3) % 251).toByte)
     val ain = MemoryStream[(Long, Array[Byte])](spark)
     val aq = StreamingOps.mediaIngestStream(
-        ain.toDF().toDF("doc_id", "media"), aPath, family = "audio").start()
+        ain.toDF().toDF("doc_id", "media"), aPath, MediaOps.Audio).start()
     ain.addData((920001L, aDup), (920002L, aNew))
     aq.processAllAvailable(); aq.stop()
     assert(spark.read.parquet(s"$aPath/vecs").count() == aVecs0 + 1,
@@ -1582,7 +1582,7 @@ class StreamingSpec extends SparkSpec {
     val vNew = Array.tabulate(400)(i => ((i * 41 + i * i * 13 + 11) % 251).toByte)
     val vin = MemoryStream[(Long, Array[Byte])](spark)
     val vq = StreamingOps.mediaIngestStream(
-        vin.toDF().toDF("doc_id", "media"), vPath, family = "video").start()
+        vin.toDF().toDF("doc_id", "media"), vPath, MediaOps.Video).start()
     vin.addData((930001L, vDup), (930002L, vNew))
     vq.processAllAvailable(); vq.stop()
     assert(spark.read.parquet(s"$vPath/vecs").count() == vVecs0 + 1,
@@ -1622,19 +1622,19 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("deny verdicts run unchanged on streaming frames: the MIH compliance guarantee at ingest (r17)") {
-    // imageDenyVerdict is a stateless per-row map over a broadcast-able
+    // denyVerdict is a stateless per-row map over a broadcast-able
     // fitted index — exactly the shape Structured Streaming transforms
     // support. A compliance scan therefore runs AT INGEST with the same
     // exact "within Hamming 6 of a deny item" guarantee the batch spec
     // pins (denyProbe's one-bit multi-probe pigeonhole).
-    val idx = MediaOps.fitImageDenyIndex(spark, sf)
+    val idx = MediaOps.fitDenyIndex(spark, sf, MediaOps.Image)
     assert(idx.hashes.nonEmpty)
     val denied = MediaOps.mediaCorpus(spark, sf)
       .filter("mime = 'image/png' and length(media) >= 72 and doc_id % 20 = 0")
       .orderBy("doc_id").select("media").head().getAs[Array[Byte]](0)
     val clean = Array.tabulate(300)(i => ((i * 67 + i * i * 29 + 1) % 251).toByte)
     val in = MemoryStream[(Long, Array[Byte])](spark)
-    val q = MediaOps.imageDenyVerdict(in.toDF().toDF("doc_id", "media"), idx)
+    val q = MediaOps.denyVerdict(in.toDF().toDF("doc_id", "media"), idx)
       .writeStream.format("memory").queryName("deny_stream").start()
     in.addData((940001L, denied), (940002L, clean))
     q.processAllAvailable(); q.stop()
@@ -2920,13 +2920,13 @@ class StreamingSpec extends SparkSpec {
 
   test("video-grain index dial re-prices under growth (12-band frame, r18)") {
     val path = java.nio.file.Files.createTempDirectory("graft-dialgrow-v").toString
-    MediaOps.buildIndexFrom(dialHashes(0 until 60, 12), path, bandsPerDoc = 12)
+    MediaOps.buildIndexFrom(dialHashes(0 until 60, 12), path, MediaOps.Video)
     assert(MediaOps.storedWidth(spark, path) == 16)
     val twin = dialHashes(7 to 7, 12).selectExpr("doc_id + 900000 as doc_id", "v", "bk")
     val candBefore = MediaOps.probeCandidates(twin, path).count()
     assert(candBefore >= 60)
     val (a, _) = MediaOps.mergeHashesIntoIndex(
-      dialHashes(60 until 130, 12), path, "video")
+      dialHashes(60 until 130, 12), path)
     assert(a == 70L)
     assert(MediaOps.storedWidth(spark, path) == 32,
       "video dial did not re-price after 2x growth")
@@ -3481,7 +3481,7 @@ class StreamingSpec extends SparkSpec {
     MediaOps.compactMediaIndex(spark, path)
     assert(IndexLifecycle.resolveIndexRoot(spark, path) == v2)
     // merges append into the LIVE version, not the retired flat root
-    val (a, _) = MediaOps.mergeHashesIntoIndex(dialHashes(50 to 50, 4), path, "image")
+    val (a, _) = MediaOps.mergeHashesIntoIndex(dialHashes(50 to 50, 4), path)
     assert(a == 1L)
     assert(spark.read.parquet(s"$v2/vecs").filter("doc_id = 50").count() == 1)
     assert(spark.read.parquet(s"$path/vecs").count() == 20, "merge touched the retired root")
@@ -3517,7 +3517,7 @@ class StreamingSpec extends SparkSpec {
     // the id arrives (plus an unrelated new doc): the pending forget is
     // consumed — arrival refused, id tombstoned, the other doc admits
     val batch = dialHashes(9999 to 9999, 4).unionAll(dialHashes(50 to 50, 4))
-    val (a1, _) = MediaOps.mergeHashesIntoIndex(batch, path, "image")
+    val (a1, _) = MediaOps.mergeHashesIntoIndex(batch, path)
     assert(a1 == 1L, s"pending id admitted or sibling refused (admitted $a1)")
     assert(spark.read.parquet(s"$path/vecs").filter("doc_id = 9999").count() == 0)
     assert(spark.read.parquet(s"$path/vecs").filter("doc_id = 50").count() == 1)
@@ -3527,13 +3527,13 @@ class StreamingSpec extends SparkSpec {
     assert(IndexLifecycle.idLogOf(spark, s"$path/pending", "doc_id")
         .count() == 0, "pending entry not consumed")
     // at-least-once replay of the SAME batch: the tombstone keeps the id out
-    val (a2, _) = MediaOps.mergeHashesIntoIndex(batch, path, "image")
+    val (a2, _) = MediaOps.mergeHashesIntoIndex(batch, path)
     assert(a2 == 0L, "replayed batch re-admitted a forgotten id")
     assert(spark.read.parquet(s"$path/vecs").filter("doc_id = 9999").count() == 0)
     // fresh-id re-submission of the CONTENT admits (dedup-forget, not a
     // content ban): 9999's content never reached the index
     val fresh = dialHashes(9999 to 9999, 4).selectExpr("doc_id + 1 as doc_id", "v", "bk")
-    val (a3, _) = MediaOps.mergeHashesIntoIndex(fresh, path, "image")
+    val (a3, _) = MediaOps.mergeHashesIntoIndex(fresh, path)
     assert(a3 == 1L, "fresh-id re-submission of never-admitted content must admit")
     // a takedown for an ADMITTED id still tombstones immediately
     assert(MediaOps.forgetMediaFromIndex(Seq(3L).toDF("doc_id"), path) == 1L)
