@@ -213,6 +213,59 @@ object TextAnalysis {
       ((dg(2) & 0xFFL) << 8) | (dg(3) & 0xFFL)) % dim).toInt
   }
 
+  /** The classifier family's feature counts of one text: every word
+    * unigram, then every `w1_w2` bigram, each counted into its
+    * [[clfBucket]] — (n_feats, cnt over `dim` buckets). */
+  private def featureCounts(md: java.security.MessageDigest, text: String,
+                            dim: Int): (Long, Array[Double]) = {
+    val toks = text.split(" ", -1)
+    val cnt = new Array[Double](dim)
+    var n = 0L
+    var i = 0
+    while (i < toks.length) { cnt(clfBucket(md, toks(i), dim)) += 1.0; n += 1; i += 1 }
+    i = 0
+    while (i + 1 < toks.length) {
+      cnt(clfBucket(md, toks(i) + "_" + toks(i + 1), dim)) += 1.0; n += 1; i += 1
+    }
+    (n, cnt)
+  }
+
+  /** Per-document (doc_id, n_feats, cnt) feature counts of `df`. */
+  private def featureCountsOf(df: DataFrame): DataFrame = {
+    val s = df.sparkSession
+    import s.implicits._
+    val dim = clfDim
+    df.select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        it.map { case (id, text) =>
+          val (n, cnt) = featureCounts(md, text, dim)
+          (id, n, cnt)
+        }
+      }
+      .toDF("doc_id", "n_feats", "cnt")
+  }
+
+  /** Ascending-index dot — graft_dot's left-to-right loop. */
+  private def ascDot(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0
+    var j = 0
+    while (j < a.length) { dot += a(j) * b(j); j += 1 }
+    dot
+  }
+
+  /** The q72 weight row of [[clfWeightsExpr]] as task-closure doubles. */
+  private def clfWeights: Array[Double] = Array.tabulate(clfDim)(j =>
+    (((j.toLong * 1103515245L + 12345L) % 1000L) - 500L) / 1000.0)
+
+  /** q72's per-row score of one text: feature counts · w over n_feats,
+    * 1e-6-rounded — bit-identical to the batch q72 `score`. */
+  private def clfScoreOf(md: java.security.MessageDigest, w: Array[Double],
+                         text: String): Double = {
+    val (n, cnt) = featureCounts(md, text, w.length)
+    math.floor(ascDot(cnt, w) / n * 1e6 + 0.5) / 1e6
+  }
 
   /** The q72 weight row: w[j] = (((j·1103515245 + 12345) mod 1000) − 500)
     * / 1000 — pure integer arithmetic until the final division, exact in
@@ -222,31 +275,10 @@ object TextAnalysis {
       "((((cast(j as bigint) * 1103515245 + 12345) % 1000) - 500) / 1000.0D)) as w"
 
   def classifierScore(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     Similarity.withFns(s)
-    val dim = clfDim
     val weights = s.range(1).selectExpr(clfWeightsExpr)
-    val cnts = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def bucket(f: String): Int = clfBucket(md, f, dim)
-        it.map { case (id, text) =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Double](dim)
-          var n = 0L
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1.0; n += 1; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1.0; n += 1; i += 1
-          }
-          (id, n, cnt)
-        }
-      }
-      .toDF("doc_id", "n_feats", "cnt")
-    cnts.crossJoin(broadcast(weights))
+    featureCountsOf(Tables.fanOut(Tables.documents(s, d), "doc_id"))
+      .crossJoin(broadcast(weights))
       .selectExpr("doc_id", "n_feats",
         "floor(graft_dot(cnt, w) / cast(n_feats as double) * 1e6 + 0.5) / 1e6 as score")
       .withColumn("label", col("score") >= 0)
@@ -263,29 +295,13 @@ object TextAnalysis {
   def classifierVerdict(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val dim = clfDim
     df.select(col("doc_id").cast("long"), col("source"), col("text"))
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val w = Array.tabulate(dim)(j =>
-          (((j.toLong * 1103515245L + 12345L) % 1000L) - 500L) / 1000.0)
-        def bucket(f: String): Int = clfBucket(md, f, dim)
+        val w = clfWeights
         it.map { case (id, src, text) =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Double](dim)
-          var n = 0L
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1.0; n += 1; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1.0; n += 1; i += 1
-          }
-          // ascending-bucket fold == graft_dot's left-to-right loop
-          var dot = 0.0
-          var j = 0
-          while (j < dim) { dot += cnt(j) * w(j); j += 1 }
-          val score = math.floor(dot / n * 1e6 + 0.5) / 1e6
+          val score = clfScoreOf(md, w, text)
           (id, src, text, score, score >= 0)
         }
       }
@@ -1414,30 +1430,13 @@ object TextAnalysis {
 
   def calibrationReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dim = clfDim
     val scored = Tables.fanOut(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val w = Array.tabulate(dim)(j =>
-          (((j.toLong * 1103515245L + 12345L) % 1000L) - 500L) / 1000.0)
-        def bucket(f: String): Int = clfBucket(md, f, dim)
-        it.map { case (id, text) =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Double](dim)
-          var n = 0L
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1.0; n += 1; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1.0; n += 1; i += 1
-          }
-          var dot = 0.0
-          var j = 0
-          while (j < dim) { dot += cnt(j) * w(j); j += 1 }
-          (id, text, math.floor(dot / n * 1e6 + 0.5) / 1e6)
-        }
+        val w = clfWeights
+        it.map { case (id, text) => (id, text, clfScoreOf(md, w, text)) }
       }
       .toDF("doc_id", "text", "clf_score")
     qualityGateVerdict(scored)
@@ -2510,31 +2509,15 @@ object TextAnalysis {
   private[graft] def funnelFlags(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val dim = clfDim
     // one pass: q21 min-shingle fingerprint + q72 classifier verdict
     val scored = Tables.fanOut(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
       .as[(Long, String, String, Long)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val w = Array.tabulate(dim)(j =>
-          (((j.toLong * 1103515245L + 12345L) % 1000L) - 500L) / 1000.0)
-        def bucket(f: String): Int = clfBucket(md, f, dim)
+        val w = clfWeights
         it.map { case (id, text, source, nChars) =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Double](dim)
-          var n = 0L
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1.0; n += 1; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1.0; n += 1; i += 1
-          }
-          var dot = 0.0
-          var j = 0
-          while (j < dim) { dot += cnt(j) * w(j); j += 1 }
-          val score = math.floor(dot / n * 1e6 + 0.5) / 1e6
-          (id, text, source, nChars, minShingleHashOf(md, text), score >= 0)
+          (id, text, source, nChars, minShingleHashOf(md, text), clfScoreOf(md, w, text) >= 0)
         }
       }
       .toDF("doc_id", "text", "source", "n_chars", "fp", "clf_pass")
@@ -3046,21 +3029,10 @@ object TextAnalysis {
     df.select(col("text")).as[String]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        def bucket(f: String): Int = clfBucket(md, f, dim)
-        it.map { text =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Long](dim)
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1L; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1L; i += 1
-          }
-          cnt
-        }
+        it.map(text => featureCounts(md, text, dim)._2)
       }
       .toDF("cnt")
-      .selectExpr(s"explode(transform(sequence(0, ${dim - 1}), j -> struct(j as j, cnt[j] as c))) as p")
+      .selectExpr(s"explode(transform(sequence(0, ${dim - 1}), j -> struct(j as j, cast(cnt[j] as bigint) as c))) as p")
       .selectExpr("p.j as j", "p.c as c")
       .groupBy("j").agg(sum(col("c")).as("c"))
       .agg(sort_array(collect_list(struct(col("j"), col("c")))).as("jc"))
@@ -3068,49 +3040,9 @@ object TextAnalysis {
                   s"aggregate(jc, cast(0 as bigint), (a, x) -> a + x.c) as ${outPrefix}_tot")
   }
 
-  def dsirWeight(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Similarity.withFns(s)
-    val dim = clfDim
-    val target = bucketTotals(
-      Tables.documents(s, d).filter(col("doc_id") % 10 === 0), "t")
-    val raw = bucketTotals(Tables.documents(s, d), "r")
-    // Δ[b] in micro-nats, one row of 128 doubles (integer-valued)
-    val delta = target.crossJoin(raw).selectExpr(
-      s"""transform(sequence(0, ${dim - 1}), j ->
-         |  cast(cast(floor((ln((t_cnt[j] + 1) / cast(t_tot + $dim as double))
-         |            - ln((r_cnt[j] + 1) / cast(r_tot + $dim as double))) * 1e6 + 0.5) as bigint) as double)) as delta"""
-        .stripMargin.replace("\n", " "))
-    val cnts = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def bucket(f: String): Int = clfBucket(md, f, dim)
-        it.map { case (id, text) =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Double](dim)
-          var n = 0L
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1.0; n += 1; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1.0; n += 1; i += 1
-          }
-          (id, n, cnt)
-        }
-      }
-      .toDF("doc_id", "n_feats", "cnt")
-    cnts.crossJoin(broadcast(delta))
-      .selectExpr("doc_id", "n_feats",
-        "cast(graft_dot(cnt, delta) as bigint) as logw_micro")
-      .withColumn("keep", col("logw_micro") > 0L)
-  }
-
-  /** The fitted q78 Δ model as plain data (128 integer-valued micro-nat
-    * doubles — the fitBigramLm model-fit-collect discipline). */
-  def fitDsirDelta(s: SparkSession, d: String): Array[Double] = {
-    import s.implicits._
+  /** The q78 Δ model as a one-row frame: Δ[b] in micro-nats, 128
+    * integer-valued doubles. */
+  private def dsirDelta(s: SparkSession, d: String): DataFrame = {
     val dim = clfDim
     val target = bucketTotals(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 0), "t")
@@ -3120,7 +3052,22 @@ object TextAnalysis {
          |  cast(cast(floor((ln((t_cnt[j] + 1) / cast(t_tot + $dim as double))
          |            - ln((r_cnt[j] + 1) / cast(r_tot + $dim as double))) * 1e6 + 0.5) as bigint) as double)) as delta"""
         .stripMargin.replace("\n", " "))
-      .as[Array[Double]].head()
+  }
+
+  def dsirWeight(s: SparkSession, d: String): DataFrame = {
+    Similarity.withFns(s)
+    featureCountsOf(Tables.fanOut(Tables.documents(s, d), "doc_id"))
+      .crossJoin(broadcast(dsirDelta(s, d)))
+      .selectExpr("doc_id", "n_feats",
+        "cast(graft_dot(cnt, delta) as bigint) as logw_micro")
+      .withColumn("keep", col("logw_micro") > 0L)
+  }
+
+  /** The fitted q78 Δ model as plain data (128 integer-valued micro-nat
+    * doubles — the fitBigramLm model-fit-collect discipline). */
+  def fitDsirDelta(s: SparkSession, d: String): Array[Double] = {
+    import s.implicits._
+    dsirDelta(s, d).as[Array[Double]].head()
   }
 
   /** q78's scorer as a REUSABLE stateless per-row transform (the
@@ -3137,21 +3084,9 @@ object TextAnalysis {
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        def bucket(f: String): Int = clfBucket(md, f, dim)
         it.map { case (id, src, text) =>
-          val toks = text.split(" ", -1)
-          val cnt = new Array[Double](dim)
-          var n = 0L
-          var i = 0
-          while (i < toks.length) { cnt(bucket(toks(i))) += 1.0; n += 1; i += 1 }
-          i = 0
-          while (i + 1 < toks.length) {
-            cnt(bucket(toks(i) + "_" + toks(i + 1))) += 1.0; n += 1; i += 1
-          }
-          var dot = 0.0
-          var j = 0
-          while (j < dim) { dot += cnt(j) * delta(j); j += 1 }
-          val logw = dot.toLong
+          val (n, cnt) = featureCounts(md, text, dim)
+          val logw = ascDot(cnt, delta).toLong
           (id, src, text, n, logw, logw > 0L)
         }
       }

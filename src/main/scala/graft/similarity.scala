@@ -738,15 +738,28 @@ object Similarity {
     * rationale as [[pqCellsLocal]]: a literal codebook broadcast costs
     * ~one empty job, where the chained agg→collect_list→broadcast
     * subtree costs 2–3 driver-blocking jobs PER LLOYD ITERATION. */
-  private[graft] def kmCellsLocal(s: SparkSession, rows: Array[(Int, Array[Double])]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val cells = rows.sortBy(_._1).map { case (cid, c) =>
+  private[graft] def kmCellsLocal(s: SparkSession, rows: Array[(Int, Array[Double])]): DataFrame =
+    kmCodebook(s, kmCells(rows))
+
+  /** A fitted k-means cell: centroid + its precomputed self-dot. */
+  case class KmCell(cid: Int, c: Array[Double], cc: Double)
+
+  /** A collected (cid, c) set as fitted cells, ascending cid; cc is the
+    * ascending c(j)·c(j) fold graft_dot runs. */
+  private def kmCells(rows: Array[(Int, Array[Double])]): Array[KmCell] =
+    rows.sortBy(_._1).map { case (cid, c) =>
       var cc = 0.0
       var j = 0
       while (j < c.length) { cc += c(j) * c(j); j += 1 }
-      Row(cid, c.toSeq, cc)
+      KmCell(cid, c, cc)
     }
+
+  /** The one-row cells codebook of fitted cells, as a literal local
+    * relation. */
+  private def kmCodebook(s: SparkSession, fitted: Array[KmCell]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cells = fitted.map(c => Row(c.cid, c.c.toSeq, c.cc))
     val cellT = StructType(Seq(
       StructField("cid", IntegerType),
       StructField("c", ArrayType(DoubleType)),
@@ -756,10 +769,10 @@ object Similarity {
   }
 
   /** The Lloyd loop over an annotated (vec_id, embedding, ee) frame:
-    * returns the final one-row cells frame — a LITERAL local relation
-    * (r21 ladder fusion, the r15 [[pqFitCells]] discipline): each rung
-    * COLLECTS its k-row centroid set (one driver-blocking job) and
-    * rebuilds the codebook via [[kmCellsLocal]], so the fit is exactly
+    * returns the fitted cells, whose codebook is a LITERAL local
+    * relation (r21 ladder fusion, the r15 [[pqFitCells]] discipline):
+    * each rung COLLECTS its k-row centroid set (one driver-blocking job)
+    * and rebuilds the codebook via [[kmCellsLocal]], so the fit is exactly
     * 1 (seed collect) + iters (assignment+centroid agg) jobs. The old
     * chained form re-aggregated and re-broadcast the codebook inside
     * the consumer plan, paying 2–3 extra driver-blocking jobs per
@@ -768,7 +781,7 @@ object Similarity {
     * Fitted values are unchanged: the collected rows ARE the old
     * chain's intermediate frame, and [[kmCellsLocal]] reproduces
     * [[kmCellsOf]] bit-for-bit (ExtensionsSpec pins the equivalence). */
-  private[graft] def kmFitLoop(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+  private[graft] def kmFitLoop(emb: DataFrame, k: Int, iters: Int): Array[KmCell] = {
     val s = emb.sparkSession
     import s.implicits._
     var cellsArr = emb
@@ -783,17 +796,24 @@ object Similarity {
       cellsArr = vecCentroids(kmAssign(emb, kmCellsLocal(s, cellsArr))
           .select(col("cid"), col("embedding")), "cid", "c")
         .as[(Int, Array[Double])].collect()
-    kmCellsLocal(s, cellsArr)
+    kmCells(cellsArr)
   }
 
-  /** The Lloyd loop: returns (corpus frame, final one-row cells frame). */
-  private[graft] def kmFitFrames(s: SparkSession, d: String, k: Int,
-                          iters: Int): (DataFrame, DataFrame) = {
+  /** The q84 fit: returns (persisted corpus frame, fitted cells). */
+  private def kmFit(s: SparkSession, d: String, k: Int,
+                    iters: Int): (DataFrame, Array[KmCell]) = {
     withFns(s)
     val emb = Tables.embeddings(s, d)
       .selectExpr("vec_id", "embedding", s"${dotExpr("embedding", "embedding")} as ee")
       .transform(Tables.maybePersist)
     (emb, kmFitLoop(emb, k, iters))
+  }
+
+  /** The Lloyd loop: returns (corpus frame, final one-row cells frame). */
+  private[graft] def kmFitFrames(s: SparkSession, d: String, k: Int,
+                                 iters: Int): (DataFrame, DataFrame) = {
+    val (emb, fitted) = kmFit(s, d, k, iters)
+    (emb, kmCodebook(s, fitted))
   }
 
   def kmeansClusters(s: SparkSession, d: String, k: Int = 10, iters: Int = 3): DataFrame = {
@@ -805,58 +825,23 @@ object Similarity {
       .selectExpr("cid", "n_members", "im / 1e6 as inertia")
   }
 
-  /** A fitted k-means cell: centroid + its precomputed self-dot. */
-  case class KmCell(cid: Int, c: Array[Double], cc: Double)
-
   /** Fit the q84 centroids and collect them (k×dim doubles — always
     * driver-sized), for the online assignment leg. */
   def fitKmeansCells(s: SparkSession, d: String, k: Int = 10,
-                     iters: Int = 3): Array[KmCell] = {
-    import s.implicits._
-    val (_, cells) = kmFitFrames(s, d, k, iters)
-    cells.selectExpr("explode(cells) as x")
-      .selectExpr("x.cid", "x.c", "x.cc")
-      .as[(Int, Array[Double], Double)]
-      .collect().sortBy(_._1)
-      .map { case (cid, c, cc) => KmCell(cid, c, cc) }
-  }
+                     iters: Int = 3): Array[KmCell] =
+    kmFit(s, d, k, iters)._2
 
   /** q84's assignment as a stateless per-row transform (the
     * classifierVerdict discipline) — score any (vec_id, embedding)
-    * frame, batch or streaming, against an offline-fitted codebook.
-    * Arithmetic mirrors the batch [[kmAssign]] expression operation-
-    * for-operation: ee and ec are ascending-index float→double-widened
-    * folds, d = (ee − 2·ec) + cc, and the ascending-cid
-    * strict-improvement scan ≡ array_min over struct<d, cid> (lowest d,
-    * ties to the lowest cid) — a vector lands in the SAME cell online
-    * and offline (spec-pinned bit-identity). */
+    * frame, batch or streaming, against an offline-fitted codebook. It
+    * IS the batch [[kmAssign]] (graft_km_best) over the cells' one-row
+    * local relation, so a vector lands in the SAME cell online and
+    * offline, NaN inputs included. Output: (vec_id, cid, d). */
   def kmeansAssignVerdict(df: DataFrame, cells: Array[KmCell]): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val sorted = cells.sortBy(_.cid)
-    df.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.map { case (id, e) =>
-          var ee = 0.0
-          var i = 0
-          while (i < e.length) { val x = e(i).toDouble; ee += x * x; i += 1 }
-          var bestD = Double.PositiveInfinity
-          var bestC = Int.MaxValue
-          var p = 0
-          while (p < sorted.length) {
-            val cell = sorted(p)
-            var ec = 0.0
-            var j = 0
-            while (j < cell.c.length) { ec += e(j).toDouble * cell.c(j); j += 1 }
-            val dd = (ee - (2 * ec)) + cell.cc
-            if (dd < bestD) { bestD = dd; bestC = cell.cid }
-            p += 1
-          }
-          (id, bestC, bestD)
-        }
-      }
-      .toDF("vec_id", "cid", "d")
+    val s = withFns(df.sparkSession)
+    kmAssign(df.selectExpr("cast(vec_id as bigint) as vec_id", "embedding",
+        s"${dotExpr("embedding", "embedding")} as ee"), kmCodebook(s, cells))
+      .select("vec_id", "cid", "d")
   }
 
   /** The q84 Lloyd loop as reusable DuckDB CTEs (through `fin`:
@@ -918,16 +903,15 @@ object Similarity {
   // additional exchange beyond the q84 assignment chain it reuses.
   // ---------------------------------------------------------------------
 
-  def clusterBalancedMix(s: SparkSession, d: String, k: Int = 10, iters: Int = 3): DataFrame = {
-    val (emb, cells) = kmFitFrames(s, d, k, iters)
-    val assigned = kmAssign(emb, cells).select("vec_id", "cid")
-      .transform(Tables.maybePersist)
+  /** q88's per-cluster rate table (k rows) from an assignment frame
+    * carrying `cid`: (cid, w, keep_micro). */
+  private def clusterRates(assigned: DataFrame): DataFrame = {
     val stats = assigned.groupBy("cid").agg(count(lit(1)).as("n_vecs"))
       .selectExpr("cid", "n_vecs",
         "cast(floor(sqrt(cast(n_vecs as double)) * 1e6 + 0.5) as bigint) as q")
       .transform(Tables.maybePersist)
     val totals = stats.agg(sum(col("q")).as("q_total"), sum(col("n_vecs")).as("vecs_total"))
-    val rates = stats.crossJoin(broadcast(totals))
+    stats.crossJoin(broadcast(totals))
       .selectExpr("cid",
         "cast(q as double) / cast(q_total as double) as w",
         """least(1.0D, (cast(q as double) / cast(q_total as double)
@@ -935,6 +919,13 @@ object Similarity {
           |  / cast(n_vecs as double)) as rate""".stripMargin.replace("\n", " "))
       .selectExpr("cid", "w",
         "cast(floor(rate * 1e6 + 0.5) as bigint) as keep_micro")
+  }
+
+  def clusterBalancedMix(s: SparkSession, d: String, k: Int = 10, iters: Int = 3): DataFrame = {
+    val (emb, cells) = kmFitFrames(s, d, k, iters)
+    val assigned = kmAssign(emb, cells).select("vec_id", "cid")
+      .transform(Tables.maybePersist)
+    val rates = clusterRates(assigned)
     val bucket =
       "cast(conv(substr(md5(cast(vec_id as string)), 1, 8), 16, 10) as bigint) % 1000000"
     assigned.join(broadcast(rates), Seq("cid"))
@@ -998,19 +989,11 @@ object Similarity {
                        iters: Int = 3): DataFrame = {
     // fit on the BASE corpus; screen base + planted (the production
     // shape: a trained quantizer scores everything, including the junk
-    // it was never fit on). Planted noise = every 20th vector scaled ×3
-    // (double-exact multiply, one float round — identical both engines)
+    // it was never fit on)
     val (emb, cells) = kmFitFrames(s, d, k, iters)
-    val planted = Tables.embeddings(s, d)
-      .filter(col("vec_id") % 20 === 0)
-      .selectExpr("vec_id + 400001 as vec_id",
-        "transform(embedding, x -> cast(cast(x as double) * 3.0D as float)) as embedding")
-      .selectExpr("vec_id", "embedding", s"${dotExpr("embedding", "embedding")} as ee")
-    val assigned = kmAssign(emb.unionByName(planted), cells)
-      .selectExpr("vec_id", "cid", "cast(floor(d * 1e6 + 0.5) as bigint) as dm")
+    val assigned = outlierScreened(s, d, emb, cells)
       .transform(Tables.maybePersist) // feeds the stats agg AND the flag pass
-    val stats = assigned.groupBy("cid")
-      .agg(count(lit(1)).as("n_members"), sum(col("dm")).as("im"))
+    val stats = outlierStats(assigned)
     assigned.join(broadcast(stats), Seq("cid"))
       .filter(col("dm").cast("double") * col("n_members").cast("double")
         > lit(1.5d) * col("im").cast("double"))
@@ -1019,6 +1002,26 @@ object Similarity {
           |  / cast(im as double)) * 1e6 + 0.5) / 1e6 as ratio"""
           .stripMargin.replace("\n", " "))
   }
+
+  /** q124's screened corpus — the base plus the planted noise (every
+    * 20th vector scaled ×3: a double-exact multiply, one float round —
+    * identical both engines) — routed to the fitted cells:
+    * (vec_id, cid, dm) with dm the micro-quantized distance. */
+  private def outlierScreened(s: SparkSession, d: String, emb: DataFrame,
+                              cells: DataFrame): DataFrame = {
+    val planted = Tables.embeddings(s, d)
+      .filter(col("vec_id") % 20 === 0)
+      .selectExpr("vec_id + 400001 as vec_id",
+        "transform(embedding, x -> cast(cast(x as double) * 3.0D as float)) as embedding")
+      .selectExpr("vec_id", "embedding", s"${dotExpr("embedding", "embedding")} as ee")
+    kmAssign(emb.unionByName(planted), cells)
+      .selectExpr("vec_id", "cid", "cast(floor(d * 1e6 + 0.5) as bigint) as dm")
+  }
+
+  /** q124's per-cluster (cid, n_members, im) micro-stats (k rows). */
+  private def outlierStats(screened: DataFrame): DataFrame =
+    screened.groupBy("cid")
+      .agg(count(lit(1)).as("n_members"), sum(col("dm")).as("im"))
 
   val centroidOutliersSql: String = {
     val distF = s"((e.ee - (2 * ${dotSqlDuck("e.embedding", "c.c")})) + c.cc)"
@@ -1087,14 +1090,7 @@ object Similarity {
         "coalesce(n_reembed, 0L) as n_reembed")
     val tot = dense.agg(sum(col("n_base")).as("ta"), sum(col("n_reembed")).as("tb"))
     val terms = dense.crossJoin(broadcast(tot))
-      .selectExpr("cid", "n_base", "n_reembed",
-        s"""cast(floor((
-           |  (n_reembed + 1) / cast(tb + $k as double)
-           |  - (n_base + 1) / cast(ta + $k as double))
-           |  * ln(((n_reembed + 1) / cast(tb + $k as double))
-           |       / ((n_base + 1) / cast(ta + $k as double)))
-           |  * 1e6 + 0.5) as bigint) as term_micro"""
-          .stripMargin.replace("\n", " "))
+      .selectExpr("cid", "n_base", "n_reembed", psiTermMicro("n_base", "ta", "n_reembed", "tb", k))
       .transform(Tables.maybePersist) // feeds the psi sum AND the output
     val psi = terms.agg(sum(col("term_micro")).as("psi_micro"))
     terms.crossJoin(broadcast(psi))
@@ -1102,6 +1098,20 @@ object Similarity {
         "psi_micro / 1e6 as psi", "psi_micro >= 200000 as drift")
       .orderBy("cid")
   }
+
+  /** The Laplace-smoothed PSI term of one cell over k cells, micro-
+    * quantized BEFORE any sum: (p_cur − p_ref)·ln(p_cur/p_ref) with
+    * p = (n + 1)/(N + k), for reference count `ref` of total `refTot`
+    * and current count `cur` of total `curTot` — q125's arithmetic, also
+    * the ANN index's drift check (q141). */
+  private def psiTermMicro(ref: String, refTot: String, cur: String, curTot: String,
+                           k: Long): String =
+    s"""cast(floor((
+       |  ($cur + 1) / cast($curTot + $k as double)
+       |  - ($ref + 1) / cast($refTot + $k as double))
+       |  * ln((($cur + 1) / cast($curTot + $k as double))
+       |       / (($ref + 1) / cast($refTot + $k as double)))
+       |  * 1e6 + 0.5) as bigint) as term_micro""".stripMargin.replace("\n", " ")
 
   val embeddingDriftSql: String = {
     val k = 10
@@ -1146,13 +1156,8 @@ object Similarity {
   def fitDriftDesign(s: SparkSession, d: String, k: Int = 10, iters: Int = 3)
       : (Array[KmCell], graft.streaming.DriftDesign) = {
     import s.implicits._
-    val (emb, cellsDf) = kmFitFrames(s, d, k, iters)
-    val cells = cellsDf.selectExpr("explode(cells) as x")
-      .selectExpr("x.cid", "x.c", "x.cc")
-      .as[(Int, Array[Double], Double)]
-      .collect().sortBy(_._1)
-      .map { case (cid, c, cc) => KmCell(cid, c, cc) }
-    val counts = kmAssign(emb, cellsDf).groupBy("cid")
+    val (emb, cells) = kmFit(s, d, k, iters)
+    val counts = kmAssign(emb, kmCodebook(s, cells)).groupBy("cid")
       .agg(count(lit(1)).as("n")).as[(Int, Long)].collect().toMap
     val dense = Array.tabulate(k)(cid => counts.getOrElse(cid, 0L))
     (cells, graft.streaming.DriftDesign(dense))
@@ -1165,21 +1170,8 @@ object Similarity {
   def fitOutlierScreen(s: SparkSession, d: String, k: Int = 10,
                        iters: Int = 3): (Array[KmCell], Map[Int, (Long, Long)]) = {
     import s.implicits._
-    val (emb, cellsDf) = kmFitFrames(s, d, k, iters)
-    val cells = cellsDf.selectExpr("explode(cells) as x")
-      .selectExpr("x.cid", "x.c", "x.cc")
-      .as[(Int, Array[Double], Double)]
-      .collect().sortBy(_._1)
-      .map { case (cid, c, cc) => KmCell(cid, c, cc) }
-    val planted = Tables.embeddings(s, d)
-      .filter(col("vec_id") % 20 === 0)
-      .selectExpr("vec_id + 400001 as vec_id",
-        "transform(embedding, x -> cast(cast(x as double) * 3.0D as float)) as embedding")
-      .selectExpr("vec_id", "embedding", s"${dotExpr("embedding", "embedding")} as ee")
-    val stats = kmAssign(emb.unionByName(planted), cellsDf)
-      .selectExpr("cid", "cast(floor(d * 1e6 + 0.5) as bigint) as dm")
-      .groupBy("cid")
-      .agg(count(lit(1)).as("n_members"), sum(col("dm")).as("im"))
+    val (emb, cells) = kmFit(s, d, k, iters)
+    val stats = outlierStats(outlierScreened(s, d, emb, kmCodebook(s, cells)))
       .as[(Int, Long, Long)].collect()
     (cells, stats.map(t => t._1 -> (t._2, t._3)).toMap)
   }
@@ -1187,8 +1179,8 @@ object Similarity {
   /** q124's flag as a stateless per-row transform (the classifierVerdict
     * discipline) — route any batch or streaming (vec_id, embedding)
     * frame against the offline-fitted codebook + k-row stats table.
-    * Assignment rides [[kmeansAssignVerdict]] (spec-pinned bit-identical
-    * to the batch kmAssign), the micro-quantization and the dm·n >
+    * Assignment rides [[kmeansAssignVerdict]] (the batch kmAssign
+    * itself), the micro-quantization and the dm·n >
     * 1.5·im comparison repeat the batch expressions on identical
     * doubles — a vector flags online iff it flags in the batch q124. */
   def centroidOutlierVerdict(df: DataFrame, cells: Array[KmCell],
@@ -1216,26 +1208,10 @@ object Similarity {
   def fitClusterRates(s: SparkSession, d: String, k: Int = 10,
                       iters: Int = 3): (Array[KmCell], Map[Int, Long]) = {
     import s.implicits._
-    val (emb, cells) = kmFitFrames(s, d, k, iters)
-    val stats = kmAssign(emb, cells).groupBy("cid")
-      .agg(count(lit(1)).as("n_vecs"))
-      .selectExpr("cid", "n_vecs",
-        "cast(floor(sqrt(cast(n_vecs as double)) * 1e6 + 0.5) as bigint) as q")
-      .transform(Tables.maybePersist)
-    val totals = stats.agg(sum(col("q")).as("q_total"), sum(col("n_vecs")).as("vecs_total"))
-    val rates = stats.crossJoin(broadcast(totals))
-      .selectExpr("cid",
-        """cast(floor(least(1.0D, (cast(q as double) / cast(q_total as double)
-          |  * cast(cast(floor(cast(vecs_total as double) / 2) as bigint) as double))
-          |  / cast(n_vecs as double)) * 1e6 + 0.5) as bigint) as keep_micro"""
-          .stripMargin.replace("\n", " "))
-      .as[(Int, Long)].collect().toMap
-    val fitted = cells.selectExpr("explode(cells) as x")
-      .selectExpr("x.cid", "x.c", "x.cc")
-      .as[(Int, Array[Double], Double)]
-      .collect().sortBy(_._1)
-      .map { case (cid, c, cc) => KmCell(cid, c, cc) }
-    (fitted, rates)
+    val (emb, cells) = kmFit(s, d, k, iters)
+    val rates = clusterRates(kmAssign(emb, kmCodebook(s, cells)))
+      .select("cid", "keep_micro").as[(Int, Long)].collect().toMap
+    (cells, rates)
   }
 
   /** q88's keep decision as a stateless per-row transform for the online
@@ -1282,11 +1258,8 @@ object Similarity {
   // instead of O(k). Level-1 targets only NON-EMPTY super-cells (inner
   // join with the seed routing), so no vector can strand in a seedless
   // super-cell. Beyond ~10⁶ cells the one-row broadcast codebook itself
-  // outgrows a task: the next rung is the same construction recursed —
-  // SHIPPED r14 as the general-L [[fitHierPlan]]/[[assignCellsHierJoined]]
-  // (fan = k^(1/L) per tier, O(L·fan·d) dots/row, closure residency
-  // O(fan·d) at any k; spec-pinned ≡ this 2-level form at L=2 and
-  // join ≡ closure at L=3; r14 measured it linear to a 30× replica).
+  // outgrows a task, which the distributed form below answers; its own
+  // ceiling is the √k closure-resident super-seeds, about 10⁸ cells.
   //
   // Scale shape (r13 — the de-drivered form, VERDICT r12 #2): with
   // k ∝ corpus, the k-row codebook can NO LONGER live on the driver or
@@ -2309,11 +2282,10 @@ object Similarity {
     *     the driver) turn local positions into the global rank.
     *
     * Super-seeds (sid < ⌈√k⌉) come to the driver — √k rows, closure-
-    * sized up to k ~ 10⁸ (beyond that: [[fitHierPlan]], the general-L
-    * recursion of this construction, r14). Each seed then routes to its nearest super-seed
-    * IN-TASK (one mapPartitions over the k-row frame — the k·√k fit
-    * work never touches the driver), and only NON-EMPTY super-cells
-    * survive into `supIds`. */
+    * sized up to k ~ 10⁸, the ceiling of this 2-level plan. Each seed
+    * then routes to its nearest super-seed IN-TASK (one mapPartitions
+    * over the k-row frame — the k·√k fit work never touches the
+    * driver), and only NON-EMPTY super-cells survive into `supIds`. */
   /** Geometric threshold ladder for the prefilter: approx percentiles
     * at these fracs are all computed in the ONE fused stats job (r14,
     * VERDICT r13 #4 — the old path paid a separate approxQuantile job
@@ -2331,26 +2303,25 @@ object Similarity {
     * prefilter always runs. */
   private val prefilterFloorRows: Long = 1L << 22
 
-  /** Ranked-seed stage shared by the 2-level [[fitSeedPlan]] and the
-    * L-level [[fitHierPlan]]: the fused stats job, the ladder
-    * prefilter, and the exact distributed rank. Returns (k,
-    * seeds(sid, e), top, release) — `release` frees the rank stage's
-    * persisted frame once the caller's derived frames are materialized.
+  /** [[fitSeedPlan]]'s ranked-seed stage: the fused stats job, the
+    * ladder prefilter, and the exact distributed rank. Returns (k,
+    * sq = ⌈√k⌉, seeds(sid, e), top, release) — `release` frees the rank
+    * stage's persisted frame once the caller's derived frames are
+    * materialized.
     *
-    * `top` (r14, the fit's job-count floor): the caller's top-level
-    * rows (global rank < prefix(k)) PIGGYBACKED on the counts job when
-    * the overshoot is bounded. The rank frame is RANGE-partitioned and
-    * locally sorted, so the global first-`prefix` rows are contained in
-    * the per-partition prefixes of that length; each task ships
-    * min(n_p, prefix) rows, the driver drops the overshoot once the
-    * offsets are known. Fused ONLY while P·prefix stays tiny
+    * `top` (r14, the fit's job-count floor): the super-seed rows
+    * (global rank < sq) PIGGYBACKED on the counts job when the
+    * overshoot is bounded. The rank frame is RANGE-partitioned and
+    * locally sorted, so the global first-sq rows are contained in the
+    * per-partition prefixes of that length; each task ships
+    * min(n_p, sq) rows, the driver drops the overshoot once the
+    * offsets are known. Fused ONLY while P·sq stays tiny
     * (≤ 20k rows — the fixture/streaming regime); at production P the
     * gate is off, `top` comes back None, and the caller pays its own
     * collect job exactly as before — what crosses the driver never
     * grows with the gate. */
-  private def fitRankedSeeds(s: SparkSession, d: String, targetCellSize: Int,
-      prefix: Long => Int): (Long, DataFrame,
-        Option[Array[(Long, Array[Double])]], () => Unit) = {
+  private def fitRankedSeeds(s: SparkSession, d: String, targetCellSize: Int)
+      : (Long, Int, DataFrame, Option[Array[(Long, Array[Double])]], () => Unit) = {
     import s.implicits._
     val src = Tables.embeddings(s, d)
       .selectExpr("vec_id", "label",
@@ -2403,9 +2374,9 @@ object Similarity {
       .sortWithinPartitions("h")
       .as[(String, Array[Double])]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pfx = prefix(k)
-    val fusePrefix = parts.toLong * pfx <= 20000L
-    val pfxCap = if (fusePrefix) pfx else 0
+    val sq = math.ceil(math.sqrt(k.toDouble)).toInt
+    val fusePrefix = parts.toLong * sq <= 20000L
+    val pfxCap = if (fusePrefix) sq else 0
     val partStats = sorted.rdd
       .mapPartitionsWithIndex { (i, it) =>
         val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
@@ -2428,7 +2399,7 @@ object Similarity {
       else Some(partStats.flatMap { case (i, _, rows) =>
         rows.zipWithIndex.flatMap { case (e, j) =>
           val sid = offs(i) + j
-          if (sid < pfx && sid < k) Some((sid, e)) else None
+          if (sid < sq && sid < k) Some((sid, e)) else None
         }
       }.sortBy(_._1))
     val kCap = k // stable closure capture
@@ -2441,41 +2412,50 @@ object Similarity {
         }
       }
     val seedsDf = s.createDataset(seedsRanked).toDF("sid", "e")
-    (k, seedsDf, top, () => sorted.unpersist())
+    (k, sq, seedsDf, top, () => sorted.unpersist())
+  }
+
+  /** The one nearest-cosine scan of the q75 routers: over the
+    * candidate positions `cand` (ascending id order), the position of
+    * the greatest dot(e, vecs(i)) / (nrm · norms(i)) — ascending-index
+    * dots and a strict-improvement scan, so a tie keeps the smaller id
+    * ≡ the batch array_max over (cos, -id). -1 when no cosine beats −∞
+    * (every one NaN). */
+  private def nearestCos(e: Array[Double], nrm: Double, vecs: Array[Array[Double]],
+                         norms: Array[Double], cand: Array[Int]): Int = {
+    var bestCos = Double.NegativeInfinity
+    var best = -1
+    var ii = 0
+    while (ii < cand.length) {
+      val i = cand(ii)
+      val v = vecs(i)
+      var dot = 0.0
+      var j = 0
+      while (j < v.length) { dot += e(j) * v(j); j += 1 }
+      val cos = dot / (nrm * norms(i))
+      if (cos > bestCos) { bestCos = cos; best = i }
+      ii += 1
+    }
+    best
   }
 
   def fitSeedPlan(s: SparkSession, d: String,
                   targetCellSize: Int = 1000): SeedPlan = {
     import s.implicits._
-    val sqOf = (k: Long) => math.ceil(math.sqrt(k.toDouble)).toInt
-    val (k, seedsDf, top, release) = fitRankedSeeds(s, d, targetCellSize, sqOf)
-    val sq = sqOf(k)
+    val (k, sq, seedsDf, top, release) = fitRankedSeeds(s, d, targetCellSize)
     // --- super-seeds to the driver (√k rows), ascending sid — fused
     // into the counts job when the gate held, otherwise one collect
     val supRows = top.getOrElse(seedsDf.filter(col("sid") < sq)
       .as[(Long, Array[Double])].collect().sortBy(_._1))
     val supAll = supRows.map(_._2)
     val supAllNorms = supAll.map(l2norm)
-    // --- route each seed to its nearest super-seed IN-TASK —
-    // strict-improvement scan in ascending sup order ≡ the batch
-    // array_max over (cos, -sup)
+    val supPos = supAll.indices.toArray
+    // --- route each seed to its nearest super-seed IN-TASK
     val routed = seedsDf.as[(Long, Array[Double])]
       .mapPartitions { it =>
         it.map { case (sid, e) =>
           val nr = l2norm(e)
-          var bestCos = Double.NegativeInfinity
-          var best = Int.MaxValue
-          var p = 0
-          while (p < supAll.length) {
-            val sv = supAll(p)
-            var dot = 0.0
-            var j = 0
-            while (j < sv.length) { dot += e(j) * sv(j); j += 1 }
-            val cos = dot / (nr * supAllNorms(p))
-            if (cos > bestCos) { bestCos = cos; best = p }
-            p += 1
-          }
-          (best, sid, e, nr)
+          (nearestCos(e, nr, supAll, supAllNorms, supPos), sid, e, nr)
         }
       }
       .toDF("sup", "sid", "e", "nrm")
@@ -2548,45 +2528,19 @@ object Similarity {
   def assignCells(df: DataFrame, cb: CellCodebook): Dataset[graft.streaming.SemVec] = {
     val s = df.sparkSession
     import s.implicits._
+    val supPos = cb.supIds.indices.toArray
     df.select(col("vec_id").cast("long"), col("e"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         it.map { case (id, e) =>
-          var acc = 0.0
-          var k = 0
-          while (k < e.length) { acc += e(k) * e(k); k += 1 }
-          val nrm = math.sqrt(acc)
+          val nrm = l2norm(e)
           requireRoutableNorm(id, nrm)
-          var bestCos = Double.NegativeInfinity
-          var bestPos = -1
-          var c = 0
-          while (c < cb.supIds.length) {
-            val cen = cb.supVecs(c)
-            var dot = 0.0
-            k = 0
-            while (k < cen.length) { dot += e(k) * cen(k); k += 1 }
-            val cos = dot / (nrm * cb.supNorms(c))
-            if (cos > bestCos) { bestCos = cos; bestPos = c }
-            c += 1
-          }
+          val sup = nearestCos(e, nrm, cb.supVecs, cb.supNorms, supPos)
           // level 2 over the chosen super-cell's OWN seeds only (the
           // supSeedIdx table, ascending sid — r12's guard scan over all
           // k seeds was an O(n·k) comparison term once k ∝ corpus)
-          bestCos = Double.NegativeInfinity
-          var bestSid = Int.MaxValue
-          val idx = cb.supSeedIdx(bestPos)
-          var ii = 0
-          while (ii < idx.length) {
-            val i = idx(ii)
-            val cen = cb.seedVecs(i)
-            var dot = 0.0
-            k = 0
-            while (k < cen.length) { dot += e(k) * cen(k); k += 1 }
-            val cos = dot / (nrm * cb.seedNorms(i))
-            if (cos > bestCos) { bestCos = cos; bestSid = cb.seedIds(i) }
-            ii += 1
-          }
-          graft.streaming.SemVec(bestSid, id, e, nrm)
+          val i = nearestCos(e, nrm, cb.seedVecs, cb.seedNorms, cb.supSeedIdx(sup))
+          graft.streaming.SemVec(cb.seedIds(i), id, e, nrm)
         }
       }
   }
@@ -2611,25 +2565,14 @@ object Similarity {
     val supIds = plan.supIds
     val supVecs = plan.supVecs
     val supNorms = plan.supNorms
+    val supPos = supIds.indices.toArray
     val l1 = corpus.select(col("vec_id").cast("long"), col("e"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         it.map { case (id, e) =>
           val nrm = l2norm(e)
           requireRoutableNorm(id, nrm)
-          var bestCos = Double.NegativeInfinity
-          var bestSup = Int.MaxValue
-          var c = 0
-          while (c < supIds.length) {
-            val cen = supVecs(c)
-            var dot = 0.0
-            var k = 0
-            while (k < cen.length) { dot += e(k) * cen(k); k += 1 }
-            val cos = dot / (nrm * supNorms(c))
-            if (cos > bestCos) { bestCos = cos; bestSup = supIds(c) }
-            c += 1
-          }
-          (id, e, nrm, bestSup)
+          (id, e, nrm, supIds(nearestCos(e, nrm, supVecs, supNorms, supPos)))
         }
       }
       .toDF("vec_id", "e", "nrm", "sup")
@@ -2641,237 +2584,6 @@ object Similarity {
         col("e"), col("nrm"))).as("m"))
       .selectExpr("cast(-m.nsid as int) as c_label", "vec_id",
         "m.e as e", "m.nrm as nrm")
-  }
-
-  // ---------------------------------------------------------------------
-  // L-LEVEL HIERARCHICAL ROUTING (r14, VERDICT r13 #3): the 2-level
-  // SeedPlan's documented ceilings were (a) the O(√k·d) dots per row —
-  // an O(n^1.5) total once k ∝ corpus — and (b) the √k super-seed
-  // closure array, which stops fitting a task around k ~ 10⁸. The
-  // general-L form routes through `levels` tiers with fan-out
-  // fan = ⌈k^(1/L)⌉ per tier: per-row cost O(L·fan·d), closure
-  // residency O(fan·d) (level 0 only — fan ≤ 10⁴ even at k = 10¹²,
-  // L = 3), and the corpus pays L−1 join+argmax exchanges against
-  // level frames keyed by parent. Level ℓ's node set is the
-  // min(k, fan^(ℓ+1)) lowest-rank seeds — the same md5 rank the
-  // 2-level fit uses, so the hierarchy is deterministic.
-  //
-  // Upper-level nodes SELF-ROUTE (a level-ℓ node's level-(ℓ−1) parent
-  // is itself). This coincides with nearest-routing except when two
-  // seeds are exact duplicate directions (cos 1.0 ties break to the
-  // smaller sid), and it guarantees every node has ≥1 child — the
-  // descent joins can never strand a vector on a childless branch, so
-  // no liveness pruning pass is needed at any depth. The L=2
-  // production form ([[fitSeedPlan]]/[[assignCellsJoined]], which the
-  // q75/q80 oracles encode) keeps pure nearest-routing; ExtensionsSpec
-  // pins hier(L=2) ≡ the production assignment on the fixture corpus
-  // and join ≡ closure in lockstep at L=3.
-  // ---------------------------------------------------------------------
-
-  /** The L-level plan: roots closure-resident, each deeper level a
-    * persisted distributed frame (parent, sid, e, nrm) keyed by its
-    * level-(ℓ−1) parent; frames(levels−2)'s sid is the cell label. */
-  case class HierPlan(k: Long, fan: Int, levels: Int,
-                      rootIds: Array[Long],
-                      rootVecs: Array[Array[Double]],
-                      rootNorms: Array[Double],
-                      frames: IndexedSeq[DataFrame])
-
-  /** Closure twin of [[HierPlan]] for the small-k / streaming leg: per
-    * level, nodes ascending by sid plus the parent-sid → child-position
-    * index (the supSeedIdx table generalized to depth). */
-  case class HierCodebook(rootIds: Array[Long],
-                          rootVecs: Array[Array[Double]],
-                          rootNorms: Array[Double],
-                          levelIds: IndexedSeq[Array[Long]],
-                          levelVecs: IndexedSeq[Array[Array[Double]]],
-                          levelNorms: IndexedSeq[Array[Double]],
-                          levelChildIdx: IndexedSeq[Map[Long, Array[Int]]])
-
-  /** Generalized joined descent: level-0 closure scan over the roots
-    * (the exact assignCells level-1 loop), then one join + max-struct
-    * argmax per deeper level — per level the same arithmetic as
-    * [[assignCellsJoined]]'s level 2 (graft_dot cos ≡ the ascending
-    * fold, ties to the smaller sid via the negated-sid field, e/nrm
-    * riding the unique-keyed max struct). Returns (vec_id, e, nrm,
-    * parent) with parent the chosen node of the DEEPEST frame given. */
-  private def descendJoined(vecs: DataFrame, rootIds: Array[Long],
-      rootVecs: Array[Array[Double]], rootNorms: Array[Double],
-      frames: Seq[DataFrame]): DataFrame = {
-    val s = vecs.sparkSession
-    withFns(s)
-    import s.implicits._
-    val l0 = vecs.select(col("vec_id").cast("long"), col("e"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.map { case (id, e) =>
-          val nrm = l2norm(e)
-          requireRoutableNorm(id, nrm)
-          var bestCos = Double.NegativeInfinity
-          var best = Long.MaxValue
-          var c = 0
-          while (c < rootIds.length) {
-            val cen = rootVecs(c)
-            var dot = 0.0
-            var j = 0
-            while (j < cen.length) { dot += e(j) * cen(j); j += 1 }
-            val cos = dot / (nrm * rootNorms(c))
-            if (cos > bestCos) { bestCos = cos; best = rootIds(c) }
-            c += 1
-          }
-          (id, e, nrm, best)
-        }
-      }
-      .toDF("vec_id", "e", "nrm", "parent")
-    frames.foldLeft(l0) { (cur, fr) =>
-      cur.join(fr.selectExpr("parent as fp", "sid", "e as se", "nrm as sn"),
-          col("parent") === col("fp"))
-        .selectExpr("vec_id", "e", "nrm", "sid",
-          s"${dotExpr("e", "se")} / (nrm * sn) as cos")
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("cos"), (-col("sid")).as("nsid"),
-          col("e"), col("nrm"))).as("m"))
-        .selectExpr("vec_id", "m.e as e", "m.nrm as nrm",
-          "-m.nsid as parent")
-    }
-  }
-
-  def fitHierPlan(s: SparkSession, d: String, targetCellSize: Int = 1000,
-                  levels: Int = 2): HierPlan = {
-    import s.implicits._
-    require(levels >= 2, s"hierarchical routing needs >= 2 levels, got $levels")
-    val fanOf = (k: Long) =>
-      math.max(2, math.ceil(math.pow(k.toDouble, 1.0 / levels)).toInt)
-    val (k, seedsDf, top, release) = fitRankedSeeds(s, d, targetCellSize, fanOf)
-    val fan = fanOf(k)
-    // cumulative level sizes fan, fan², …, k (overflow-safe multiply)
-    val sizes = new Array[Long](levels)
-    sizes(0) = math.min(k, fan.toLong)
-    for (l <- 1 until levels)
-      sizes(l) = if (sizes(l - 1) >= (k + fan - 1) / fan) k
-                 else sizes(l - 1) * fan
-    sizes(levels - 1) = k
-    // roots to the driver — fan rows, ascending sid (= rank, contiguous;
-    // fused into the counts job when the gate held)
-    val rootRows = top.map(_.filter(_._1 < sizes(0)))
-      .getOrElse(seedsDf.filter(col("sid") < sizes(0))
-        .as[(Long, Array[Double])].collect().sortBy(_._1))
-    val rootIds = rootRows.map(_._1)
-    val rootVecs = rootRows.map(_._2)
-    val rootNorms = rootVecs.map(l2norm)
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (l <- 1 until levels) {
-      val upper = sizes(l - 1)
-      // upper nodes self-route (parent = own sid); fresh nodes descend
-      // through the levels fitted so far — the fit work per level is a
-      // distributed descent, nothing level-sized visits the driver
-      val self = seedsDf.filter(col("sid") < upper)
-        .as[(Long, Array[Double])]
-        .mapPartitions(it => it.map { case (sid, e) => (sid, sid, e, l2norm(e)) })
-        .toDF("parent", "sid", "e", "nrm")
-      val fresh = seedsDf
-        .filter(col("sid") >= upper && col("sid") < sizes(l))
-        .selectExpr("sid as vec_id", "e")
-      val descended = descendJoined(fresh, rootIds, rootVecs, rootNorms,
-          frames.toSeq)
-        .selectExpr("parent", "vec_id as sid", "e", "nrm")
-      val frame = self.select("parent", "sid", "e", "nrm")
-        .unionAll(descended.select("parent", "sid", "e", "nrm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frames += frame
-    }
-    frames.last.count() // materialize the cascade before freeing the rank stage
-    release()
-    HierPlan(k, fan, levels, rootIds, rootVecs, rootNorms, frames.toIndexedSeq)
-  }
-
-  /** The L-level corpus assignment, joined form — output schema matches
-    * [[assignCellsJoined]] (c_label, vec_id, e, nrm). */
-  def assignCellsHierJoined(corpus: DataFrame, plan: HierPlan): DataFrame =
-    descendJoined(corpus, plan.rootIds, plan.rootVecs, plan.rootNorms,
-        plan.frames)
-      .selectExpr("cast(parent as int) as c_label", "vec_id", "e", "nrm")
-
-  /** Collect the L-level plan into closure form (the fitCellCodebook
-    * contract: small-k / streaming only — parameters must fit a task).
-    * Frees each collected frame's cache as it goes. */
-  def fitHierCodebook(s: SparkSession, d: String, targetCellSize: Int = 1000,
-                      levels: Int = 2): HierCodebook = {
-    import s.implicits._
-    val plan = fitHierPlan(s, d, targetCellSize, levels)
-    val collected = plan.frames.map { fr =>
-      val rows = fr.select(col("parent"), col("sid"), col("e"), col("nrm"))
-        .as[(Long, Long, Array[Double], Double)]
-        .collect().sortBy(_._2) // ascending sid
-      fr.unpersist(blocking = false)
-      rows
-    }
-    HierCodebook(plan.rootIds, plan.rootVecs, plan.rootNorms,
-      collected.map(_.map(_._2)),
-      collected.map(_.map(_._3)),
-      collected.map(_.map(_._4)),
-      collected.map { rows =>
-        val byParent = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
-        var i = 0
-        while (i < rows.length) {
-          byParent.getOrElseUpdate(rows(i)._1,
-            scala.collection.mutable.ArrayBuffer.empty[Int]) += i
-          i += 1
-        }
-        byParent.view.mapValues(_.toArray).toMap
-      })
-  }
-
-  /** The L-level closure assignment — per level the exact
-    * strict-improvement scan of [[assignCells]], candidates looked up
-    * through the parent→children index (the supSeedIdx discipline at
-    * every depth). Output schema matches [[assignCellsHierJoined]];
-    * ExtensionsSpec pins the two routes bit-identical at L=3. */
-  def assignCellsHier(df: DataFrame, cb: HierCodebook): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col("vec_id").cast("long"), col("e"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.map { case (id, e) =>
-          val nrm = l2norm(e)
-          requireRoutableNorm(id, nrm)
-          var parent = Long.MaxValue
-          var bestCos = Double.NegativeInfinity
-          var c = 0
-          while (c < cb.rootIds.length) {
-            val cen = cb.rootVecs(c)
-            var dot = 0.0
-            var j = 0
-            while (j < cen.length) { dot += e(j) * cen(j); j += 1 }
-            val cos = dot / (nrm * cb.rootNorms(c))
-            if (cos > bestCos) { bestCos = cos; parent = cb.rootIds(c) }
-            c += 1
-          }
-          var l = 0
-          while (l < cb.levelIds.length) {
-            val idx = cb.levelChildIdx(l)(parent)
-            bestCos = Double.NegativeInfinity
-            var best = Long.MaxValue
-            var ii = 0
-            while (ii < idx.length) {
-              val i = idx(ii)
-              val cen = cb.levelVecs(l)(i)
-              var dot = 0.0
-              var j = 0
-              while (j < cen.length) { dot += e(j) * cen(j); j += 1 }
-              val cos = dot / (nrm * cb.levelNorms(l)(i))
-              if (cos > bestCos) { bestCos = cos; best = cb.levelIds(l)(i) }
-              ii += 1
-            }
-            parent = best
-            l += 1
-          }
-          (parent.toInt, id, e, nrm)
-        }
-      }
-      .toDF("c_label", "vec_id", "e", "nrm")
   }
 
   /** q47 — int8 symmetric quantization of the embedding column: per
@@ -3061,13 +2773,15 @@ object Similarity {
   private val PqM = 4; private val PqSub = 16
   private val PqK = 8; private val PqIters = 2
 
-  /** Sub-vector view of a (vec_id, label, embedding float-array [, extra])
-    * frame: per row, `subs` = m structs (s, v = float sub-slice, vv = its
-    * self-dot). One scan, no exchange. `extra` columns pass through
-    * (q115 carries the coarse cell + the original vector this way). */
+  /** Sub-vector view of a (vec_id, [label,] embedding float-array
+    * [, extra]) frame: per row, `subs` = m structs (s, v = float
+    * sub-slice, vv = its self-dot). One scan, no exchange. `label`
+    * passes through when present, and so do the `extra` columns (q115
+    * carries the coarse cell + the original vector this way). */
   private def pqCorpusOf(emb: DataFrame, extra: Seq[String] = Nil): DataFrame = {
     withFns(emb.sparkSession)
-    val keep = Seq("vec_id", "label", "embedding") ++ extra
+    val keep = Seq("vec_id") ++ Seq("label").filter(emb.columns.contains) ++
+      Seq("embedding") ++ extra
     emb
       .selectExpr(keep ++ Seq(
         s"${dotExpr("embedding", "embedding")} as ee",
@@ -3585,11 +3299,7 @@ object Similarity {
     * to (variant, n_vecs, total_qd, max_qd) — micro-unit totals. */
   private def pqDistortionOf(corpus: DataFrame, cells: DataFrame,
                              variant: String): DataFrame =
-    corpus.crossJoin(broadcast(cells))
-      .selectExpr("vec_id", "subs", pqBestExpr)
-      .selectExpr("vec_id",
-        s"""aggregate(sequence(0, ${PqM - 1}), cast(0.0 as double),
-           |(acc, sx) -> acc + best[sx].d) as qd""".stripMargin.replace("\n", " "))
+    pqEncode(corpus, cells)
       .groupBy()
       .agg(count(lit(1)).as("n_vecs"),
         sum(floor(col("qd") * 1e6 + 0.5).cast("long")).as("tm"),
@@ -4497,14 +4207,7 @@ object Similarity {
     val k = dense.count()
     val tot = dense.agg(sum(col("n_ref")).as("ta"), sum(col("n_cur")).as("tb"))
     (dense, dense.crossJoin(broadcast(tot))
-      .selectExpr("c_label", "n_ref", "n_cur",
-        s"""cast(floor((
-           |  (n_cur + 1) / cast(tb + $k as double)
-           |  - (n_ref + 1) / cast(ta + $k as double))
-           |  * ln(((n_cur + 1) / cast(tb + $k as double))
-           |       / ((n_ref + 1) / cast(ta + $k as double)))
-           |  * 1e6 + 0.5) as bigint) as term_micro"""
-          .stripMargin.replace("\n", " ")))
+      .selectExpr("c_label", "n_ref", "n_cur", psiTermMicro("n_ref", "ta", "n_cur", "tb", k)))
   }
 
   /** PSI (micro) of the live population against the fit-time frame: the
@@ -5886,66 +5589,32 @@ object Similarity {
     out
   }
 
-  /** The batch encode route verbatim (q112's expressions), exposed for
-    * the online-lockstep spec: (vec_id, codes, qd). */
-  private[graft] def pqEncodeBatch(s: SparkSession, d: String): DataFrame = {
-    val (corpus, cells) = pqFitFrames(s, d)
+  /** q112's encode of a pqCorpusOf'd frame against a one-row codebook:
+    * (vec_id, codes, qd) — qd the ascending-s fold of the per-subspace
+    * minima. */
+  private def pqEncode(corpus: DataFrame, cells: DataFrame): DataFrame =
     corpus.crossJoin(broadcast(cells))
       .selectExpr("vec_id", "subs", pqBestExpr)
       .selectExpr("vec_id",
         "transform(best, x -> x.cid) as codes",
         "aggregate(best, cast(0.0 as double), (acc, x) -> acc + x.d) as qd")
+
+  /** The batch encode route (q112's fit and encode), exposed for the
+    * online-lockstep spec: (vec_id, codes, qd). */
+  private[graft] def pqEncodeBatch(s: SparkSession, d: String): DataFrame = {
+    val (corpus, cells) = pqFitFrames(s, d)
+    pqEncode(corpus, cells)
   }
 
   /** q112's encode as a stateless per-row transform (the
     * kmeansAssignVerdict discipline): PQ codes + quantization distortion
     * for any (vec_id, embedding) frame, batch or streaming, against an
-    * offline-fitted codebook. Arithmetic mirrors [[pqBestExpr]]
-    * operation-for-operation: vv and ec are ascending-index
-    * float→double-widened folds over the sub-slice, d = (vv − 2·ec) + cc,
-    * the ascending-cid strict-improvement scan ≡ array_min over
-    * struct<d, cid>, and qd is the ascending-s fold of the per-subspace
-    * minima — a vector encodes to the SAME codes online and offline
-    * (spec-pinned bit-identity). */
-  def pqEncodeVerdict(df: DataFrame, cells: Array[PqCell]): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val bySub: Array[Array[PqCell]] =
-      (0 until PqM).map(sx => cells.filter(_.s == sx).sortBy(_.cid)).toArray
-    df.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.map { case (id, e) =>
-          val codes = new Array[Int](PqM)
-          var qd = 0.0
-          var sx = 0
-          while (sx < PqM) {
-            val off = sx * PqSub
-            var vv = 0.0
-            var j = 0
-            while (j < PqSub) { val x = e(off + j).toDouble; vv += x * x; j += 1 }
-            var bestD = Double.PositiveInfinity
-            var bestC = Int.MaxValue
-            val cs = bySub(sx)
-            var p = 0
-            while (p < cs.length) {
-              val cell = cs(p)
-              var ec = 0.0
-              j = 0
-              while (j < PqSub) { ec += e(off + j).toDouble * cell.c(j); j += 1 }
-              val dd = (vv - (2 * ec)) + cell.cc
-              if (dd < bestD) { bestD = dd; bestC = cell.cid }
-              p += 1
-            }
-            codes(sx) = bestC
-            qd += bestD
-            sx += 1
-          }
-          (id, codes, qd)
-        }
-      }
-      .toDF("vec_id", "codes", "qd")
-  }
+    * offline-fitted codebook. It IS the batch [[pqEncode]]
+    * (graft_pq_best) over the cells' one-row local relation, so a vector
+    * encodes to the SAME codes online and offline, NaN inputs included. */
+  def pqEncodeVerdict(df: DataFrame, cells: Array[PqCell]): DataFrame =
+    pqEncode(pqCorpusOf(df.selectExpr("cast(vec_id as bigint) as vec_id", "embedding")),
+      pqCellsLocal(df.sparkSession, cells.map(c => (c.s, c.cid, c.c))))
 
   // ---------------------------------------------------------------------
   // q121 — SEMANTIC DECONTAMINATION (r14): the embedding-space member of

@@ -99,8 +99,8 @@ private[streaming] case class PsiState(rev: Long, maxId: Long,
 
 /** One cell-routed re-embedded vector for the online drift monitor
   * (q125's streaming twin) — rows are pre-assigned STATELESSLY via
-  * [[graft.Similarity.kmeansAssignVerdict]] (codebook in the closure,
-  * the semDedupStream routing discipline); `vec_id` carries the
+  * [[graft.Similarity.kmeansAssignVerdict]] (the batch graft_km_best
+  * assignment over a one-row codebook); `vec_id` carries the
   * in-order id-dedup contract the other monitors use. */
 case class DriftEvent(vec_id: Long, cid: Int)
 /** The frozen base population for the online drift PSI: the k

@@ -2642,6 +2642,23 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("online k-means and PQ verdicts run the batch kernels: graft_km_best / graft_pq_best, no MapPartitions node") {
+    // the online legs call the batch kernels instead of a Scala copy of
+    // them, so a per-row argmin loop cannot grow back beside the kernel
+    val rows = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val verdicts = Seq(
+      "graft_km_best" -> Similarity.kmeansAssignVerdict(rows, Similarity.fitKmeansCells(spark, sf)),
+      "graft_pq_best" -> Similarity.pqEncodeVerdict(rows, Similarity.fitPqCells(spark, sf)))
+    verdicts.foreach { case (kernel, df) =>
+      assert(df.collect().length == rows.count())
+      val nodes = PlanWalk.allNodes(PlanWalk.finalPlan(df))
+      val calls = nodes.flatMap(_.expressions).exists(_.find(_.prettyName == kernel).isDefined)
+      assert(calls, s"$kernel missing from the executed plan:\n${PlanWalk.finalPlan(df)}")
+      val mapParts = nodes.filter(_.nodeName.contains("MapPartitions"))
+      assert(mapParts.isEmpty, s"$kernel verdict runs a MapPartitions node: ${mapParts.map(_.nodeName)}")
+    }
+  }
+
   test("assignment routes reject degenerate (zero-norm) embeddings in LOCKSTEP (r14)") {
     // the advice finding: joined max-struct ranked NaN cos greatest while
     // the closure scan skipped it — now BOTH routes refuse the row at the
@@ -2665,59 +2682,6 @@ class ExtensionsSpec extends SparkSpec {
     Seq(eJoin, eClosure).foreach { e =>
       assert(messageOf(e).contains("cosine cell routing is undefined"),
         s"expected the shared precondition message, got: ${messageOf(e).take(300)}")
-    }
-  }
-
-  test("hierarchical routing: L=2 == the production 2-level assignment (r14)") {
-    // the general-L machinery instantiated at depth 2 must reproduce the
-    // oracle-gated q75 assignment exactly (self-routing == nearest-
-    // routing in the absence of exact-duplicate seeds — the fixture has
-    // none, and the contract is documented at the HierPlan header)
-    val base = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) as e")
-    val corpus = base.unionAll(
-      base.selectExpr("vec_id + 10000 as vec_id",
-        "zip_with(e, sequence(0, 63), (x, i) -> x + 0.004 * cast(i % 5 as double)) as e"))
-    val prod = Similarity.assignCellsJoined(corpus, Similarity.fitSeedPlan(spark, sf))
-      .select("vec_id", "c_label", "nrm", "e")
-      .as[(Long, Int, Double, Array[Double])].collect()
-      .map(r => (r._1, (r._2, r._3, r._4.toSeq))).toMap
-    val hier = Similarity.assignCellsHierJoined(corpus,
-        Similarity.fitHierPlan(spark, sf, levels = 2))
-      .select("vec_id", "c_label", "nrm", "e")
-      .as[(Long, Int, Double, Array[Double])].collect()
-      .map(r => (r._1, (r._2, r._3, r._4.toSeq))).toMap
-    assert(hier.keySet == prod.keySet, "no vector may be dropped or duplicated")
-    hier.foreach { case (id, got) =>
-      assert(got == prod(id), s"vec $id: hier=$got prod=${prod(id)}")
-    }
-  }
-
-  test("hierarchical routing: L=3 join == closure in lockstep; descent never strands (r14)") {
-    // small targetCellSize forces k large enough for three genuine
-    // tiers (fan = ceil(k^(1/3))); the joined route and the collected
-    // closure route must agree bit-for-bit, every corpus vector must
-    // come back exactly once, and every label must be a real seed rank
-    val base = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) as e")
-    val plan = Similarity.fitHierPlan(spark, sf, targetCellSize = 1, levels = 3)
-    assert(plan.levels == 3 && plan.fan.toLong * plan.fan * plan.fan >= plan.k)
-    assert(plan.rootIds.length <= plan.fan, "level 0 stays fan-sized (closure bound)")
-    val cb = Similarity.fitHierCodebook(spark, sf, targetCellSize = 1, levels = 3)
-    val viaJoin = Similarity.assignCellsHierJoined(base, plan)
-      .select("vec_id", "c_label", "nrm", "e")
-      .as[(Long, Int, Double, Array[Double])].collect()
-      .map(r => (r._1, (r._2, r._3, r._4.toSeq))).toMap
-    val viaClosure = Similarity.assignCellsHier(base, cb)
-      .select("vec_id", "c_label", "nrm", "e")
-      .as[(Long, Int, Double, Array[Double])].collect()
-      .map(r => (r._1, (r._2, r._3, r._4.toSeq))).toMap
-    val n = base.count()
-    assert(viaJoin.size.toLong == n, "descent must assign every vector exactly once")
-    assert(viaJoin.keySet == viaClosure.keySet)
-    viaJoin.foreach { case (id, got) =>
-      assert(got == viaClosure(id), s"vec $id: joined=$got closure=${viaClosure(id)}")
-      assert(got._1 >= 0 && got._1 < plan.k, s"vec $id: label ${got._1} not a seed rank")
     }
   }
 
